@@ -42,17 +42,45 @@ def pytest_collection_modifyitems(config, items):
     round):
 
         USHAS_RUN_SLOW=1 python -m pytest tests/ -x -q
+
+    Explicit selection wins: a ``-m`` expression that names ``slow`` is
+    left to pytest's own marker filter, and a slow test chosen by node id
+    (``file.py::test``) runs. A run whose every collected test would be
+    deselected fails instead of passing with nothing run.
     """
-    if os.environ.get("USHAS_RUN_SLOW") == "1":
+    if os.environ.get("USHAS_RUN_SLOW") == "1" or "slow" in config.option.markexpr:
         return
+    chosen = _node_id_args(config)
     selected, deselected = [], []
     for item in items:
-        (deselected if item.get_closest_marker("slow") else selected).append(
-            item
+        slow = item.get_closest_marker("slow") and not _is_chosen(item.nodeid, chosen)
+        (deselected if slow else selected).append(item)
+    if deselected and not selected:
+        raise pytest.UsageError(
+            f"all {len(deselected)} collected tests are @slow and deselected; "
+            "set USHAS_RUN_SLOW=1, pass -m slow or name the tests by node id"
         )
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected
+
+
+def _node_id_args(config) -> list[str]:
+    """Command-line args naming a test, class or parametrization
+    (``path::name``), as rootdir-relative node ids."""
+    ids = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            rel = os.path.relpath(os.path.abspath(path), str(config.rootpath))
+            ids.append(f"{rel.replace(os.sep, '/')}::{rest}")
+    return ids
+
+
+def _is_chosen(nodeid: str, chosen: list[str]) -> bool:
+    return any(
+        nodeid == c or nodeid.startswith((c + "::", c + "[")) for c in chosen
+    )
 
 
 @pytest.fixture(scope="session")

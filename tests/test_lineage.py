@@ -310,6 +310,49 @@ def test_json_fast_path_matches_py4j_walk(spark, sf_dir):
         assert fast == slow
 
 
+def test_json_fast_path_fallback_is_counted_and_warned(spark, sf_dir, monkeypatch):
+    """A fast-path failure falls back to the py4j walk loudly: counted by
+    exception type, warned once per type, same graph -- also when eight
+    threads fall back at once."""
+    import sys
+    import threading
+    from collections import Counter
+
+    import pytest
+
+    from ushas_spark.lineage import extract as ex
+
+    n = load_table(spark, sf_dir, "nation")
+    df = n.groupBy("n_regionkey").agg(F.max("n_name").alias("top"))
+    want = lineage(df).edges()
+    got = []
+
+    def broken(jplan):
+        raise ValueError("unconsumed plan nodes")
+
+    def work() -> None:
+        for _ in range(5):
+            got.append(lineage(df).edges())
+
+    monkeypatch.setattr(ex, "FALLBACKS", Counter())
+    monkeypatch.setattr(ex, "_resolve_json_plan", broken)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.warns(RuntimeWarning, match="ValueError") as rec:
+            threads = [threading.Thread(target=work) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [want] * 40
+    assert len(rec) == 1
+    assert ex.FALLBACKS == Counter({"ValueError": 40})
+
+
 def test_lineage_through_checkpointed_iterative_plan(spark, sf_dir):
     """Iterative operators truncate their plans via localCheckpoint /
     checkpoint (LogicalRDD leaves). Lineage extraction must still walk

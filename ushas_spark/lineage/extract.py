@@ -29,18 +29,25 @@ sources, edges -- parity-tested in tests/test_lineage.py):
 - **JSON fast path** (default): ONE ``plan.toJSON()`` py4j call supplies
   the whole tree -- node classes, expression trees, attribute names and
   exprIds -- and only leaf-identity extraction still touches JVM handles
-  (``collectLeaves``, a handful of calls). The per-node py4j recursion
-  cost ~2,900 socket round-trips (~150 ms) on an 8-relation TPC-H plan
-  (q8); this path does ~40 (<10 ms). Expression display strings are
-  rendered from the JSON expression tree (py4j ``.sql()`` is exactly the
-  per-expression round-trip the fast path exists to avoid).
-- **py4j walk** (automatic fallback on any fast-path error): the
-  original per-node recursion; structure source of truth.
+  (``collectLeaves``, a handful of calls). On the heaviest TPC-H plans
+  (q8, q17, q20, q21 at sf0.01; 4-core VM, best of 15) it takes 6-9 ms,
+  provided the gateway connection has ``TCP_NODELAY``
+  (``session.py4j_nodelay``, which ``lineage`` applies): the 17-49 kB
+  JSON reply is longer than py4j's 8 KB write buffer. Expression display
+  strings are rendered from the JSON expression tree (py4j ``.sql()`` is
+  exactly the per-expression round-trip the fast path exists to avoid).
+- **py4j walk** (fallback on any fast-path error, counted in
+  ``FALLBACKS`` and warned once per exception type): the original
+  per-node recursion, one round trip per node and expression; 11-32 ms
+  on the same plans. Structure source of truth.
 """
 
 from __future__ import annotations
 
 import json
+import threading
+import warnings
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -51,6 +58,11 @@ from ushas_spark.lineage.model import (
     RelationColumn,
     UnionColumn,
 )
+from ushas_spark.session import py4j_nodelay
+
+# Fast-path failures that fell back to the py4j walk, by exception type.
+FALLBACKS: Counter[str] = Counter()
+_FALLBACKS_LOCK = threading.Lock()
 
 
 def lineage(df: DataFrame) -> LineageGraph:
@@ -59,10 +71,22 @@ def lineage(df: DataFrame) -> LineageGraph:
     The user-facing equivalent of the reference's
     ``df.queryExecution.analyzed.lineageChildren`` (README 效果展示 4).
     """
+    py4j_nodelay(df.sparkSession)
     jplan = df._jdf.queryExecution().analyzed()
     try:
         cols = _resolve_json_plan(jplan)
-    except Exception:
+    except Exception as e:
+        kind = type(e).__name__
+        with _FALLBACKS_LOCK:
+            FALLBACKS[kind] += 1
+            first = FALLBACKS[kind] == 1
+        if first:
+            warnings.warn(
+                f"lineage JSON fast path failed ({kind}: {e}); "
+                "using the slower py4j walk",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         cols = _resolve(jplan)
     # The root's lineage list can be wider than the visible output (e.g.
     # Window appends internal duplicates); restrict to df.output order.

@@ -219,11 +219,11 @@ def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> Da
     identically, so whole walks are oracle-gated.
 
     Size-gated regimes (r13 probe, tools/probe_walks_r13.py; regimes
-    bit-identical, twin pinned in tests/test_graph_hits_regimes.py):
+    bit-identical, twin pinned in tests/test_r13_regimes.py):
 
     - adjacency regime (|V_cust| <= WALKS_BROADCAST_MAX_V): the edge
       table folds ONCE into a |V|-row (src, nbrs array) adjacency
-      (grams are distinct by _edges construction, so no distinct pass)
+      (edges are distinct by _edges construction, so no distinct pass)
       and each hop is one broadcast join of the |walkers|-row walk
       table against it plus an IN-ROW argmin
       array_min(transform(nbrs, d -> struct(md5, d))) -- the per-hop
@@ -1020,7 +1020,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the walk horizon) are filtered before the top slice.
 
     Size-gated regimes (r13 probe, tools/probe_ppr_r13.py; regimes
-    bit-identical, twin pinned in tests/test_graph_hits_regimes.py).
+    bit-identical, twin pinned in tests/test_r13_regimes.py).
     The r12 broadcast transfer lost BECAUSE the per-round seed
     left-join + crossJoin rescale nested inside each round's broadcast
     child; the r13 fix removes the join at its root: seeds is defined
