@@ -72,3 +72,10 @@ def test_window_exec_warnings_quiet(spark):
     log4j = spark._jvm.org.apache.logging.log4j
     level = log4j.LogManager.getLogger(session.WINDOW_LOGGER).getLevel()
     assert level.toString() == "ERROR"
+
+
+def test_unpersist_warnings_quiet(spark):
+    """Releasing a local checkpoint warns that its lineage was truncated."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    level = log4j.LogManager.getLogger(session.UNPERSIST_LOGGER).getLevel()
+    assert level.toString() == "ERROR"

@@ -9,7 +9,10 @@ execution/datasources/parquet/ParquetFileFormat.scala:56).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The driver-generated TPC-H-ish star schema plus LLM-pipeline tables
 # (see /root/repo/TESTDATA.md).
@@ -34,14 +37,19 @@ BROADCAST_TABLES = {"region", "nation"}
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from the scale-factor directory.
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS). Depending on the Spark
-    build it surfaces as either long nanos (when
-    ``spark.sql.legacy.parquet.nanosAsLong`` is honoured) or as
-    TIMESTAMP_NTZ (Spark 4 in this environment -- verified by probe).
-    Normalize BOTH to a session-TZ TimestampType here so every consumer
-    (unix_micros arithmetic, window/session ops, the streaming reader)
-    sees one type. Under the pinned UTC session timezone the NTZ->TZ cast
-    is value-exact; the ns->us truncation matches DuckDB's.
+    Every shipped table stores ``events.ts`` as parquet TIMESTAMP(MICROS)
+    without UTC adjustment, which Spark 4 infers as TIMESTAMP_NTZ. A file
+    that stores TIMESTAMP(NANOS) surfaces as long nanos instead (under
+    ``spark.sql.legacy.parquet.nanosAsLong``). Normalize BOTH to a
+    session-TZ TimestampType here so every consumer (unix_micros
+    arithmetic, window/session ops, the streaming reader) sees one type.
+    Under the pinned UTC session timezone the NTZ->TZ cast is value-exact;
+    the ns->us truncation matches DuckDB's.
+
+    The schema Spark inferred for the files is memoized
+    (:func:`_read_parquet`), so a repeated read of unchanged files skips
+    the inference job. Each call still returns a fresh relation with
+    fresh exprIds.
     """
     # Runtime-settable confs: hold even when the caller (e.g. the verify
     # driver) built the session without ushas_spark defaults. UTC keeps
@@ -50,7 +58,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -60,6 +68,59 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# Session confs that change the schema parquet inference returns.
+INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (applicationId, path) -> ((inference conf values, leaf files), schema).
+# One entry per path: a rewrite, a conf change or a new SparkContext misses
+# it, and the next inference replaces it. No lock: an entry is written
+# whole, so a racing writer can only cost a later call one inference.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema inferred earlier
+    for the same files under the same inference confs.
+
+    Spark's parquet inference launches a Spark job on every read, even of
+    one file; a read with the schema given launches none. Only the schema
+    is memoized, never the DataFrame.
+    """
+    slot = (spark.sparkContext.applicationId, path)
+    state = _inference_inputs(spark, path)
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == state:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[slot] = (state, df.schema)
+    return df
+
+
+def _inference_inputs(spark: SparkSession, path: str) -> tuple:
+    """The INFERENCE_CONFS values and every leaf file under ``path`` as
+    (path, length, modification time), listed by the path's Hadoop
+    ``FileSystem`` so DFS paths work too. About six py4j calls per file."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    confs = tuple(spark.conf.get(k) for k in INFERENCE_CONFS)
+    return confs, tuple(sorted(_leaf_files(fs, fs.globStatus(hpath))))
+
+
+def _leaf_files(fs, statuses) -> Iterator[tuple[str, int, int]]:
+    # globStatus returns None for a missing path; the read then raises.
+    for st in statuses or ():
+        if st.isDirectory():
+            yield from _leaf_files(fs, fs.listStatus(st.getPath()))
+        else:
+            yield st.getPath().toString(), st.getLen(), st.getModificationTime()
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1385,11 +1385,9 @@ def multimodal_image_dedup_clusters(
     recursive-CTE components replay -- the whole pipeline gates as one
     unit."""
     from ushas_spark.operators.dedup import connected_components
-    from ushas_spark.durability import materialize
 
-    pairs = materialize(
-        multimodal_ahash_near_dup(spark, sf_dir).select("asset_a", "asset_b")
-    )
+    # connected_components materializes its edge input itself.
+    pairs = multimodal_ahash_near_dup(spark, sf_dir).select("asset_a", "asset_b")
     assets = (
         documents_as_assets(spark, sf_dir)
         .select(F.col("asset_id"))
@@ -1545,7 +1543,7 @@ def multimodal_audio_dedup_clusters(
         .select(F.col("asset_id").alias("pa"), "pb")
         .distinct()
     )
-    pairs = materialize(pairs)
+    # connected_components materializes its edge input itself.
     comp = connected_components(
         sig.select("asset_id"), pairs, id_col="asset_id", src="pa", dst="pb"
     )

@@ -54,8 +54,10 @@ def get_spark(
         # local mode = driver-only JVM; this is the one memory knob.
         .config("spark.driver.memory", os.environ.get("USHAS_DRIVER_MEM", "64g"))
         .config("spark.ui.enabled", "false")
-        # Parquet TIMESTAMP(NANOS) (events.ts) is unreadable by Spark
-        # natively; surface it as long nanos and convert in the loader.
+        # Parquet TIMESTAMP(NANOS) is unreadable by Spark natively; surface
+        # it as long nanos and convert in io.load_table. Every shipped
+        # events.ts is TIMESTAMP(MICROS), read as TIMESTAMP_NTZ, so this
+        # only matters for inputs that store nanoseconds.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Keep managed tables (bucketing tests etc.) inside the repo.
         .config("spark.sql.warehouse.dir", os.environ.get(
@@ -69,14 +71,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Unpartitioned windows (global ranks, top-k) are deliberate here;
-    # their "No Partition Defined" warnings only flood stdout.
+    # their "No Partition Defined" warnings only flood stdout. So does the
+    # "RDD N was locally checkpointed" warning of every blocking release
+    # of a materialize() segment.
     log4j = spark._jvm.org.apache.logging.log4j
-    log4j.core.config.Configurator.setLevel(WINDOW_LOGGER, log4j.Level.ERROR)
+    for logger in (WINDOW_LOGGER, UNPERSIST_LOGGER):
+        log4j.core.config.Configurator.setLevel(logger, log4j.Level.ERROR)
     py4j_nodelay(spark)
     return spark
 
 
 WINDOW_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+# RDD.unpersist logs under the runtime class of the RDD; a localCheckpoint
+# of a DataFrame is a MapPartitionsRDD.
+UNPERSIST_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
 
 # The gateway whose connections this Python thread has already switched to
 # TCP_NODELAY (py4j pins one connection per Python thread).
