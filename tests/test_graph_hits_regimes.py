@@ -1,14 +1,18 @@
-"""Regime twin for graph_hits_hub_authority (r12 restructure).
+"""Regime twins for the r12 size-gated graph and dedup operators.
 
-The operator picks its per-round join strategy by a size gate
-(HITS_BROADCAST_MAX_V): broadcast regime (pins on groupBy keys,
+graph_hits_hub_authority picks its per-round join strategy by a size
+gate (durability.broadcast_fits): broadcast regime (pins on groupBy keys,
 explicit broadcast score side) below it, merge regime (pins on join
 keys, unhinted join -- the 100 TB shape) above it. Both regimes must
 produce bit-identical rows: same integer sums, same rounding points,
 same top-10. The gate only changes physical strategy, never values.
 
 The merge regime is the pre-r12 shipped formulation, so this twin also
-pins the restructure against the r04-r11 driver-green evidence.
+pins the restructure against the r04-r11 driver-green evidence. PageRank,
+connected components, triangles and k-core gate the same way; every
+twin forces the merge regime through durability.BROADCAST_MAX_ROWS and
+asserts a plan count that differs between the regimes
+(tests/regime_twin.py).
 """
 
 from __future__ import annotations
@@ -20,15 +24,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests.regime_twin import release, twin
 from ushas_spark.operators import graph
 
 SF_DIR = os.environ.get("USHAS_TEST_SF", "/root/testdata/sf0.001")
-
-
-def _release(spark):
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(True)
 
 
 @pytest.fixture(scope="module")
@@ -38,90 +37,67 @@ def spark():
     return get_spark("test-hits-regimes")
 
 
-def _rows(spark, sf_dir):
-    out = [
-        tuple(r)
-        for r in graph.graph_hits_hub_authority(spark, sf_dir).collect()
-    ]
-    _release(spark)
-    return out
-
-
 def test_regimes_bit_identical(spark, monkeypatch):
-    broadcast_rows = _rows(spark, SF_DIR)  # every test SF is small-V
-    monkeypatch.setattr(graph, "HITS_BROADCAST_MAX_V", 0)  # force merge
-    merge_rows = _rows(spark, SF_DIR)
-    assert broadcast_rows == merge_rows
-    assert len(broadcast_rows) == 20  # top-10 per role, both roles present
+    broadcast, merge = twin(
+        spark, monkeypatch, lambda: graph.graph_hits_hub_authority(spark, SF_DIR)
+    )
+    assert broadcast.rows == merge.rows
+    assert len(broadcast.rows) == 20  # top-10 per role, both roles present
+    # Pins on the groupBy keys drop every per-round exchange (11 -> 6).
+    assert broadcast.total["shuffles"] < merge.total["shuffles"], (
+        broadcast.total, merge.total)
 
 
 def test_pagerank_regimes_bit_identical(spark, monkeypatch):
-    """Same gate pattern transferred to global PageRank (r12 probe #2,
-    tools/probe_pagerank_r12.py): broadcast regime won both interleaved
+    """Same gate pattern transferred to global PageRank
+    (OPTIMIZATION_r12.md item 2): broadcast regime won both interleaved
     sf0.1 pairings; the personalized variant measured NEGATIVE and
     stays on the merge shape (adjudicated in pagerank()'s docstring)."""
-
-    def rows():
-        out = [
-            tuple(r)
-            for r in graph.graph_pagerank_top(spark, SF_DIR).collect()
-        ]
-        _release(spark)
-        return out
-
-    broadcast_rows = rows()
-    monkeypatch.setattr(graph, "PAGERANK_BROADCAST_MAX_V", 0)
-    merge_rows = rows()
-    assert broadcast_rows == merge_rows
-    assert len(broadcast_rows) == graph.TOP_N
+    broadcast, merge = twin(
+        spark, monkeypatch, lambda: graph.graph_pagerank_top(spark, SF_DIR)
+    )
+    assert broadcast.rows == merge.rows
+    assert len(broadcast.rows) == graph.TOP_N
+    # The dst pin moves the per-round groupBy exchanges into the
+    # one-time pin: the rounds of the final fragment plan none.
+    assert broadcast.final["shuffles"] < merge.final["shuffles"], (
+        broadcast.final, merge.final)
 
 
 def test_cc_regimes_bit_identical(spark, monkeypatch):
     """connected_components' r12 folded-broadcast regime (self-loops
     baked into a d-pinned edge list + explicit labels broadcast) must
     equal the merge loop row-for-row -- checked through BOTH the
-    seeded/incremental caller and a plain dedup caller (probe
-    tools/probe_cc_r12.py won all four sf0.1 head-to-heads)."""
+    seeded/incremental caller and a plain dedup caller
+    (OPTIMIZATION_r12.md item 3: won all four sf0.1 head-to-heads)."""
     from ushas_spark.operators import dedup
 
     for fn in (
         graph.graph_components_incremental,
         dedup.dedup_cluster_components,
     ):
-        def rows():
-            out = [tuple(r) for r in fn(spark, SF_DIR).collect()]
-            _release(spark)
-            return out
-
-        broadcast_rows = rows()
-        monkeypatch.setattr(dedup, "CC_BROADCAST_MAX_V", 0)
-        merge_rows = rows()
-        monkeypatch.undo()
-        assert broadcast_rows == merge_rows
-        assert len(broadcast_rows) > 0
+        broadcast, merge = twin(spark, monkeypatch, lambda: fn(spark, SF_DIR))
+        assert broadcast.rows == merge.rows
+        assert len(broadcast.rows) > 0
+        # The folded loop's rounds plan no exchange; the merge loop's do.
+        assert broadcast.total["shuffles"] < merge.total["shuffles"], (
+            fn.__name__, broadcast.total, merge.total)
 
 
 def test_triangle_regimes_bit_identical(spark, monkeypatch):
-    """triangle_summary's r12 broadcast regime (probe
-    tools/probe_triangle_r12.py; won all three interleaved isolated
-    sf0.1 pairings 3.50/2.69/2.72 vs 3.95/2.77/5.79 s) must equal the
-    r10 shuffle shape row-for-row. The shuffle shape is the r10-r11
-    driver-green formulation, so this twin pins the restructure against
-    that evidence the same way the HITS/CC/k-core twins do."""
-
-    def rows():
-        out = [
-            tuple(r)
-            for r in graph.graph_triangle_count(spark, SF_DIR).collect()
-        ]
-        _release(spark)
-        return out
-
-    broadcast_rows = rows()
-    monkeypatch.setattr(graph, "TRIANGLE_BROADCAST_MAX_E", 0)
-    merge_rows = rows()
-    assert broadcast_rows == merge_rows
-    assert len(broadcast_rows) == 1  # one-row summary
+    """triangle_summary's r12 broadcast regime (OPTIMIZATION_r12.md
+    item 7; won all three interleaved isolated sf0.1 pairings
+    3.50/2.69/2.72 vs 3.95/2.77/5.79 s) must equal the r10 shuffle shape
+    row-for-row. The shuffle shape is the r10-r11 driver-green
+    formulation, so this twin pins the restructure against that
+    evidence the same way the HITS/CC/k-core twins do."""
+    broadcast, merge = twin(
+        spark, monkeypatch, lambda: graph.graph_triangle_count(spark, SF_DIR)
+    )
+    assert broadcast.rows == merge.rows
+    assert len(broadcast.rows) == 1  # one-row summary
+    assert broadcast.total["smj"] == 0 < merge.total["smj"], (
+        broadcast.total, merge.total)
 
 
 def test_triangle_broadcast_plan_no_smj(spark):
@@ -136,7 +112,7 @@ def test_triangle_broadcast_plan_no_smj(spark):
     df = graph.graph_triangle_count(spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
-    _release(spark)
+    release(spark)
     totals = {}
     for seg in segments:
         for k, v in seg["counts"].items():
@@ -147,24 +123,19 @@ def test_triangle_broadcast_plan_no_smj(spark):
 
 
 def test_kcore_regimes_bit_identical(spark, monkeypatch):
-    """k-core's r12 broadcast-anti peel regime (probe
-    tools/probe_kcore_r12.py; won both interleaved isolated sf0.1
-    pairings 4.96/4.69 vs 5.86/5.69 s) must equal the r11 semi-join
-    merge shape row-for-row. The merge shape is the r11 driver-green
-    formulation, so this twin pins the restructure against that
-    evidence the same way the HITS twin does."""
-    def rows():
-        out = [
-            tuple(r) for r in graph.graph_kcore_summary(spark, SF_DIR).collect()
-        ]
-        _release(spark)
-        return out
-
-    broadcast_rows = rows()
-    monkeypatch.setattr(graph, "KCORE_BROADCAST_MAX_V", 0)
-    merge_rows = rows()
-    assert broadcast_rows == merge_rows
-    assert len(broadcast_rows) == 1  # one-row core summary
+    """k-core's r12 broadcast-anti peel regime (OPTIMIZATION_r12.md
+    item 4; won both interleaved isolated sf0.1 pairings 4.96/4.69 vs
+    5.86/5.69 s) must equal the r11 semi-join merge shape row-for-row.
+    The merge shape is the r11 driver-green formulation, so this twin
+    pins the restructure against that evidence the same way the HITS
+    twin does."""
+    broadcast, merge = twin(
+        spark, monkeypatch, lambda: graph.graph_kcore_summary(spark, SF_DIR)
+    )
+    assert broadcast.rows == merge.rows
+    assert len(broadcast.rows) == 1  # one-row core summary
+    assert broadcast.total["smj"] == 0 < merge.total["smj"], (
+        broadcast.total, merge.total)
 
 
 def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark):
@@ -178,7 +149,7 @@ def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark):
     df = graph.graph_kcore_summary(spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
-    _release(spark)
+    release(spark)
     round_segs = segments[-graph.KCORE_ROUNDS:]
     assert len(round_segs) == graph.KCORE_ROUNDS
     for seg in round_segs:
@@ -199,7 +170,7 @@ def test_small_v_regime_plans_zero_round_exchanges(spark):
     df = graph.graph_hits_hub_authority(spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
-    _release(spark)
+    release(spark)
     # Round segments = the non-pin segments (pin segments have no
     # executed post plan). The FIRST round segment carries the one-time
     # initial-hubs distinct (one |V|-row exchange); every later round

@@ -1,5 +1,5 @@
-"""Plan-shape pins for the r12 n-gram distinct removals (probe #8,
-tools/probe_ngrams_r12.py).
+"""Plan-shape pins for the r12 n-gram distinct removals
+(OPTIMIZATION_r12.md item 8).
 
 Both restructures remove a provably-redundant distinct:
 

@@ -109,7 +109,7 @@ PANDAS_EVAL_OK_NAMES = {
     # bit-equality twin (_hilbert_chain_histogram) and the query stays
     # DuckDB-oracle-gated.
     "layout_hilbert_histogram",
-    # Reviewed r12 (measured, tools/probe_pca_r12.py): the PCA moment
+    # Reviewed r12 (measured, OPTIMIZATION_r12.md item 11): the PCA moment
     # pass's three readouts (upper-triangle second moments, per-dim
     # sums, row count) are all exact-integer sums, so one mapInPandas
     # pass over the quantised corpus replaces three corpus scans and

@@ -1,24 +1,24 @@
 """Regime twins + plan pins for the r13 restructures.
 
-Three restructures (probes tools/probe_{walks,ppr,bloom}_r13.py, all
-winners of 4/4 interleaved isolated sf0.1 pairings, hash-identical at
-three SFs):
+Three restructures (OPTIMIZATION_r13.md items 1-3, all winners of 4/4
+interleaved isolated sf0.1 pairings, hash-identical at three SFs):
 
 - graph_random_walks: size-gated adjacency regime -- array-packed
   per-src neighbor lists + explicit broadcast of the walk table per hop
   + in-row argmin; the merge regime (r10 driver-green shape) runs
-  byte-unchanged past WALKS_BROADCAST_MAX_V.
+  byte-unchanged past durability.BROADCAST_MAX_ROWS.
 - graph_personalized_pagerank: size-gated broadcast regime with the
   seed membership join collapsed to the provable ``node < PPR_SEED_CAP``
   predicate; the merge regime (r04-r12 driver-green shape, join-based)
-  runs byte-unchanged past PAGERANK_BROADCAST_MAX_V.
+  runs byte-unchanged past durability.BROADCAST_MAX_ROWS.
 - pipeline_bloom_prefilter: gram table materialized once (was evaluated
   3x), probe-side bit explode + (doc_id, ng) min-agg replaced by
   BLOOM_HASHES broadcast word joins + in-row AND; no regime gate (every
   broadcast is constant-size or pre-existing).
 
-The twins prove the gate only changes physical strategy, never values;
-the plan pins prove the shape the restructure bought, via the same
+The twins (tests/regime_twin.py) prove the gate only changes physical
+strategy, never values, and that forcing the budget to 0 really flips
+the regime; the plan pins prove the shape the restructure bought, via the same
 tree-walk counter PLANS.md uses (never text grep -- cached relations
 re-print their stored plans).
 """
@@ -32,6 +32,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests.regime_twin import release, twin
 from ushas_spark import durability
 from ushas_spark.durability import plan_counts
 from ushas_spark.operators import graph
@@ -46,31 +47,20 @@ def spark():
     return get_spark("test-r13-regimes")
 
 
-def _release(spark):
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(True)
-
-
 def _counts(df):
     return plan_counts(df._jdf.queryExecution().executedPlan())
 
 
 def test_walks_regimes_bit_identical(spark, monkeypatch):
-    def rows():
-        out = [
-            tuple(r)
-            for r in graph.graph_random_walks(spark, SF_DIR).collect()
-        ]
-        _release(spark)
-        return out
-
-    adjacency_rows = rows()  # every test SF is small-V
-    monkeypatch.setattr(graph, "WALKS_BROADCAST_MAX_V", 0)  # force merge
-    merge_rows = rows()
-    assert adjacency_rows == merge_rows
-    assert len(adjacency_rows) > 0
-    assert len(adjacency_rows[0]) == graph.WALK_LEN + 1  # n0..n{len}
+    adjacency, merge = twin(  # every test SF is small-V
+        spark, monkeypatch, lambda: graph.graph_random_walks(spark, SF_DIR)
+    )
+    assert adjacency.rows == merge.rows
+    assert len(adjacency.rows) > 0
+    assert len(adjacency.rows[0]) == graph.WALK_LEN + 1  # n0..n{len}
+    # The in-row argmin drops the per-hop groupBy(walker) exchanges.
+    assert adjacency.total["shuffles"] < merge.total["shuffles"], (
+        adjacency.total, merge.total)
 
 
 def test_walks_adjacency_plan_no_smj_one_exchange(spark):
@@ -78,28 +68,23 @@ def test_walks_adjacency_plan_no_smj_one_exchange(spark):
     adjacency, zero SMJ, and the only planned exchange is the final
     orderBy (the per-hop groupBy(walker) argmin exchanges are gone)."""
     counts = _counts(graph.graph_random_walks(spark, SF_DIR))
-    _release(spark)
+    release(spark)
     assert counts["smj"] == 0, counts
     assert counts["bhj"] == graph.WALK_LEN, counts
     assert counts["shuffles"] == 1, counts
 
 
 def test_ppr_regimes_bit_identical(spark, monkeypatch):
-    def rows():
-        out = [
-            tuple(r)
-            for r in graph.graph_personalized_pagerank(
-                spark, SF_DIR
-            ).collect()
-        ]
-        _release(spark)
-        return out
-
-    broadcast_rows = rows()
-    monkeypatch.setattr(graph, "PAGERANK_BROADCAST_MAX_V", 0)  # force merge
-    merge_rows = rows()
-    assert broadcast_rows == merge_rows
-    assert 0 < len(broadcast_rows) <= graph.TOP_N
+    broadcast, merge = twin(
+        spark,
+        monkeypatch,
+        lambda: graph.graph_personalized_pagerank(spark, SF_DIR),
+    )
+    assert broadcast.rows == merge.rows
+    assert 0 < len(broadcast.rows) <= graph.TOP_N
+    # Dst-pinned edges + broadcast ranks: the rounds plan no exchange.
+    assert broadcast.final["shuffles"] < merge.final["shuffles"], (
+        broadcast.final, merge.final)
 
 
 def test_ppr_broadcast_plan_no_smj_rounds_exchange_free(spark):
@@ -108,7 +93,7 @@ def test_ppr_broadcast_plan_no_smj_rounds_exchange_free(spark):
     membership is a WHEN predicate, not a join) -- only the top-N sort
     exchange remains, and no SMJ anywhere."""
     counts = _counts(graph.graph_personalized_pagerank(spark, SF_DIR))
-    _release(spark)
+    release(spark)
     assert counts["smj"] == 0, counts
     assert counts["shuffles"] <= 1, counts
 
@@ -133,7 +118,7 @@ def test_bloom_single_documents_scan_and_four_shuffles(spark):
     plans = [seg["pre"] for seg in segments] + [
         df._jdf.queryExecution().executedPlan().toString()
     ]
-    _release(spark)
+    release(spark)
     scans = sum("documents" in p for p in plans)
     assert scans == 1, f"{scans} plans scan the documents parquet"
     assert total["shuffles"] == 4, total

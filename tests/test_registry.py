@@ -9,6 +9,10 @@ forward where it would burn a driver slot.
 
 from __future__ import annotations
 
+import ast
+import fnmatch
+import os
+
 from ushas_spark import registry
 
 registry.load_all()
@@ -281,3 +285,30 @@ def test_gen_rotation_state_scan_semantics(tmp_path, monkeypatch):
     assert files4 == ["CORRECTNESS_r01.json"]
     assert last4 == {"a": 1, "c": 1}
     assert set(red4) == {"b", "d"}
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_tools_hold_no_round_stamped_scripts():
+    """Round history lives in git and OPTIMIZATION_r*.md, not in one-off
+    tools/*_rNN.py probes: plan dumps go through tools/dump_plans.py."""
+    tools = os.listdir(os.path.join(REPO, "tools"))
+    stamped = fnmatch.filter(tools, "*_r[0-9][0-9]*.py")
+    assert not stamped, f"round-stamped scripts in tools/: {sorted(stamped)}"
+
+
+def test_one_broadcast_budget():
+    """Every size-gated regime reads durability.BROADCAST_MAX_ROWS through
+    durability.broadcast_fits; no module keeps its own *_BROADCAST_MAX_*."""
+    copies = []
+    for root, _, files in os.walk(os.path.join(REPO, "ushas_spark")):
+        for fname in fnmatch.filter(files, "*.py"):
+            path = os.path.join(root, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                    if fnmatch.fnmatchcase(node.id, "*_BROADCAST_MAX_*"):
+                        copies.append(f"{os.path.relpath(path, REPO)}: {node.id}")
+    assert not copies, copies

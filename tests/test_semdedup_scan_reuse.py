@@ -1,7 +1,7 @@
 """Focused pin for the r12 semdedup scan-reuse fix.
 
-dedup_semantic_clusters runs its own inline Lloyd loop; r12 (probe
-tools/probe_semdedup_mat_r12.py) materialized the projected corpus once
+dedup_semantic_clusters runs its own inline Lloyd loop; r12
+(OPTIMIZATION_r12.md item 10) materialized the projected corpus once
 -- the same one-line transfer kmeans_assign got -- so the ITERS update
 rounds and the final assignment read the truncated checkpoint instead
 of re-scanning parquet and re-running the string->double-array

@@ -1,20 +1,19 @@
-"""Capture .explain("formatted") for the r12-touched queries.
+"""Capture .explain("formatted") for a list of registered queries.
 
-Writes plans/r12/<query>_<suffix>.txt for each query: the FINAL
-fragment's formatted plan plus, for iterative/materialized operators,
-every truncated segment's pre-execution plan (captured via
+Writes <out>/<query>_<suffix>.txt for each query: the FINAL fragment's
+formatted plan plus, for iterative/materialized operators, every
+truncated segment's pre-execution plan (captured via
 durability.begin/end_plan_audit -- the final fragment of a pinned loop
 shows only the top-k over caches, so the segments are where the
 restructures are visible: see PLANS.md header).
 
 Run from the tree whose plans you want (the repo root for "after", a
-git worktree of the r11 tip for "before"):
+`git archive` copy of the parent commit for "before"):
 
-    python tools/gen_r12_plans.py after  [--out /root/repo/plans/r12] \
-        [--queries graph_hits_hub_authority,...]
+    SPARK_GRAFT_SF_DIR=<sf dir> python tools/dump_plans.py after \
+        --out plans/<name> --queries graph_hits_hub_authority,...
 
-Uses a PLAIN SparkSession (driver contract) at SPARK_GRAFT_SF_DIR
-(default sf0.1, the bench scale).
+Uses a PLAIN SparkSession (driver contract) at SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -25,31 +24,17 @@ import sys
 
 sys.path.insert(0, os.getcwd())
 
-DEFAULT_QUERIES = [
-    # r12 probe 1: HITS score-join broadcast regime
-    "graph_hits_hub_authority",
-    # r12 probe 2: global-pagerank broadcast regime
-    "graph_pagerank_top",
-    # r12 probe 3: folded-broadcast connected-components loop
-    # (shared helper -- every batch headline caller listed)
-    "dedup_cluster_components",
-    "dedup_survivor_stats",
-    "dedup_ensemble_clusters",
-    "dedup_keep_longest",
-    "multimodal_audio_dedup_clusters",
-    "multimodal_image_dedup_clusters",
-    "graph_components_incremental",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("suffix", choices=["before", "after"])
-    ap.add_argument("--out", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"))
-    ap.add_argument("--queries", default=",".join(DEFAULT_QUERIES))
+    ap.add_argument("--out", required=True)
+    ap.add_argument("--queries", required=True, help="comma-separated names")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        ap.error("set SPARK_GRAFT_SF_DIR to the scale-factor directory")
     os.makedirs(args.out, exist_ok=True)
 
     from pyspark.sql import SparkSession
@@ -59,7 +44,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
-        .appName("gen_r12_plans")
+        .appName("dump_plans")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -73,7 +58,7 @@ def main() -> None:
         if not name:
             continue
         print(f"== {name}", flush=True)
-        spark.sparkContext.setJobDescription(f"plans/r12 {name} ({args.suffix})")
+        spark.sparkContext.setJobDescription(f"dump_plans {name} ({args.suffix})")
         durability.begin_plan_audit()
         df = qs[name](spark, sf_dir)
         segs = durability.end_plan_audit()

@@ -61,6 +61,28 @@ def end_plan_audit() -> list[dict]:
     return out
 
 
+# The one broadcast budget of every size-gated regime (HITS, PageRank,
+# personalized PageRank, random walks, triangles, k-core, connected
+# components). Below it a gate takes its broadcast regime: an explicit
+# F.broadcast of a table bounded by the counted rows (10M rows of a few
+# bigints is ~80-160 MB, far above every test SF and under typical
+# broadcast limits). Past it -- |V| or |E| grows linearly with the
+# corpus at 100 TB -- the gate takes its merge regime, the pinned
+# sort-merge shape. Tests force the merge regime everywhere with
+# monkeypatch.setattr(durability, "BROADCAST_MAX_ROWS", 0).
+BROADCAST_MAX_ROWS = 10_000_000
+
+
+def broadcast_fits(df: DataFrame) -> bool:
+    """True when ``df``'s row count is within :data:`BROADCAST_MAX_ROWS`.
+
+    Runs one count job; callers pass either a parquet table (a metadata
+    count) or a just-materialized frame (a scan of cached blocks). The
+    budget is read at call time, so patching the module global moves
+    every gate."""
+    return df.count() <= BROADCAST_MAX_ROWS
+
+
 def set_reliable(on: bool) -> None:
     """Switch every subsequent :func:`materialize` call between
     executor-local (fast, not fault-tolerant) and reliable (checkpoint

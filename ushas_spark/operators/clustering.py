@@ -140,7 +140,7 @@ def kmeans_assign(
     rounds from the stride init.
 
     The projected corpus (vec_id + double array) is materialized ONCE
-    (r12 probe tools/probe_kmeans_r12.py): every _assign round is
+    (OPTIMIZATION_r12.md item 5): every _assign round is
     exchange-free (1-row centroid broadcast), so re-deriving `emb` per
     round paid ``iters + 1`` parquet scans + string->double-array
     conversions for nothing. Won both interleaved isolated sf0.1
@@ -391,8 +391,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    # Same one-line transfer as kmeans_assign (r12 probe
-    # tools/probe_semdedup_mat_r12.py): the inline Lloyd loop otherwise
+    # Same one-line transfer as kmeans_assign (OPTIMIZATION_r12.md
+    # item 10): the inline Lloyd loop otherwise
     # re-scans parquet and re-runs the string->double-array conversion
     # in every _assign round (ITERS + 1 corpus passes). Won both
     # interleaved isolated sf0.1 pairings (6.99/5.23 s vs 9.10/8.03
@@ -553,7 +553,7 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescale -- both engines walk the identical integer sequence, so the
     eigenvector sign ambiguity never arises.
 
-    r12 (tools/probe_pca_r12.py): the corpus pass is the engine's third
+    r12 (OPTIMIZATION_r12.md item 11): the corpus pass is the engine's third
     reviewed Arrow-eval allowance (tests/test_plan_lint.py
     PANDAS_EVAL_OK_NAMES, precedents sim_brute_force_topk_numpy and
     layout_hilbert_histogram). The JVM shape paid THREE corpus scans

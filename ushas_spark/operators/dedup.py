@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ushas_spark.durability import materialize, pin_partitioned
+from ushas_spark.durability import broadcast_fits, materialize, pin_partitioned
 from ushas_spark.io import load_table
 from ushas_spark.registry import query
 
@@ -33,11 +33,6 @@ N_HASHES = 12
 BANDS = 4
 ROWS_PER_BAND = 3  # N_HASHES / BANDS
 JACCARD_THRESHOLD = 0.2
-# Regime gate for connected_components' per-round labels join (r12;
-# same rationale as graph.HITS_BROADCAST_MAX_V): explicit broadcast of
-# the |V'|-row labels table wins while edge-participating nodes fit the
-# broadcast budget; past it the s-pinned merge loop streams the edges.
-CC_BROADCAST_MAX_V = 10_000_000
 SHINGLE_WIDTH = 3
 
 
@@ -668,9 +663,9 @@ def connected_components(
     the REGIONS THE NEW EDGES MERGE, not the full component diameter.
     Nodes without a seed row label themselves (new arrivals).
 
-    r12 regime gate (probe tools/probe_cc_r12.py; same pattern as
-    graph.HITS_BROADCAST_MAX_V): when the edge-node universe fits the
-    broadcast budget (decided by a near-free count over the
+    r12 regime gate (OPTIMIZATION_r12.md item 3; same pattern as
+    graph_hits_hub_authority): when the edge-node universe fits
+    durability.BROADCAST_MAX_ROWS (decided by a near-free count over the
     just-materialized labels table), the loop switches to a folded
     broadcast shape -- SELF-LOOP rows (own=true) are baked into the
     edge list once, the edges are pinned on D (the groupBy key), and
@@ -720,7 +715,7 @@ def connected_components(
         )
     # Regime gate (see docstring): count over the just-materialized
     # labels table -- a localCheckpointed |V'|-row scan, near-free.
-    small_v = labels.count() <= CC_BROADCAST_MAX_V
+    small_v = broadcast_fits(labels)
     if small_v:
         # Folded broadcast loop: self-loops (own=true) baked into the
         # d-pinned edge list once; one BHJ per round emits neighbor AND

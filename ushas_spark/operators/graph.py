@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ushas_spark.durability import materialize, pin_partitioned
+from ushas_spark.durability import broadcast_fits, materialize, pin_partitioned
 from ushas_spark.io import load_table
 from ushas_spark.registry import query
 
@@ -43,11 +43,6 @@ DAMPING = 0.85
 ITERS = 3
 RANK_SCALE = 1_000_000_000  # 1e-9 rank resolution; sums < 2^63 for |V| ≤ ~9e9
 TOP_N = 25
-# Regime gate for the per-round ranks join (r12, same rationale as
-# HITS_BROADCAST_MAX_V below): explicit broadcast of the |V|-row ranks
-# table wins while it fits the broadcast budget; past it (|V_cust| is
-# linear in the corpus) the merge regime streams the src-pinned edges.
-PAGERANK_BROADCAST_MAX_V = 10_000_000
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,16 +72,16 @@ def pagerank(
 ) -> DataFrame:
     """Ranks after ``iters`` synchronous rounds from the uniform start.
 
-    Size-gated regimes like graph_hits_hub_authority (r12 probe,
-    tools/probe_pagerank_r12.py; regimes bit-identical, twin pinned in
+    Size-gated regimes like graph_hits_hub_authority
+    (OPTIMIZATION_r12.md item 2; regimes bit-identical, twin pinned in
     tests/test_graph_hits_regimes.py):
 
-    - broadcast regime (|V| <= PAGERANK_BROADCAST_MAX_V): edges pinned
-      on DST (the contribution groupBy key) and the |V|-row ranks side
-      explicitly broadcast each round, so a round plans zero exchanges
-      -- the 3-round plan nests the broadcasts inside one job. WON both
-      interleaved isolated sf0.1 pairings: 4.45/4.66 s vs shipped
-      5.78/5.35 s best-of-3, hash-identical at sf0.01/sf0.1.
+    - broadcast regime (|V_cust| <= durability.BROADCAST_MAX_ROWS):
+      edges pinned on DST (the contribution groupBy key) and the |V|-row
+      ranks side explicitly broadcast each round, so a round plans zero
+      exchanges -- the 3-round plan nests the broadcasts inside one
+      job. WON both interleaved isolated sf0.1 pairings: 4.45/4.66 s vs
+      shipped 5.78/5.35 s best-of-3, hash-identical at sf0.01/sf0.1.
     - merge regime (the 100 TB shape): edges pinned on SRC; the degree
       join + ranks join stream the |E| side exchange- and sort-free and
       each round exchanges only the |V|-row ranks side.
@@ -104,10 +99,7 @@ def pagerank(
     negative recorded here so the probe isn't re-run blind."""
     edges = _edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    small_v = (
-        load_table(spark, sf_dir, "customer").count()
-        <= PAGERANK_BROADCAST_MAX_V
-    )
+    small_v = broadcast_fits(load_table(spark, sf_dir, "customer"))
     ewd = pin_partitioned(edges.join(deg, "src"), "dst" if small_v else "src")
     # Everything downstream derives from the materialized edge table so
     # the orders ⋈ lineitem subtree is scanned exactly once, not once
@@ -200,13 +192,6 @@ def graph_pagerank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- deterministic random walks (node2vec-style corpus sampling) ----------
 WALK_LEN = 3
 START_MOD = 10  # walkers start from customers with custkey % 10 == 0
-# Regime gate (r13, tools/probe_walks_r13.py; same parquet-metadata
-# customer-count proxy as HITS/PAGERANK_BROADCAST_MAX_V): below it the
-# walk table (|customers|/START_MOD rows) is explicitly broadcast per
-# hop and the per-src adjacency is array-packed; past it (|walkers| and
-# hub degrees are linear in the corpus) the r10 merge shape runs
-# byte-unchanged.
-WALKS_BROADCAST_MAX_V = 10_000_000
 
 
 def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> DataFrame:
@@ -218,10 +203,11 @@ def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> Da
     deterministic stand-in for a seeded RNG that both engines compute
     identically, so whole walks are oracle-gated.
 
-    Size-gated regimes (r13 probe, tools/probe_walks_r13.py; regimes
+    Size-gated regimes (OPTIMIZATION_r13.md item 1; regimes
     bit-identical, twin pinned in tests/test_r13_regimes.py):
 
-    - adjacency regime (|V_cust| <= WALKS_BROADCAST_MAX_V): the edge
+    - adjacency regime (|V_cust| <= durability.BROADCAST_MAX_ROWS,
+      the walk table being |customers|/START_MOD rows): the edge
       table folds ONCE into a |V|-row (src, nbrs array) adjacency
       (edges are distinct by _edges construction, so no distinct pass)
       and each hop is one broadcast join of the |walkers|-row walk
@@ -246,11 +232,7 @@ def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> Da
       pairings (4.98/2.99 vs 4.88/2.72), so the driver-green
       formulation stays byte-identical.
     """
-    small_v = (
-        load_table(spark, sf_dir, "customer").count()
-        <= WALKS_BROADCAST_MAX_V
-    )
-    if small_v:
+    if broadcast_fits(load_table(spark, sf_dir, "customer")):
         return _random_walks_adjacency(spark, sf_dir, length)
     return _random_walks_merge(spark, sf_dir, length)
 
@@ -393,14 +375,6 @@ FROM tri
 """
 
 
-# Regime gate for triangle_summary's broadcast joins (r12 probe #7,
-# tools/probe_triangle_r12.py): compared against the just-materialized
-# DISTINCT edge count. The broadcast side (oriented adjacency) carries E
-# total array entries (~8E bytes of ids), so the gate bounds the
-# broadcast at ~80 MB -- the same order as the sibling 10M-vertex gates.
-TRIANGLE_BROADCAST_MAX_E = 10_000_000
-
-
 @query("graph_triangle_count", oracle=_TRIANGLE_ORACLE)
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count + wedge count of the part co-purchase graph
@@ -442,10 +416,10 @@ def triangle_summary(edges: DataFrame) -> DataFrame:
     (u, v; u != v, one row per undirected edge) edge DataFrame --
     factored out so scale tests can feed planted graphs.
 
-    Regime gate (r12 probe #7, tools/probe_triangle_r12.py; same
-    rationale as the HITS/CC/PAGERANK/KCORE gates): the degree tables
-    are |V|-row two-column frames and the oriented adjacency holds E
-    total array entries, so below TRIANGLE_BROADCAST_MAX_E (over the
+    Regime gate (OPTIMIZATION_r12.md item 7; same rationale as the
+    HITS/CC/PAGERANK/KCORE gates): the degree tables are |V|-row
+    two-column frames and the oriented adjacency holds E total array
+    entries, so below durability.BROADCAST_MAX_ROWS (over the
     just-materialized edge count) both degree joins and the closing
     intersection join take explicit broadcasts -- the E-row
     array-carrying exchange on t (by bytes the heaviest shuffle here)
@@ -457,7 +431,7 @@ def triangle_summary(edges: DataFrame) -> DataFrame:
     byte-unchanged.
     """
     edges = materialize(edges)
-    small_e = edges.count() <= TRIANGLE_BROADCAST_MAX_E
+    small_e = broadcast_fits(edges)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -523,12 +497,6 @@ def triangle_summary(edges: DataFrame) -> DataFrame:
 # ----------------------------------------------- k-core peeling (iterative)
 KCORE_K = 80
 KCORE_ROUNDS = 6
-# Regime gate for the peel loop's survivor restriction (r12 probe #5,
-# tools/probe_kcore_r12.py; same rationale as HITS/CC/PAGERANK gates):
-# below it the per-round neighbor filter anti-joins a BROADCAST of the
-# round's dropped-node set; past it (|V| linear in corpus) the semi-join
-# merge shape runs byte-unchanged.
-KCORE_BROADCAST_MAX_V = 10_000_000
 
 
 def _kcore_oracle() -> str:
@@ -589,7 +557,7 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the peeling degree test is ``size(ns)`` -- a FREE re-scan of the
     materialized arrays, no aggregation, no shuffle. Each round then
     restricts the exploded survivor arrays to surviving neighbors and
-    re-collects by node: below KCORE_BROADCAST_MAX_V that restriction
+    re-collects by node: below durability.BROADCAST_MAX_ROWS that restriction
     is a broadcast LEFT ANTI against the round's dropped set (r12 --
     one E'-row groupBy exchange per round, no sorts); past the gate it
     is a LEFT SEMI against the survivor set (two E'-row exchanges,
@@ -658,12 +626,12 @@ def kcore_summary(
     # the explode) re-scan the already-materialized adj, so the filter
     # costs nothing either time.
     #
-    # r12 regime gate (probe tools/probe_kcore_r12.py): restricting the
+    # r12 regime gate (OPTIMIZATION_r12.md item 4): restricting the
     # exploded neighbor side to survivors is set-equivalent to
     # SUBTRACTING the round's dropped nodes (arrays are symmetric --
     # every neighbor holds an edge back to its source, so every
     # neighbor id is in exactly one of keep/dropped). Below
-    # KCORE_BROADCAST_MAX_V the loop therefore anti-joins an explicit
+    # durability.BROADCAST_MAX_ROWS the loop therefore anti-joins an explicit
     # BROADCAST of dropped (|V'|-row, decided by a near-free count over
     # the just-materialized adj): the round keeps ONE E'-row groupBy
     # exchange and plans 1 BHJ / 0 SMJ / 0 sorts, vs the merge shape's
@@ -677,7 +645,7 @@ def kcore_summary(
     # exponentially (the r09 MMR lesson) -- planning swamps the
     # exchange saved. Past the gate (|V| linear in corpus, a broadcast
     # would OOM the driver) the semi-join shape runs byte-unchanged.
-    small_v = adj.count() <= KCORE_BROADCAST_MAX_V
+    small_v = broadcast_fits(adj)
     surv = None
     for _ in range(rounds):
         surv = adj.filter(F.size("ns") >= k)
@@ -1019,7 +987,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a broadcast membership join. Zero-rank nodes (unreached within
     the walk horizon) are filtered before the top slice.
 
-    Size-gated regimes (r13 probe, tools/probe_ppr_r13.py; regimes
+    Size-gated regimes (OPTIMIZATION_r13.md item 2; regimes
     bit-identical, twin pinned in tests/test_r13_regimes.py).
     The r12 broadcast transfer lost BECAUSE the per-round seed
     left-join + crossJoin rescale nested inside each round's broadcast
@@ -1039,11 +1007,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     The predicate-on-merge-shape arm split its pairings (won 4.43 vs
     5.21, lost 5.21 vs 4.87), so past the gate the r04-r12
     driver-green join-based merge formulation stays byte-unchanged."""
-    small_v = (
-        load_table(spark, sf_dir, "customer").count()
-        <= PAGERANK_BROADCAST_MAX_V
-    )
-    if small_v:
+    if broadcast_fits(load_table(spark, sf_dir, "customer")):
         return _ppr_broadcast_pred(spark, sf_dir)
     return _ppr_merge(spark, sf_dir)
 
@@ -1261,14 +1225,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------- HITS
 HITS_ITERS = 3
 HITS_SCALE = 1_000_000_000
-# Regime gate for the per-round score join (r12 probe): an explicit
-# broadcast of the |V|-row score table wins while it fits the driver /
-# executor broadcast budget. 10M rows of (bigint, bigint) ~= 160 MB
-# payload -- comfortably under typical budgets, far above every test SF
-# (sf0.1 has 15k customers), and conservative enough that the 100 TB
-# regime (TPC-H |V_cust| grows linearly with the corpus) always takes
-# the merge path.
-HITS_BROADCAST_MAX_V = 10_000_000
 
 
 def _hits_oracle(iters: int = HITS_ITERS) -> str:
@@ -1329,9 +1285,9 @@ def graph_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two regimes, size-gated on the score-table universe (bounded above
     by the customer row count, a near-free parquet-metadata count job),
     bit-identical outputs (regime twin pinned in tests/test_graph_hits
-    _regimes.py; r12 probe, tools/probe_hits_r12.py):
+    _regimes.py; OPTIMIZATION_r12.md item 1):
 
-    - broadcast regime (|V| <= HITS_BROADCAST_MAX_V): the edge list is
+    - broadcast regime (|V| <= durability.BROADCAST_MAX_ROWS): the edge list is
       pinned on each half-round's GROUPBY key and the |V|-row score
       table joins in as an explicit broadcast build side, so a round
       pays ZERO planned exchanges -- the broadcast join streams the
@@ -1373,9 +1329,7 @@ def graph_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Upper bound on the hub-score universe: every cust key comes from
     # o_custkey, so |customer| bounds it. Parquet count is a
     # metadata/row-group-stat scan, not a data read.
-    small_v = (
-        load_table(spark, sf_dir, "customer").count() <= HITS_BROADCAST_MAX_V
-    )
+    small_v = broadcast_fits(load_table(spark, sf_dir, "customer"))
     # Two pinned layouts of the bipartite edge list. Regime picks the
     # keys: broadcast regime pins on the GROUPBY keys (supp for the
     # authority half, cust for the hub half) because the score join is

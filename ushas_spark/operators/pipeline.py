@@ -232,8 +232,8 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (array_distinct before the explode) and ev is distinct on ng, so
     # each (doc, ng) survives the inner join at most once -- the plain
     # count is provably identical and drops the distinct-aggregate's
-    # extra (doc_id, ng)-wide exchange (r12 probe #8,
-    # tools/probe_ngrams_r12.py: 4 -> 3 planned shuffles, won all three
+    # extra (doc_id, ng)-wide exchange (OPTIMIZATION_r12.md item 8:
+    # 4 -> 3 planned shuffles, won all three
     # interleaved isolated sf0.1 pairings, hash-identical).
     return (
         tr.join(F.broadcast(ev), "ng")
@@ -1620,7 +1620,7 @@ def pipeline_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, and both engines fold bits with two's-complement BIGINT
     shifts and BIT_OR.
 
-    r13 restructure (tools/probe_bloom_r13.py), two changes, both
+    r13 restructure (OPTIMIZATION_r13.md item 3), two changes, both
     provably value-identical:
 
     - ``hashed`` (documents scan -> 3-gram zip_with -> explode -> TWO

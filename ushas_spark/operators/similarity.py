@@ -1305,7 +1305,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-preserving and dropped), ties break on cand_id, so both
     engines pick identical sets.
 
-    Scale shape (restructured r09, adjudicated in registry.py): the
+    Scale shape (restructured r09; adjudicated in the r09 registry.py
+    probe log, now in git history): the
     per-query candidate set is bounded ({TOP_K} rows), so the WHOLE
     greedy loop runs map-side on ONE packed row per query
     (mmr_greedy_select above) -- candidates are collect_list'ed into

@@ -611,7 +611,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF and postings branches pay full tokenization, and re-tokenizing
     beats writing the |corpus|-sized TF table. A 100 TB deployment
     flips this by writing the postings table once, bucketed by word
-    (adjudication in registry.py). IDF is
+    (r09 adjudication, in the git history of registry.py). IDF is
     the RATIONAL weight (N * {IDF_SCALE}) // df instead of ln(N/df):
     monotonically equivalent ranking signal with pure-integer scoring,
     chosen because cross-engine ln() differs in the last ulp while
@@ -1642,8 +1642,8 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
        doc is a single row before the explode), so array_distinct on
        the gram array makes the pair stream globally distinct BY
        CONSTRUCTION -- the old separate distinct() exchange on full
-       gram strings is provably redundant (r12 probe #8,
-       tools/probe_ngrams_r12.py: 4 -> 3 planned shuffles, won all
+       gram strings is provably redundant (OPTIMIZATION_r12.md
+       item 8: 4 -> 3 planned shuffles, won all
        three interleaved isolated sf0.1 pairings 3.52/3.49/3.47 vs
        4.11/3.69/3.80 s, hash-identical). The groupBy shuffles only
        (gram, partial count) with map-side aggregation.

@@ -43,433 +43,15 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # The driver's correctness gate walks queries() in REGISTRATION ORDER and
-# (empirically, rounds 1-9) only covers a prefix of ~50 per round. Ordering
-# is therefore part of the verification strategy. ROUND-10 state: the r09
-# gate went 49/49 green on oracled rows (seventh zero-wrong-answer round)
-# but its head-pinned rows-only sample, expr_xpath_url_battery, recorded
-# the registry's FIRST red row -- a driver-harness crash (pandas
-# canonicalizer vs a raw array<string> column), not a wrong answer. Fixed
-# r10 (queries/misc.py array_join-serializes xp_all; output-schema lint in
-# tests/test_plan_lint.py + oracle_harness now forbids the whole class),
-# adjudicated in tools/gen_rotation_state.EXPECTED_RED, and the name stays
-# head-pinned below so the r10 gate lands the green rows-only row. Every
-# OTHER registered query has a green CORRECTNESS row in r01-r09. The walk
-# order is
-# DERIVED, not hand-maintained: tools/gen_rotation_state.py scans every
-# CORRECTNESS_r{N}.json into rotation_state.GREEN_LAST_ROUND, and greens
-# sort OLDEST-EVIDENCE-FIRST below, so each round's ~50-slot prefix
-# re-certifies the stalest rows and the full registry rolls over every
-# ~8 rounds with no bookkeeping edits. Never-checked queries (new
-# operators) still sort ahead of every green.
-# R09+ ENDGAME PLAN (per the r07/r08 verdicts): (a) any driver-red
-# CORRECTNESS row (would be the first ever) takes absolute priority;
-# (b) iterative-perf headroom is SPENT. The last probe LANDED in r09:
-# sim_mmr_rerank went 35 -> 3 shuffles / 5 jobs -> 1 by running the
-# whole greedy loop map-side inside ONE aggregate fold over the packed
-# per-query candidate array (1.28 vs 1.55 s at sf0.1; bit-exact vs the
-# unchanged oracle). Gotcha recorded in the verify skill: the unrolled
-# withColumn formulation inlined the accumulator ~3x per round and
-# Catalyst optimization went exponential -- fold accumulators are
-# lambda VARIABLES, never inlined.
-# POSITIVE r10 probe (sanctioned lane: measured perf on the top wall
-# item): graph_triangle_count's closing check restructured from oriented-
-# wedge enumeration + composite semi-join to per-edge ADJACENCY-ARRAY
-# INTERSECTION (|N+(s) & N+(t)| summed over oriented edges). Isolated
-# fresh-JVM best-of-3 at sf0.1, three interleaved pairings: wedge
-# 6.90/7.00/8.57 s vs intersection 3.95/4.31/5.43 s (~0.6x), closing-
-# stage exchanges 4 -> 2, output bit-identical (1,884,488 triangles),
-# oracle unchanged and green at sf0.001/sf0.01, planted-clique and
-# brute-force ground truths green. PLANS.md is unchanged BY MEASUREMENT,
-# not by staleness: at sf0.01 both shapes broadcast the small sides and
-# the summed segment counts coincide; the structural win only
-# materializes at SFs where the wedge table exceeded the broadcast
-# threshold. Orientation still bounds every N+ array at O(sqrt(m)), so
-# the intersection inherits the wedge shape's celebrity-node safety.
-# Companion r10 probe, graph_link_prediction: the centers self-join
-# replaced by in-row C(d,2) pair expansion over the capped sorted
-# neighbor array. Wall is a WASH at sf0.1 (2.59/2.52 vs 2.70/2.54 s
-# across interleaved isolated pairings -- the pair groupBy dominates)
-# but the plan drops 13 -> 10 exchanges / 6 -> 3 SMJs by not
-# shuffling+sorting the adjacency table twice; kept on the plan-count
-# doctrine since output is hash-identical and wall did not regress.
-# The triangle intersection trick itself does NOT transfer here: link
-# prediction scores NON-adjacent pairs, which only the fanout can
-# discover.
-# POSITIVE r11 probe (the verdict's optional lane): graph_kcore_summary
-# restructured from edge-list peeling to ADJACENCY-ARRAY peeling. The
-# degree test becomes size(ns) -- a free re-scan of the materialized
-# arrays instead of a 2E-row unionAll degree aggregation -- and each
-# round pays 2 E'-row exchanges (explode + neighbor semi-join +
-# re-collect) instead of ~4E'. Audited counts 30 shuffles/12 SMJ/8 segs
-# -> 22/6/9 (matches the PLANS.md table; ADVICE r11 corrected the SMJ
-# starting figure); WON both interleaved isolated sf0.1 pairings (adj
-# 4.08/4.43 s vs edges 5.76/5.16 s best-of-3); output bit-identical at
-# sf0.001/0.01/0.1 and oracle green. This supersedes the r08 negative
-# below (survivor-set restructure, 7.75 vs 6.44 s) -- that probe kept
-# the edge representation and only reshaped the semi joins; switching
-# the REPRESENTATION is what freed the degree aggregation. Giant-row
-# envelope: arrays are max-degree-bound (no cap -- core members ARE
-# the hubs); pinned by a degree-50k star + planted-clique exact stress
-# (test_scale_stress.py); chunk-by-neighbor-salt is the documented
-# 100 TB escape hatch past degree ~1e6, not shipped (adds a per-round
-# exchange that loses at every degree this data family reaches).
-# 100 TB win condition of the shipped shape: per-round network halves
-# and the free degree test scales with |V|, not E.
-# POSITIVE r11 probe #2: layout_hilbert_histogram moved from the
-# 16-step JVM expression chain (4-step codegen chunks + 3 materialize
-# barriers, each a full-corpus 5-column write+read) to ONE vectorized
-# Arrow pandas_udf pass (numpy int64 xy2d loop). Interleaved isolated
-# sf0.1 pairings: Arrow 1.29/1.63 s vs shipped chain 4.06/5.31 s vs a
-# chunk-6 chain (2 barriers) 3.92/4.23 s -- ~3.2x, hash-identical
-# output at sf0.001/0.01/0.1. This is the engine's second reviewed
-# Arrow-eval allowance (tests/test_plan_lint.py PANDAS_EVAL_OK_NAMES,
-# precedent sim_brute_force_topk_numpy): the JVM chain genuinely
-# cannot express xy2d without the barriers (Catalyst re-inlines each
-# step's ~4 references -> exponential analysis; 8-step chunks exceed
-# the codegen method limit and run interpreted, measured 12.6 s). The
-# chain is kept as _hilbert_chain_histogram with a bit-equality twin
-# test (tests/test_layout_hilbert.py); the query stays DuckDB-oracle-gated. 100 TB note: the win is
-# the 6 corpus passes of barrier I/O the Arrow path never pays -- it
-# grows with corpus size.
-# POSITIVE r12 probe (the verdict's optional lane, tools/
-# probe_hits_r12.py): graph_hits_hub_authority restructured to a
-# SIZE-GATED two-regime score join. Broadcast regime (score universe
-# <= HITS_BROADCAST_MAX_V, decided by a parquet-metadata customer
-# count): pins swapped to the GROUPBY keys + explicit F.broadcast of
-# the |V|-row score table -- each half-round plans ZERO exchanges
-# (audited 11 -> 6 summed shuffles; only the one-time initial-hubs
-# distinct exchanges). Merge regime (the 100 TB shape, |V_cust| linear
-# in corpus): the pre-r12 formulation unchanged -- pins on JOIN keys,
-# unhinted join; broadcasting a corpus-scale score table would OOM the
-# driver. Outputs bit-identical across regimes and SFs (regime twin
-# tests/test_graph_hits_regimes.py; probe hashes equal at sf0.01 and
-# sf0.1). Measured: new shape won all six same-window isolated
-# head-to-heads across three windows -- 6.74/4.34 vs old 9.32/7.05;
-# 5.78/5.84 vs unhinted-swap 9.80/7.33; final shipped-vs-merge
-# confirmation 6.38/5.54 vs 6.64/6.20 (narrow window, still 2/2).
-# Key negative inside the probe: the UNHINTED swapped-pin variant got
-# BHJ from cache stats but kept the planned groupBy exchanges as stage
-# boundaries (AQE's runtime broadcast conversion does not remove them)
-# and showed NO win -- the explicit broadcast is load-bearing. The
-# shuffle-hash variant lost outright (7.12 vs 4.06 at sf0.01).
-# MODEST-POSITIVE r12 probe #2 (tools/probe_pagerank_r12.py): the HITS
-# regime gate transferred to GLOBAL pagerank (graph_pagerank_top).
-# Honest evidence: the ranks side was ALREADY auto-broadcast by the
-# planner at test sizes, so the restructure only moves the 3 per-round
-# groupBy(dst) exchanges to zero (edges pinned by dst; final fragment
-# 3 -> 1 planned shuffles, +1 one-time exchange in the pin segment --
-# summed total unchanged at 9, but per-round cost becomes one-time, so
-# the win grows with ITERS). Pairings: W1 decisive 2/2 (4.45/4.66 vs
-# 5.78/5.35 s); two later noisier windows split 1-1 each (old-shape
-# stragglers up to 12.9 s); pooled across 18 best-of-3 samples/shape
-# the medians are ~5.0 vs ~5.8 s. Hash-identical at sf0.01/sf0.1 +
-# regime twin at sf0.001. Shipped because the direction is consistent,
-# the per-round stage count drops, and the merge regime (the 100 TB
-# shape) is byte-unchanged behind the PAGERANK_BROADCAST_MAX_V gate.
-# NEGATIVE within the same probe: graph_personalized_pagerank lost
-# both pairings (6.09/5.84 vs 5.55/5.30) -- its per-round seed
-# left-join + crossJoin stages nest inside each round's broadcast
-# child and cost more than the exchanges saved. Kept on the merge
-# shape; recorded in pagerank()'s docstring.
-# POSITIVE r12 probe #3 (tools/probe_cc_r12.py): connected_components
-# (shared by 9 call sites incl. streaming) gained a size-gated FOLDED
-# BROADCAST loop: self-loop rows (own=true) baked into the edge list
-# once, edges pinned on D (the groupBy key), labels joined as an
-# explicit broadcast -- one BHJ per round emits neighbor AND self rows
-# already d-partitioned, so the min-aggregate plans ZERO exchanges and
-# the per-round self-rows union disappears. Gate = count over the
-# just-materialized labels table (CC_BROADCAST_MAX_V); past it the
-# s-pinned merge loop runs byte-unchanged (100 TB dedup: edge nodes
-# can be billions). Bit-identical through both seeded and plain
-# callers (tests/test_graph_hits_regimes.py + probe hashes at
-# sf0.01/sf0.1); won all four interleaved isolated sf0.1 head-to-heads
-# (components_incremental 4.94/6.07/5.72 vs 6.31/6.19/7.25;
-# cluster_components 3.62 vs 4.75). PLANS deltas:
-# multimodal_audio_dedup_clusters 16 -> 7 summed shuffles,
-# graph_components_incremental 19 -> 14, image 10 -> 9.
-# NEGATIVE r12 probe #4 (continuation session, tools/
-# probe_semdedup_r12.py): dedup_semantic_clusters' two pair
-# aggregations (distinct-then-count drops + max sims, two left joins,
-# pairs materialized for the two consumers) re-expressed as ONE
-# groupBy(cid) with COUNT(DISTINCT CASE WHEN sim >= tau THEN id_b END)
-# + MAX(sim) and a single left join -- no pairs barrier, one join
-# fewer. Value-identical (probe hashes equal in all eight runs) but
-# LOST three interleaved isolated sf0.1 pairings and tied the fourth
-# (shipped 5.08/5.19/4.68/5.34 vs onepass 7.03/5.83/5.32/5.34
-# best-of-3). Why: the shipped drop path filters sim >= tau BEFORE its
-# distinct (few rows), while the distinct-agg expand rewrite routes
-# EVERY pair row through a doubled-row two-exchange aggregate; the
-# saved K-row join and barrier do not pay for that. Shipped shape kept.
-# POSITIVE r12 probe #5 (continuation session 2, tools/
-# probe_kcore_r12.py): graph_kcore_summary's peel round restriction
-# re-expressed as a size-gated broadcast LEFT ANTI against the round's
-# DROPPED set (set-equivalent to the survivor LEFT SEMI: the adjacency
-# is symmetric, so every exploded neighbor id is in exactly one of
-# keep/dropped). Below KCORE_BROADCAST_MAX_V a round plans 1 groupBy
-# exchange / 1 BHJ / 0 SMJ / 0 sorts (audited per-segment) vs the r11
-# shape's 2 exchanges + semi SMJ + 2 sorts; summed audit (PLANS.md
-# regen) 22 -> 10 shuffles / 6 -> 0 SMJ -- the semi join's build-side
-# V'-row exchanges vanish with it. WON both interleaved isolated sf0.1 pairings
-# (4.96/4.69 vs 5.86/5.69 s best-of-3); hash-identical at
-# sf0.001/0.01/0.1 (probe hashes + regime twin
-# tests/test_graph_hits_regimes.py::test_kcore_regimes_bit_identical,
-# which pins the merge regime = the r11 driver-green formulation,
-# byte-unchanged past the gate). The probe's KEY NEGATIVE (variant A):
-# persist()-chaining the adjacency to keep the groupBy partitioning
-# (zero per-round exchanges) measured 7.64 vs 3.27 s at sf0.01 --
-# persist does NOT truncate the logical plan and adj is referenced
-# twice per round, so Catalyst re-inlines the chain exponentially (the
-# r09 MMR lesson applied to loop STATE, not expressions); the CC fold
-# dodges this because its evolving side is the localCheckpointed
-# BROADCAST side, while kcore's evolving side is the stream. 100 TB
-# win condition: per-round shuffled volume halves (one E'-row exchange,
-# no sort buffers); the dropped broadcast is |V'|-bounded and gated.
-# MODEST-POSITIVE r12 probe #6 (continuation session 2, tools/
-# probe_kmeans_r12.py): kmeans_assign materializes the projected
-# embedding corpus once instead of re-deriving it (parquet scan +
-# string->double-array conversion) in each of ITERS+1 _assign rounds.
-# Won both interleaved isolated sf0.1 pairings (2.38/2.25 vs 2.94/2.38
-# s best-of-3; second pair narrow but direction consistent),
-# hash-identical; plan shape per round unchanged (the centroid fold was
-# already exchange-free) -- the win is pure repeated-conversion
-# elimination and grows with corpus size. Canonical Lloyd shape (MLlib
-# warns on uncached k-means input); reliable-mode materialize is the
-# 100 TB story, as for every iterative operator.
-# POSITIVE r12 probe #7 (continuation session 3, tools/
-# probe_triangle_r12.py): triangle_summary's degree joins and closing
-# intersection join take explicit size-gated broadcasts
-# (TRIANGLE_BROADCAST_MAX_E over the just-materialized distinct edge
-# count). The degree tables are |V|-row two-column frames and adj_t
-# holds E total array entries (~8E bytes), all broadcastable below the
-# gate; the E-row array-carrying exchange on t -- by bytes the
-# heaviest shuffle in the query -- disappears and the two degree SMJs
-# become map-side BHJs. Audited 8 -> 6 summed audit-segment shuffles /
-# SMJ 2 -> 0 / BHJ 1 -> 3 (plans/r12/graph_triangle_count_*). WON all
-# three interleaved isolated sf0.1 pairings (bcast 3.50/2.69/2.72 vs
-# shipped 3.95/2.77/5.79 s best-of-3), hash-identical in all six runs;
-# regime twin test_triangle_regimes_bit_identical pins the r10 shuffle
-# shape byte-unchanged past the gate (the 100 TB regime, E linear in
-# corpus). Oriented-adjacency es-join left co-partitioned (zero
-# exchange already; only the final-fragment sort remains -- not worth
-# a fourth broadcast without pairing evidence).
-# POSITIVE r13 probe #1 (tools/probe_walks_r13.py):
-# graph_random_walks size-gated adjacency regime. Below
-# WALKS_BROADCAST_MAX_V (parquet-metadata customer count, the
-# HITS/PAGERANK proxy) the edge list folds ONCE into a |V|-row
-# (src, nbrs array) adjacency and each hop is one EXPLICIT-broadcast
-# join of the walk table + an in-row argmin
-# array_min(transform(nbrs, d -> struct(md5, d))) -- per-hop |E|-scan,
-# candidate fan-out, groupBy(walker) exchange and F.first
-# prefix-carrying all gone (audited totals 9 -> 4 shuffles, SMJ
-# 3 -> 0, plans/r13/graph_random_walks_*). WON all four interleaved
-# isolated sf0.1 pairings (2.44/2.42/2.14/2.30 vs 4.88/2.72/3.13/3.14
-# s best-of-3), hash-identical at three SFs. TWO companion negatives:
-# the UNHINTED adjacency join is a decisive LOSS (8.95/6.61 s -- two
-# stat-less checkpointed tables plan SMJ both-sides-exchanged per hop;
-# the explicit broadcast is load-bearing, the r12 HITS lesson again),
-# and dropping the merge regime's provably-redundant edges.distinct()
-# measured a WASH (4.98/2.99 vs 4.88/2.72) so the driver-green merge
-# shape stays byte-identical past the gate. Twin + plan pin:
-# tests/test_r13_regimes.py.
-# POSITIVE r13 probe #2 (tools/probe_ppr_r13.py):
-# graph_personalized_pagerank broadcast regime UNBLOCKED by removing
-# the per-round seed join at its root: seeds == exactly the V-nodes
-# below PPR_SEED_CAP and every aggregated node is in V, so the
-# oracle's "sd.node IS NOT NULL" is PROVABLY "node < PPR_SEED_CAP" --
-# a WHEN predicate. With the join gone the r12-negative transfer
-# (edges pinned on DST, ranks explicitly broadcast per round) WINS:
-# all four interleaved isolated sf0.1 pairings (4.36/4.26/3.54/3.72
-# vs 5.21/4.87/4.69/4.80 s best-of-3), hash-identical at three SFs;
-# audited SMJ 4 -> 1, final-fragment shuffles 3 -> 1 (rounds plan
-# ZERO exchanges; plans/r13/graph_personalized_pagerank_*). The
-# verdict-suggested materialize-hoist arm (join kept, round aggregate
-# checkpointed before the rescale) ran consistently BEHIND the
-# predicate shape (3.77 vs 3.02 s sf0.01) -- recorded, not shipped;
-# the predicate-on-merge-shape arm SPLIT its pairings (4.43 vs 5.21
-# won, 5.21 vs 4.87 lost), so past the gate the r04-r12 driver-green
-# join-based merge formulation stays byte-unchanged. Twin + plan pin:
-# tests/test_r13_regimes.py.
-# POSITIVE r13 probe #3 (tools/probe_bloom_r13.py):
-# pipeline_bloom_prefilter. (a) the gram table (documents scan ->
-# 3-gram zip_with -> explode -> TWO md5 hash60s per gram) was
-# referenced 3x (words, probe, truth) and evaluated 3x -- materialized
-# once (the r12 scan-reuse transfer; also freezes h1/h2 against md5
-# re-evaluation, the probe-#9 failure cause). (b) the probe-side
-# 3-bit explode + (doc_id, ng)-STRING min-agg exchange replaced by
-# BLOOM_HASHES broadcast joins against the 67-row words table (real
-# hash relations, NOT the probe-#9 one-row map whose linear scan
-# lost) + in-row AND, with the truth join hoisted before the probe so
-# gram strings never enter any exchange. Audited 5 -> 4 shuffles,
-# documents scans 3 -> 1, probe fan-out 3x -> 1x
-# (plans/r13/pipeline_bloom_prefilter_*). WON all four interleaved
-# isolated sf0.1 pairings as the probe arm (1.97/1.97/1.96/2.00 vs
-# 3.17/2.30/2.48/2.64 s) and 2/2 as the shipped shape vs the frozen
-# r12 formulation (2.44/2.36 vs 2.93/2.80). words is ALSO
-# materialized: ReuseExchange does not dedupe across broadcast
-# boundaries (r08), so the first cut re-planned the bits+BIT_OR build
-# once per probe join; the materialize is a wall WASH at sf0.1 (split
-# pairings 2.65/2.26 vs 2.57/2.51) but executes the corpus-linear ev
-# explode once instead of 3x [guide §2.1]. Known cost: at sf0.01 the
-# shape pays fixed checkpoint/stage overhead (3.41 vs 1.24 s); every
-# removed cost is corpus-linear, every added one is a per-query
-# constant. Plan pin: tests/test_r13_regimes.py.
-# POSITIVE r12 probe #8 (continuation session 3, tools/
-# probe_ngrams_r12.py): two provably-redundant distincts removed from
-# the n-gram operators. (a) text_boilerplate_ngrams: a (gram, doc)
-# duplicate can only arise WITHIN one document (each doc is a single
-# row before the explode), so explode(array_distinct(gram_array)) is
-# globally distinct by construction -- the separate distinct() exchange
-# on full gram strings is gone (4 -> 3 planned shuffles; won all three
-# interleaved isolated sf0.1 pairings 3.52/3.49/3.47 vs 4.11/3.69/3.80
-# s best-of-3, hash-identical). (b) pipeline_decontaminate (+ the same
-# shape in pipeline_contamination_severity): grams are per-doc distinct
-# (array_distinct before explode) and the broadcast ev side is distinct
-# on ng, so each (doc, ng) survives the inner join at most once and
-# COUNT == COUNT(DISTINCT) -- the distinct-aggregate's extra
-# (doc_id, ng)-wide exchange is gone (4 -> 3; won all three pairings
-# 1.16/1.15/1.27 vs 1.29/1.26/1.34 s, hash-identical; severity twin
-# row-identical at sf0.1). Plan pins: tests/test_ngram_plan_shapes.py.
-# 100 TB: both removals are full-corpus-width gram-string exchanges.
-# NEGATIVE r12 probe #9 (continuation session 3, tools/
-# probe_bloom_r12.py): pipeline_bloom_prefilter. (a) dropping
-# bits.distinct() before the BIT_OR word fold (idempotent OR) is a
-# PLANNED NO-OP -- Catalyst already stacks the dedup on the word-group
-# exchange; both variants plan byte-identically. (b) computing the
-# probe IN-ROW (words folded to a one-row map broadcast + forall over
-# the BLOOM_HASHES positions, removing the per-bit explode/BHJ and the
-# (doc_id, ng) min-agg exchange, 5 -> 4 planned shuffles) measured a
-# wash-to-LOSS in two interleaved isolated sf0.1 pairings (2.56/2.70
-# vs shipped 2.51/2.25 s): the forall re-evaluates the double-hash per
-# position and H map probes per gram cost more than the map-side-
-# combinable min-agg exchange they replace. Shipped shape kept.
-# POSITIVE r12 probe #10 (continuation session 4, tools/
-# probe_semdedup_mat_r12.py): dedup_semantic_clusters materializes the
-# projected embedding corpus once before its inline Lloyd loop -- the
-# identical one-line transfer probe #6 gave kmeans_assign (the inline
-# loop had been left out because it needs the assignment WITH raw
-# vectors/norms for the pair stage, not because the scan reuse didn't
-# apply). WON both interleaved isolated sf0.1 pairings (6.99/5.23 vs
-# 9.10/8.03 s best-of-3), hash-identical in all four processes and
-# oracle-green at sf0.001/0.01/0.1; audited parquet scans 5 -> 1
-# (plans/r12/dedup_semantic_clusters_*), shuffle total unchanged at 13
-# -- the win is repeated scan + string->double-array conversion
-# elimination, growing with corpus size. This SUPERSEDES the r10
-# persist wash below: that probe kept the un-truncated persist plan in
-# a window where the distance fold dominated; materialize (truncating,
-# eager, the probe-#6 shape) wins decisively and consistently with the
-# kmeans_assign result. Pinned by
-# tests/test_semdedup_scan_reuse.py (exactly one embeddings scan
-# across all audited segments).
-# POSITIVE r12 probe #11 (continuation session 4, tools/
-# probe_pca_r12.py): sim_pca_power_iteration's corpus pass moved from
-# three JVM corpus scans (2080-named_struct explode for the second
-# moments at ~31M struct rows sf0.1, posexplode means, count) to ONE
-# mapInPandas pass emitting exact-integer per-batch partials
-# (G = X^T X upper triangle + per-dim sums + count, <= 2145 rows per
-# batch; numpy int64 matmul is the same integer arithmetic -- at the
-# operator's documented BIGINT overflow budget numpy would wrap where
-# ANSI throws, both ~300x inside the bound at tested scales). WON both
-# interleaved isolated sf0.1 pairings (2.12/2.00 vs 4.94/3.61 s
-# best-of-3), hash-identical in all four processes and oracle-green at
-# sf0.001/0.01/0.1; audited parquet scans 5 -> 1, summed shuffles
-# 8 -> 5, explode nodes 2 -> 0 (plans/r12/sim_pca_power_iteration_*).
-# Third reviewed Arrow-eval allowance (PANDAS_EVAL_OK_NAMES,
-# precedents brute-force-numpy + hilbert); the JVM explode shape is
-# kept as _pca_jvm_power_iteration with a bit-equality twin test
-# (tests/test_pca_twin.py). 100 TB: the removed work (two extra
-# corpus scans + the struct fan-out) is linear in the corpus; the
-# combine shuffle stays O(D^2) per map partition in both shapes.
-# NEGATIVE r12 probe #12 (session 5, tools/probe_boiler_inrow_r12.py):
-# text_boilerplate_ngrams in-row scoring. Re-expressing pass 2 as a
-# row-local fold (one-row broadcast map of the boiler set +
-# aggregate(ga, ..., IF(map_contains_key(bm, g), 1, 0)) per doc)
-# removes the scoring explode and the groupBy(doc_id) exchange
-# (3 -> 2 planned shuffles) and is hash-identical at sf0.01 -- but it
-# is a DECISIVE LOSS at sf0.1: shipped best-of-3 4.95 s, candidate DNF
-# past a 10-minute bound in the same window. Root cause: Spark map
-# values are ArrayBasedMapData with NO hash index, so map_contains_key
-# is a LINEAR scan over the boiler set per gram occurrence (O(G x B)),
-# where the shipped broadcast-hash-join probes a real hash relation
-# per exploded row; the HOF fold is also CodegenFallback. Same family
-# as the probe-#9 bloom in-row loss, with a sharper mechanism.
-# Shipped shape kept; the per-doc rollup exchange it would have
-# removed is tiny (post-partial-agg (doc_id, counts) rows).
-# MEASUREMENT adjudication r12 (continuation session):
-# graph_triangle_count's in-sweep anomaly in the quiet post-CC-fold
-# sweep (12.56 s in-sweep / 15.14 isolated repin vs prev 5.48 while
-# the rest of the sweep ran FAST, drift_median 0.727) does NOT
-# reproduce: interleaved isolated sf0.1 pairings read 8.83/7.42 vs
-# canary graph_random_walks 5.38/3.42 in a winding-down window, then
-# 4.86/6.80 vs canary 3.56/4.22 once quiet -- proportionate to the
-# canary everywhere (ratio 1.6-2.2x vs the 1.87x quiet-reference
-# ratio), and the 12.56/15.14 pair is far outside every quiet reading.
-# Code byte-identical since r10 (6de512d). Verdict: transient host
-# slow-mode confined to the one query during the sweep; no action.
-# MEASUREMENT adjudication r12 (VERDICT r11 watch item 1, closed):
-# graph_personalized_pagerank's r11 repin anomaly (prev 3.23 s, sweep
-# 6.86, isolated 9.64 -- the only r11 entry where isolated > sweep, on
-# code byte-identical since r04) does NOT reproduce. Interleaved
-# isolated sf0.1 pairings in a quiet window (loadavg-1m 0.14, steal
-# 0.32%, post-run probe 0.2603 s) read 5.14/6.37/4.88 s best-of-3 vs
-# canary graph_random_walks 3.24/3.64/4.49 (quiet refs 4.30 / 4.26):
-# the canary sits at-or-below its reference, pagerank sits inside
-# normal fresh-JVM spread of its committed quiet-sweep wall, and the
-# 9.64 is far outside today's range. Verdict: r11 host slow-mode, not
-# a plan problem; no action. Plan unchanged (3 segs / 9 shuffles per
-# PLANS.md, bounded rounds over pinned edges).
-# NEGATIVE r11 adjudication (ADVICE r10, low): switching the
-# link-prediction hub pre-filter from INNER to LEFT SEMI join costs
-# +2 audited shuffles / +1 SMJ (13/5 vs 11/4; isolated subplan 28 vs
-# 18 Exchange nodes) -- Catalyst reuses the degree-aggregate subtree
-# under the inner shape but re-derives it under semi. nonhub is
-# duplicate-free by construction (groupBy output), so the variants are
-# value-identical; the inner join is kept and the intent documented at
-# the call site (operators/graph.py) instead of paid for in exchanges.
-# NEGATIVE r10 probe: packing the HITS bipartite adjacency into
-# chunked neighbor arrays (V-row join + map-side explode fused with the
-# partial agg, the triangle pattern) LOST on wall in both interleaved
-# isolated sf0.1 pairings -- packed 7.41/6.72 s vs shipped E-row SMJ
-# 6.98/5.78 s best-of-3, bit-exact at sf0.001/sf0.01. At E/V ~= 39 the
-# 587k-row sorted-merge is already cheap next to the 6 per-round
-# materializes, and collect_list array builds + the generator stage
-# cost more than the join rows they save. The packed form's win
-# condition is E/V >> 100 (dense fan-in) -- at 100 TB the right move is
-# writing the edge list bucketed by BOTH keys (the existing twin pins),
-# not array-packing. Shipped formulation kept unchanged.
-# Minor r10 negative: persisting the parsed embeddings across the
-# semantic-dedup k-means rounds (4 assignment passes re-scan the
-# parquet) is a WASH in both interleaved pairings (4.38/4.48 vs
-# 4.45/4.47 s) -- the broadcast-centroid distance fold dominates and
-# the tiny re-scan is free. Not shipped.
-# Same-session drift audit (quiet machine, post-suite, best-of-3
-# in-bench): graph_hits_hub_authority 5.24 s (r09 4.56, r10 sweep
-# 6.01), graph_components_incremental 4.62 (3.95/5.21),
-# layout_hilbert_histogram 3.13 (2.35/3.08), text_ccnet_lm_buckets
-# 2.35 (1.77/2.50) -- uniform 1.15-1.33x elevation on byte-identical
-# untouched code (git diff confirms zero hunks in those functions),
-# the r04/r07/r09 bimodal-VM scatter again; no code action.
-# NEGATIVE r09 probe, recorded like k-core: sharing the TF subtree in
-# text_tfidf_topk / text_bm25_topk (referenced 3-4x, recomputed per
-# branch with zero runtime stage reuse) LOST on wall both ways --
-# pin_partitioned(word): tfidf 7->5 / bm25 12->8 counted shuffles but
-# 0.88->1.33 / 0.93->2.06 s isolated sf0.1; materialize: 1.30/1.34 s.
-# The query branch prunes to doc_id<5 at the scan, so only 2-3 branches
-# pay tokenization, and re-tokenizing beats writing |TF| at this scale.
-# Both engines' texts stayed bit-exact; revert kept. A 100 TB corpus
-# flips the tradeoff by WRITING the postings table bucketed by word
-# once -- the pin code path is one line away when that day comes.
-# graph_kcore_summary's r08 negative (survivor-set restructure hit 12
-# counted shuffles but LOST on wall, 7.75 vs 6.44 s sf0.1 -- repeated
-# restrict re-derivation + per-round broadcast builds) was SUPERSEDED
-# by the r11 adjacency-array win above (22 shuffles AND faster: the
-# representation switch, not a semi-join reshape, is what worked);
-# events_rfm_segments 20 is the
-# deliberate distributed-NTILE design. Progress is adjudicated by
-# PLANS.md plan counts, NEVER cross-round wall seconds (per-round VMs
-# drift bimodally, proven r04/r07). No new operators are required for
-# coverage (benchmark execution complete since r06: 183 reference
-# texts value-exact, 191-plan lineage sweep, reader-compat bytes);
-# add only for a real SURVEY.md section 2 gap, parked in _DEFER_NEW.
+# covers only a prefix of about 50 queries per round, so the order is part
+# of the verification strategy. It is derived, not hand-maintained:
+# tools/gen_rotation_state.py scans every CORRECTNESS_r{N}.json into
+# rotation_state.GREEN_LAST_ROUND; never-checked queries sort first, then
+# driver-greens oldest evidence first (see _reorder). Progress is judged by
+# PLANS.md plan counts, never by wall seconds across rounds (the VMs drift
+# bimodally). Add a new operator only for a real SURVEY.md section 2 gap,
+# and park it in _DEFER_NEW. Earlier probe adjudications are in git history
+# and OPTIMIZATION_r12.md / OPTIMIZATION_r13.md.
 _PRIORITY_NAMES: list[str] = [
     # (empty since r11: expr_xpath_url_battery's clean rows-only row
     # landed in CORRECTNESS_r10, closing driver sampling at 382/382;
