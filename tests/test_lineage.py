@@ -212,8 +212,8 @@ def test_extraction_under_100ms(spark, sf_dir):
 
 
 def test_extraction_under_100ms_on_heaviest_tpch_plans(spark, sf_dir):
-    """The per-node py4j plan walk must stay under the 100ms budget on
-    the largest real plans we build -- the correlated/multi-join TPC-H
+    """Lineage extraction must stay under the 100ms budget on the
+    largest real plans we build -- the correlated/multi-join TPC-H
     shapes (q21 four-way + anti/semi, q17 correlated scalar agg, q20
     nested subqueries, q8 eight-relation join). Records the actual
     timings in the assertion message so a regression shows the numbers.
@@ -238,7 +238,7 @@ def test_extraction_under_100ms_on_heaviest_tpch_plans(spark, sf_dir):
         timings[name] = best
         assert g.edges(), name
     worst = max(timings.values())
-    assert worst < 100, f"lineage walk over budget: { {k: f'{v:.1f}ms' for k, v in timings.items()} }"
+    assert worst < 100, f"lineage over budget: { {k: f'{v:.1f}ms' for k, v in timings.items()} }"
 
 
 def test_jdbc_relation_leaf_attribution(spark, sf_dir, tmp_path):
@@ -263,94 +263,47 @@ def test_jdbc_relation_leaf_attribution(spark, sf_dir, tmp_path):
     ), edges
 
 
-def test_json_fast_path_matches_py4j_walk(spark, sf_dir):
-    """The JSON fast path and the py4j walk must produce structurally
-    identical lineage (names, exprIds, kinds, sources, edges) across the
-    plan-shape battery: multi-join+agg, window, union, generate, CTE,
-    subquery. Expression display strings may differ (renderer vs .sql())
-    -- provenance must not."""
-    from ushas_spark.lineage import extract as ex
+def test_adhoc_plan_lineage_digests(spark, sf_dir):
+    """The ad-hoc plan shapes keep their pinned lineage digests, and the
+    fixture names exactly the registered queries plus these plans (every
+    registered query's digest is checked in tests/test_oracle.py)."""
+    import __spark_entry__ as entrymod
 
-    def strip(col):
-        return (
-            col.kind,
-            col.name,
-            col.expr_id,
-            getattr(col, "source", None),
-            tuple(strip(c) for c in col.children),
-        )
+    from tests import lineage_digest
 
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    o = load_table(spark, sf_dir, "orders")
-    from pyspark.sql import Window as W
-
-    plans = [
-        n.join(r, n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.count("*").alias("n"), F.max("n_name").alias("top")),
-        o.select(
-            "o_custkey",
-            F.row_number()
-            .over(W.partitionBy("o_custkey").orderBy("o_orderdate"))
-            .alias("rn"),
-        ),
-        n.select(F.col("n_name").alias("x")).union(n.select(F.col("n_name").alias("x"))),
-        n.select("n_nationkey", F.explode(F.split(F.col("n_name"), " ")).alias("w")),
-        spark.sql(
-            "WITH t AS (SELECT n_regionkey, COUNT(*) AS c FROM {n} GROUP BY 1) "
-            "SELECT a.c FROM t a JOIN t b ON a.n_regionkey = b.n_regionkey",
-            n=n,
-        ),
-    ]
-    for df in plans:
-        jplan = df._jdf.queryExecution().analyzed()
-        fast = [strip(c) for c in ex._resolve_json_plan(jplan)]
-        slow = [strip(c) for c in ex._resolve(jplan)]
-        assert fast == slow
+    pinned = lineage_digest.load()
+    plans = lineage_digest.adhoc_plans(spark, sf_dir)
+    assert set(pinned) == set(entrymod.queries()) | set(plans)
+    for name, df in plans.items():
+        graph = lineage(df)
+        assert lineage_digest.digest(graph) == pinned[name], (name, graph.edges())
 
 
-def test_json_fast_path_fallback_is_counted_and_warned(spark, sf_dir, monkeypatch):
-    """A fast-path failure falls back to the py4j walk loudly: counted by
-    exception type, warned once per type, same graph -- also when eight
-    threads fall back at once."""
-    import sys
-    import threading
-    from collections import Counter
+def test_cte_reference_does_not_shift_leaf_sources(spark, sf_dir):
+    """A CTERelationRef is a leaf of the JVM plan too: pairing the plan
+    JSON's leaves with collectLeaves() must count it, or every scan after
+    the first reference takes the wrong relation as its source."""
+    import __spark_entry__ as entrymod
 
+    edges = lineage(entrymod.queries()["sql_cte_chain_reuse"](spark, sf_dir)).edges()
+    assert ("n_customers", "customer", "c_custkey") in edges, edges
+    assert not [e for e in edges if e[1] == "CTERelationRef"], edges
+
+
+def test_resolution_error_raises(spark, sf_dir, monkeypatch):
+    """A failure inside the resolver propagates out of lineage(); there
+    is no second resolver to fall back to."""
     import pytest
 
     from ushas_spark.lineage import extract as ex
 
-    n = load_table(spark, sf_dir, "nation")
-    df = n.groupBy("n_regionkey").agg(F.max("n_name").alias("top"))
-    want = lineage(df).edges()
-    got = []
+    def broken(flat, i):
+        raise ValueError("unreadable plan JSON")
 
-    def broken(jplan):
-        raise ValueError("unconsumed plan nodes")
-
-    def work() -> None:
-        for _ in range(5):
-            got.append(lineage(df).edges())
-
-    monkeypatch.setattr(ex, "FALLBACKS", Counter())
-    monkeypatch.setattr(ex, "_resolve_json_plan", broken)
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        with pytest.warns(RuntimeWarning, match="ValueError") as rec:
-            threads = [threading.Thread(target=work) for _ in range(8)]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join(timeout=120)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(t.is_alive() for t in threads)
-    assert got == [want] * 40
-    assert len(rec) == 1
-    assert ex.FALLBACKS == Counter({"ValueError": 40})
+    df = load_table(spark, sf_dir, "nation").select("n_name")
+    monkeypatch.setattr(ex, "_take_tree", broken)
+    with pytest.raises(ValueError, match="unreadable plan JSON"):
+        lineage(df)
 
 
 def test_lineage_through_checkpointed_iterative_plan(spark, sf_dir):

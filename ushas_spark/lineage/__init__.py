@@ -12,8 +12,9 @@ Reference implementation (all under /root/reference/):
 Our design departs from the fork deliberately (SURVEY.md section 2.11):
 instead of injecting Analyzer rules (which the fork itself documents as
 unsatisfactory via SparkSessionExtensions -- examples/.../lineage/extension/
-Example.scala:46-53), we walk ``df._jdf.queryExecution().analyzed()`` post
-hoc via py4j. Same input (the analyzed plan), no fork, and we extend
+Example.scala:46-53), we resolve ``df._jdf.queryExecution().analyzed()``
+post hoc from its JSON form (one py4j call, plus leaf identity; see
+``extract.py``). Same input (the analyzed plan), no fork, and we extend
 coverage to Aggregate / Window / Generate named outputs and n-ary Union --
 the exact gaps the reference README invites fixing ("你可以做的事" 1/4).
 

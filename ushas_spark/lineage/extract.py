@@ -1,6 +1,6 @@
-"""Bottom-up lineage resolution over the analyzed logical plan (py4j).
+"""Bottom-up lineage resolution over the analyzed logical plan.
 
-Re-implements the reference's two Analyzer rules as one post-hoc walk
+Re-implements the reference's two Analyzer rules as one post-hoc pass
 (reference: analysis/ResolveLineage.scala):
 
 - ``ResolveRelation`` (:120-136): every leaf node's output attributes
@@ -23,31 +23,24 @@ ExpressionColumn throws MatchError on non-named leaves, :41-53).
 Everything here is driver-side plan metadata: cost is O(plan size),
 independent of data scale (BASELINE.md target <100ms/query).
 
-Two execution paths with identical structure (names, exprIds, kinds,
-sources, edges -- parity-tested in tests/test_lineage.py):
-
-- **JSON fast path** (default): ONE ``plan.toJSON()`` py4j call supplies
-  the whole tree -- node classes, expression trees, attribute names and
-  exprIds -- and only leaf-identity extraction still touches JVM handles
-  (``collectLeaves``, a handful of calls). On the heaviest TPC-H plans
-  (q8, q17, q20, q21 at sf0.01; 4-core VM, best of 15) it takes 6-9 ms,
-  provided the gateway connection has ``TCP_NODELAY``
-  (``session.py4j_nodelay``, which ``lineage`` applies): the 17-49 kB
-  JSON reply is longer than py4j's 8 KB write buffer. Expression display
-  strings are rendered from the JSON expression tree (py4j ``.sql()`` is
-  exactly the per-expression round-trip the fast path exists to avoid).
-- **py4j walk** (fallback on any fast-path error, counted in
-  ``FALLBACKS`` and warned once per exception type): the original
-  per-node recursion, one round trip per node and expression; 11-32 ms
-  on the same plans. Structure source of truth.
+One resolver: ONE ``plan.toJSON()`` py4j call supplies the whole tree
+(node classes, expression trees, attribute names, exprIds). Only leaf
+identity touches JVM handles: ``collectLeaves`` lists the leaves in the
+JSON tree's pre-order, ``CTERelationRef`` included, and each JSON leaf
+takes the next one after a class check. Any resolution error raises. An
+expression column's children follow the expression tree, first reference
+first; display strings are rendered from the JSON tree, display-only.
+On the heaviest TPC-H plans (q8, q17, q20, q21 at sf0.01; 4-core VM)
+a call makes 43-101 py4j round trips and takes 7-16 ms (best of 15),
+given ``TCP_NODELAY`` on the gateway (``session.py4j_nodelay``, which
+``lineage`` applies): the 17-49 kB JSON reply exceeds py4j's 8 KB write
+buffer. Every registered query's lineage is pinned by a digest in
+``tests/lineage_digests.json``.
 """
 
 from __future__ import annotations
 
 import json
-import threading
-import warnings
-from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -60,10 +53,6 @@ from ushas_spark.lineage.model import (
 )
 from ushas_spark.session import py4j_nodelay
 
-# Fast-path failures that fell back to the py4j walk, by exception type.
-FALLBACKS: Counter[str] = Counter()
-_FALLBACKS_LOCK = threading.Lock()
-
 
 def lineage(df: DataFrame) -> LineageGraph:
     """Compute the per-output-column provenance forest of ``df``.
@@ -73,21 +62,7 @@ def lineage(df: DataFrame) -> LineageGraph:
     """
     py4j_nodelay(df.sparkSession)
     jplan = df._jdf.queryExecution().analyzed()
-    try:
-        cols = _resolve_json_plan(jplan)
-    except Exception as e:
-        kind = type(e).__name__
-        with _FALLBACKS_LOCK:
-            FALLBACKS[kind] += 1
-            first = FALLBACKS[kind] == 1
-        if first:
-            warnings.warn(
-                f"lineage JSON fast path failed ({kind}: {e}); "
-                "using the slower py4j walk",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        cols = _resolve(jplan)
+    cols = _resolve(jplan)
     # The root's lineage list can be wider than the visible output (e.g.
     # Window appends internal duplicates); restrict to df.output order.
     out = jplan.output()
@@ -119,180 +94,35 @@ def _index_by_expr_id(cols: list[LineageColumn]) -> dict[int, LineageColumn]:
     return by_id
 
 
-def _refs_of(jexpr) -> list[tuple[str, int]]:
-    """All attribute references inside an expression -- the flattened
-    ``collectLeaves`` semantics of the reference's findAllChildren."""
-    refs = jexpr.references().toSeq()
-    return [(a.name(), a.exprId().id()) for a in _seq(refs)]
+def _leaf_source(jnode, cls: str) -> str:
+    """Identity of a leaf relation of class ``cls`` (reference attributes
+    Hive tables via catalogTable -- ResolveHiveRelation.scala:11-39; we
+    also cover file and JDBC relations and streaming sources). Any other
+    leaf (Range, LocalRelation, LogicalRDD, OneRowRelation, ...) is
+    identified by its class name."""
+    if cls == "LogicalRelation":
+        ct = jnode.catalogTable()
+        if ct.isDefined():
+            return str(ct.get().identifier().unquotedString())
+        rel = jnode.relation()
+        rel_cls = str(rel.getClass().getSimpleName())
+        if rel_cls == "HadoopFsRelation":
+            return str(rel.location().rootPaths().mkString(","))
+        if rel_cls == "JDBCRelation":
+            # JDBCRelation(tbl) [numPartitions=N] -- keep the table
+            # identity, drop the partitioning suffix.
+            return str(rel.toString()).split(" [")[0]
+        return rel_cls
+    if cls in ("HiveTableRelation", "UnresolvedCatalogRelation"):
+        return str(jnode.tableMeta().identifier().unquotedString())
+    if cls in ("StreamingRelation", "StreamingRelationV2"):
+        return f"Streaming:{jnode.sourceName()}"
+    if cls == "DataSourceV2Relation":
+        return str(jnode.name())
+    return cls
 
 
-def _sql_of(jexpr) -> str:
-    try:
-        return jexpr.sql()
-    except Exception:
-        return ""
-
-
-def _named_to_column(jne, by_id: dict[int, LineageColumn]) -> ExpressionColumn:
-    """One named output entry -> ExpressionColumn linked to the child
-    lineage columns it references (reference ResolveLineage.scala:76-94)."""
-    name = jne.name()
-    eid = jne.exprId().id()
-    children: list[LineageColumn] = []
-    seen: set[int] = set()
-    for _, ref_id in _refs_of(jne):
-        if ref_id in seen:
-            continue
-        seen.add(ref_id)
-        child = by_id.get(ref_id)
-        if child is not None:
-            children.append(child)
-    cls_name = jne.getClass().getSimpleName()
-    expression = "" if cls_name == "AttributeReference" else _sql_of(jne)
-    return ExpressionColumn(name, eid, children, expression=expression)
-
-
-def _leaf_source(jnode) -> str:
-    """Best-effort identity of a leaf relation (reference attributes Hive
-    tables via catalogTable -- ResolveHiveRelation.scala:11-39; we also
-    cover file relations, ranges, local/RDD relations, streaming)."""
-    cls = jnode.getClass().getSimpleName()
-    try:
-        if cls == "LogicalRelation":
-            ct = jnode.catalogTable()
-            if ct.isDefined():
-                return str(ct.get().identifier().unquotedString())
-            rel = jnode.relation()
-            try:
-                paths = rel.location().rootPaths()
-                return ",".join(str(p) for p in _seq(paths))
-            except Exception:
-                rel_cls = str(rel.getClass().getSimpleName())
-                if rel_cls == "JDBCRelation":
-                    # JDBCRelation(tbl) [numPartitions=N] -- keep the
-                    # table identity, drop the partitioning suffix.
-                    return str(rel.toString()).split(" [")[0]
-                return rel_cls
-        if cls in ("HiveTableRelation", "UnresolvedCatalogRelation"):
-            return str(jnode.tableMeta().identifier().unquotedString())
-        if cls == "StreamingRelation":
-            return f"Streaming:{jnode.sourceName()}"
-        if cls == "StreamingRelationV2":
-            return f"Streaming:{jnode.sourceName()}"
-        if cls == "DataSourceV2Relation":
-            return str(jnode.name())
-    except Exception:
-        pass
-    return cls  # Range, LocalRelation, LogicalRDD, OneRowRelation, ...
-
-
-# ---------------------------------------------------------------- resolver
-
-
-def _resolve(jnode, cte_env: dict[int, list[LineageColumn]] | None = None) -> list[LineageColumn]:
-    """Bottom-up lineage of one plan node (list aligned with the node's
-    attribute surface, keyed by exprId). ``cte_env`` maps cteId -> the
-    defining subplan's lineage, threaded through WithCTE scopes (Spark 3.2+
-    analyzes CTEs to WithCTE/CTERelationDef/CTERelationRef rather than
-    inlining -- a plan shape the reference, on 2.4, never sees)."""
-    cte_env = cte_env or {}
-    jchildren = _seq(jnode.children())
-    name = jnode.nodeName()
-
-    if name == "WithCTE":
-        # children: CTERelationDef*, then the main plan. Defs can reference
-        # earlier defs, so extend the env left to right.
-        env = dict(cte_env)
-        for jc in jchildren[:-1]:
-            if jc.nodeName() == "CTERelationDef":
-                env[jc.id()] = _resolve(jc, env)
-        return _resolve(jchildren[-1], env)
-
-    if name == "CTERelationRef":
-        defs = cte_env.get(jnode.cteId())
-        out_attrs = _seq(jnode.output())
-        if defs is None:
-            return [
-                RelationColumn(a.name(), a.exprId().id(), source="CTERelationRef")
-                for a in out_attrs
-            ]
-        cols: list[LineageColumn] = []
-        for i, a in enumerate(out_attrs):
-            # ref attrs align positionally with the def's output (fresh
-            # exprIds when the CTE is referenced more than once).
-            if i < len(defs):
-                d = defs[i]
-                if d.expr_id == a.exprId().id():
-                    cols.append(d)
-                else:
-                    cols.append(ExpressionColumn(a.name(), a.exprId().id(), [d]))
-            else:
-                cols.append(RelationColumn(a.name(), a.exprId().id(), source="CTERelationRef"))
-        return cols
-
-    if not jchildren:  # ResolveRelation (reference :120-136)
-        source = _leaf_source(jnode)
-        return [
-            RelationColumn(a.name(), a.exprId().id(), source=source)
-            for a in _seq(jnode.output())
-        ]
-
-    child_lists = [_resolve(jc, cte_env) for jc in jchildren]
-    child_lineage: list[LineageColumn] = [c for lst in child_lists for c in lst]
-    by_id = _index_by_expr_id(child_lineage)
-
-    if name == "Project":
-        return [_named_to_column(ne, by_id) for ne in _seq(jnode.projectList())]
-
-    if name == "Aggregate":
-        # Extension: reference passes Aggregate through (README 你可以做的事 1).
-        return [
-            _named_to_column(ne, by_id) for ne in _seq(jnode.aggregateExpressions())
-        ]
-
-    if name == "Window":
-        # Window output = child output ++ window expressions.
-        return child_lineage + [
-            _named_to_column(ne, by_id) for ne in _seq(jnode.windowExpressions())
-        ]
-
-    if name == "Generate":
-        # Generated attrs derive from the generator's references; the
-        # child's columns pass through alongside.
-        gen_refs: list[LineageColumn] = []
-        seen: set[int] = set()
-        for _, rid in _refs_of(jnode.generator()):
-            if rid not in seen and rid in by_id:
-                seen.add(rid)
-                gen_refs.append(by_id[rid])
-        gen_expr = _sql_of(jnode.generator())
-        generated = [
-            ExpressionColumn(a.name(), a.exprId().id(), list(gen_refs), expression=gen_expr)
-            for a in _seq(jnode.generatorOutput())
-        ]
-        return child_lineage + generated
-
-    if name == "Union":
-        # n-ary zip (reference :96-107 handles exactly 2 branches).
-        branches = child_lists
-        width = min(len(b) for b in branches)
-        out_attrs = _seq(jnode.output())
-        cols = []
-        for i in range(width):
-            aligned = [b[i] for b in branches]
-            lead = out_attrs[i] if i < len(out_attrs) else None
-            nm = lead.name() if lead is not None else aligned[0].name
-            eid = lead.exprId().id() if lead is not None else aligned[0].expr_id
-            cols.append(UnionColumn(nm, eid, aligned))
-        return cols
-
-    # Everything else (Filter, Join, Sort, Limit, SubqueryAlias, Distinct,
-    # Repartition, EventTimeWatermark, ...) passes through: concat of
-    # children's lineage (reference :108-116).
-    return child_lineage
-
-
-# ---------------------------------------------------- JSON fast path
+# ------------------------------------------------------------ plan JSON
 
 # TreeNode.toJSON flattens a tree to a pre-order list of node objects,
 # each with "num-children"; single-expression fields (condition,
@@ -316,21 +146,18 @@ def _cls(node: dict) -> str:
     return str(node.get("class", "")).rsplit(".", 1)[-1]
 
 
-def _json_refs(obj) -> list[tuple[str, int]]:
-    """All AttributeReference (name, exprId) pairs anywhere inside an
-    expression's JSON -- the flattened ``references`` semantics. May
-    over-collect inside nested subquery plans; the by_id lookup at the
-    use site keeps only ids present in the child lineage, mirroring the
-    py4j path's behavior."""
-    refs: list[tuple[str, int]] = []
+def _ref_ids(obj) -> list[int]:
+    """The exprId of every AttributeReference anywhere inside an
+    expression's JSON, in expression-tree order -- the flattened
+    ``references`` semantics. May over-collect inside nested subquery
+    plans; the by_id lookup at the use site keeps only ids present in
+    the child lineage."""
+    ids: list[int] = []
 
     def walk(v) -> None:
         if isinstance(v, dict):
-            if (
-                str(v.get("class", "")).endswith(".AttributeReference")
-                and "exprId" in v
-            ):
-                refs.append((v["name"], int(v["exprId"]["id"])))
+            if str(v.get("class", "")).endswith(".AttributeReference") and "exprId" in v:
+                ids.append(int(v["exprId"]["id"]))
             for val in v.values():
                 walk(val)
         elif isinstance(v, list):
@@ -338,7 +165,7 @@ def _json_refs(obj) -> list[tuple[str, int]]:
                 walk(val)
 
     walk(obj)
-    return refs
+    return ids
 
 
 _INFIX = {
@@ -385,28 +212,27 @@ def _render_expr(node: dict, kids: list) -> str:
 def _attr_seq(field) -> list[tuple[str, int]]:
     """An attribute-sequence field (leaf output, generatorOutput, CTE ref
     output) -> [(name, exprId)] in order."""
-    out = []
-    for flat in field or []:
-        top = flat[0]
-        out.append((top["name"], int(top["exprId"]["id"])))
-    return out
+    return [(flat[0]["name"], int(flat[0]["exprId"]["id"])) for flat in field or []]
 
 
-def _named_json(flat: list, by_id: dict[int, LineageColumn]) -> ExpressionColumn:
-    """One named-expression flat list -> ExpressionColumn (the JSON twin
-    of ``_named_to_column``)."""
+def _linked(expr, by_id: dict[int, LineageColumn]) -> list[LineageColumn]:
+    """The child lineage columns an expression references, deduplicated,
+    in expression-tree order."""
+    children: dict[int, LineageColumn] = {}
+    for ref_id in _ref_ids(expr):
+        if ref_id in by_id:
+            children.setdefault(ref_id, by_id[ref_id])
+    return list(children.values())
+
+
+def _named_column(flat: list, by_id: dict[int, LineageColumn]) -> ExpressionColumn:
+    """One named-expression flat list -> ExpressionColumn linked to the
+    child lineage columns it references (reference
+    ResolveLineage.scala:76-94)."""
     top = flat[0]
     name = top.get("name", "?")
     eid = int(top["exprId"]["id"])
-    children: list[LineageColumn] = []
-    seen: set[int] = set()
-    for _, ref_id in _json_refs(flat):
-        if ref_id in seen:
-            continue
-        seen.add(ref_id)
-        child = by_id.get(ref_id)
-        if child is not None:
-            children.append(child)
+    children = _linked(flat, by_id)
     if _cls(top) == "AttributeReference":
         expression = ""
     else:
@@ -415,53 +241,59 @@ def _named_json(flat: list, by_id: dict[int, LineageColumn]) -> ExpressionColumn
     return ExpressionColumn(name, eid, children, expression=expression)
 
 
-def _resolve_json_plan(jplan) -> list[LineageColumn]:
-    """Fast-path lineage: structure from ONE ``toJSON`` round-trip; JVM
-    handles touched only for leaf relation identity (``collectLeaves``,
-    pre-order -- the same order leaves appear in the JSON tree)."""
+# ---------------------------------------------------------------- resolver
+
+
+def _resolve(jplan) -> list[LineageColumn]:
+    """Lineage of the plan's root, aligned with its attribute surface and
+    keyed by exprId. Structure comes from ONE ``toJSON`` round trip; JVM
+    handles are touched only for leaf identity."""
     flat = json.loads(jplan.toJSON())
     (tree, end) = _take_tree(flat, 0)
     if end != len(flat):
         raise ValueError("unconsumed plan nodes")
-    jleaves = _seq(jplan.collectLeaves())
-    sources = [_leaf_source(j) for j in jleaves]
-    leaf_i = {"i": 0}
+    jleaves = iter(_seq(jplan.collectLeaves()))
+
+    def take_leaf(node: dict):
+        """The JVM leaf paired with this JSON leaf; both walks are pre-order."""
+        jleaf = next(jleaves, None)
+        if jleaf is None:
+            raise ValueError(f"plan JSON has more leaves than the plan ({_cls(node)})")
+        jcls = str(jleaf.getClass().getName())
+        if jcls != node["class"]:
+            raise ValueError(f"leaf class mismatch: JSON {node['class']}, plan {jcls}")
+        return jleaf
 
     def resolve(node: dict, kids: list, cte_env: dict[int, list[LineageColumn]]):
         cls = _cls(node)
 
         if cls == "WithCTE":
+            # Spark 3.2+ analyzes CTEs to WithCTE(CTERelationDef*, plan)
+            # rather than inlining them -- a plan shape the reference, on
+            # 2.4, never sees. Defs can reference earlier defs, so extend
+            # the env left to right.
             env = dict(cte_env)
             for knode, kkids in kids[:-1]:
-                if _cls(knode) == "CTERelationDef":
-                    env[int(knode["id"])] = resolve(knode, kkids, env)
+                env[int(knode["id"])] = resolve(knode, kkids, env)
             return resolve(*kids[-1], env)
 
         if cls == "CTERelationRef":
-            defs = cte_env.get(int(node["cteId"]))
-            out_attrs = _attr_seq(node.get("output"))
-            if defs is None:
-                return [
-                    RelationColumn(nm, eid, source="CTERelationRef")
-                    for nm, eid in out_attrs
-                ]
+            take_leaf(node)
+            defs = cte_env.get(int(node["cteId"]), [])
             cols: list[LineageColumn] = []
-            for i, (nm, eid) in enumerate(out_attrs):
-                if i < len(defs):
-                    d = defs[i]
-                    cols.append(
-                        d
-                        if d.expr_id == eid
-                        else ExpressionColumn(nm, eid, [d])
-                    )
-                else:
+            for i, (nm, eid) in enumerate(_attr_seq(node.get("output"))):
+                # ref attrs align positionally with the def's output (fresh
+                # exprIds when the CTE is referenced more than once).
+                if i >= len(defs):
                     cols.append(RelationColumn(nm, eid, source="CTERelationRef"))
+                elif defs[i].expr_id == eid:
+                    cols.append(defs[i])
+                else:
+                    cols.append(ExpressionColumn(nm, eid, [defs[i]]))
             return cols
 
-        if not kids:  # leaf: align with collectLeaves() pre-order
-            idx = leaf_i["i"]
-            leaf_i["i"] += 1
-            source = sources[idx] if idx < len(sources) else cls
+        if not kids:  # ResolveRelation (reference :120-136)
+            source = _leaf_source(take_leaf(node), cls)
             return [
                 RelationColumn(nm, eid, source=source)
                 for nm, eid in _attr_seq(node.get("output"))
@@ -472,45 +304,37 @@ def _resolve_json_plan(jplan) -> list[LineageColumn]:
         by_id = _index_by_expr_id(child_lineage)
 
         if cls == "Project":
-            return [_named_json(fl, by_id) for fl in node["projectList"]]
+            return [_named_column(fl, by_id) for fl in node["projectList"]]
 
         if cls == "Aggregate":
-            return [
-                _named_json(fl, by_id) for fl in node["aggregateExpressions"]
-            ]
+            # Extension: reference passes Aggregate through (README 你可以做的事 1).
+            return [_named_column(fl, by_id) for fl in node["aggregateExpressions"]]
 
         if cls == "Window":
-            return child_lineage + [
-                _named_json(fl, by_id) for fl in node["windowExpressions"]
-            ]
+            # Window output = child output ++ window expressions.
+            return child_lineage + [_named_column(fl, by_id) for fl in node["windowExpressions"]]
 
         if cls == "Generate":
-            gen_refs: list[LineageColumn] = []
-            seen: set[int] = set()
-            for _, rid in _json_refs(node.get("generator")):
-                if rid not in seen and rid in by_id:
-                    seen.add(rid)
-                    gen_refs.append(by_id[rid])
-            gen_flat = node.get("generator") or []
-            gen_expr = _render_expr(*_take_tree(gen_flat, 0)[0]) if gen_flat else ""
-            generated = [
-                ExpressionColumn(nm, eid, list(gen_refs), expression=gen_expr)
-                for nm, eid in _attr_seq(node.get("generatorOutput"))
+            # Generated attrs derive from the generator's references; the
+            # child's columns pass through alongside.
+            gen = node["generator"]
+            refs = _linked(gen, by_id)
+            expression = _render_expr(*_take_tree(gen, 0)[0])
+            return child_lineage + [
+                ExpressionColumn(nm, eid, list(refs), expression=expression)
+                for nm, eid in _attr_seq(node["generatorOutput"])
             ]
-            return child_lineage + generated
 
         if cls == "Union":
-            branches = child_lists
-            width = min(len(b) for b in branches)
-            return [
-                UnionColumn(
-                    branches[0][i].name,
-                    branches[0][i].expr_id,
-                    [b[i] for b in branches],
-                )
-                for i in range(width)
-            ]
+            # n-ary zip (reference :96-107 handles exactly 2 branches).
+            return [UnionColumn(c[0].name, c[0].expr_id, list(c)) for c in zip(*child_lists)]
 
+        # Everything else (Filter, Join, Sort, Limit, SubqueryAlias, Distinct,
+        # Repartition, EventTimeWatermark, ...) passes through: concat of
+        # children's lineage (reference :108-116).
         return child_lineage
 
-    return resolve(*tree, {})
+    cols = resolve(*tree, {})
+    if next(jleaves, None) is not None:
+        raise ValueError("plan has leaves the plan JSON does not")
+    return cols
