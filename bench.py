@@ -1,54 +1,30 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}. Methodology follows the
+"queries": {name: sec, ...}, "sf": ..., "loadavg_start": [...],
+"loadavg_end": [...], "cpu_steal_pct": ...}. Methodology follows the
 reference's TPCDSQueryBenchmark (reference: sql/core/src/test/scala/org/
 apache/spark/sql/execution/benchmark/TPCDSQueryBenchmark.scala:48-83):
-warm JVM, best-of-N wall time per query, full pipeline execution (count
-of the materialised result, no driver-side result transfer).
+warm JVM, best-of-N wall time per query, full pipeline execution (every
+row computed into the noop sink, no driver-side result transfer).
 
-Cross-round comparability note (measured, round 3): re-running the
-round-2 27-query set alone on a quiet machine still shows a UNIFORM
-~1.15-1.2x shift vs BENCH_r02 with identical plans (audited), and
-individual queries swing up to 4x between back-to-back runs when the
-driver harness co-runs (q10: 0.6s / 2.8s / 0.6s). Per-query deltas
-under ~1.5x across rounds are environment drift, not regressions --
-compare plan audits (PLANS.md), not wall seconds, when triaging.
+One run is:
+  1. one untimed warm pass over the whole list (JIT of shared kernels);
+  2. per query: one untimed warm-up, then best-of-3 timed runs, each
+     followed by a blocking storage release outside the timed region;
+  3. one JSON line on stdout (at most 1800 chars: the slowest 15
+     queries plus "n" and "detail" when the full map does not fit).
+A full sweep also writes the complete record to BENCH_DETAIL.json and
+BENCH_DETAIL_rNN.json; a USHAS_BENCH_QUERIES subset writes no file.
 
-Round-5 re-pin of the r04 "+24%/+19%" dedup suspicion (VERDICT item 2):
-standalone quiet-machine reruns reproduce dedup_minhash_lsh 2.31s /
-dedup_ngram_jaccard 2.24s -- but UNCHANGED control queries drift the
-same or more vs r03 (q1 0.59->0.79 = 1.34x, q9 0.64->0.96 = 1.50x,
-cluster_components 1.18x, brute_force 1.09x). Code and plans for the
-controls are byte-identical across rounds, so the shift is machine
-state, not a dedup regression. Diagnosed cause: uniform environment
-drift; no action.
+Environment: SPARK_GRAFT_SF_DIR (the scale-factor directory, sf0.1 by
+default) and USHAS_BENCH_QUERIES (a comma-separated subset of registry
+names). Nothing else is read.
 
-Round-6 re-pin of the four r05 spikes (r05 VERDICT item 3), quiet
-machine (fresh VM, load settled, nothing co-running), code and plans
-still byte-identical to r04 for all four:
-  sim_mmr_rerank        8.36 -> 2.12  (r04 1.51; control q9 at 1.3x)
-  text_collocations     3.68 -> 0.74  (r04 0.63)
-  window_topk_per_group 0.88 -> 0.46  (r04 0.40)
-  graph_triangle_count 15.35 -> 14.97 in a 6-query sweep,
-                        but 7.10 RUN ALONE (r04 8.44, i.e. 0.84x)
-Verdict: all four were sweep-contention artifacts, not regressions.
-The triangle-count isolated-vs-sweep gap (7.1s vs 15.0s) pins the
-mechanism: non-blocking unpersist let earlier queries' checkpoint
-blocks and GC debt bleed into the heaviest query's window. Fix below:
-_release_storage now unpersists BLOCKING -- it runs after the timed
-region, so the wait costs sweep wall-clock, not measured time, and the
-next query starts with storage actually clear.
-
-Round-6 full-sweep pair (77 queries, quiet machine, back-to-back):
-run 1 total 109.7s, run 2 total 118.1s -- but the composition of each
-total swings: mmr 6.7 -> 1.6 (run 2 has the periodicGC fix below; its
-broadcast-litter theory held), triangle 9.0 -> 22.8 (same code, 7.7s
-in a 2-query sweep minutes earlier). Long-sweep heavyweights swing
-2-4x run-to-run with identical plans; the per-query map in
-BENCH_DETAIL.json is ONE sweep's sample, and cross-round triage should
-keep comparing PLANS.md structure, isolated re-pins, and controls --
-never a single sweep cell.
+The loadavg and steal fields are a note on the window, not a verdict.
+Sweep walls on a shared VM drift 1.2-1.5x between windows on identical
+plans, so compare rounds on PLANS.md structure and on perfbench's
+same-window alternating pairs, not on sweep walls.
 """
 
 from __future__ import annotations
@@ -57,7 +33,6 @@ import glob
 import json
 import os
 import re
-import subprocess
 import sys
 import time
 
@@ -230,99 +205,23 @@ def _this_round() -> int:
     return (max(rounds) + 1) if rounds else 1
 
 
-def _prev_detail(sf: object) -> dict[str, float]:
-    """Per-query map of the previous round's sweep (for the variance guard).
-
-    Prefer the newest round-stamped snapshot; fall back to the legacy
-    un-stamped BENCH_DETAIL.json (committed at r06). Empty when the
-    snapshot was taken at a different scale factor: cross-SF ratios are
-    not drift (observed r12: a 2-query sf0.01 probe read "drift 1.337x"
-    against the sf0.1 detail and misclassified its window)."""
-    # Exclude this round's own snapshot (bench may run more than once per
-    # round; the guard must compare across rounds, not across sweeps).
-    this_round = _this_round()
-    # Walrus-guarded like _this_round: a stray non-numeric-stamped file
-    # must be skipped, not crash the sweep after all timing work is done.
-    stamped = sorted(
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(_REPO, "BENCH_DETAIL_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", p)) and int(m.group(1)) < this_round
-    )
-    path = stamped[-1][1] if stamped else os.path.join(_REPO, "BENCH_DETAIL.json")
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    if doc.get("sf") != sf:
-        return {}
-    return dict(doc.get("queries", {}))
-
-
-def _repin_isolated(name: str) -> float | None:
-    """Best-of-3 re-run of one query in a FRESH subprocess JVM.
-
-    This is the in-harness version of the manual quiet-machine re-pin the
-    judge performed in r04-r06: sweep-state pollution (storage/broadcast
-    litter, GC debt, JIT state) cannot follow a query into a new process,
-    so a sweep-vs-isolated gap cleanly separates machine noise from a
-    plan regression. Runs AFTER the sweep's timed region, so it costs
-    wall-clock only."""
-    env = dict(os.environ, USHAS_BENCH_QUERIES=name, USHAS_BENCH_CHILD="1")
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=600,
-        )
-        for ln in reversed(proc.stdout.strip().splitlines()):
-            if ln.startswith("{"):
-                return json.loads(ln)["queries"].get(name)
-    except (subprocess.TimeoutExpired, ValueError, KeyError, OSError):
-        pass
-    return None
-
-
 def _loadavg() -> list[float] | None:
     """1/5/15-min load averages, or None where the platform lacks them.
 
     os.getloadavg is Unix-only (raises OSError on some containers,
     absent entirely on Windows); a bench run must degrade to a null
-    stamp, never crash (ADVICE r10)."""
+    stamp, never crash."""
     try:
         return [round(x, 2) for x in os.getloadavg()]
     except (OSError, AttributeError):
         return None
 
 
-# Quiet-host gate (r10 verdict item 2): two r10 sweeps landed in
-# degraded-host windows (loadavg 4.34 on a box whose quiet sweeps start
-# at 0.18; uniform 1.29x drift across 87 queries on byte-untouched
-# code), contaminating the committed artifact. The 1-min loadavg is
-# sampled BEFORE any Spark work, so it reads pure external contention;
-# gate on it so a quiet-window snapshot is what lands in BENCH_r{N}.json
-# by construction. Threshold 1.0 on this 32-cpu box separates the
-# observed quiet starts (0.18-0.4) from the contaminated ones (3-4.3)
-# with a wide margin in both directions. Bounded retries -- the driver's
-# per-round run must never be blocked forever; if no quiet window
-# appears, run anyway and say so in the artifact.
-QUIET_LOAD_THRESHOLD = float(os.environ.get("USHAS_BENCH_QUIET_LOAD", "1.0"))
-QUIET_MAX_WAIT_SEC = int(os.environ.get("USHAS_BENCH_QUIET_MAX_WAIT", "600"))
-_QUIET_POLL_SEC = 30
-
-
 def _cpu_times() -> list[int] | None:
     """Aggregate jiffies from /proc/stat's first line (Linux only).
 
-    Why: loadavg measures contention VISIBLE TO THE GUEST, so the r11
-    sweep passed the quiet gate (loadavg 0.28) yet still landed in the
-    documented bimodal-VM slow mode (uniform ~1.17x drift on untouched
-    code, isolated re-pins elevated too). Hypervisor steal is the one
-    host-state signal the guest can read that loadavg cannot see; the
-    start/end delta over the sweep window makes slow-mode adjudication
-    auditable from the committed artifact alone."""
+    Hypervisor steal is contention the guest's loadavg cannot see; two
+    snapshots around the timed sweep give its share of that window."""
     try:
         with open("/proc/stat") as f:
             return [int(x) for x in f.readline().split()[1:]]
@@ -338,7 +237,7 @@ def _steal_pct(start: list[int] | None, end: list[int] | None) -> float | None:
     steal) enter the denominator: the kernel already folds guest and
     guest_nice (fields 9-10) into user/nice, so summing them would
     double-count guest time and understate steal on hosts running
-    nested VMs (ADVICE r11)."""
+    nested VMs."""
     if not start or not end or len(start) < 8 or len(end) < 8:
         return None
     delta = [e - s for s, e in zip(start[:8], end[:8])]
@@ -348,267 +247,11 @@ def _steal_pct(start: list[int] | None, end: list[int] | None) -> float | None:
     return round(100.0 * delta[7] / total, 2)
 
 
-def _cpu_probe_sec(reps: int = 3) -> float:
-    """Best-of-N wall for a fixed single-thread integer workload.
-
-    The third host-state stamp: the r11 investigation found 2x walls on
-    mode-sensitive queries with loadavg 0.01 AND steal 0.4% -- neither
-    signal sees CPU-frequency / memory-bandwidth degradation or a
-    migration to a slower host. A fixed workload measures guest compute
-    speed directly; compare across artifacts (same interpreter, same
-    box class). Calibration: 0.26-0.29 s during the r11 slow-mode
-    window on this 32-cpu box."""
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        s = 0
-        for i in range(5_000_000):
-            s += i * i
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-# Window classification (r12, VERDICT r11 item 3): the r11 driver sweep
-# PASSED the loadavg quiet gate and was still contaminated -- its own
-# stamps prove it. Calibrated thresholds from the two stamped committed
-# artifacts so the verdict is machine-readable (window_class) instead of
-# something each judge re-derives from the repin table:
-#
-#   stamp           quiet (committed r11)   contaminated (driver r11)
-#   cpu_steal_pct   0.62                    2.18
-#   cpu_probe_sec   0.2569                  0.2736
-#   loadavg_start   [0.28, 1.19, 2.22]      [0.80, 3.61, 3.74]
-#   loadavg_end     [2.06, 3.27, 3.48]      [8.75, 5.88, 5.49]
-#   drift_median    0.888                   1.12 (13 outliers)
-#
-# Steal separates cleanly (threshold 1.0%: idle calibration reads up to
-# ~0.6%, contaminated windows 2%+). The 5-min loadavg at start catches a
-# gate that passed on a momentary 1-min dip (1.19 vs 3.61 -> 2.5). The
-# end 1-min loadavg includes the sweep's own threads, so its threshold
-# is high (2.06 vs 8.75 -> 5.0). The CPU probe proves slow-mode only
-# ABOVE 0.30s: documented slow-mode windows read 0.26-0.29, a gray zone
-# that only the drift stamp resolves. Uniform drift vs the previous
-# committed detail on byte-untouched code is the defining slow-mode
-# symptom (r10 median 1.294x, r11 1.12-1.169x with 13 simultaneous
-# outliers).
-STEAL_CONTENDED_PCT = 1.0
-LOAD5_START_CONTENDED = 2.5
-LOAD1_END_CONTENDED = 5.0
-PROBE_SLOW_SEC = 0.30
-DRIFT_SLOW_MEDIAN = 1.15
-DRIFT_SLOW_OUTLIERS = 8
-DRIFT_SLOW_OUTLIER_MEDIAN = 1.05
-# Bounded sweep retry: a non-quiet full sweep MAY re-await a quiet
-# window and re-time once -- but only when the builder opts in
-# (USHAS_BENCH_MAX_ATTEMPTS=2) AND the run is still inside the retry
-# wall budget. Default is ONE attempt (r13, VERDICT r12 item 1): the
-# r12 driver's 32-core run hit its own timeout mid-retry (rc 124, no
-# JSON line, no official number -- strictly worse than a contended
-# number with an honest window_class stamp). Non-quiet windows are
-# COMMON on this host, so a default retry roughly doubles expected
-# sweep wall plus quiet-waits; the builder's own sweeps can afford
-# that, the driver's per-round run cannot.
-MAX_SWEEP_ATTEMPTS = int(os.environ.get("USHAS_BENCH_MAX_ATTEMPTS", "1"))
-# Even an opted-in retry is skipped when the run has already consumed
-# this much wall (warm pass + attempt 1 + quiet waits): past it, a
-# second full sweep risks the caller's timeout more than it improves
-# the artifact. ~15 min covers a quiet 32-core attempt with margin.
-RETRY_BUDGET_SEC = float(os.environ.get("USHAS_BENCH_RETRY_BUDGET_SEC", "900"))
-# The post-sweep isolated re-pins (fresh subprocess JVMs, up to 8) are
-# also wall-bounded: stop launching new ones past this total elapsed
-# wall so the re-pin tail can never push the driver's run over its
-# timeout. Generous: a quiet full sweep + warm pass fits well inside.
-REPIN_BUDGET_SEC = float(os.environ.get("USHAS_BENCH_REPIN_BUDGET_SEC", "1800"))
-
-
-def _retry_decision(
-    attempt: int, window_class: str, elapsed_sec: float,
-    max_attempts: int = None, budget_sec: float = None,
-) -> str:
-    """Whether the sweep loop retries: 'retry', 'done', or a
-    'retry_skipped_*' reason string (stamped into the artifact).
-
-    Pure logic, unit-tested in tests/test_bench_gate.py: the r12 driver
-    run died to an unbounded retry (rc 124), so termination is now a
-    tested property, not a hope."""
-    if max_attempts is None:
-        max_attempts = MAX_SWEEP_ATTEMPTS
-    if budget_sec is None:
-        budget_sec = RETRY_BUDGET_SEC
-    if window_class == "quiet":
-        return "done"
-    if attempt >= max_attempts:
-        return "done" if max_attempts > 1 else "retry_skipped_single_attempt"
-    if elapsed_sec > budget_sec:
-        return "retry_skipped_budget_%ds_elapsed" % int(elapsed_sec)
-    return "retry"
-
-
-def _uniform_drift(drift_median: float | None, n_outliers: int) -> bool:
-    """True when the sweep drifted as a WHOLE vs the prior committed
-    detail -- per-query fresh-JVM re-pins prove nothing in that state
-    (r10/r11 each burned ~10 min re-pinning "outliers" whose isolated
-    numbers were elevated by the same host window). Two observed shapes:
-    a hard median shift (r10: 1.294x), and a moderate median with many
-    simultaneous outliers (r11: 1.12x with 13 -- the old single >1.3
-    cut missed both motivating incidents, ADVICE r11)."""
-    if drift_median is None:
-        return False
-    if drift_median > DRIFT_SLOW_MEDIAN:
-        return True
-    return (
-        n_outliers >= DRIFT_SLOW_OUTLIERS
-        and drift_median >= DRIFT_SLOW_OUTLIER_MEDIAN
-    )
-
-
-def _classify_window(
-    host_state: str,
-    steal_pct: float | None,
-    probe_sec: float | None,
-    load_start: list[float] | None,
-    load_end: list[float] | None,
-    drift_median: float | None,
-    n_outliers: int,
-    retried: bool = False,
-) -> tuple[str, list[str]]:
-    """Classify the sweep window from its own stamps.
-
-    Returns (window_class, reasons). Classes: "contended" (external
-    load the guest can see: hypervisor steal, loadavg evidence, or the
-    quiet gate giving up), "slow_mode" (the documented bimodal-VM
-    degradation: slow fixed-workload probe, or uniform drift on
-    untouched code), "quiet", or "unknown" (no host signal readable).
-    Contended outranks slow_mode: external contention explains uniform
-    drift, and the remedies differ (wait for quiet vs nothing the guest
-    can do but re-measure later)."""
-    reasons: list[str] = []
-    if host_state.startswith("DEGRADED"):
-        reasons.append("no_quiet_window")
-    if steal_pct is not None and steal_pct >= STEAL_CONTENDED_PCT:
-        reasons.append("steal_%.2f_pct" % steal_pct)
-    if (
-        not retried
-        and load_start is not None
-        and len(load_start) >= 2
-        and load_start[1] >= LOAD5_START_CONTENDED
-    ):
-        # Skipped on a retry attempt: the 5-min average then carries
-        # THIS RUN'S OWN first-attempt threads, not external load
-        # (observed r12: a retry sweep at steal 0.11% / probe 0.26 /
-        # drift 0.65 still stamped contended from loadavg5_start 3.37
-        # left behind by attempt 1).
-        reasons.append("loadavg5_start_%.2f" % load_start[1])
-    if load_end and load_end[0] >= LOAD1_END_CONTENDED:
-        reasons.append("loadavg1_end_%.2f" % load_end[0])
-    if reasons:
-        return "contended", reasons
-    if probe_sec is not None and probe_sec >= PROBE_SLOW_SEC:
-        reasons.append("cpu_probe_%.4fs" % probe_sec)
-    if _uniform_drift(drift_median, n_outliers):
-        reasons.append(
-            "uniform_drift_median_%.3f_outliers_%d" % (drift_median, n_outliers)
-        )
-    if reasons:
-        return "slow_mode", reasons
-    if (
-        steal_pct is None
-        and probe_sec is None
-        and load_start is None
-        and load_end is None
-    ):
-        return "unknown", ["no_host_signals_readable"]
-    return "quiet", []
-
-
-def _drift_stats(
-    timings: dict[str, float], prev: dict[str, float]
-) -> tuple[float | None, list[tuple[float, str]]]:
-    """(median ratio vs the prior round's committed detail, outliers).
-
-    Outliers are (ratio, name), ratio > 1.5x, slowest first; queries
-    under 50ms in the prior detail are excluded (sub-50ms walls are
-    scheduler noise). Median None when no comparable queries."""
-    ratios = sorted(
-        timings[n] / prev[n] for n in timings if prev.get(n, 0) > 0.05
-    )
-    med = None
-    if ratios:
-        mid = len(ratios) // 2
-        med = round(
-            ratios[mid]
-            if len(ratios) % 2
-            else (ratios[mid - 1] + ratios[mid]) / 2,
-            3,
-        )
-    outliers = sorted(
-        (
-            (timings[n] / prev[n], n)
-            for n in timings
-            if prev.get(n, 0) > 0.05 and timings[n] > 1.5 * prev[n]
-        ),
-        reverse=True,
-    )
-    return med, outliers
-
-
-def _await_quiet_host() -> tuple[list[float] | None, str]:
-    """Wait (bounded) for 1-min loadavg to drop below the threshold.
-
-    Returns (loadavg_at_start_of_timed_work, host_state_note). The note
-    lands in the artifact so a future reader can adjudicate drift from
-    the committed JSON alone."""
-    load = _loadavg()
-    if load is None:
-        return None, "loadavg_unavailable"
-    if load[0] <= QUIET_LOAD_THRESHOLD:
-        return load, "quiet"
-    waited = 0
-    while waited < QUIET_MAX_WAIT_SEC:
-        print(
-            "bench.py WARNING: host busy (loadavg %.2f > %.2f); waiting "
-            "%ds for a quiet window (%d/%ds elapsed)"
-            % (load[0], QUIET_LOAD_THRESHOLD, _QUIET_POLL_SEC, waited,
-               QUIET_MAX_WAIT_SEC),
-            file=sys.stderr,
-        )
-        time.sleep(_QUIET_POLL_SEC)
-        waited += _QUIET_POLL_SEC
-        load = _loadavg()
-        if load is None:
-            return None, "loadavg_unavailable"
-        if load[0] <= QUIET_LOAD_THRESHOLD:
-            return load, "quiet_after_%ds_wait" % waited
-    print(
-        "bench.py WARNING: no quiet window within %ds (loadavg %.2f); "
-        "running anyway -- treat this artifact's walls as contaminated"
-        % (QUIET_MAX_WAIT_SEC, load[0]),
-        file=sys.stderr,
-    )
-    return load, "DEGRADED_no_quiet_window_within_%ds" % QUIET_MAX_WAIT_SEC
-
-
 def main() -> None:
-    # Sampled BEFORE any Spark work: the end-of-run loadavg is
-    # dominated by the sweep's own 32 threads, so this is the clean
-    # external-contention reading of the pair. Child re-pin processes
-    # skip the gate AND the host-state probes: they run while the parent
-    # sweep's JVM may still be winding down, their own isolation is the
-    # point, and the parent discards the child's stamps anyway -- the
-    # ~0.8s probe was dead wall time in each of up to 8 isolated re-pins
-    # (ADVICE r11).
-    t_main0 = time.perf_counter()  # retry/re-pin wall budgets count from here
-    child = os.environ.get("USHAS_BENCH_CHILD") == "1"
-    if child:
-        load_start, host_state = _loadavg(), "child"
-        cpu_start = None
-        cpu_probe = None
-    else:
-        load_start, host_state = _await_quiet_host()
-        cpu_start = _cpu_times()
-        cpu_probe = _cpu_probe_sec()
+    load_start = _loadavg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # _release_storage drops RDD blocks, but BROADCAST blocks pile up
     # across a ~400-run sweep and are only reclaimed when the context
     # cleaner sees a driver GC -- which a large quiet heap may not run
@@ -616,28 +259,6 @@ def main() -> None:
     # bounded without the per-query forced-GC cost measured-and-rejected
     # in _release_storage's docstring. (Observed: sim_mmr_rerank 2.1s
     # alone or 2nd in a sweep, 6.7s at position ~52 of 77.)
-    # The variance guard below compares against the PREVIOUS round's
-    # COMMITTED detail snapshot; an untracked/modified one means the
-    # cross-round drift numbers are about to be computed against a file
-    # nobody can audit (this bit three rounds in a row, r06-r08). Warn
-    # loudly on stderr -- never refuse or pollute stdout's JSON line:
-    # the driver's own per-round run must not be blocked.
-    if not child:
-        try:
-            dirty = subprocess.run(
-                ["git", "status", "--porcelain", "--",
-                 "BENCH_r*.json", "BENCH_DETAIL.json",
-                 "BENCH_DETAIL_r*.json", "CORRECTNESS_r*.json"],
-                cwd=_REPO, capture_output=True, text=True, timeout=10,
-            ).stdout.strip()
-            if dirty:
-                print(
-                    "bench.py WARNING: uncommitted round artifacts "
-                    "(variance guard reads committed snapshots):\n" + dirty,
-                    file=sys.stderr,
-                )
-        except (OSError, subprocess.SubprocessError):
-            pass
     spark = get_spark(
         "ushas-bench", extra_conf={"spark.cleaner.periodicGC.interval": "2min"}
     )
@@ -656,79 +277,20 @@ def main() -> None:
     for name in names:
         _run_once(registry.QUERIES[name], spark, sf_dir)
 
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prev = {} if child else _prev_detail(sf_val)
-
-    # Timed sweep, with a bounded retry (r12, VERDICT r11 item 3): the
-    # r11 sweep passed the loadavg gate and its stamps still classified
-    # the window contaminated after the fact. When the FINISHED sweep's
-    # own stamps classify non-quiet, re-await a quiet window and re-time
-    # once -- both attempts land in the artifact (attempt1 summary + the
-    # final attempt's full map), so the judge sees the window history
-    # without re-deriving it. Children and subset probes never retry:
-    # their isolation / ad-hoc nature is the point, and a subset's drift
-    # stats vs the full committed detail are partial anyway.
-    attempt = 0
-    attempt1_summary = None
-    retry_skipped = None
-    while True:
-        attempt += 1
-        timings: dict[str, float] = {}
-        for name in names:
-            fn = registry.QUERIES[name]
-            _run_once(fn, spark, sf_dir)  # per-query warm-up: plan + footer cache
-            timings[name] = min(
-                _run_once(fn, spark, sf_dir) for _ in range(ITERATIONS)
-            )
-        steal = _steal_pct(cpu_start, _cpu_times()) if not child else None
-        load_end = _loadavg()
-        drift_median, outliers = (
-            _drift_stats(timings, prev) if not child else (None, [])
-        )
-        if child:
-            # No stamps to classify from (probes skipped, ADVICE r11),
-            # and a re-pin's 5-min loadavg always carries the parent
-            # sweep's own 32 threads -- any classification would read
-            # "contended" by construction. The parent's stamps are the
-            # window verdict; the child is only a fresh-JVM timing.
-            window_class, window_reasons = "child", []
-        else:
-            window_class, window_reasons = _classify_window(
-                host_state, steal, cpu_probe, load_start, load_end,
-                drift_median, len(outliers), retried=attempt > 1,
-            )
-        if child or extra:
-            break
-        decision = _retry_decision(
-            attempt, window_class, time.perf_counter() - t_main0
-        )
-        if decision != "retry":
-            if decision.startswith("retry_skipped"):
-                # Non-quiet window but no retry (single-attempt default
-                # or wall budget exhausted): say so in the artifact so a
-                # judge reading a non-quiet window_class knows the
-                # harness declined to re-time deliberately.
-                retry_skipped = decision
-            break
-        print(
-            "bench.py WARNING: sweep window classified %s (%s); "
-            "re-awaiting a quiet window and re-timing once (attempt %d/%d)"
-            % (window_class, ",".join(window_reasons), attempt + 1,
-               MAX_SWEEP_ATTEMPTS),
-            file=sys.stderr,
-        )
-        attempt1_summary = {
-            "value": round(sum(timings.values()), 4),
-            "window_class": window_class,
-            "window_class_reasons": window_reasons,
-            "host_state": host_state,
-            "cpu_steal_pct": steal,
-            "cpu_probe_sec": cpu_probe,
-            "drift_median": drift_median,
-        }
-        load_start, host_state = _await_quiet_host()
-        cpu_start = _cpu_times()
-        cpu_probe = _cpu_probe_sec()
+    # The two window notes differ on purpose: loadavg_start (read before
+    # any Spark work) measures load from outside the bench, which the
+    # bench's own threads would mask once the session starts; steal is a
+    # share of the bench's own CPU time, so it brackets the timed sweep
+    # only, undiluted by session start-up and the warm pass.
+    cpu_start = _cpu_times()
+    timings: dict[str, float] = {}
+    for name in names:
+        fn = registry.QUERIES[name]
+        _run_once(fn, spark, sf_dir)  # per-query warm-up: plan + footer cache
+        timings[name] = min(_run_once(fn, spark, sf_dir) for _ in range(ITERATIONS))
+    steal = _steal_pct(cpu_start, _cpu_times())
+    load_end = _loadavg()
+    spark.stop()
 
     out = {
         "metric": "headline_queries_total_best_of_%d" % ITERATIONS,
@@ -736,123 +298,22 @@ def main() -> None:
         "unit": "sec",
         "queries": {k: round(v, 4) for k, v in timings.items()},
         "sf": sf_val,
-        # Host-state evidence for cross-round drift adjudication: an r10
-        # sweep landed in a degraded-host window (sub-second queries at
-        # 5-10 s, fresh-JVM re-pins 3-10x elevated, load avg 3.0 during
-        # vs 0.4 after) and proving it required having watched uptime
-        # live. 1/5/15-min load averages at start (pre-Spark: external
-        # contention) and end (includes the sweep's own threads) make
-        # that call auditable from the committed artifact alone.
+        # A note on the window, not a verdict: loadavg at start (external
+        # contention) and end (includes the sweep's own threads), and the
+        # hypervisor steal share over the timed sweep (null off-Linux).
         "loadavg_start": load_start,
         "loadavg_end": load_end,
-        # "quiet" / "quiet_after_Ns_wait" / "DEGRADED_..." /
-        # "loadavg_unavailable" / "child" -- the r11 gate's own verdict
-        # on the window it ran in, auditable from this artifact alone.
-        "host_state": host_state,
-        # Hypervisor steal share over the sweep window (the slow-mode
-        # signal loadavg cannot see; null off-Linux and in children).
         "cpu_steal_pct": steal,
-        # Fixed-workload guest-compute reading taken BEFORE Spark
-        # started (single-thread, best-of-3); cross-artifact comparisons
-        # of this number expose slow-mode windows that loadavg and
-        # steal both miss. Null in children (parent discards it).
-        "cpu_probe_sec": cpu_probe,
-        # The calibrated machine verdict on this sweep's window
-        # (quiet / slow_mode / contended / unknown), derived from the
-        # stamps above by _classify_window -- thresholds and their
-        # calibration table live at its definition. attempt1 (when
-        # present) is the summary of a first sweep this run discarded
-        # after its stamps classified non-quiet.
-        "window_class": window_class,
     }
-    if window_reasons:
-        out["window_class_reasons"] = window_reasons
-    if drift_median is not None:
-        out["drift_median"] = drift_median
-    if attempt1_summary is not None:
-        out["sweep_attempts"] = attempt
-        out["attempt1"] = attempt1_summary
-    if retry_skipped is not None:
-        out["retry_skipped"] = retry_skipped
-
-    # Variance guard (r06 verdict item 3): every round so far, 1-4
-    # sub-second queries read >1.5x their prior-round sweep value on
-    # byte-identical plans, and a manual isolated re-pin cleared each one
-    # (window_topk_per_group r06: sweep 1.69s -> isolated 0.62s). Do that
-    # re-pin in-harness: compare against the previous round's committed
-    # per-query map and re-run outliers best-of-3 in a fresh subprocess
-    # JVM, emitting BOTH numbers so the judge never has to. Capped at 8:
-    # more simultaneous "outliers" means uniform machine drift (seen in
-    # r04), where per-query re-pins prove nothing -- plans are the
-    # cross-round comparator there.
-    if not child:
-        spark.stop()  # quiet the JVM before isolated re-pins
-        # drift_median / outliers come from the attempt loop above (the
-        # FINAL attempt's stats vs the prior round's committed detail,
-        # r07 verdict item 4): the outlier count tells the judge HOW MANY
-        # queries drifted; the median tells them which way the MACHINE
-        # moved (r07: 13 outliers yet median 0.92x -- bimodal VM drift,
-        # not regression). Emitted so nobody has to re-derive it.
-        #
-        # Uniform slow-mode short-circuit (r11, recalibrated r12): when
-        # the WHOLE sweep drifted, per-query fresh-JVM re-pins prove
-        # nothing -- the r11 gated sweep burned ~10 min re-pinning 8
-        # "outliers" whose isolated numbers were elevated by the same
-        # host window (and r10's contaminated sweep did the same). The
-        # predicate is _uniform_drift (median > 1.15, or >= 8 outliers
-        # with median >= 1.05 -- the old single >1.3 cut missed both
-        # motivating incidents, ADVICE r11). The drift_median +
-        # window_class stamps already carry the verdict; skip the
-        # re-pins and say so in the artifact.
-        if _uniform_drift(drift_median, len(outliers)):
-            out["repin_skipped"] = (
-                "uniform_drift_median_%.3f_outliers_%d"
-                % (drift_median, len(outliers))
-            )
-            if outliers:
-                out["uniform_drift_outliers"] = len(outliers)
-        else:
-            repinned: dict[str, dict[str, float]] = {}
-            for ratio, name in outliers[:8]:
-                # Wall budget (r13): each re-pin is a fresh JVM with a
-                # 600s subprocess timeout; 8 of them after a slow sweep
-                # is the other way the driver's run can exceed its
-                # window. Stop launching new ones past the budget --
-                # the sweep/prev numbers are already in the artifact.
-                elapsed = time.perf_counter() - t_main0
-                if elapsed > REPIN_BUDGET_SEC:
-                    out["repin_truncated"] = (
-                        "wall_budget_%ds_elapsed" % int(elapsed)
-                    )
-                    break
-                iso = _repin_isolated(name)
-                if iso is not None:
-                    repinned[name] = {
-                        "prev": round(prev[name], 4),
-                        "sweep": round(timings[name], 4),
-                        "isolated": round(iso, 4),
-                    }
-            if repinned:
-                out["repinned"] = repinned
-            if len(outliers) > 8:
-                out["uniform_drift_outliers"] = len(outliers)
-    # Full per-query payload goes to a file: the driver captures only the
-    # LAST ~2000 chars of stdout and parses the JSON line it finds there,
-    # so a 68-query map on one line overflows the window and the round's
-    # headline number is lost (this happened to BENCH_r05: rc=0 but
-    # "parsed": null, the line visibly truncated mid-JSON). Keep stdout's
-    # single JSON line compact enough to always fit: inline only the
-    # slowest queries when the full map would overflow.
-    if not child and not extra:
-        # Round-stamped snapshot (r06 verdict item 7) so cross-round
-        # per-query diffs come from committed artifacts, plus the
-        # un-stamped path the tooling already reads. FULL sweeps only:
-        # a USHAS_BENCH_QUERIES subset probe must never clobber the
-        # round's 87-query map (it did, r09 -- restored from git).
+    if not extra:
+        # Full sweeps only: a subset must never clobber the 87-query map.
         for fname in ("BENCH_DETAIL.json", "BENCH_DETAIL_r%02d.json" % _this_round()):
             with open(os.path.join(_REPO, fname), "w") as f:
                 json.dump(out, f, indent=1, sort_keys=True)
                 f.write("\n")
+    # Callers parse the JSON line from the last ~2000 chars of stdout,
+    # so the line must fit: inline only the slowest queries when the
+    # full map would overflow (BENCH_r05 lost its number that way).
     line = json.dumps(out)
     if len(line) > 1800:
         slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:15])
@@ -861,8 +322,6 @@ def main() -> None:
         out["detail"] = "BENCH_DETAIL.json"
         line = json.dumps(out)
     print(line)
-    if child:
-        spark.stop()
 
 
 if __name__ == "__main__":
