@@ -1,34 +1,32 @@
-"""Registry hygiene: the driver-facing walk order stays consistent.
+"""Registry hygiene: the query/oracle surface and the repo's evidence.
 
-The rotation ritual (fold CORRECTNESS greens into _DRIVER_GREEN, reorder
-_MODULE_ORDER each round) edits hand-maintained name sets; these checks
-catch the failure modes of that ritual -- a typo'd or stale name, a
-module missing from the order list, or a rows-only query drifting
-forward where it would burn a driver slot.
+The registry serves queries in registration order; these checks keep its
+one hand-kept list (the rows-only allowance) honest, flag any committed
+driver CORRECTNESS row that went red and was never re-certified, and keep
+round history out of ``tools/`` and duplicate budgets out of the package.
 """
 
 from __future__ import annotations
 
 import ast
 import fnmatch
+import json
 import os
+import re
 
 from ushas_spark import registry
 
 registry.load_all()
 
-
-def test_driver_green_names_exist():
-    stale = registry._DRIVER_GREEN - set(registry.QUERIES)
-    assert not stale, f"_DRIVER_GREEN names not in registry: {sorted(stale)}"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_rows_only_tail_names_exist_and_lack_oracles():
-    stale = registry._ROWS_ONLY_TAIL - set(registry.QUERIES)
-    assert not stale, f"_ROWS_ONLY_TAIL names not in registry: {sorted(stale)}"
-    oracled = registry._ROWS_ONLY_TAIL & set(registry.ORACLE)
+    stale = registry._ROWS_ONLY - set(registry.QUERIES)
+    assert not stale, f"_ROWS_ONLY names not in registry: {sorted(stale)}"
+    oracled = registry._ROWS_ONLY & set(registry.ORACLE)
     assert not oracled, (
-        f"rows-only-tail queries now have oracles -- unpark them: {sorted(oracled)}"
+        f"rows-only queries now have oracles -- unpark them: {sorted(oracled)}"
     )
 
 
@@ -39,255 +37,38 @@ def test_every_oracle_has_a_query():
 
 def test_all_no_oracle_queries_are_parked():
     missing = set(registry.QUERIES) - set(registry.ORACLE)
-    unparked = missing - registry._ROWS_ONLY_TAIL
+    unparked = missing - registry._ROWS_ONLY
     assert not unparked, (
-        "queries without oracles must be in _ROWS_ONLY_TAIL (or gain an "
+        "queries without oracles must be in _ROWS_ONLY (or gain an "
         f"oracle): {sorted(unparked)}"
     )
 
 
-def test_rows_only_queries_sort_last():
-    # A rows-only name may be explicitly head-pinned for one round to earn
-    # its driver row (r09: expr_xpath_url_battery); everything else in the
-    # tail set must still sort at the absolute back of the walk.
-    parked = registry._ROWS_ONLY_TAIL - set(registry._PRIORITY_NAMES)
-    names = list(registry.QUERIES)
-    tail = names[-len(parked):]
-    assert set(tail) == parked
-
-
-def test_never_checked_queries_sort_before_greens():
-    names = list(registry.QUERIES)
-    seen_green = False
-    for n in names:
-        if n in registry._ROWS_ONLY_TAIL:
-            continue
-        if n in registry._DRIVER_GREEN:
-            seen_green = True
-        else:
-            assert not seen_green, (
-                f"never-checked query {n!r} sorts behind a driver-green one; "
-                "the gate's ~50-slot prefix would re-check proven queries"
-            )
-
-
-def test_all_registering_modules_have_an_order_entry():
-    mods = {
-        getattr(fn, "__module__", "") for fn in registry.QUERIES.values()
-    }
-    missing = mods - set(registry._MODULE_ORDER)
-    assert not missing, (
-        f"modules registering queries but absent from _MODULE_ORDER "
-        f"(they fall to the back unordered): {sorted(missing)}"
+def test_latest_driver_row_of_every_query_is_green():
+    """Each name's latest committed driver CORRECTNESS row is green: a
+    hash match, or the by-design rows-only marker (``err == "no_oracle"``
+    with a row count). A red row stands until a later round re-certifies
+    the name."""
+    latest = {}
+    rounds = sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(REPO)
+        if (m := re.match(r"^CORRECTNESS_r(\d+)\.json$", f))
     )
-
-
-def test_defer_new_names_exist_and_are_not_green():
-    stale = registry._DEFER_NEW - set(registry.QUERIES)
-    assert not stale, f"_DEFER_NEW names not in registry: {sorted(stale)}"
-    greened = registry._DEFER_NEW & registry._DRIVER_GREEN
-    assert not greened, (
-        f"_DEFER_NEW queries are driver-green -- drop them from the defer "
-        f"set during rotation: {sorted(greened)}"
-    )
-
-
-def test_rotation_state_matches_correctness_files():
-    """rotation_state.py is generated -- regeneration must be a no-op.
-
-    Catches the recurring process gap: a round's CORRECTNESS_r{N}.json
-    landed but ``python tools/gen_rotation_state.py`` was not re-run, so
-    the walk order would re-certify rows that are no longer the stalest.
-
-    PENDING-ROUND AWARENESS: the driver writes each round's evidence
-    AFTER the builder's last commit, so at judge time there is always
-    exactly one file newer than anything the committed rotation_state.py
-    could have folded. Evidence rounds newer than the folded set are
-    therefore tolerated -- but only while every row in them is green or
-    already adjudicated in EXPECTED_RED. A genuine red row in a pending
-    round still fails here (that scream is the guard's whole point; it
-    fired correctly on r09's harness-crash row), and any staleness
-    within the folded set still fails (the regeneration discipline this
-    test exists to enforce)."""
-    import os
-    import re
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    try:
-        import gen_rotation_state as gen
-    finally:
-        sys.path.pop(0)
-
-    folded = gen.folded_files()
-    assert folded, "rotation_state.py missing its '# Derived from:' header"
-    last, red, expected, files = gen.scan(only=set(folded))
-    assert files == folded, (
-        f"evidence files folded into rotation_state.py are missing on "
-        f"disk: {sorted(set(folded) - set(files))}"
-    )
-    assert not red, f"RED driver rows with no later green: {red}"
-    with open(gen.OUT, encoding="utf-8") as fh:
-        on_disk = fh.read()
-    assert gen.render(last, files) == on_disk, (
-        "ushas_spark/rotation_state.py is stale -- re-run "
-        "`python tools/gen_rotation_state.py`"
-    )
-
-    # Adjudicated reds (harness crashes with an in-repo fix awaiting the
-    # next driver sample) don't brick the suite, but they MUST stay
-    # head-pinned so the next gate actually re-samples them.
-    for name in expected:
-        assert name in registry.QUERIES, (
-            f"EXPECTED_RED name {name!r} is not a registered query"
+    assert rounds, "no CORRECTNESS_rNN.json evidence in the repo root"
+    for rnd, fname in rounds:
+        with open(os.path.join(REPO, fname), encoding="utf-8") as fh:
+            for name, row in json.load(fh).items():
+                latest[name] = (rnd, row)
+    red = {
+        name: (rnd, row.get("err"))
+        for name, (rnd, row) in latest.items()
+        if not (
+            row.get("hash_match")
+            or (row.get("err") == "no_oracle" and row.get("spark_rows") is not None)
         )
-        assert name in registry._PRIORITY_NAMES, (
-            f"EXPECTED_RED query {name!r} must be head-pinned in "
-            "_PRIORITY_NAMES so the next driver gate re-samples it first"
-        )
-
-    # Pending (unfolded) evidence: must be strictly newer rounds, and
-    # clean. A stale EXPECTED_RED entry is tolerable ONLY when its green
-    # landed in a pending round (the happy path at judge time; the next
-    # round's rotation fold deletes the entry -- the generator exits 1
-    # until it does).
-    def rnd(fname: str) -> int:
-        return int(re.search(r"_r(\d+)\.json$", fname).group(1))
-
-    newest_folded = max(rnd(f) for f in folded)
-    last_all, red_all, _, files_all = gen.scan()
-    pending_rounds = {rnd(f) for f in files_all if f not in set(folded)}
-    assert all(r > newest_folded for r in pending_rounds), (
-        f"evidence older than the folded set (r{newest_folded:02d}) is "
-        f"not folded: re-run the generator. pending={sorted(pending_rounds)}"
-    )
-    tolerable = {
-        name
-        for name, why in red_all.items()
-        if why.startswith("STALE EXPECTED_RED")
-        and last_all.get(name) in pending_rounds
     }
-    remaining = {k: v for k, v in red_all.items() if k not in tolerable}
-    assert not remaining, (
-        f"RED driver rows (or stale adjudications) across ALL evidence "
-        f"incl. pending rounds: {remaining}"
-    )
-
-
-def test_greens_walk_oldest_evidence_first():
-    """The gate's ~50-slot prefix must hit the stalest driver rows."""
-    from ushas_spark.rotation_state import GREEN_LAST_ROUND
-
-    rounds = [
-        GREEN_LAST_ROUND[n]
-        for n in registry.QUERIES
-        if n in GREEN_LAST_ROUND
-        and n not in registry._ROWS_ONLY_TAIL
-        and n not in registry._PRIORITY_NAMES
-    ]
-    assert rounds == sorted(rounds), (
-        "driver-green queries are not ordered oldest-round-first"
-    )
-
-
-def test_priority_names_are_not_already_green():
-    """A head pin whose driver row has landed must be removed during the
-    rotation fold, or it burns the gate's first slot every round forever
-    (rank() checks _PRIORITY_NAMES before evidence age). This is the one
-    remaining hand-maintained set; enforce the cleanup the rotation
-    tool's output asks for."""
-    greened = set(registry._PRIORITY_NAMES) & registry._DRIVER_GREEN
-    assert not greened, (
-        f"_PRIORITY_NAMES entries already have driver rows -- delete them "
-        f"so the gate re-certifies stale evidence instead: {sorted(greened)}"
-    )
-
-
-def test_gen_rotation_state_scan_semantics(tmp_path, monkeypatch):
-    """The evidence scanner's green/red/override rules on synthetic files:
-    hash-green counts, rows-only (err=no_oracle with a row count) counts,
-    a red row is reported UNLESS a later round re-certifies it green, the
-    latest green round wins, and non-round-stamped filenames are ignored.
-    """
-    import json
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo, "tools"))
-    try:
-        import gen_rotation_state as gen
-    finally:
-        sys.path.pop(0)
-
-    def row(hash_match=None, err=None, spark_rows=None):
-        return {
-            "rows_match": None, "schema_match": None,
-            "hash_match": hash_match, "spark_rows": spark_rows,
-            "oracle_rows": None, "err": err,
-        }
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "a": row(hash_match=True),
-        "b": row(err="boom"),                       # red, never re-certified
-        "c": row(err="no_oracle", spark_rows=3),    # rows-only green
-        "d": row(hash_match=False),                 # red...
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "a": row(hash_match=True),                  # later green wins
-        "d": row(hash_match=True),                  # ...re-certified green
-    }))
-    # Must be skipped, not parsed or crashed on:
-    (tmp_path / "CORRECTNESS_rerun.json").write_text("{not json")
-    (tmp_path / "CORRECTNESS_r01_backup.json").write_text(
-        json.dumps({"z": row(hash_match=True)})
-    )
-
-    monkeypatch.setattr(gen, "REPO", str(tmp_path))
-    # The real repo's EXPECTED_RED names don't exist in these synthetic
-    # files (they'd surface as stale-entry errors); test the base
-    # semantics with an empty allowlist first.
-    monkeypatch.setattr(gen, "EXPECTED_RED", {})
-    last, red, expected, files = gen.scan()
-    assert files == ["CORRECTNESS_r01.json", "CORRECTNESS_r02.json"]
-    assert last == {"a": 2, "c": 1, "d": 2}
-    assert set(red) == {"b"} and "boom" in red["b"]
-    assert not expected
-
-    # EXPECTED_RED semantics: an adjudicated red (within its covered
-    # round) is diverted out of ``red`` into ``expected``; an entry whose
-    # red row later greened (or never existed) is STALE and must flip
-    # back into ``red`` loudly; a red row NEWER than its adjudicated
-    # round means the claimed fix failed and must stay red.
-    monkeypatch.setattr(
-        gen,
-        "EXPECTED_RED",
-        {"b": (1, "adjudicated crash"), "a": (1, "stale entry")},
-    )
-    last2, red2, expected2, _ = gen.scan()
-    assert last2 == last
-    assert set(expected2) == {"b"} and "boom" in expected2["b"]
-    assert set(red2) == {"a"} and "STALE EXPECTED_RED" in red2["a"]
-
-    # b's red is r01; an adjudication claiming to cover only r00 must NOT
-    # absorb it.
-    monkeypatch.setattr(gen, "EXPECTED_RED", {"b": (0, "stale-scoped")})
-    _, red3, expected3, _ = gen.scan()
-    assert not expected3
-    assert "b" in red3 and "the fix did not work" in red3["b"]
-
-    # The ``only`` filter replays a restricted (folded) evidence set:
-    # with r02 excluded, d's re-certification never happened, so d is red
-    # and a/d keep their r01 ages.
-    monkeypatch.setattr(gen, "EXPECTED_RED", {})
-    last4, red4, _, files4 = gen.scan(only={"CORRECTNESS_r01.json"})
-    assert files4 == ["CORRECTNESS_r01.json"]
-    assert last4 == {"a": 1, "c": 1}
-    assert set(red4) == {"b", "d"}
-
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert not red, f"driver rows red in their latest round: {red}"
 
 
 def test_tools_hold_no_round_stamped_scripts():

@@ -79,3 +79,8 @@ def test_unpersist_warnings_quiet(spark):
     log4j = spark._jvm.org.apache.logging.log4j
     level = log4j.LogManager.getLogger(session.UNPERSIST_LOGGER).getLevel()
     assert level.toString() == "ERROR"
+
+
+def test_default_driver_memory_is_half_of_ram_capped_at_64g():
+    assert session.default_driver_memory(16 * 2**30) == "8g"
+    assert session.default_driver_memory(256 * 2**30) == "64g"

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,7 +55,8 @@ def end_plan_audit() -> list[dict]:
 
     Each entry: {"pre": pre-execution physical plan string,
     "post": post-execution (AQE-finalized) plan string,
-    "opt": optimized-logical-plan node list (toJSON)}."""
+    "opt": optimized-logical-plan node list (toJSON),
+    "counts": plan_counts of the pre-execution plan}."""
     global _AUDIT
     out = _AUDIT if _AUDIT is not None else []
     _AUDIT = None
@@ -89,10 +91,6 @@ def set_reliable(on: bool) -> None:
     dir, executor-loss tolerant) truncation."""
     global _RELIABLE
     _RELIABLE = on
-
-
-def is_reliable() -> bool:
-    return _RELIABLE
 
 
 def plan_counts(jplan) -> dict[str, int]:
@@ -164,6 +162,33 @@ def plan_counts(jplan) -> dict[str, int]:
     return c
 
 
+def _audit_segment(df: DataFrame) -> Callable[[bool], None]:
+    """Capture ``df``'s pre-execution plan for the active plan audit.
+
+    Returns ``record(post)``, to call once the segment has run: it appends
+    the audit entry, with the AQE-finalized plan of the same query
+    execution as ``"post"`` when ``post`` is true and None otherwise. A
+    no-op when no audit is active."""
+    if _AUDIT is None:
+        return lambda post: None
+    qe = df._jdf.queryExecution()
+    pre = qe.executedPlan().toString()
+    counts = plan_counts(qe.executedPlan())
+    opt = qe.optimizedPlan().toJSON()
+
+    def record(post: bool) -> None:
+        _AUDIT.append(
+            {
+                "pre": pre,
+                "post": qe.executedPlan().toString() if post else None,
+                "opt": opt,
+                "counts": counts,
+            }
+        )
+
+    return record
+
+
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and TRUNCATE its logical plan.
 
@@ -172,12 +197,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     none -- on a real cluster, point it at DFS via
     ``spark.sparkContext.setCheckpointDir("hdfs://...")`` first).
     """
-    audit = _AUDIT is not None
-    if audit:
-        qe = df._jdf.queryExecution()
-        pre = qe.executedPlan().toString()
-        counts = plan_counts(qe.executedPlan())
-        opt = qe.optimizedPlan().toJSON()
+    record = _audit_segment(df)
     if not _RELIABLE:
         out = df.localCheckpoint(eager=eager)
     else:
@@ -185,15 +205,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(tempfile.mkdtemp(prefix="ushas_ckpt_"))
         out = df.checkpoint(eager=eager)
-    if audit:
-        _AUDIT.append(
-            {
-                "pre": pre,
-                "post": qe.executedPlan().toString(),
-                "opt": opt,
-                "counts": counts,
-            }
-        )
+    record(post=True)
     return out
 
 
@@ -225,28 +237,15 @@ def pin_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     pinned = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(
         *[F.col(k) for k in keys]
     )
-    audit = _AUDIT is not None
-    if audit:
-        qe = pinned._jdf.queryExecution()
-        pre = qe.executedPlan().toString()
-        counts = plan_counts(qe.executedPlan())
-        opt = qe.optimizedPlan().toJSON()
+    record = _audit_segment(pinned)
     pinned = pinned.persist()
     pinned.count()  # eager: populate before the loop references it twice
-    if audit:
-        # Cache population executes INSIDE the count()'s InMemoryTableScan,
-        # not through this qe, so no AQE-finalized plan of the population
-        # exists anywhere we can reach -- unlike materialize, whose eager
-        # checkpoint executes through the same qe. Record post=None so
-        # consumers (tools/gen_plans_md.py) fall back to the pre plan for
-        # text-derived columns instead of silently reading an un-executed
-        # "post" that is byte-identical to pre.
-        _AUDIT.append(
-            {
-                "pre": pre,
-                "post": None,
-                "opt": opt,
-                "counts": counts,
-            }
-        )
+    # Cache population executes INSIDE the count()'s InMemoryTableScan,
+    # not through the audited qe, so no AQE-finalized plan of the
+    # population exists anywhere we can reach -- unlike materialize, whose
+    # eager checkpoint executes through the same qe. Record post=None so
+    # consumers (tools/gen_plans_md.py) fall back to the pre plan for
+    # text-derived columns instead of silently reading an un-executed
+    # "post" that is byte-identical to pre.
+    record(post=False)
     return pinned

@@ -37,7 +37,10 @@ def get_spark(
     local[] fallback.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    n_shuffle = shuffle_partitions or int(os.environ.get("USHAS_SHUFFLE_PARTITIONS", "32"))
+    n_shuffle = shuffle_partitions or 32
+    driver_mem = os.environ.get("USHAS_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -52,7 +55,7 @@ def get_spark(
         # Arrow everywhere Python touches data.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode = driver-only JVM; this is the one memory knob.
-        .config("spark.driver.memory", os.environ.get("USHAS_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # Parquet TIMESTAMP(NANOS) is unreadable by Spark natively; surface
         # it as long nanos and convert in io.load_table. Every shipped
@@ -79,6 +82,15 @@ def get_spark(
         log4j.core.config.Configurator.setLevel(logger, log4j.Level.ERROR)
     py4j_nodelay(spark)
     return spark
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap default: half of physical RAM in whole GiB, capped at 64g.
+
+    A fixed 64g heap on a 16 GB host lets the JVM grow past the machine
+    before it collects; ``USHAS_DRIVER_MEM`` overrides this per deployment.
+    """
+    return f"{max(1, min(64, round(phys_bytes / 2**31)))}g"
 
 
 WINDOW_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
