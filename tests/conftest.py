@@ -106,10 +106,7 @@ def _cold_cache_between_tests():
 
     s = SparkSession.getActiveSession()
     if s is not None:
-        try:
-            s.catalog.clearCache()
-        except Exception:
-            pass
+        s.catalog.clearCache()
 
 
 @pytest.fixture(scope="session")

@@ -20,26 +20,15 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.regime_twin import release, twin
 from ushas_spark.operators import graph
 
-SF_DIR = os.environ.get("USHAS_TEST_SF", "/root/testdata/sf0.001")
 
-
-@pytest.fixture(scope="module")
-def spark():
-    from ushas_spark.session import get_spark
-
-    return get_spark("test-hits-regimes")
-
-
-def test_regimes_bit_identical(spark, monkeypatch):
+def test_regimes_bit_identical(spark, sf_dir, monkeypatch):
     broadcast, merge = twin(
-        spark, monkeypatch, lambda: graph.graph_hits_hub_authority(spark, SF_DIR)
+        spark, monkeypatch, lambda: graph.graph_hits_hub_authority(spark, sf_dir)
     )
     assert broadcast.rows == merge.rows
     assert len(broadcast.rows) == 20  # top-10 per role, both roles present
@@ -48,13 +37,13 @@ def test_regimes_bit_identical(spark, monkeypatch):
         broadcast.total, merge.total)
 
 
-def test_pagerank_regimes_bit_identical(spark, monkeypatch):
+def test_pagerank_regimes_bit_identical(spark, sf_dir, monkeypatch):
     """Same gate pattern transferred to global PageRank
     (OPTIMIZATION_r12.md item 2): broadcast regime won both interleaved
-    sf0.1 pairings; the personalized variant measured NEGATIVE and
-    stays on the merge shape (adjudicated in pagerank()'s docstring)."""
+    sf0.1 pairings. Personalized PageRank runs the same loop; its twin
+    is in tests/test_r13_regimes.py."""
     broadcast, merge = twin(
-        spark, monkeypatch, lambda: graph.graph_pagerank_top(spark, SF_DIR)
+        spark, monkeypatch, lambda: graph.graph_pagerank_top(spark, sf_dir)
     )
     assert broadcast.rows == merge.rows
     assert len(broadcast.rows) == graph.TOP_N
@@ -64,7 +53,7 @@ def test_pagerank_regimes_bit_identical(spark, monkeypatch):
         broadcast.final, merge.final)
 
 
-def test_cc_regimes_bit_identical(spark, monkeypatch):
+def test_cc_regimes_bit_identical(spark, sf_dir, monkeypatch):
     """connected_components' r12 folded-broadcast regime (self-loops
     baked into a d-pinned edge list + explicit labels broadcast) must
     equal the merge loop row-for-row -- checked through BOTH the
@@ -76,7 +65,7 @@ def test_cc_regimes_bit_identical(spark, monkeypatch):
         graph.graph_components_incremental,
         dedup.dedup_cluster_components,
     ):
-        broadcast, merge = twin(spark, monkeypatch, lambda: fn(spark, SF_DIR))
+        broadcast, merge = twin(spark, monkeypatch, lambda: fn(spark, sf_dir))
         assert broadcast.rows == merge.rows
         assert len(broadcast.rows) > 0
         # The folded loop's rounds plan no exchange; the merge loop's do.
@@ -84,7 +73,7 @@ def test_cc_regimes_bit_identical(spark, monkeypatch):
             fn.__name__, broadcast.total, merge.total)
 
 
-def test_triangle_regimes_bit_identical(spark, monkeypatch):
+def test_triangle_regimes_bit_identical(spark, sf_dir, monkeypatch):
     """triangle_summary's r12 broadcast regime (OPTIMIZATION_r12.md
     item 7; won all three interleaved isolated sf0.1 pairings
     3.50/2.69/2.72 vs 3.95/2.77/5.79 s) must equal the r10 shuffle shape
@@ -92,7 +81,7 @@ def test_triangle_regimes_bit_identical(spark, monkeypatch):
     formulation, so this twin pins the restructure against that
     evidence the same way the HITS/CC/k-core twins do."""
     broadcast, merge = twin(
-        spark, monkeypatch, lambda: graph.graph_triangle_count(spark, SF_DIR)
+        spark, monkeypatch, lambda: graph.graph_triangle_count(spark, sf_dir)
     )
     assert broadcast.rows == merge.rows
     assert len(broadcast.rows) == 1  # one-row summary
@@ -100,7 +89,7 @@ def test_triangle_regimes_bit_identical(spark, monkeypatch):
         broadcast.total, merge.total)
 
 
-def test_triangle_broadcast_plan_no_smj(spark):
+def test_triangle_broadcast_plan_no_smj(spark, sf_dir):
     """Win condition of the triangle broadcast regime: the degree
     orientation and the closing intersection all join as broadcast
     BHJs -- no sort-merge join anywhere, and the E-row array-carrying
@@ -109,7 +98,7 @@ def test_triangle_broadcast_plan_no_smj(spark):
     from ushas_spark import durability
 
     durability.begin_plan_audit()
-    df = graph.graph_triangle_count(spark, SF_DIR)
+    df = graph.graph_triangle_count(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
     release(spark)
@@ -122,7 +111,7 @@ def test_triangle_broadcast_plan_no_smj(spark):
     assert totals["shuffles"] <= 6, totals
 
 
-def test_kcore_regimes_bit_identical(spark, monkeypatch):
+def test_kcore_regimes_bit_identical(spark, sf_dir, monkeypatch):
     """k-core's r12 broadcast-anti peel regime (OPTIMIZATION_r12.md
     item 4; won both interleaved isolated sf0.1 pairings 4.96/4.69 vs
     5.86/5.69 s) must equal the r11 semi-join merge shape row-for-row.
@@ -130,7 +119,7 @@ def test_kcore_regimes_bit_identical(spark, monkeypatch):
     pins the restructure against that evidence the same way the HITS
     twin does."""
     broadcast, merge = twin(
-        spark, monkeypatch, lambda: graph.graph_kcore_summary(spark, SF_DIR)
+        spark, monkeypatch, lambda: graph.graph_kcore_summary(spark, sf_dir)
     )
     assert broadcast.rows == merge.rows
     assert len(broadcast.rows) == 1  # one-row core summary
@@ -138,7 +127,7 @@ def test_kcore_regimes_bit_identical(spark, monkeypatch):
         broadcast.total, merge.total)
 
 
-def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark):
+def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark, sf_dir):
     """Win condition of the kcore broadcast regime: every peel round
     plans exactly one (groupBy) hash exchange, a broadcast anti BHJ,
     and no sort-merge join -- vs the merge shape's two exchanges + semi
@@ -146,7 +135,7 @@ def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark):
     from ushas_spark import durability
 
     durability.begin_plan_audit()
-    df = graph.graph_kcore_summary(spark, SF_DIR)
+    df = graph.graph_kcore_summary(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
     release(spark)
@@ -158,7 +147,7 @@ def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark):
         assert seg["counts"]["bhj"] == 1, seg["counts"]
 
 
-def test_small_v_regime_plans_zero_round_exchanges(spark):
+def test_small_v_regime_plans_zero_round_exchanges(spark, sf_dir):
     """The broadcast regime's win condition: each half-round segment
     (score join + groupBy over the groupBy-key-pinned pairs) plans no
     hash exchange at all -- the explicit broadcast plus co-partitioned
@@ -167,7 +156,7 @@ def test_small_v_regime_plans_zero_round_exchanges(spark):
     from ushas_spark import durability
 
     durability.begin_plan_audit()
-    df = graph.graph_hits_hub_authority(spark, SF_DIR)
+    df = graph.graph_hits_hub_authority(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     segments = durability.end_plan_audit()
     release(spark)

@@ -23,37 +23,26 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ushas_spark.durability import plan_counts
-
-SF_DIR = os.environ.get("USHAS_TEST_SF", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from ushas_spark.session import get_spark
-
-    return get_spark("test-ngram-plans")
 
 
 def _counts(df):
     return plan_counts(df._jdf.queryExecution().executedPlan())
 
 
-def test_boilerplate_plans_three_shuffles(spark):
+def test_boilerplate_plans_three_shuffles(spark, sf_dir):
     from ushas_spark.operators.text import text_boilerplate_ngrams
 
-    counts = _counts(text_boilerplate_ngrams(spark, SF_DIR))
+    counts = _counts(text_boilerplate_ngrams(spark, sf_dir))
     assert counts["shuffles"] == 3, counts
     assert counts["bhj"] == 1, counts  # boiler set joins as broadcast
 
 
-def test_decontaminate_plans_three_shuffles(spark):
+def test_decontaminate_plans_three_shuffles(spark, sf_dir):
     from ushas_spark.operators.pipeline import pipeline_decontaminate
 
-    counts = _counts(pipeline_decontaminate(spark, SF_DIR))
+    counts = _counts(pipeline_decontaminate(spark, sf_dir))
     assert counts["shuffles"] == 3, counts
     assert counts["bhj"] == 1, counts  # ev set joins as broadcast

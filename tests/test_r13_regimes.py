@@ -7,10 +7,11 @@ interleaved isolated sf0.1 pairings, hash-identical at three SFs):
   per-src neighbor lists + explicit broadcast of the walk table per hop
   + in-row argmin; the merge regime (r10 driver-green shape) runs
   byte-unchanged past durability.BROADCAST_MAX_ROWS.
-- graph_personalized_pagerank: size-gated broadcast regime with the
-  seed membership join collapsed to the provable ``node < PPR_SEED_CAP``
-  predicate; the merge regime (r04-r12 driver-green shape, join-based)
-  runs byte-unchanged past durability.BROADCAST_MAX_ROWS.
+- graph_personalized_pagerank: graph.pagerank with a seed cap, so the
+  seed membership join is the provable ``node < PPR_SEED_CAP``
+  predicate in both regimes; the gate flips the same pins and ranks
+  broadcast as global PageRank. One loop serves both queries, so a
+  cap above every node id must reproduce global PageRank exactly.
 - pipeline_bloom_prefilter: gram table materialized once (was evaluated
   3x), probe-side bit explode + (doc_id, ng) min-agg replaced by
   BLOOM_HASHES broadcast word joins + in-row AND; no regime gate (every
@@ -28,8 +29,6 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.regime_twin import release, twin
@@ -37,23 +36,14 @@ from ushas_spark import durability
 from ushas_spark.durability import plan_counts
 from ushas_spark.operators import graph
 
-SF_DIR = os.environ.get("USHAS_TEST_SF", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from ushas_spark.session import get_spark
-
-    return get_spark("test-r13-regimes")
-
 
 def _counts(df):
     return plan_counts(df._jdf.queryExecution().executedPlan())
 
 
-def test_walks_regimes_bit_identical(spark, monkeypatch):
+def test_walks_regimes_bit_identical(spark, sf_dir, monkeypatch):
     adjacency, merge = twin(  # every test SF is small-V
-        spark, monkeypatch, lambda: graph.graph_random_walks(spark, SF_DIR)
+        spark, monkeypatch, lambda: graph.graph_random_walks(spark, sf_dir)
     )
     assert adjacency.rows == merge.rows
     assert len(adjacency.rows) > 0
@@ -63,22 +53,22 @@ def test_walks_regimes_bit_identical(spark, monkeypatch):
         adjacency.total, merge.total)
 
 
-def test_walks_adjacency_plan_no_smj_one_exchange(spark):
+def test_walks_adjacency_plan_no_smj_one_exchange(spark, sf_dir):
     """Small-V final fragment: one BHJ per hop against the checkpointed
     adjacency, zero SMJ, and the only planned exchange is the final
     orderBy (the per-hop groupBy(walker) argmin exchanges are gone)."""
-    counts = _counts(graph.graph_random_walks(spark, SF_DIR))
+    counts = _counts(graph.graph_random_walks(spark, sf_dir))
     release(spark)
     assert counts["smj"] == 0, counts
     assert counts["bhj"] == graph.WALK_LEN, counts
     assert counts["shuffles"] == 1, counts
 
 
-def test_ppr_regimes_bit_identical(spark, monkeypatch):
+def test_ppr_regimes_bit_identical(spark, sf_dir, monkeypatch):
     broadcast, merge = twin(
         spark,
         monkeypatch,
-        lambda: graph.graph_personalized_pagerank(spark, SF_DIR),
+        lambda: graph.graph_personalized_pagerank(spark, sf_dir),
     )
     assert broadcast.rows == merge.rows
     assert 0 < len(broadcast.rows) <= graph.TOP_N
@@ -87,18 +77,39 @@ def test_ppr_regimes_bit_identical(spark, monkeypatch):
         broadcast.final, merge.final)
 
 
-def test_ppr_broadcast_plan_no_smj_rounds_exchange_free(spark):
+def test_ppr_broadcast_plan_no_smj_rounds_exchange_free(spark, sf_dir):
     """Small-V final fragment: the ITERS nested rounds plan zero
     exchanges (dst-pinned edges + explicit ranks broadcast; the seed
     membership is a WHEN predicate, not a join) -- only the top-N sort
     exchange remains, and no SMJ anywhere."""
-    counts = _counts(graph.graph_personalized_pagerank(spark, SF_DIR))
+    counts = _counts(graph.graph_personalized_pagerank(spark, sf_dir))
     release(spark)
     assert counts["smj"] == 0, counts
     assert counts["shuffles"] <= 1, counts
 
 
-def test_bloom_single_documents_scan_and_four_shuffles(spark):
+def test_pagerank_seed_cap_above_every_node_is_global(spark, sf_dir, monkeypatch):
+    """With every node below the cap the teleport set is all of V, so
+    the seeded loop must return global PageRank's rows exactly -- at the
+    shipped budget and in the merge regime. Pins the teleport algebra
+    of the one loop without the oracle."""
+    every_node = 1 << 62  # node ids are custkeys and suppkey + 1e9
+
+    def rows(df):
+        out = sorted(tuple(r) for r in df.collect())
+        release(spark)
+        return out
+
+    for budget in (durability.BROADCAST_MAX_ROWS, 0):
+        with monkeypatch.context() as m:
+            m.setattr(durability, "BROADCAST_MAX_ROWS", budget)
+            plain = rows(graph.pagerank(spark, sf_dir))
+            seeded = rows(graph.pagerank(spark, sf_dir, seed_cap=every_node))
+        assert seeded == plain, budget
+        assert len(plain) > graph.TOP_N
+
+
+def test_bloom_single_documents_scan_and_four_shuffles(spark, sf_dir):
     """The gram table is materialized once (pre-r13: the documents scan
     + 3-gram explode + two md5 hashes ran 3x), the words table once
     (BLOOM_HASHES broadcast instances would otherwise each re-plan the
@@ -108,7 +119,7 @@ def test_bloom_single_documents_scan_and_four_shuffles(spark):
     from ushas_spark.operators.pipeline import pipeline_bloom_prefilter
 
     durability.begin_plan_audit()
-    df = pipeline_bloom_prefilter(spark, SF_DIR)
+    df = pipeline_bloom_prefilter(spark, sf_dir)
     segments = durability.end_plan_audit()
     final_counts = _counts(df)
     total = dict(final_counts)

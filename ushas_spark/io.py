@@ -29,10 +29,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at ANY scale factor: region
-# and nation are fixed-size (5 / 25 rows) regardless of SF.
-BROADCAST_TABLES = {"region", "nation"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from the scale-factor directory.

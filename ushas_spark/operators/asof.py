@@ -73,6 +73,30 @@ def asof_join_backward(
     )
 
 
+def _latest_order_asof(
+    spark: SparkSession, sf_dir: str, right_values: list[str]
+) -> DataFrame:
+    """Backward as-of of every event ``(event_id, k, ts)`` against its
+    user's orders, carrying ``right_values`` as ``asof_*``. The orders
+    side is pre-reduced to max(o_orderkey) per (custkey, orderdate)."""
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", F.col("user_id").alias("k"), "ts"
+    )
+    orders = (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_custkey").alias("k"), "o_orderdate")
+        .agg(F.max("o_orderkey").alias("o_orderkey"))
+    )
+    return asof_join_backward(
+        events,
+        orders,
+        by="k",
+        left_ts="ts",
+        right_ts="o_orderdate",
+        right_values=right_values,
+    )
+
+
 _ASOF_ORACLE = """
 WITH o AS (
   -- Pre-reduce ties exactly as the Spark side does: DuckDB's ASOF
@@ -101,22 +125,7 @@ def asof_latest_order_before_event(spark: SparkSession, sf_dir: str) -> DataFram
     formulations are only well-defined on a unique (key, ts) right side,
     so it is pre-reduced to max(o_orderkey) per (custkey, orderdate).
     """
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("user_id").alias("k"), "ts"
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_custkey").alias("k"), "o_orderdate")
-        .agg(F.max("o_orderkey").alias("o_orderkey"))
-    )
-    out = asof_join_backward(
-        events,
-        orders,
-        by="k",
-        left_ts="ts",
-        right_ts="o_orderdate",
-        right_values=["o_orderkey"],
-    )
+    out = _latest_order_asof(spark, sf_dir, ["o_orderkey"])
     return out.select(
         "event_id",
         F.col("k").alias("user_id"),
@@ -254,22 +263,7 @@ def asof_order_within_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     not count as attribution. Implemented by carrying the matched
     timestamp through the window fill and nulling matches outside the
     tolerance -- zero extra shuffles over the plain as-of."""
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", F.col("user_id").alias("k"), "ts"
-    )
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_custkey").alias("k"), "o_orderdate")
-        .agg(F.max("o_orderkey").alias("o_orderkey"))
-    )
-    out = asof_join_backward(
-        events,
-        orders,
-        by="k",
-        left_ts="ts",
-        right_ts="o_orderdate",
-        right_values=["o_orderkey", "o_orderdate"],
-    )
+    out = _latest_order_asof(spark, sf_dir, ["o_orderkey", "o_orderdate"])
     within = F.col("asof_o_orderdate") >= F.col("ts") - F.expr("INTERVAL 90 DAY")
     return out.select(
         "event_id",

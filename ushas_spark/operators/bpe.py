@@ -138,46 +138,6 @@ def _sql_fold(s: str, ba: str, bb: str) -> str:
     )
 
 
-def _bpe_oracle(n_merges: int = N_MERGES) -> str:
-    parts = [
-        "w AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM ("
-        "  SELECT unnest(string_split(text, ' ')) AS word FROM documents)"
-        "  WHERE word <> '' GROUP BY word)",
-        "s0 AS (SELECT word, n, list_transform("
-        "  generate_series(1, length(word)), i -> substr(word, i, 1)) AS s"
-        "  FROM w)",
-    ]
-    for t in range(n_merges):
-        parts.append(
-            f"p{t} AS (SELECT a, b, CAST(SUM(n) AS BIGINT) AS cnt FROM ("
-            f"  SELECT s[u.i] AS a, s[u.i + 1] AS b, n"
-            f"  FROM s{t}, LATERAL (SELECT unnest(CASE WHEN len(s) >= 2"
-            f"    THEN generate_series(1, len(s) - 1) ELSE [] END) AS i) u)"
-            f"  GROUP BY a, b)"
-        )
-        parts.append(
-            f"b{t} AS (SELECT a AS ba, b AS bb, cnt AS bcnt FROM p{t}"
-            f"  ORDER BY cnt DESC, a, b LIMIT 1)"
-        )
-        parts.append(
-            f"s{t + 1} AS (SELECT word, n, {_sql_fold('s', 'ba', 'bb')} AS s"
-            f"  FROM s{t} CROSS JOIN b{t})"
-        )
-    sel = "\nUNION ALL\n".join(
-        f"SELECT {t} AS step, ba AS left_sym, bb AS right_sym,"
-        f" bcnt AS pair_cnt FROM b{t}"
-        for t in range(n_merges)
-    )
-    return "WITH " + ",\n".join(parts) + "\nSELECT * FROM (" + sel + ") ORDER BY step"
-
-
-@query("text_bpe_train_merges", oracle=_bpe_oracle())
-def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First {N_MERGES} learned BPE merges over the documents corpus."""
-    return bpe_train(spark, sf_dir)
-
-
-# ------------------------------------------------------- BPE APPLY stage
 def _oracle_parts(n_merges: int = N_MERGES) -> list[str]:
     """The shared CTE chain: word histogram -> char symbols -> n_merges
     rounds of (pair counts, argmax, corpus-wide merge)."""
@@ -208,6 +168,23 @@ def _oracle_parts(n_merges: int = N_MERGES) -> list[str]:
     return parts
 
 
+def _bpe_oracle(n_merges: int = N_MERGES) -> str:
+    parts = _oracle_parts(n_merges)
+    sel = "\nUNION ALL\n".join(
+        f"SELECT {t} AS step, ba AS left_sym, bb AS right_sym,"
+        f" bcnt AS pair_cnt FROM b{t}"
+        for t in range(n_merges)
+    )
+    return "WITH " + ",\n".join(parts) + "\nSELECT * FROM (" + sel + ") ORDER BY step"
+
+
+@query("text_bpe_train_merges", oracle=_bpe_oracle())
+def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First {N_MERGES} learned BPE merges over the documents corpus."""
+    return bpe_train(spark, sf_dir)
+
+
+# ------------------------------------------------------- BPE APPLY stage
 def _bpe_encode_oracle(n_merges: int = N_MERGES) -> str:
     parts = _oracle_parts(n_merges)
     parts.append(

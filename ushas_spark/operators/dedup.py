@@ -112,8 +112,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_DF_CAP = 256
 
 
-def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs Jaccard >= threshold via shingle inverted index.
+def _shingle_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The DF-capped shingle index ``(doc_id, shingle)`` and its per-doc
+    sizes ``(doc_id, n_sh)``.
 
     The shingle explode is referenced FOUR times downstream (hot-shingle
     scan, join side a, join side b, the per-doc size aggregate) --
@@ -138,7 +141,12 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle")
     )
     sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    return sh, sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+
+
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-pairs Jaccard >= threshold via the shingle inverted index."""
+    sh, sizes = _shingle_index(spark, sf_dir)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -163,8 +171,11 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NGRAM_ORACLE = f"""
-WITH sh_all AS (
+def shingle_overlap_sql(pair_op: str = "<") -> str:
+    """The DF-capped shingle index as oracle CTEs: ``sh_all``, ``hot``,
+    ``sh``, per-doc ``sizes`` and the shared-shingle counts ``inter``
+    of every doc pair with ``a.doc_id <pair_op> b.doc_id``."""
+    return f"""sh_all AS (
   SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
 ), hot AS (
   SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
@@ -173,9 +184,31 @@ WITH sh_all AS (
 ), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id {pair_op} b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+
+# Components of the Jaccard >= threshold pair graph as oracle CTEs over
+# shingle_overlap_sql(): ``pairs``, symmetric ``edges`` and the
+# recursive ``reach(id, label)`` from every document.
+_JACCARD_REACH_SQL = f"""pairs AS (
+  SELECT doc_a, doc_b FROM inter
+  JOIN sizes sa ON doc_a = sa.doc_id
+  JOIN sizes sb ON doc_b = sb.doc_id
+  WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
+), edges AS (
+  SELECT doc_a AS s, doc_b AS d FROM pairs
+  UNION ALL SELECT doc_b, doc_a FROM pairs
+), reach(id, label) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
+)"""
+
+
+_NGRAM_ORACLE = f"""
+WITH {shingle_overlap_sql()}
 SELECT doc_a, doc_b,
        CAST(ROUND(inter * 1000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT)
          AS jac_x1000
@@ -344,9 +377,9 @@ def _sql_minhash_bands() -> tuple[str, str]:
 
 
 _MH_COLS, _BAND_SELECTS = _sql_minhash_bands()
-
-_MINHASH_ORACLE = f"""
-WITH sh AS (
+# MinHash signature bands of every document as oracle CTEs ``sh``,
+# ``hashed``, ``sigs`` and ``bands``.
+_MH_BANDS_SQL = f"""sh AS (
   SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
 ),
 hashed AS (
@@ -361,20 +394,19 @@ sigs AS (
 ),
 bands AS (
   {_BAND_SELECTS}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+)"""
+# Exact verification of the ``cand`` pairs as oracle CTEs: per-doc
+# shingle ``sizes`` and the shared-shingle counts ``inter``; then the
+# pairs at Jaccard >= threshold.
+_CAND_INTER_SQL = """sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
   FROM cand c
   JOIN sh a ON a.doc_id = c.doc_a
   JOIN sh b ON b.doc_id = c.doc_b AND a.shingle = b.shingle
   GROUP BY 1, 2
-)
+)"""
+_CAND_VERIFY_SQL = f"""{_CAND_INTER_SQL}
 SELECT i.doc_a, i.doc_b,
        CAST(ROUND(inter * 1000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT)
          AS jac_x1000
@@ -385,20 +417,23 @@ WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
+_MINHASH_ORACLE = f"""
+WITH {_MH_BANDS_SQL},
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
+),
+{_CAND_VERIFY_SQL}"""
 
-@query("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash({N_HASHES} hashes) + LSH({BANDS} bands x {ROWS_PER_BAND}) ->
-    candidate pairs -> exact-Jaccard verification. The 100 TB path: cost
-    is O(docs x bands) + per-bucket joins instead of all-pairs; the md5
-    hash family makes buckets bit-reproducible across engines/runs."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs)
-    cand = lsh_candidates(sigs)
-    # Verification: join candidate pairs back to the shingle ARRAYS and
-    # intersect per-row (array_intersect) -- no second explode, no
-    # inverted-index shuffle; the only wide stages are the LSH band join
-    # and these two joins on doc ids.
+
+def _verify_candidates(docs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate pairs ``(doc_a, doc_b)`` at exact shingle Jaccard >=
+    JACCARD_THRESHOLD, as ``(doc_a, doc_b, jac_x1000)`` ordered by pair.
+
+    Joins the pairs back to the shingle ARRAYS and intersects per-row
+    (array_intersect) -- no second explode, no inverted-index shuffle;
+    the only wide stages are the two joins on doc ids."""
     sh = docs.select("doc_id", shingles().alias("sh")).filter(F.size("sh") > 0)
     a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
@@ -427,28 +462,23 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("dedup_minhash_lsh", oracle=_MINHASH_ORACLE)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash({N_HASHES} hashes) + LSH({BANDS} bands x {ROWS_PER_BAND}) ->
+    candidate pairs -> exact-Jaccard verification. The 100 TB path: cost
+    is O(docs x bands) + per-bucket joins instead of all-pairs; the md5
+    hash family makes buckets bit-reproducible across engines/runs."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _verify_candidates(docs, lsh_candidates(minhash_signatures(docs)))
+
+
 # Today's increment: a deterministic 20% slice of the corpus stands in
 # for the daily batch (id-mod, so every engine and SF agrees).
 _INCR_NEW_MOD = 10
 _INCR_NEW_MIN = 8
 
 _INCR_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id, unnest({{shingles}}) AS shingle FROM documents
-),
-hashed AS (
-  SELECT doc_id,
-         ('0x' || substring(md5(shingle), 1, 15))::BIGINT % {MINHASH_PRIME} AS h31
-  FROM sh
-),
-sigs AS (
-  SELECT doc_id,
-         {{mh_cols}}
-  FROM hashed GROUP BY doc_id
-),
-bands AS (
-  {{band_selects}}
-),
+WITH {_MH_BANDS_SQL},
 cand AS (
   SELECT DISTINCT LEAST(a.doc_id, b.doc_id) AS doc_a,
                   GREATEST(a.doc_id, b.doc_id) AS doc_b
@@ -456,25 +486,7 @@ cand AS (
     ON a.band = b.band AND a.key = b.key AND a.doc_id <> b.doc_id
   WHERE b.doc_id % {_INCR_NEW_MOD} >= {_INCR_NEW_MIN}
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND a.shingle = b.shingle
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       CAST(ROUND(inter * 1000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT)
-         AS jac_x1000
-FROM inter i
-JOIN sizes sa ON i.doc_a = sa.doc_id
-JOIN sizes sb ON i.doc_b = sb.doc_id
-WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
-ORDER BY doc_a, doc_b
-""".format(
-    shingles=sql_shingles(), mh_cols=_MH_COLS, band_selects=_BAND_SELECTS
-)
+{_CAND_VERIFY_SQL}"""
 
 
 @query("dedup_minhash_incremental", oracle=_INCR_ORACLE)
@@ -492,33 +504,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % _INCR_NEW_MOD >= _INCR_NEW_MIN
     ).select("doc_id")
     sigs = minhash_signatures(docs)
-    cand = incremental_lsh_candidates(sigs, new_ids)
-    sh = docs.select("doc_id", shingles().alias("sh")).filter(F.size("sh") > 0)
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    paired = (
-        cand.join(a, F.col("doc_a") == F.col("a_id"))
-        .join(b, F.col("doc_b") == F.col("b_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("inter")
-    )
-    return (
-        paired.filter(jac >= JACCARD_THRESHOLD)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac * 1000).cast("long").alias("jac_x1000"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+    return _verify_candidates(docs, incremental_lsh_candidates(sigs, new_ids))
 
 
 # --------------------------------------------------------------- SimHash
@@ -794,30 +780,7 @@ def connected_components(
 
 
 _CLUSTER_ORACLE = f"""
-WITH RECURSIVE sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
-), edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs
-), reach(id, label) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
-)
+WITH RECURSIVE {shingle_overlap_sql()}, {_JACCARD_REACH_SQL}
 SELECT id AS doc_id, MIN(label) AS cluster_id
 FROM reach GROUP BY id ORDER BY doc_id
 """
@@ -848,30 +811,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SURVIVOR_ORACLE = f"""
-WITH RECURSIVE sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
-), edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs
-), reach(id, label) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
-), clusters AS (
+WITH RECURSIVE {shingle_overlap_sql()}, {_JACCARD_REACH_SQL}, clusters AS (
   SELECT id AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY id
 )
 SELECT COUNT(*) AS n_docs,
@@ -914,18 +854,7 @@ def dedup_survivor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_THRESHOLD_X1M = 700_000  # keep pairs where >=70% of A is in B
 
 _CONTAIN_ORACLE = f"""
-WITH sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-  GROUP BY 1, 2
-)
+WITH {shingle_overlap_sql('<>')}
 SELECT doc_a, doc_b,
        CAST(ROUND(inter * 1000000.0 / sa.n_sh) AS BIGINT) AS cont_x1m
 FROM inter JOIN sizes sa ON doc_a = sa.doc_id
@@ -948,21 +877,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inter * 1e6 >= thresh * |A|), so no float boundary can disagree
     between engines.
     """
-    d = load_table(spark, sf_dir, "documents")
-    n = spark.sparkContext.defaultParallelism
-    sh_all = (
-        d.repartition(n)
-        .select("doc_id", F.explode(shingles()).alias("shingle"))
-    )
-    sh_all = materialize(sh_all)
-    hot = (
-        sh_all.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") > NGRAM_DF_CAP)
-        .select("shingle")
-    )
-    sh = sh_all.join(F.broadcast(hot), "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sh, sizes = _shingle_index(spark, sf_dir)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(
@@ -994,18 +909,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- LSH quality self-evaluation
 _LSH_EVAL_ORACLE = f"""
-WITH sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), truth AS (
+WITH {shingle_overlap_sql()}, truth AS (
   SELECT doc_a, doc_b FROM inter
   JOIN sizes sa ON doc_a = sa.doc_id
   JOIN sizes sb ON doc_b = sb.doc_id
@@ -1273,22 +1177,7 @@ _MH_MATCH_SQL = " + ".join(
 )
 
 _MH_EST_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-),
-hashed AS (
-  SELECT doc_id,
-         ('0x' || substring(md5(shingle), 1, 15))::BIGINT % {MINHASH_PRIME} AS h31
-  FROM sh
-),
-sigs AS (
-  SELECT doc_id,
-         {_MH_COLS}
-  FROM hashed GROUP BY doc_id
-),
-bands AS (
-  {_BAND_SELECTS}
-),
+WITH {_MH_BANDS_SQL},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
@@ -1301,14 +1190,7 @@ est AS (
   JOIN sigs sa ON sa.doc_id = c.doc_a
   JOIN sigs sb ON sb.doc_id = c.doc_b
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND a.shingle = b.shingle
-  GROUP BY 1, 2
-)
+{_CAND_INTER_SQL}
 SELECT e.doc_a, e.doc_b, e.n_sig_match,
        CAST(1000 * e.n_sig_match // {N_HASHES} AS BIGINT) AS est_x1000,
        CAST(ROUND(COALESCE(i.inter, 0) * 1000.0
@@ -1525,30 +1407,7 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------- keep-best canonical selection
 
 _KEEP_LONGEST_ORACLE = f"""
-WITH RECURSIVE sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {JACCARD_THRESHOLD}
-), edges AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs
-), reach(id, label) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
-), clusters AS (
+WITH RECURSIVE {shingle_overlap_sql()}, {_JACCARD_REACH_SQL}, clusters AS (
   SELECT id AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY id
 ), scored AS (
   SELECT c.cluster_id, c.doc_id, d.n_chars

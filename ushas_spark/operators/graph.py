@@ -68,13 +68,24 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank(
-    spark: SparkSession, sf_dir: str, iters: int = ITERS, damping: float = DAMPING
+    spark: SparkSession,
+    sf_dir: str,
+    iters: int = ITERS,
+    damping: float = DAMPING,
+    seed_cap: int | None = None,
 ) -> DataFrame:
-    """Ranks after ``iters`` synchronous rounds from the uniform start.
+    """Ranks after ``iters`` synchronous rounds from the teleport start.
+
+    ``seed_cap=None`` is global PageRank: every node is a teleport
+    target with mass 1/|V|. An int makes it PERSONALIZED: the teleport
+    set is the nodes below ``seed_cap`` (mass 1/|S| on each, 0
+    elsewhere). Every aggregated node is a dst of the symmetric edge
+    list, so ``node < seed_cap`` is exactly membership in the seed set
+    -- a WHEN predicate, not a join.
 
     Size-gated regimes like graph_hits_hub_authority
-    (OPTIMIZATION_r12.md item 2; regimes bit-identical, twin pinned in
-    tests/test_graph_hits_regimes.py):
+    (OPTIMIZATION_r12.md item 2; regimes bit-identical, twins pinned in
+    tests/test_graph_hits_regimes.py and tests/test_r13_regimes.py):
 
     - broadcast regime (|V_cust| <= durability.BROADCAST_MAX_ROWS):
       edges pinned on DST (the contribution groupBy key) and the |V|-row
@@ -82,6 +93,8 @@ def pagerank(
       exchanges -- the 3-round plan nests the broadcasts inside one
       job. WON both interleaved isolated sf0.1 pairings: 4.45/4.66 s vs
       shipped 5.78/5.35 s best-of-3, hash-identical at sf0.01/sf0.1.
+      The personalized form won all four of its pairings (OPTIMIZATION_r13.md
+      item 2: 4.36/4.26/3.54/3.72 vs 5.21/4.87/4.69/4.80 s).
     - merge regime (the 100 TB shape): edges pinned on SRC; the degree
       join + ranks join stream the |E| side exchange- and sort-free and
       each round exchanges only the |V|-row ranks side.
@@ -90,13 +103,10 @@ def pagerank(
       while InMemoryRelation preserves it -- rounds x |E| network
       becomes |E| + rounds x |V|, the in-session analogue of the
       bucketed-by-src edge table a 100 TB deployment would write.
-
-    The SAME transfer measured NEGATIVE for graph_personalized_pagerank
-    (lost both pairings: 6.09/5.84 vs 5.55/5.30) -- its per-round
-    rescale carries a seed left-join + crossJoin, and nesting those
-    extra stages inside each round's broadcast child costs more than
-    the two |V|-bounded exchanges it saves. Kept on the merge shape;
-    negative recorded here so the probe isn't re-run blind."""
+      The personalized form tests the seed predicate here too, where
+      it once ran a seed left join; that predicate-on-merge shape
+      split its two r13 pairings (won 4.43 vs 5.21 s, lost 5.21 vs
+      4.87 s), so no wall change is claimed past the gate."""
     edges = _edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     small_v = broadcast_fits(load_table(spark, sf_dir, "customer"))
@@ -109,9 +119,21 @@ def pagerank(
     nodes = ewd.groupBy("src").agg(F.first("deg")).select(
         F.col("src").alias("node")
     )
-    n_nodes = materialize(nodes.agg(F.count(F.lit(1)).alias("n")))
-    ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
-        "node", (F.lit(1.0) / F.col("n").cast("double")).alias("rank"), "n"
+    # The teleport set's size: |V| as "n", or |S| as "ns" when seeded.
+    if seed_cap is None:
+        members, size = nodes, "n"
+    else:
+        members, size = nodes.filter(F.col("node") < seed_cap), "ns"
+    n_tele = materialize(members.agg(F.count(F.lit(1)).alias(size)))
+
+    def teleport(mass: float):
+        share = F.lit(mass) / F.col(size).cast("double")
+        if seed_cap is None:
+            return share
+        return F.when(F.col("node") < seed_cap, share).otherwise(0.0)
+
+    ranks = nodes.crossJoin(F.broadcast(n_tele)).select(
+        "node", teleport(1.0).alias("rank"), size
     )
     for _ in range(iters):
         r = ranks.hint("broadcast") if small_v else ranks
@@ -122,40 +144,55 @@ def pagerank(
             .alias("c"),
         )
         summed = contrib.groupBy("node").agg(F.sum("c").alias("sc"))
-        ranks = summed.crossJoin(F.broadcast(n_nodes)).select(
+        ranks = summed.crossJoin(F.broadcast(n_tele)).select(
             "node",
             (
-                F.lit(1.0 - damping) / F.col("n").cast("double")
+                teleport(1.0 - damping)
                 + F.lit(damping)
                 * (F.col("sc").cast("double") / F.lit(float(RANK_SCALE)))
             ).alias("rank"),
-            "n",
+            size,
         )
     return ranks.select(
         "node", F.round(F.col("rank") * RANK_SCALE).cast("long").alias("rank_x1e9")
     )
 
 
+# The trade graph as oracle CTEs: the distinct (customer, supplier) pairs
+# and the symmetric edge list over them.
+_TRADE_EDGES_SQL = (
+    "pairs AS (SELECT DISTINCT o_custkey AS cust,"
+    "                 l_suppkey + 1000000000 AS supp"
+    "          FROM orders JOIN lineitem ON o_orderkey = l_orderkey)",
+    "edges AS (SELECT cust AS src, supp AS dst FROM pairs"
+    "          UNION ALL SELECT supp, cust FROM pairs)",
+)
+_TRADE_DEG_SQL = (
+    "deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg"
+    "        FROM edges GROUP BY src)"
+)
+
+
+def _rank_sum_sql(i: int) -> str:
+    """Round ``i``'s scaled-integer contribution sums ``s{i}`` over ``r{i}``."""
+    return (
+        f"s{i} AS (SELECT e.dst AS node,"
+        f"  SUM(CAST(ROUND((r.rank / CAST(d.deg AS DOUBLE)) * {RANK_SCALE})"
+        f"      AS BIGINT)) AS sc"
+        f"  FROM r{i} r JOIN deg d ON r.node = d.src"
+        f"  JOIN edges e ON e.src = r.node GROUP BY e.dst)"
+    )
+
+
 def _pagerank_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
     parts = [
-        "pairs AS (SELECT DISTINCT o_custkey AS cust,"
-        "                 l_suppkey + 1000000000 AS supp"
-        "          FROM orders JOIN lineitem ON o_orderkey = l_orderkey)",
-        "edges AS (SELECT cust AS src, supp AS dst FROM pairs"
-        "          UNION ALL SELECT supp, cust FROM pairs)",
-        "deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg"
-        "        FROM edges GROUP BY src)",
+        *_TRADE_EDGES_SQL,
+        _TRADE_DEG_SQL,
         "nv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg)",
         "r0 AS (SELECT src AS node, 1.0 / n AS rank FROM deg, nv)",
     ]
     for i in range(iters):
-        parts.append(
-            f"s{i} AS (SELECT e.dst AS node,"
-            f"  SUM(CAST(ROUND((r.rank / CAST(d.deg AS DOUBLE)) * {RANK_SCALE})"
-            f"      AS BIGINT)) AS sc"
-            f"  FROM r{i} r JOIN deg d ON r.node = d.src"
-            f"  JOIN edges e ON e.src = r.node GROUP BY e.dst)"
-        )
+        parts.append(_rank_sum_sql(i))
         parts.append(
             f"r{i + 1} AS (SELECT node,"
             f"  {1.0 - damping} / n + {damping} *"
@@ -310,11 +347,7 @@ def _random_walks_merge(
 
 def _walk_oracle(length: int = WALK_LEN) -> str:
     parts = [
-        "pairs AS (SELECT DISTINCT o_custkey AS cust,"
-        "                 l_suppkey + 1000000000 AS supp"
-        "          FROM orders JOIN lineitem ON o_orderkey = l_orderkey)",
-        "edges AS (SELECT cust AS src, supp AS dst FROM pairs"
-        "          UNION ALL SELECT supp, cust FROM pairs)",
+        *_TRADE_EDGES_SQL,
         f"w0 AS (SELECT DISTINCT src AS n0 FROM edges"
         f"       WHERE src < 1000000000 AND src % {START_MOD} = 0)",
     ]
@@ -345,17 +378,40 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------ triangle counting (co-purchase)
-_TRIANGLE_ORACLE = """
-WITH pl AS (
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct undirected edges (u < v) of the part co-purchase graph:
+    parts are adjacent when some order contains both."""
+    pl = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .distinct()
+    )
+    a, b = pl.alias("a"), pl.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
+        )
+        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+        .distinct()
+    )
+
+
+# The same edge list as oracle CTEs ``pl`` and ``edges``.
+_COPURCHASE_EDGES_SQL = """pl AS (
   SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
 ), edges AS (
   SELECT DISTINCT a.pk AS u, b.pk AS v
   FROM pl a JOIN pl b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
+)"""
+_DEGREES_SQL = """deg AS (
   SELECT node, CAST(COUNT(*) AS BIGINT) AS d
   FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
   GROUP BY node
-), oriented AS (
+)"""
+
+_TRIANGLE_ORACLE = f"""
+WITH {_COPURCHASE_EDGES_SQL}, {_DEGREES_SQL}, oriented AS (
   SELECT CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.u ELSE e.v END AS s,
          CASE WHEN (du.d, e.u) < (dv.d, e.v) THEN e.v ELSE e.u END AS t
   FROM edges e
@@ -394,21 +450,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wedge totals come from the degree table alone; d*(d-1)/2 is exact
     integer arithmetic on both engines.
     """
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a, b = pl.alias("a"), pl.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
-        )
-        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct()
-    )
-    return triangle_summary(edges)
+    return triangle_summary(_copurchase_edges(spark, sf_dir))
 
 
 def triangle_summary(edges: DataFrame) -> DataFrame:
@@ -581,21 +623,7 @@ def graph_kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop count is a compile-time constant, so there is not even a
     per-round count() probe.
     """
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a, b = pl.alias("a"), pl.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
-        )
-        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct()
-    )
-    return kcore_summary(edges)
+    return kcore_summary(_copurchase_edges(spark, sf_dir))
 
 
 def kcore_summary(
@@ -682,17 +710,8 @@ def kcore_summary(
 
 
 # ----------------------------------------------- degree distribution
-_DEGREE_HIST_ORACLE = """
-WITH pl AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), edges AS (
-  SELECT DISTINCT a.pk AS u, b.pk AS v
-  FROM pl a JOIN pl b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
-  GROUP BY node
-), bucketed AS (
+_DEGREE_HIST_ORACLE = f"""
+WITH {_COPURCHASE_EDGES_SQL}, {_DEGREES_SQL}, bucketed AS (
   SELECT CASE
            WHEN d < 2 THEN 0 WHEN d < 4 THEN 1 WHEN d < 8 THEN 2
            WHEN d < 16 THEN 3 WHEN d < 32 THEN 4 WHEN d < 64 THEN 5
@@ -721,20 +740,7 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit CASE ladder (integer compares, no log()), so both
     engines bin identically; output is ~10 rows from one degree
     aggregate."""
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a, b = pl.alias("a"), pl.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
-        )
-        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct()
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -767,12 +773,7 @@ LP_DEG_CAP = 64  # wedge centers above this degree are skipped (hubs)
 LP_TOP = 20
 
 _LINKPRED_ORACLE = f"""
-WITH pl AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), edges AS (
-  SELECT DISTINCT a.pk AS u, b.pk AS v
-  FROM pl a JOIN pl b ON a.ok = b.ok AND a.pk < b.pk
-), adj AS (
+WITH {_COPURCHASE_EDGES_SQL}, adj AS (
   SELECT u AS w, v AS n FROM edges UNION ALL SELECT v, u FROM edges
 ), deg AS (
   SELECT w AS node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY w
@@ -828,20 +829,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB). One groupBy on the (a, b) pair key, one anti join against
     the edge list, TakeOrdered for the top slice.
     """
-    pl = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
-    a, b = pl.alias("a"), pl.alias("b")
-    edges = materialize(
-        a.join(
-            b,
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
-        )
-        .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct()
-    )
+    edges = materialize(_copurchase_edges(spark, sf_dir))
     adj = edges.select(F.col("u").alias("w"), F.col("v").alias("n")).unionAll(
         edges.select(F.col("v").alias("w"), F.col("u").alias("n"))
     )
@@ -924,13 +912,8 @@ PPR_SEED_CAP = 10  # seed set: customers with key < 10
 
 def _ppr_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
     parts = [
-        "pairs AS (SELECT DISTINCT o_custkey AS cust,"
-        "                 l_suppkey + 1000000000 AS supp"
-        "          FROM orders JOIN lineitem ON o_orderkey = l_orderkey)",
-        "edges AS (SELECT cust AS src, supp AS dst FROM pairs"
-        "          UNION ALL SELECT supp, cust FROM pairs)",
-        "deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg"
-        "        FROM edges GROUP BY src)",
+        *_TRADE_EDGES_SQL,
+        _TRADE_DEG_SQL,
         f"seeds AS (SELECT src AS node FROM deg"
         f"          WHERE src < {PPR_SEED_CAP})",
         "ns AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM seeds)",
@@ -939,13 +922,7 @@ def _ppr_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
         "  FROM deg d LEFT JOIN seeds s ON d.src = s.node CROSS JOIN ns)",
     ]
     for i in range(iters):
-        parts.append(
-            f"s{i} AS (SELECT e.dst AS node,"
-            f"  SUM(CAST(ROUND((r.rank / CAST(d.deg AS DOUBLE)) * {RANK_SCALE})"
-            f"      AS BIGINT)) AS sc"
-            f"  FROM r{i} r JOIN deg d ON r.node = d.src"
-            f"  JOIN edges e ON e.src = r.node GROUP BY e.dst)"
-        )
+        parts.append(_rank_sum_sql(i))
         parts.append(
             f"r{i + 1} AS (SELECT t.node,"
             f"  CASE WHEN sd.node IS NOT NULL THEN {1.0 - damping} / ns.n"
@@ -977,162 +954,21 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     first {PPR_SEED_CAP} customers) instead of everywhere, so rank
     measures proximity TO THOSE SEEDS -- the
     recommendations-for-this-user / fraud-neighborhood primitive,
-    versus global importance (graph_pagerank_top). Same synchronous
-    exact-integer rounds; only the teleport term changes (mass
-    (1-d)/|S| on seeds, 0 elsewhere), and the oracle replays every
-    round with the same seed-aware algebra.
+    versus global importance (graph_pagerank_top). It is
+    :func:`pagerank` with ``seed_cap=PPR_SEED_CAP``: the same
+    synchronous exact-integer rounds and the same size-gated regimes;
+    only the teleport term changes (mass (1-d)/|S| on seeds, 0
+    elsewhere). The oracle replays every round with the seed set as a
+    left join; the Spark side tests ``node < PPR_SEED_CAP``, which is
+    row-identical because every aggregated node is in V.
 
-    Scale shape: identical per-round cost to global PageRank (one
-    ranks ⋈ pre-partitioned-edges join + one groupBy); the seed set
-    is a broadcast membership join. Zero-rank nodes (unreached within
-    the walk horizon) are filtered before the top slice.
-
-    Size-gated regimes (OPTIMIZATION_r13.md item 2; regimes
-    bit-identical, twin pinned in tests/test_r13_regimes.py).
-    The r12 broadcast transfer lost BECAUSE the per-round seed
-    left-join + crossJoin rescale nested inside each round's broadcast
-    child; the r13 fix removes the join at its root: seeds is defined
-    as exactly the V-nodes below PPR_SEED_CAP and every aggregated
-    node is in V (dst of the symmetric edge list), so the oracle's
-    ``sd.node IS NOT NULL`` ⟺ ``node < PPR_SEED_CAP`` -- a WHEN
-    predicate, provably row-identical. With the join gone, the
-    broadcast regime (edges pinned on DST = the groupBy key, ranks
-    explicitly broadcast per round, same gate constant as global
-    PageRank) WON all four interleaved isolated sf0.1 pairings
-    (4.36/4.26/3.54/3.72 vs 5.21/4.87/4.69/4.80 s best-of-3),
-    hash-identical at sf0.001/0.01/0.1. The verdict's literal
-    materialize-hoist arm (join kept, round aggregate checkpointed
-    before the rescale) measured consistently BEHIND the predicate
-    shape (3.77 vs 3.02 s at sf0.01) and is recorded in the probe.
-    The predicate-on-merge-shape arm split its pairings (won 4.43 vs
-    5.21, lost 5.21 vs 4.87), so past the gate the r04-r12
-    driver-green join-based merge formulation stays byte-unchanged."""
-    if broadcast_fits(load_table(spark, sf_dir, "customer")):
-        return _ppr_broadcast_pred(spark, sf_dir)
-    return _ppr_merge(spark, sf_dir)
-
-
-def _ppr_broadcast_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-V regime: seed WHEN-predicate + dst-pinned edges + explicit
-    per-round ranks broadcast (zero planned exchanges per round)."""
-    edges = _edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ewd = pin_partitioned(edges.join(deg, "src"), "dst")
-    nodes = ewd.groupBy("src").agg(F.first("deg")).select(
-        F.col("src").alias("node")
-    )
-    n_seeds = materialize(
-        nodes.filter(F.col("node") < PPR_SEED_CAP).agg(
-            F.count(F.lit(1)).alias("ns")
-        )
-    )
-    is_seed = F.col("node") < PPR_SEED_CAP
-    ranks = nodes.crossJoin(F.broadcast(n_seeds)).select(
-        "node",
-        F.when(is_seed, F.lit(1.0) / F.col("ns").cast("double"))
-        .otherwise(0.0)
-        .alias("rank"),
-        "ns",
-    )
-    for _ in range(ITERS):
-        r = ranks.hint("broadcast")
-        contrib = r.join(ewd, r.node == ewd.src).select(
-            F.col("dst").alias("node"),
-            F.round((F.col("rank") / F.col("deg").cast("double")) * RANK_SCALE)
-            .cast("long")
-            .alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("sc"))
-        ranks = summed.crossJoin(F.broadcast(n_seeds)).select(
-            "node",
-            (
-                F.when(
-                    is_seed, F.lit(1.0 - DAMPING) / F.col("ns").cast("double")
-                ).otherwise(0.0)
-                + F.lit(DAMPING)
-                * (F.col("sc").cast("double") / F.lit(float(RANK_SCALE)))
-            ).alias("rank"),
-            "ns",
-        )
+    Zero-rank nodes (unreached within the walk horizon) are filtered
+    before the top slice."""
+    pr = pagerank(spark, sf_dir, seed_cap=PPR_SEED_CAP)
     return (
-        ranks.select(
+        pr.select(
             "node",
-            F.round(F.col("rank") * RANK_SCALE).cast("long").alias(
-                "rank_x1e9"
-            ),
-            F.when(F.col("node") >= 1_000_000_000, "supplier")
-            .otherwise("customer")
-            .alias("node_type"),
-        )
-        .filter(F.col("rank_x1e9") > 0)
-        .orderBy(F.col("rank_x1e9").desc(), "node")
-        .limit(TOP_N)
-    )
-
-
-def _ppr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Big-V regime: the r04-r12 driver-green formulation,
-    byte-unchanged (seed membership as a broadcast left join, edges
-    pinned on SRC, unhinted per-round join)."""
-    edges = _edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # Pinned (not checkpointed) edge table: InMemoryRelation preserves
-    # the src partitioning+ordering, so each round's contribution join
-    # exchanges only the |V|-row ranks side (see pagerank()).
-    ewd = pin_partitioned(edges.join(deg, "src"), "src")
-    nodes = ewd.groupBy("src").agg(F.first("deg")).select(
-        F.col("src").alias("node")
-    )
-    seeds = nodes.filter(F.col("node") < PPR_SEED_CAP).select(
-        F.col("node").alias("seed")
-    )
-    n_seeds = materialize(seeds.agg(F.count(F.lit(1)).alias("ns")))
-    is_seed = F.col("seed").isNotNull()
-    ranks = (
-        nodes.join(F.broadcast(seeds), nodes.node == seeds.seed, "left")
-        .crossJoin(F.broadcast(n_seeds))
-        .select(
-            "node",
-            F.when(is_seed, F.lit(1.0) / F.col("ns").cast("double"))
-            .otherwise(0.0)
-            .alias("rank"),
-            "ns",
-        )
-    )
-    for _ in range(ITERS):
-        contrib = ranks.join(ewd, ranks.node == ewd.src).select(
-            F.col("dst").alias("node"),
-            F.round(
-                (F.col("rank") / F.col("deg").cast("double")) * RANK_SCALE
-            )
-            .cast("long")
-            .alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(F.sum("c").alias("sc"))
-        ranks = (
-            summed.join(
-                F.broadcast(seeds), summed.node == seeds.seed, "left"
-            )
-            .crossJoin(F.broadcast(n_seeds))
-            .select(
-                "node",
-                (
-                    F.when(
-                        is_seed,
-                        F.lit(1.0 - DAMPING) / F.col("ns").cast("double"),
-                    ).otherwise(0.0)
-                    + F.lit(DAMPING)
-                    * (F.col("sc").cast("double") / F.lit(float(RANK_SCALE)))
-                ).alias("rank"),
-                "ns",
-            )
-        )
-    return (
-        ranks.select(
-            "node",
-            F.round(F.col("rank") * RANK_SCALE).cast("long").alias(
-                "rank_x1e9"
-            ),
+            "rank_x1e9",
             F.when(F.col("node") >= 1_000_000_000, "supplier")
             .otherwise("customer")
             .alias("node_type"),

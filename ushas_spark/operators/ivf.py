@@ -24,6 +24,7 @@ from ushas_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
     _dvec,
+    _ranked_topk_sql,
     cosine,
     sql_cosine,
 )
@@ -95,16 +96,7 @@ scored AS (
          CAST(ROUND({sql_cosine("q.qe", "a.e")} * 1000000) AS BIGINT) AS sim_x1m
   FROM qprobe q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.qid
 ),
-ranked AS (
-  SELECT qid, cand_id, sim_x1m,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY sim_x1m DESC, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, sim_x1m, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
 def ivf_topk(
@@ -196,16 +188,7 @@ scored AS (
   JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.qid
   JOIN recon r ON r.vec_id = a.vec_id
 ),
-ranked AS (
-  SELECT qid, cand_id, adc_dist,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY adc_dist, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, adc_dist, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("adc_dist", "adc_dist")}"""
 
 
 @query("sim_ivfpq_topk", oracle=_ivfpq_oracle())
@@ -221,12 +204,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ushas_spark.operators.similarity import (
-        PQ_K,
-        PQ_M,
-        PQ_STRIDE,
-        PQ_SUB,
-        _pq_recon_expr,
         _pq_sqdist_int,
+        pq_reconstruct,
         quantize_sq8,
     )
 
@@ -238,17 +217,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroids(emb)
     assigned = _assign(emb, cents, 1, "vec_id").select("vec_id", "cid")
     # PQ reconstruction of every corpus vector (broadcast codebook).
-    ids = [k * PQ_STRIDE for k in range(PQ_K)]
-    cwsrc = emb.filter(F.col("vec_id").isin(ids)).select(
-        (F.col("vec_id") / PQ_STRIDE).cast("int").alias("k"), "qe"
-    )
-    cw = cwsrc.select(
-        "k", F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"), "qe"
-    ).selectExpr("m", "k", f"slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}) AS sub")
-    cb = cw.agg(F.collect_list(F.struct("m", "k", "sub")).alias("cs"))
-    recon = emb.crossJoin(F.broadcast(cb)).selectExpr(
-        "vec_id", f"{_pq_recon_expr('qe', 'cs', 'spark')} AS re"
-    )
+    recon = pq_reconstruct(emb)
     queries = _assign(
         emb.filter(F.col("vec_id") < N_QUERIES), cents, NPROBE, "vec_id"
     ).join(

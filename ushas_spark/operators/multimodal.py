@@ -36,9 +36,6 @@ from pyspark.sql import functions as F
 from ushas_spark.io import load_table
 from ushas_spark.registry import query
 
-META_SCHEMA = "mime string, width int, height int, sample_rate int"
-ASSET_SCHEMA = f"asset_id bigint, payload binary, meta struct<{META_SCHEMA.replace(', ', ',').replace(' ', ':')}>"
-
 
 def documents_as_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Demo asset table: document text bytes as payloads with fake image
@@ -198,14 +195,39 @@ def _wav_sample(asset_id: int, i: int) -> int:
     return (asset_id * 31 + i * 7) % 2001 - 1000
 
 
-def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real mono 16-bit PCM WAV payloads, one per document id. Runs as
-    Arrow-batched mapInPandas: each executor writes WAV containers
-    locally; only (id, payload) crosses the Arrow boundary."""
+def _write_wav(rate: int, samples) -> bytes:
+    """A mono 16-bit PCM WAV file of ``samples`` at ``rate`` Hz."""
     import io
     import struct
     import wave
 
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
+
+
+def _read_wav(payload: bytes) -> tuple[int, int, int, tuple[int, ...]]:
+    """Decode a 16-bit PCM WAV file: (frame rate, channels, frame count,
+    interleaved samples)."""
+    import io
+    import struct
+    import wave
+
+    with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
+        rate = w.getframerate()
+        nch = w.getnchannels()
+        n = w.getnframes()
+        return rate, nch, n, struct.unpack(f"<{n * nch}h", w.readframes(n))
+
+
+def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real mono 16-bit PCM WAV payloads, one per document id. Runs as
+    Arrow-batched mapInPandas: each executor writes WAV containers
+    locally; only (id, payload) crosses the Arrow boundary."""
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _WAV_N_ASSETS
     ).select(F.col("doc_id").alias("asset_id"))
@@ -216,14 +238,9 @@ def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
             for aid in pdf["asset_id"]:
                 aid = int(aid)
                 rate, n = _wav_params(aid)
-                samples = [_wav_sample(aid, i) for i in range(n)]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(struct.pack(f"<{n}h", *samples))
-                payloads.append(buf.getvalue())
+                payloads.append(
+                    _write_wav(rate, [_wav_sample(aid, i) for i in range(n)])
+                )
             yield pd.DataFrame(
                 {"asset_id": pdf["asset_id"], "payload": payloads}
             )
@@ -236,10 +253,6 @@ def decode_wav_stats(assets: DataFrame) -> DataFrame:
     header for rate/channels/frame count, unpacks the PCM block, and
     computes sample statistics. Same mapInPandas contract as the stubbed
     image path -- this is the production shape with an actual codec."""
-    import io
-    import struct
-    import wave
-
     out_schema = (
         "asset_id bigint, sample_rate bigint, n_channels bigint, "
         "n_frames bigint, duration_us bigint, peak bigint, sample_sum bigint"
@@ -249,11 +262,7 @@ def decode_wav_stats(assets: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    rate = w.getframerate()
-                    nch = w.getnchannels()
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n * nch}h", w.readframes(n))
+                rate, nch, n, samples = _read_wav(payload)
                 rows.append(
                     {
                         "asset_id": aid,
@@ -686,10 +695,6 @@ def multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_FRAME_N}-sample frames, per-frame absolute-amplitude sum -- the
     1->N row expansion of a feature-extraction pass (VAD, loudness),
     with the oracle regenerating every frame arithmetically."""
-    import io
-    import struct
-    import wave
-
     assets = synthesize_wav_assets(spark, sf_dir)
     out_schema = "asset_id bigint, frame_idx bigint, abs_sum bigint"
 
@@ -697,9 +702,7 @@ def multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n}h", w.readframes(n))
+                _, _, n, samples = _read_wav(payload)
                 for fi in range(0, (n + _FRAME_N - 1) // _FRAME_N):
                     frame = samples[fi * _FRAME_N : (fi + 1) * _FRAME_N]
                     rows.append(
@@ -748,10 +751,6 @@ def multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a float approximation. Same Arrow-batched mapInPandas decode
     boundary as the other codec ops (per-asset work is inherently
     Python here; everything before/after stays JVM)."""
-    import io
-    import struct
-    import wave
-
     assets = synthesize_wav_assets(spark, sf_dir)
     out_schema = "asset_id bigint, n_samples bigint, zero_crossings bigint, energy bigint"
 
@@ -759,9 +758,7 @@ def multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n}h", w.readframes(n))
+                _, _, n, samples = _read_wav(payload)
                 zcr = sum(
                     1
                     for i in range(1, n)
@@ -869,10 +866,6 @@ def multimodal_wav_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers decode -> transform -> encode -> decode round-trip. Swap the
     decimation for a polyphase filter in production without touching
     the Spark plumbing."""
-    import io
-    import struct
-    import wave
-
     assets = synthesize_wav_assets(spark, sf_dir)
     out_schema = (
         "asset_id bigint, rate_out bigint, n_frames_out bigint, "
@@ -883,23 +876,9 @@ def multimodal_wav_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    rate = w.getframerate()
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n}h", w.readframes(n))
-                dec = samples[::2]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wout:
-                    wout.setnchannels(1)
-                    wout.setsampwidth(2)
-                    wout.setframerate(rate // 2)
-                    wout.writeframes(
-                        struct.pack(f"<{len(dec)}h", *dec)
-                    )
-                with wave.open(io.BytesIO(buf.getvalue()), "rb") as win:
-                    n2 = win.getnframes()
-                    rate2 = win.getframerate()
-                    out = struct.unpack(f"<{n2}h", win.readframes(n2))
+                rate, _, _, samples = _read_wav(payload)
+                out_wav = _write_wav(rate // 2, samples[::2])
+                rate2, _, n2, out = _read_wav(out_wav)
                 rows.append(
                     {
                         "asset_id": aid,
@@ -918,8 +897,10 @@ def multimodal_wav_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assets.mapInPandas(op, schema=out_schema).orderBy("asset_id")
 
 
-_AHASH_ORACLE = f"""
-WITH p AS (
+# The aHash replay as oracle CTEs: ``p`` .. ``bits`` decode and threshold
+# the 8x8 luminance grid; ``ah`` packs it and ``bands`` splits it into the
+# four 16-bit band keys.
+_AHASH_BITS_SQL = f"""p AS (
   SELECT doc_id AS asset_id,
          8 + doc_id % 9 AS w,
          8 + doc_id % 7 AS h
@@ -942,7 +923,53 @@ WITH p AS (
   SELECT l.asset_id, l.gx, l.gy,
          CASE WHEN 64 * l.l > t.s THEN 1 ELSE 0 END AS bit
   FROM lum l JOIN tot t ON l.asset_id = t.asset_id
+)"""
+_AHASH_BANDS_SQL = """ah AS (
+  SELECT asset_id,
+         CAST(SUM(CASE WHEN gy < 4 THEN bit * (1 << (gy * 8 + gx))
+                       ELSE 0 END) AS BIGINT) AS ahash_lo,
+         CAST(SUM(CASE WHEN gy >= 4 THEN bit * (1 << ((gy - 4) * 8 + gx))
+                       ELSE 0 END) AS BIGINT) AS ahash_hi
+  FROM bits GROUP BY asset_id
+), bands AS (
+  SELECT asset_id, ahash_lo, ahash_hi, band,
+         CASE band WHEN 0 THEN ahash_lo & 65535
+                   WHEN 1 THEN (ahash_lo >> 16) & 65535
+                   WHEN 2 THEN ahash_hi & 65535
+                   ELSE (ahash_hi >> 16) & 65535 END AS key
+  FROM ah, (VALUES (0), (1), (2), (3)) b(band)
+)"""
+
+
+def _components_summary_sql(a: str, b: str, nodes: str) -> str:
+    """Oracle tail shared by the cluster queries: connected components
+    of the ``pairs`` CTE's (``a``, ``b``) edges over the ``asset_id`` of
+    ``nodes`` by recursive reachability, then the curation summary."""
+    return f"""edges AS (
+  SELECT {a} AS s, {b} AS d FROM pairs UNION ALL SELECT {b}, {a} FROM pairs
+), reach(id, label) AS (
+  SELECT asset_id, asset_id FROM {nodes}
+  UNION
+  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
+), comp AS (
+  SELECT id, MIN(label) AS cluster_id FROM reach GROUP BY id
+), sizes AS (
+  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
+  FROM comp GROUP BY cluster_id
 )
+SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
+       CAST(SUM(CASE WHEN n_members > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_dup_clusters,
+       CAST(SUM(CASE WHEN n_members > 1 THEN n_members ELSE 0 END)
+            AS BIGINT) AS n_dup_assets,
+       CAST(MAX(n_members) AS BIGINT) AS largest_cluster,
+       CAST(SUM(n_members) - COUNT(*) AS BIGINT) AS n_removable
+FROM sizes
+"""
+
+
+_AHASH_ORACLE = f"""
+WITH {_AHASH_BITS_SQL}
 SELECT asset_id,
        CAST(SUM(CASE WHEN gy < 4 THEN bit * (1 << (gy * 8 + gx))
                      ELSE 0 END) AS BIGINT) AS ahash_lo,
@@ -1018,44 +1045,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AHASH_MAX_D = 3  # 4 x 16-bit bands pigeonhole-guarantee radius <= 3
 
 _AHASH_NEAR_DUP_ORACLE = f"""
-WITH p AS (
-  SELECT doc_id AS asset_id,
-         8 + doc_id % 9 AS w,
-         8 + doc_id % 7 AS h
-  FROM documents WHERE doc_id < {_PNG_N_ASSETS}
-), grid AS (
-  SELECT asset_id, w, h, gx.gx AS gx, gy.gy AS gy,
-         (gx.gx * w) // 8 AS sx, (gy.gy * h) // 8 AS sy
-  FROM p,
-       LATERAL (SELECT unnest(generate_series(0, 7)) AS gx) gx,
-       LATERAL (SELECT unnest(generate_series(0, 7)) AS gy) gy
-), lum AS (
-  SELECT asset_id, gx, gy,
-         (asset_id * 7 + sx * 3 + sy * 5) % 256
-         + (asset_id * 11 + sx * 2 + sy * 13) % 256
-         + (asset_id * 3 + sx * 17 + sy) % 256 AS l
-  FROM grid
-), tot AS (
-  SELECT asset_id, CAST(SUM(l) AS BIGINT) AS s FROM lum GROUP BY asset_id
-), bits AS (
-  SELECT l.asset_id, l.gx, l.gy,
-         CASE WHEN 64 * l.l > t.s THEN 1 ELSE 0 END AS bit
-  FROM lum l JOIN tot t ON l.asset_id = t.asset_id
-), ah AS (
-  SELECT asset_id,
-         CAST(SUM(CASE WHEN gy < 4 THEN bit * (1 << (gy * 8 + gx))
-                       ELSE 0 END) AS BIGINT) AS ahash_lo,
-         CAST(SUM(CASE WHEN gy >= 4 THEN bit * (1 << ((gy - 4) * 8 + gx))
-                       ELSE 0 END) AS BIGINT) AS ahash_hi
-  FROM bits GROUP BY asset_id
-), bands AS (
-  SELECT asset_id, ahash_lo, ahash_hi, band,
-         CASE band WHEN 0 THEN ahash_lo & 65535
-                   WHEN 1 THEN (ahash_lo >> 16) & 65535
-                   WHEN 2 THEN ahash_hi & 65535
-                   ELSE (ahash_hi >> 16) & 65535 END AS key
-  FROM ah, (VALUES (0), (1), (2), (3)) b(band)
-), cand AS (
+WITH {_AHASH_BITS_SQL}, {_AHASH_BANDS_SQL}, cand AS (
   SELECT DISTINCT a.asset_id AS asset_a, bb.asset_id AS asset_b,
          a.ahash_lo AS lo_a, a.ahash_hi AS hi_a,
          bb.ahash_lo AS lo_b, bb.ahash_hi AS hi_b
@@ -1157,8 +1147,9 @@ def multimodal_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AFP_WINDOWS = 32  # energy windows -> 32-bit signature
 _AFP_MAX_D = 3     # 4 x 8-bit bands: pigeonhole-complete for Hamming <= 3
 
-_AFP_ORACLE = f"""
-WITH a AS (
+# The fingerprint replay as oracle CTEs: synthesis ``a``/``s``, windowed
+# energies, the 32-bit signature ``sig`` and its four 8-bit ``bands``.
+_AFP_BANDS_SQL = f"""a AS (
   SELECT doc_id AS asset_id, 64 + doc_id % 64 AS n
   FROM documents WHERE doc_id < {_WAV_N_ASSETS}
 ), s AS (
@@ -1182,7 +1173,10 @@ WITH a AS (
 ), bands AS (
   SELECT asset_id, fp, band, (fp >> (8 * band)) & 255 AS key
   FROM sig, (VALUES (0), (1), (2), (3)) b(band)
-), cand AS (
+)"""
+
+_AFP_ORACLE = f"""
+WITH {_AFP_BANDS_SQL}, cand AS (
   SELECT DISTINCT a.asset_id AS asset_a, bb.asset_id AS asset_b,
          a.fp AS fp_a, bb.fp AS fp_b
   FROM bands a JOIN bands bb
@@ -1202,27 +1196,17 @@ ORDER BY hamming
 """
 
 
-@query("multimodal_audio_fingerprint", oracle=_AFP_ORACLE)
-def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate AUDIO detection: decode each WAV (real stdlib
-    codec), fold the PCM stream into {_AFP_WINDOWS} equal energy
-    windows, threshold each window against the clip mean (exact
-    integer compare {_AFP_WINDOWS}*e > total) into a 32-bit
-    fingerprint, then find Hamming-close clips via 4 x 8-bit band
-    buckets (pigeonhole-complete for radius {_AFP_MAX_D}) -- the audio
-    arm of the near-dup story, same banded shape as MinHash (text),
-    cosine-LSH (embeddings) and aHash (images). Output is the verified
-    pair histogram by distance with a deterministic example pair.
-
-    Scale shape: one mapInPandas decode pass (per-asset work, the only
-    honest place for a codec), signatures materialized, then the x4
-    band explode + bucket join + bit_count verify all in codegen.
-    The oracle replays synthesis -> windowing -> threshold -> band ->
-    verify in pure integer SQL."""
-    import io
-    import struct
-    import wave
-
+def _audio_fingerprint_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The audio near-dup pipeline up to verified pairs: decode each
+    WAV, fold its PCM stream into ``_AFP_WINDOWS`` energy windows,
+    threshold each against the clip mean into a 32-bit fingerprint and
+    materialize the signatures ``(asset_id, fp)``; then explode them
+    into 4 x 8-bit band keys, bucket-join on band equality and keep the
+    distinct pairs within Hamming ``_AFP_MAX_D``. Returns the
+    signatures and the pairs ``(asset_a, asset_b, hamming)`` with
+    asset_a < asset_b."""
     from ushas_spark.durability import materialize
 
     assets = synthesize_wav_assets(spark, sf_dir)
@@ -1231,9 +1215,7 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n}h", w.readframes(n))
+                _, _, n, samples = _read_wav(payload)
                 e = [abs(s) for s in samples]
                 total = sum(e)
                 fp = 0
@@ -1271,26 +1253,45 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band").alias("band_b"),
         F.col("key").alias("key_b"),
     )
-    cand = (
+    hamming = F.bit_count(F.col("fp").bitwiseXOR(F.col("fp_b")))
+    pairs = (
         bands.join(
             right,
             (F.col("band") == F.col("band_b"))
             & (F.col("key") == F.col("key_b"))
             & (F.col("asset_id") < F.col("asset_b")),
         )
+        .filter(hamming <= _AFP_MAX_D)
         .select(
             F.col("asset_id").alias("asset_a"),
             "asset_b",
-            F.col("fp").alias("fp_a"),
-            "fp_b",
+            hamming.cast("long").alias("hamming"),
         )
         .distinct()
     )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+    return sig, pairs
+
+
+@query("multimodal_audio_fingerprint", oracle=_AFP_ORACLE)
+def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate AUDIO detection: decode each WAV (real stdlib
+    codec), fold the PCM stream into {_AFP_WINDOWS} equal energy
+    windows, threshold each window against the clip mean (exact
+    integer compare {_AFP_WINDOWS}*e > total) into a 32-bit
+    fingerprint, then find Hamming-close clips via 4 x 8-bit band
+    buckets (pigeonhole-complete for radius {_AFP_MAX_D}) -- the audio
+    arm of the near-dup story, same banded shape as MinHash (text),
+    cosine-LSH (embeddings) and aHash (images). Output is the verified
+    pair histogram by distance with a deterministic example pair.
+
+    Scale shape: one mapInPandas decode pass (per-asset work, the only
+    honest place for a codec), signatures materialized, then the x4
+    band explode + bucket join + bit_count verify all in codegen
+    (:func:`_audio_fingerprint_pairs`). The oracle replays synthesis ->
+    windowing -> threshold -> band -> verify in pure integer SQL."""
+    _, pairs = _audio_fingerprint_pairs(spark, sf_dir)
     return (
-        cand.filter(hamming <= _AFP_MAX_D)
-        .select(hamming.cast("long").alias("hamming"), "asset_a", "asset_b")
-        .groupBy("hamming")
+        pairs.groupBy("hamming")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.min(
@@ -1301,71 +1302,30 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cluster_summary(comp: DataFrame) -> DataFrame:
+    """Curation summary of a connected-components ``(id, label)`` frame:
+    cluster count, duplicate clusters and the assets they hold, the
+    largest cluster, and how many assets keep-one-per-cluster removes."""
+    sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("n_members"))
+    return sizes.agg(
+        F.count(F.lit(1)).alias("n_clusters"),
+        F.sum((F.col("n_members") > 1).cast("long")).alias("n_dup_clusters"),
+        F.sum(
+            F.when(F.col("n_members") > 1, F.col("n_members")).otherwise(0)
+        ).alias("n_dup_assets"),
+        F.max("n_members").alias("largest_cluster"),
+        (F.sum("n_members") - F.count(F.lit(1))).alias("n_removable"),
+    )
+
+
 _IMG_CLUSTER_ORACLE = f"""
-WITH RECURSIVE p AS (
-  SELECT doc_id AS asset_id,
-         8 + doc_id % 9 AS w,
-         8 + doc_id % 7 AS h
-  FROM documents WHERE doc_id < {_PNG_N_ASSETS}
-), grid AS (
-  SELECT asset_id, w, h, gx.gx AS gx, gy.gy AS gy,
-         (gx.gx * w) // 8 AS sx, (gy.gy * h) // 8 AS sy
-  FROM p,
-       LATERAL (SELECT unnest(generate_series(0, 7)) AS gx) gx,
-       LATERAL (SELECT unnest(generate_series(0, 7)) AS gy) gy
-), lum AS (
-  SELECT asset_id, gx, gy,
-         (asset_id * 7 + sx * 3 + sy * 5) % 256
-         + (asset_id * 11 + sx * 2 + sy * 13) % 256
-         + (asset_id * 3 + sx * 17 + sy) % 256 AS l
-  FROM grid
-), tot AS (
-  SELECT asset_id, CAST(SUM(l) AS BIGINT) AS s FROM lum GROUP BY asset_id
-), bits AS (
-  SELECT l.asset_id, l.gx, l.gy,
-         CASE WHEN 64 * l.l > t.s THEN 1 ELSE 0 END AS bit
-  FROM lum l JOIN tot t ON l.asset_id = t.asset_id
-), ah AS (
-  SELECT asset_id,
-         CAST(SUM(CASE WHEN gy < 4 THEN bit * (1 << (gy * 8 + gx))
-                       ELSE 0 END) AS BIGINT) AS ahash_lo,
-         CAST(SUM(CASE WHEN gy >= 4 THEN bit * (1 << ((gy - 4) * 8 + gx))
-                       ELSE 0 END) AS BIGINT) AS ahash_hi
-  FROM bits GROUP BY asset_id
-), bands AS (
-  SELECT asset_id, ahash_lo, ahash_hi, band,
-         CASE band WHEN 0 THEN ahash_lo & 65535
-                   WHEN 1 THEN (ahash_lo >> 16) & 65535
-                   WHEN 2 THEN ahash_hi & 65535
-                   ELSE (ahash_hi >> 16) & 65535 END AS key
-  FROM ah, (VALUES (0), (1), (2), (3)) b(band)
-), pairs AS (
+WITH RECURSIVE {_AHASH_BITS_SQL}, {_AHASH_BANDS_SQL}, pairs AS (
   SELECT DISTINCT a.asset_id AS a, bb.asset_id AS b
   FROM bands a JOIN bands bb
     ON a.band = bb.band AND a.key = bb.key AND a.asset_id < bb.asset_id
   WHERE bit_count(xor(a.ahash_lo, bb.ahash_lo))
         + bit_count(xor(a.ahash_hi, bb.ahash_hi)) <= {_AHASH_MAX_D}
-), edges AS (
-  SELECT a AS s, b AS d FROM pairs UNION ALL SELECT b, a FROM pairs
-), reach(id, label) AS (
-  SELECT asset_id, asset_id FROM ah
-  UNION
-  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
-), comp AS (
-  SELECT id, MIN(label) AS cluster_id FROM reach GROUP BY id
-), sizes AS (
-  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-  FROM comp GROUP BY cluster_id
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(SUM(CASE WHEN n_members > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dup_clusters,
-       CAST(SUM(CASE WHEN n_members > 1 THEN n_members ELSE 0 END)
-            AS BIGINT) AS n_dup_assets,
-       CAST(MAX(n_members) AS BIGINT) AS largest_cluster,
-       CAST(SUM(n_members) - COUNT(*) AS BIGINT) AS n_removable
-FROM sizes
-"""
+), {_components_summary_sql("a", "b", "ah")}"""
 
 
 @query("multimodal_image_dedup_clusters", oracle=_IMG_CLUSTER_ORACLE)
@@ -1393,72 +1353,20 @@ def multimodal_image_dedup_clusters(
         .select(F.col("asset_id"))
         .filter(F.col("asset_id") < _PNG_N_ASSETS)
     )
-    comp = connected_components(
-        assets, pairs, id_col="asset_id", src="asset_a", dst="asset_b"
-    )
-    sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("n_members"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_clusters"),
-        F.sum((F.col("n_members") > 1).cast("long")).alias("n_dup_clusters"),
-        F.sum(
-            F.when(F.col("n_members") > 1, F.col("n_members")).otherwise(0)
-        ).alias("n_dup_assets"),
-        F.max("n_members").alias("largest_cluster"),
-        (F.sum("n_members") - F.count(F.lit(1))).alias("n_removable"),
+    return _cluster_summary(
+        connected_components(
+            assets, pairs, id_col="asset_id", src="asset_a", dst="asset_b"
+        )
     )
 
 
 _AFP_CLUSTER_ORACLE = f"""
-WITH RECURSIVE a AS (
-  SELECT doc_id AS asset_id, 64 + doc_id % 64 AS n
-  FROM documents WHERE doc_id < {_WAV_N_ASSETS}
-), s AS (
-  SELECT asset_id, n, i.i AS i,
-         abs((asset_id * 31 + i.i * 7) % 2001 - 1000) AS e
-  FROM a, LATERAL (SELECT unnest(generate_series(0, n - 1)) AS i) i
-), tot AS (
-  SELECT asset_id, CAST(SUM(e) AS BIGINT) AS total FROM s GROUP BY asset_id
-), win AS (
-  SELECT s.asset_id, w.w AS w, CAST(SUM(s.e) AS BIGINT) AS we
-  FROM s, LATERAL (SELECT unnest(generate_series(0, {_AFP_WINDOWS - 1})) AS w) w
-  WHERE s.i >= (w.w * s.n) // {_AFP_WINDOWS}
-    AND s.i < ((w.w + 1) * s.n) // {_AFP_WINDOWS}
-  GROUP BY s.asset_id, w.w
-), sig AS (
-  SELECT win.asset_id,
-         CAST(SUM(CASE WHEN {_AFP_WINDOWS} * win.we > tot.total
-                       THEN (1 << win.w) ELSE 0 END) AS BIGINT) AS fp
-  FROM win JOIN tot ON win.asset_id = tot.asset_id
-  GROUP BY win.asset_id
-), bands AS (
-  SELECT asset_id, fp, band, (fp >> (8 * band)) & 255 AS key
-  FROM sig, (VALUES (0), (1), (2), (3)) b(band)
-), pairs AS (
+WITH RECURSIVE {_AFP_BANDS_SQL}, pairs AS (
   SELECT DISTINCT a2.asset_id AS pa, bb.asset_id AS pb
   FROM bands a2 JOIN bands bb
     ON a2.band = bb.band AND a2.key = bb.key AND a2.asset_id < bb.asset_id
   WHERE bit_count(xor(a2.fp, bb.fp)) <= {_AFP_MAX_D}
-), edges AS (
-  SELECT pa AS s, pb AS d FROM pairs UNION ALL SELECT pb, pa FROM pairs
-), reach(id, label) AS (
-  SELECT asset_id, asset_id FROM sig
-  UNION
-  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id
-), comp AS (
-  SELECT id, MIN(label) AS cluster_id FROM reach GROUP BY id
-), sizes AS (
-  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-  FROM comp GROUP BY cluster_id
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(SUM(CASE WHEN n_members > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dup_clusters,
-       CAST(SUM(CASE WHEN n_members > 1 THEN n_members ELSE 0 END)
-            AS BIGINT) AS n_dup_assets,
-       CAST(MAX(n_members) AS BIGINT) AS largest_cluster,
-       CAST(SUM(n_members) - COUNT(*) AS BIGINT) AS n_removable
-FROM sizes
-"""
+), {_components_summary_sql("pa", "pb", "sig")}"""
 
 
 @query("multimodal_audio_dedup_clusters", oracle=_AFP_CLUSTER_ORACLE)
@@ -1466,7 +1374,7 @@ def multimodal_audio_dedup_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Audio-level dedup CLUSTERS: the banded energy-fingerprint pairs
-    (multimodal_audio_fingerprint's candidate tier) resolved to
+    (multimodal_audio_fingerprint's verified tier) resolved to
     connected components and summarised for curation -- the audio arm
     end to end (decode -> fingerprint -> banded pairs -> clusters),
     mirroring multimodal_image_dedup_clusters so every modality ships
@@ -1477,85 +1385,18 @@ def multimodal_audio_dedup_clusters(
 
     Oracle: synthesis -> windowed energies -> threshold -> band ->
     verify -> recursive-CTE components, gated as one unit."""
-    import io
-    import struct
-    import wave
-
-    from ushas_spark.durability import materialize
     from ushas_spark.operators.dedup import connected_components
 
-    assets = synthesize_wav_assets(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    samples = struct.unpack(f"<{n}h", w.readframes(n))
-                e = [abs(s) for s in samples]
-                total = sum(e)
-                fp = 0
-                for w_i in range(_AFP_WINDOWS):
-                    lo = w_i * n // _AFP_WINDOWS
-                    hi = (w_i + 1) * n // _AFP_WINDOWS
-                    if _AFP_WINDOWS * sum(e[lo:hi]) > total:
-                        fp |= 1 << w_i
-                rows.append({"asset_id": aid, "fp": fp})
-            yield pd.DataFrame(rows, columns=["asset_id", "fp"])
-
-    sig = materialize(
-        assets.mapInPandas(op, schema="asset_id bigint, fp bigint")
-    )
-    bands = sig.select(
-        "asset_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("fp", 8 * b)
-                        .bitwiseAND(255)
-                        .alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("asset_id", "fp", "bk.band", "bk.key")
-    right = bands.select(
-        F.col("asset_id").alias("pb"),
-        F.col("fp").alias("fp_b"),
-        F.col("band").alias("band_b"),
-        F.col("key").alias("key_b"),
-    )
-    pairs = (
-        bands.join(
-            right,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("key") == F.col("key_b"))
-            & (F.col("asset_id") < F.col("pb")),
-        )
-        .filter(
-            F.bit_count(F.col("fp").bitwiseXOR(F.col("fp_b"))) <= _AFP_MAX_D
-        )
-        .select(F.col("asset_id").alias("pa"), "pb")
-        .distinct()
-    )
+    sig, pairs = _audio_fingerprint_pairs(spark, sf_dir)
     # connected_components materializes its edge input itself.
-    comp = connected_components(
-        sig.select("asset_id"), pairs, id_col="asset_id", src="pa", dst="pb"
-    )
-    sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("n_members"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_clusters"),
-        F.sum((F.col("n_members") > 1).cast("long")).alias("n_dup_clusters"),
-        F.sum(
-            F.when(F.col("n_members") > 1, F.col("n_members")).otherwise(0)
-        ).alias("n_dup_assets"),
-        F.max("n_members").alias("largest_cluster"),
-        (F.sum("n_members") - F.count(F.lit(1))).alias("n_removable"),
+    return _cluster_summary(
+        connected_components(
+            sig.select("asset_id"),
+            pairs.select("asset_a", "asset_b"),
+            id_col="asset_id",
+            src="asset_a",
+            dst="asset_b",
+        )
     )
 
 

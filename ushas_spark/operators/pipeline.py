@@ -23,7 +23,7 @@ they are built as first-class oracle-gated operators:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -165,8 +165,36 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECONTAM_EVAL_MOD = 50  # doc_id % 50 == 0 plays the held-out benchmark set
 
-_DECONTAM_ORACLE = f"""
-WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
+
+def _trigrams() -> Column:
+    """Per-doc distinct word trigrams of ``text`` (empty under 3 words).
+
+    Three aligned slices zipped pairwise. NOT
+    transform(sequence(...), i -> element_at(toks, i)) -- dynamic-index
+    element_at inside a lambda measures ~12x slower than the slice
+    formulation on this corpus (per-access bounds/null checks defeat
+    the vectorized path)."""
+    toks = F.split(F.col("text"), r"\s+")
+    n = F.size(toks)
+    return F.when(
+        n >= 3,
+        F.array_distinct(
+            F.zip_with(
+                F.slice(toks, 1, n - 2),
+                F.zip_with(
+                    F.slice(toks, 2, n - 2),
+                    F.slice(toks, 3, n - 2),
+                    lambda b, c: F.concat_ws(" ", b, c),
+                ),
+                lambda a, bc: F.concat_ws(" ", a, bc),
+            )
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+# The same trigrams as oracle CTEs: ``t`` (tokens), ``ng`` (distinct
+# trigram lists) and ``flat`` (one row per doc and trigram).
+_TRIGRAMS_SQL = """t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
            FROM documents),
 ng AS (
   SELECT doc_id,
@@ -176,7 +204,10 @@ ng AS (
          ELSE [] END AS ngs
   FROM t
 ),
-flat AS (SELECT doc_id, unnest(ngs) AS ng FROM ng),
+flat AS (SELECT doc_id, unnest(ngs) AS ng FROM ng)"""
+
+_DECONTAM_ORACLE = f"""
+WITH {_TRIGRAMS_SQL},
 ev AS (SELECT DISTINCT ng FROM flat WHERE doc_id % {_DECONTAM_EVAL_MOD} = 0),
 tr AS (SELECT doc_id, ng FROM flat WHERE doc_id % {_DECONTAM_EVAL_MOD} <> 0)
 SELECT tr.doc_id, COUNT(DISTINCT tr.ng) AS n_shared_ngrams
@@ -200,28 +231,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no shuffle of the full n-gram stream.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), r"\s+")
-    n = F.size(toks)
-    # Trigrams via three aligned slices zipped pairwise. NOT
-    # transform(sequence(...), i -> element_at(toks, i)) -- dynamic-index
-    # element_at inside a lambda measures ~12x slower than the slice
-    # formulation on this corpus (per-access bounds/null checks defeat
-    # the vectorized path).
-    ngs = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.zip_with(
-                F.slice(toks, 1, n - 2),
-                F.zip_with(
-                    F.slice(toks, 2, n - 2),
-                    F.slice(toks, 3, n - 2),
-                    lambda b, c: F.concat_ws(" ", b, c),
-                ),
-                lambda a, bc: F.concat_ws(" ", a, bc),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    flat = d.select("doc_id", F.explode(ngs).alias("ng"))
+    flat = d.select("doc_id", F.explode(_trigrams()).alias("ng"))
     ev = (
         flat.filter(F.col("doc_id") % _DECONTAM_EVAL_MOD == 0)
         .select("ng")
@@ -497,21 +507,10 @@ def pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- contrastive training pairs
-from ushas_spark.operators.dedup import NGRAM_DF_CAP, sql_shingles  # noqa: E402
+from ushas_spark.operators.dedup import shingle_overlap_sql  # noqa: E402
 
 _CONTRASTIVE_ORACLE = f"""
-WITH sh_all AS (
-  SELECT doc_id, unnest({sql_shingles()}) AS shingle FROM documents
-), hot AS (
-  SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > {NGRAM_DF_CAP}
-), sh AS (
-  SELECT * FROM sh_all WHERE shingle NOT IN (SELECT shingle FROM hot)
-), sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pos AS (
+WITH {shingle_overlap_sql()}, pos AS (
   SELECT doc_a AS anchor, doc_b AS positive,
          CAST(ROUND(inter * 1000.0 / (sa.n_sh + sb.n_sh - inter)) AS BIGINT)
            AS jac_x1000
@@ -1134,17 +1133,7 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------- contamination severity bands
 _CONTAM_SEV_ORACLE = f"""
-WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
-           FROM documents),
-ng AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 3 THEN
-           list_distinct(list_transform(range(1, len(toks) - 1),
-               i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))
-         ELSE [] END AS ngs
-  FROM t
-),
-flat AS (SELECT doc_id, unnest(ngs) AS ng FROM ng),
+WITH {_TRIGRAMS_SQL},
 ev AS (SELECT DISTINCT ng FROM flat WHERE doc_id % {_DECONTAM_EVAL_MOD} = 0),
 tr AS (SELECT doc_id, ng FROM flat WHERE doc_id % {_DECONTAM_EVAL_MOD} <> 0),
 shared AS (
@@ -1193,23 +1182,7 @@ def pipeline_contamination_severity(
     rollup, 4-row band rollup."""
     docs = load_table(spark, sf_dir, "documents")
     n = docs.sparkSession.sparkContext.defaultParallelism
-    toks = F.split(F.col("text"), r"\s+")
-    sz = F.size(toks)
-    ngs = F.when(
-        sz >= 3,
-        F.array_distinct(
-            F.zip_with(
-                F.slice(toks, 1, sz - 2),
-                F.zip_with(
-                    F.slice(toks, 2, sz - 2),
-                    F.slice(toks, 3, sz - 2),
-                    lambda b, c: F.concat_ws(" ", b, c),
-                ),
-                lambda a, bc: F.concat_ws(" ", a, bc),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    base = docs.repartition(n).select("doc_id", ngs.alias("ngs"))
+    base = docs.repartition(n).select("doc_id", _trigrams().alias("ngs"))
     flat = base.select("doc_id", F.explode("ngs").alias("ng"))
     ev = (
         flat.filter(F.col("doc_id") % _DECONTAM_EVAL_MOD == 0)
@@ -1541,17 +1514,7 @@ BLOOM_BITS = 4096
 BLOOM_HASHES = 3
 
 _BLOOM_ORACLE = f"""
-WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
-           FROM documents),
-ng AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 3 THEN
-           list_distinct(list_transform(range(1, len(toks) - 1),
-               i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))
-         ELSE [] END AS ngs
-  FROM t
-),
-flat AS (SELECT doc_id, unnest(ngs) AS ng FROM ng),
+WITH {_TRIGRAMS_SQL},
 hashed AS (
   SELECT doc_id, ng,
          {sql_hash60('ng')} % {BLOOM_BITS} AS h1,
@@ -1652,24 +1615,8 @@ def pipeline_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast here is either constant-size (words: BLOOM_BITS/62 rows)
     or already broadcast in the prior shape (truth)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), r"\s+")
-    n = F.size(toks)
-    ngs = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.zip_with(
-                F.slice(toks, 1, n - 2),
-                F.zip_with(
-                    F.slice(toks, 2, n - 2),
-                    F.slice(toks, 3, n - 2),
-                    lambda b, c: F.concat_ws(" ", b, c),
-                ),
-                lambda a, bc: F.concat_ws(" ", a, bc),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     hashed = materialize(
-        d.select("doc_id", F.explode(ngs).alias("ng")).select(
+        d.select("doc_id", F.explode(_trigrams()).alias("ng")).select(
             "doc_id",
             "ng",
             (hash60(F.col("ng")) % BLOOM_BITS).alias("h1"),

@@ -73,6 +73,22 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({sql_dot(a, b)} / (sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)})))"
 
 
+def _ranked_topk_sql(score: str, order: str) -> str:
+    """Oracle tail: the ``TOP_K`` rows of the ``scored`` CTE per ``qid``
+    by ``order`` (ties to the smaller cand_id), as (qid, cand_id,
+    ``score``, rnk)."""
+    return f"""ranked AS (
+  SELECT qid, cand_id, {score},
+         ROW_NUMBER() OVER (PARTITION BY qid
+                            ORDER BY {order}, cand_id) AS rnk
+  FROM scored
+)
+SELECT qid, cand_id, {score}, rnk
+FROM ranked WHERE rnk <= {TOP_K}
+ORDER BY qid, rnk
+"""
+
+
 _BRUTE_ORACLE = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
@@ -81,16 +97,7 @@ scored AS (
          CAST(ROUND({sql_cosine("qe", "e")} * 1000000) AS BIGINT) AS sim_x1m
   FROM q JOIN v ON v.vec_id <> qid
 ),
-ranked AS (
-  SELECT qid, cand_id, sim_x1m,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY sim_x1m DESC, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, sim_x1m, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
 def cosine_topk(
@@ -209,16 +216,7 @@ scored AS (
          CAST(ROUND({sql_cosine("qe", "ce")} * 1000000) AS BIGINT) AS sim_x1m
   FROM cand
 ),
-ranked AS (
-  SELECT qid, cand_id, sim_x1m,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY sim_x1m DESC, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, sim_x1m, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
 def ann_lsh_topk(
@@ -422,16 +420,7 @@ scored AS (
               AS BIGINT) AS hamming
   FROM q JOIN p ON p.vec_id <> qid
 ),
-ranked AS (
-  SELECT qid, cand_id, hamming,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY hamming, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, hamming, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("hamming", "hamming")}"""
 
 
 @query("sim_hamming_packed_topk", oracle=_HAMMING_ORACLE)
@@ -666,16 +655,7 @@ scored AS (
          CAST({sql_int_dot("qq", "qe")} AS BIGINT) AS dot_q
   FROM q JOIN v ON v.vec_id <> qid
 ),
-ranked AS (
-  SELECT qid, cand_id, dot_q,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY dot_q DESC, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, dot_q, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("dot_q", "dot_q DESC")}"""
 
 
 @query("sim_sq8_topk", oracle=_SQ8_ORACLE)
@@ -771,6 +751,23 @@ cb AS (SELECT list({{'m': m, 'k': k, 'sub': sub}}) AS cs FROM cw)
 """
 
 
+def pq_reconstruct(emb: DataFrame) -> DataFrame:
+    """PQ reconstruction ``(vec_id, re)`` of every row of ``emb``
+    ``(vec_id, qe, ...)``: the codebook is sampled by id stride and
+    folded into one struct-array row, broadcast to the encode."""
+    ids = [k * PQ_STRIDE for k in range(PQ_K)]
+    cwsrc = emb.filter(F.col("vec_id").isin(ids)).select(
+        (F.col("vec_id") / PQ_STRIDE).cast("int").alias("k"), "qe"
+    )
+    cw = cwsrc.select(
+        "k", F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"), "qe"
+    ).selectExpr("m", "k", f"slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}) AS sub")
+    cb = cw.agg(F.collect_list(F.struct("m", "k", "sub")).alias("cs"))
+    return emb.crossJoin(F.broadcast(cb)).selectExpr(
+        "vec_id", f"{_pq_recon_expr('qe', 'cs', 'spark')} AS re"
+    )
+
+
 _PQ_ORACLE = f"""
 WITH v AS (SELECT vec_id, {sql_quantize_sq8('embedding')} AS qe FROM embeddings),
 {_pq_codebook_sql().strip().rstrip()}
@@ -784,16 +781,7 @@ scored AS (
          CAST({_pq_sqdist_int('qq', 're', 'duck')} AS BIGINT) AS adc_dist
   FROM q JOIN recon r ON r.vec_id <> q.qid
 ),
-ranked AS (
-  SELECT qid, cand_id, adc_dist,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY adc_dist, cand_id) AS rnk
-  FROM scored
-)
-SELECT qid, cand_id, adc_dist, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY qid, rnk
-"""
+{_ranked_topk_sql("adc_dist", "adc_dist")}"""
 
 
 @query("sim_pq_adc_topk", oracle=_PQ_ORACLE)
@@ -815,17 +803,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize_sq8(F.col("embedding")).alias("qe")
     )
-    ids = [k * PQ_STRIDE for k in range(PQ_K)]
-    cwsrc = emb.filter(F.col("vec_id").isin(ids)).select(
-        (F.col("vec_id") / PQ_STRIDE).cast("int").alias("k"), "qe"
-    )
-    cw = cwsrc.select(
-        "k", F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"), "qe"
-    ).selectExpr("m", "k", f"slice(qe, m * {PQ_SUB} + 1, {PQ_SUB}) AS sub")
-    cb = cw.agg(F.collect_list(F.struct("m", "k", "sub")).alias("cs"))
-    recon = emb.crossJoin(F.broadcast(cb)).selectExpr(
-        "vec_id", f"{_pq_recon_expr('qe', 'cs', 'spark')} AS re"
-    )
+    recon = pq_reconstruct(emb)
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("qe").alias("qq")
     )

@@ -166,6 +166,34 @@ def _lang_score_sql(lang: str) -> str:
     )
 
 
+def _stopword_vote(toks: Column) -> tuple[dict[str, Column], Column]:
+    """Per-language stopword counts of the token array ``toks`` and the
+    language they vote for; ties break by the fixed preference order
+    en > es > de > fr."""
+
+    def _contains(arr):
+        # PySpark infers lambda arity from the signature -- a default-arg
+        # capture (lambda w, a=arr: ...) would be treated as a 2-arg lambda.
+        return lambda w: F.array_contains(arr, w)
+
+    scores = {}
+    for lang, words in STOPWORDS.items():
+        arr = F.array([F.lit(w) for w in words])
+        scores[lang] = F.size(F.filter(toks, _contains(arr)))
+    guess = (
+        F.when(
+            (scores["en"] >= scores["es"])
+            & (scores["en"] >= scores["de"])
+            & (scores["en"] >= scores["fr"]),
+            "en",
+        )
+        .when((scores["es"] >= scores["de"]) & (scores["es"] >= scores["fr"]), "es")
+        .when(scores["de"] >= scores["fr"], "de")
+        .otherwise("fr")
+    )
+    return scores, guess
+
+
 _LANG_ORACLE = f"""
 WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
            FROM documents),
@@ -196,27 +224,7 @@ def text_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed preference order en > es > de > fr -- deterministic in both
     engines by construction."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    def _contains(arr):
-        # PySpark infers lambda arity from the signature -- a default-arg
-        # capture (lambda w, a=arr: ...) would be treated as a 2-arg lambda.
-        return lambda w: F.array_contains(arr, w)
-
-    scores = {}
-    for lang, words in STOPWORDS.items():
-        arr = F.array([F.lit(w) for w in words])
-        scores[lang] = F.size(F.filter(toks, _contains(arr)))
-    guess = (
-        F.when(
-            (scores["en"] >= scores["es"])
-            & (scores["en"] >= scores["de"])
-            & (scores["en"] >= scores["fr"]),
-            "en",
-        )
-        .when((scores["es"] >= scores["de"]) & (scores["es"] >= scores["fr"]), "es")
-        .when(scores["de"] >= scores["fr"], "de")
-        .otherwise("fr")
-    )
+    scores, guess = _stopword_vote(tokens(F.col("text")))
     return d.select(
         "doc_id",
         guess.alias("lang_guess"),
@@ -565,18 +573,47 @@ TFIDF_QUERIES = 3  # doc_id < 3 are the query documents
 TFIDF_TOPK = 10
 
 
-_TFIDF_ORACLE = f"""
-WITH tf AS (
+def _term_freqs(d: DataFrame) -> DataFrame:
+    """Term frequencies ``(doc_id, word, tf)`` of the space-split text."""
+    words = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("word")
+    ).where(F.col("word") != "")
+    return words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+
+
+def _idf(tf: DataFrame, n_docs: DataFrame) -> DataFrame:
+    """Rational IDF ``(word, w)``: w = (N * IDF_SCALE) div df, with N the
+    one value of the one-row, one-column frame ``n_docs``. True integer
+    division (SQL ``div``) mirrors DuckDB's ``//``; double-divide-then-
+    cast could flip on representation boundaries."""
+    (n,) = n_docs.columns
+    return (
+        tf.select("doc_id", "word")
+        .distinct()
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(F.broadcast(n_docs))
+        .select("word", F.expr(f"({n} * {IDF_SCALE}) div df").alias("w"))
+    )
+
+
+# Oracle CTEs of the same tables: ``tf``, and ``idf`` over the doc count.
+_TF_SQL = """tf AS (
   SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
   FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
         FROM documents) WHERE word <> ''
   GROUP BY doc_id, word
-), n_docs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+)"""
+_IDF_SQL = f"""n_docs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
 idf AS (
   SELECT word, (n * {IDF_SCALE}) // CAST(COUNT(*) AS BIGINT) AS w
   FROM (SELECT DISTINCT doc_id, word FROM tf), n_docs
   GROUP BY word, n
-), q AS (
+)"""
+
+
+_TFIDF_ORACLE = f"""
+WITH {_TF_SQL}, {_IDF_SQL}, q AS (
   SELECT doc_id AS qid, word, tf AS qtf FROM tf
   WHERE doc_id < {TFIDF_QUERIES}
 ), scored AS (
@@ -621,25 +658,8 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow below ~1e5x this corpus density.
     """
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).where(F.col("word") != "")
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n"))
-    idf = (
-        tf.select("doc_id", "word")
-        .distinct()
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "word",
-            # true integer division (SQL `div`), mirroring DuckDB's `//`
-            # -- double-divide-then-cast could flip on representation
-            # boundaries.
-            F.expr(f"(n * {IDF_SCALE}) div df").alias("w"),
-        )
-    )
+    tf = _term_freqs(d)
+    idf = _idf(tf, d.agg(F.count(F.lit(1)).alias("n")))
     q = tf.where(F.col("doc_id") < TFIDF_QUERIES).select(
         F.col("doc_id").alias("qid"), "word", F.col("tf").alias("qtf")
     )
@@ -680,12 +700,7 @@ BM25_SCALE = 100
 
 
 _BM25_ORACLE = f"""
-WITH tf AS (
-  SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents) WHERE word <> ''
-  GROUP BY doc_id, word
-), dl AS (
+WITH {_TF_SQL}, dl AS (
   SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id
 ), corpus AS (
   SELECT CAST(SUM(dl) AS BIGINT) AS L, CAST(COUNT(*) AS BIGINT) AS N
@@ -728,22 +743,12 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted shuffles but 0.93 -> 2.06 s isolated at sf0.1).
     """
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).where(F.col("word") != "")
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _term_freqs(d)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     corpus = dl.agg(
         F.sum("dl").alias("L"), F.count(F.lit(1)).alias("N")
     )
-    idf = (
-        tf.select("doc_id", "word")
-        .distinct()
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(corpus.select("N")))
-        .select("word", F.expr(f"(N * {IDF_SCALE}) div df").alias("w"))
-    )
+    idf = _idf(tf, corpus.select("N"))
     q = tf.where(F.col("doc_id") < TFIDF_QUERIES).select(
         F.col("doc_id").alias("qid"), "word"
     )
@@ -778,17 +783,7 @@ KEYWORDS_PER_DOC = 3
 
 
 _KEYWORDS_ORACLE = f"""
-WITH tf AS (
-  SELECT doc_id, word, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents) WHERE word <> ''
-  GROUP BY doc_id, word
-), n_docs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-idf AS (
-  SELECT word, (n * {IDF_SCALE}) // CAST(COUNT(*) AS BIGINT) AS w
-  FROM (SELECT DISTINCT doc_id, word FROM tf), n_docs
-  GROUP BY word, n
-), scored AS (
+WITH {_TF_SQL}, {_IDF_SQL}, scored AS (
   SELECT doc_id, word, CAST(tf * w AS BIGINT) AS score
   FROM tf JOIN idf USING (word)
 )
@@ -812,19 +807,8 @@ def text_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).where(F.col("word") != "")
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n"))
-    idf = (
-        tf.select("doc_id", "word")
-        .distinct()
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .select("word", F.expr(f"(n * {IDF_SCALE}) div df").alias("w"))
-    )
+    tf = _term_freqs(d)
+    idf = _idf(tf, d.agg(F.count(F.lit(1)).alias("n")))
     scored = tf.join(F.broadcast(idf), "word").select(
         "doc_id", "word", (F.col("tf") * F.col("w")).alias("score")
     )
@@ -876,26 +860,7 @@ def text_lang_confusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan with per-row JVM scoring, then a
     |langs|^2-cell rollup with map-side combine."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-
-    def _contains(arr):
-        return lambda w: F.array_contains(arr, w)
-
-    scores = {}
-    for lang, words in STOPWORDS.items():
-        arr = F.array([F.lit(w) for w in words])
-        scores[lang] = F.size(F.filter(toks, _contains(arr)))
-    guess = (
-        F.when(
-            (scores["en"] >= scores["es"])
-            & (scores["en"] >= scores["de"])
-            & (scores["en"] >= scores["fr"]),
-            "en",
-        )
-        .when((scores["es"] >= scores["de"]) & (scores["es"] >= scores["fr"]), "es")
-        .when(scores["de"] >= scores["fr"], "de")
-        .otherwise("fr")
-    )
+    _, guess = _stopword_vote(tokens(F.col("text")))
     return (
         d.select(F.col("lang").alias("actual"), guess.alias("predicted"))
         .groupBy("actual", "predicted")
