@@ -38,7 +38,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ushas_spark import registry
+from ushas_spark import durability, registry
 from ushas_spark.session import get_spark
 
 # Queries that define the headline number: one per operator class
@@ -158,34 +158,8 @@ def _run_once(fn, spark, sf_dir: str) -> float:
     # queries with large outputs, e.g. full-table window functions).
     df.write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
-    _release_storage(spark)
+    durability.release(spark)
     return elapsed
-
-
-def _release_storage(spark) -> None:
-    """Drop cached/localCheckpointed blocks between queries.
-
-    The dedup tier localCheckpoints intermediates (correct inside one
-    query: it truncates iterative lineage / avoids triple-evaluating the
-    shingle explode). Those blocks stay referenced after the query
-    finishes, and in a back-to-back bench run the accumulated storage
-    memory-pressures LATER queries (measured: q5 went 1.7s -> 3.0s once
-    three checkpointing queries preceded it). Unpersisting between
-    queries keeps each timing independent -- the cross-query hygiene a
-    long-lived cluster session would apply too. BLOCKING (since r06):
-    the call sits after the timed region, so waiting costs sweep
-    wall-clock only, and a non-blocking drop measurably let earlier
-    queries' blocks bleed into the next window (graph_triangle_count:
-    7.1s alone vs 15.0s late in a sweep, identical plans).
-
-    (Measured and rejected: a forced System.gc() between queries --
-    per-query numbers still swing with ambient machine load, and the
-    full GCs add minutes of wall time to a 42-query sweep.)"""
-    # Drop CacheManager entries first (pin_partitioned caches register
-    # there, not only as raw persistent RDDs), then the RDD blocks.
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(True)
 
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -252,13 +226,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # _release_storage drops RDD blocks, but BROADCAST blocks pile up
+    # durability.release drops RDD blocks, but BROADCAST blocks pile up
     # across a ~400-run sweep and are only reclaimed when the context
     # cleaner sees a driver GC -- which a large quiet heap may not run
     # for the whole sweep. A 2-minute periodic GC keeps broadcast litter
-    # bounded without the per-query forced-GC cost measured-and-rejected
-    # in _release_storage's docstring. (Observed: sim_mmr_rerank 2.1s
-    # alone or 2nd in a sweep, 6.7s at position ~52 of 77.)
+    # bounded without the cost of a forced GC per query, which adds
+    # minutes to a sweep. (Observed: sim_mmr_rerank 2.1s alone or 2nd
+    # in a sweep, 6.7s at position ~52 of 77.)
     spark = get_spark(
         "ushas-bench", extra_conf={"spark.cleaner.periodicGC.interval": "2min"}
     )

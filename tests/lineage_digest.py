@@ -88,10 +88,10 @@ def adhoc_plans(spark, sf_dir: str) -> dict:
 
 def main() -> None:
     import __spark_entry__ as entrymod
+    from ushas_spark.durability import release
     from ushas_spark.lineage import lineage
     from ushas_spark.session import get_spark
     from tests.conftest import SF_DIR
-    from tests.regime_twin import release
 
     spark = get_spark("lineage-digests", shuffle_partitions=8)
     out: dict[str, str] = {}

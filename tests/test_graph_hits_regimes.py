@@ -22,7 +22,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.regime_twin import release, twin
+from tests.regime_twin import twin
+from ushas_spark.durability import release
 from ushas_spark.operators import graph
 
 
@@ -97,15 +98,11 @@ def test_triangle_broadcast_plan_no_smj(spark, sf_dir):
     same tree-walk counter PLANS.md uses."""
     from ushas_spark import durability
 
-    durability.begin_plan_audit()
-    df = graph.graph_triangle_count(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    segments = durability.end_plan_audit()
+    with durability.segments() as segments:
+        df = graph.graph_triangle_count(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
     release(spark)
-    totals = {}
-    for seg in segments:
-        for k, v in seg["counts"].items():
-            totals[k] = totals.get(k, 0) + v
+    totals = durability.plan_totals(segments)
     assert totals["smj"] == 0, totals
     assert totals["bhj"] >= 3, totals
     assert totals["shuffles"] <= 6, totals
@@ -134,17 +131,16 @@ def test_kcore_broadcast_rounds_plan_one_exchange_no_smj(spark, sf_dir):
     SMJ. Audited via the same tree-walk counter PLANS.md uses."""
     from ushas_spark import durability
 
-    durability.begin_plan_audit()
-    df = graph.graph_kcore_summary(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    segments = durability.end_plan_audit()
+    with durability.segments() as segments:
+        df = graph.graph_kcore_summary(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
     release(spark)
     round_segs = segments[-graph.KCORE_ROUNDS:]
     assert len(round_segs) == graph.KCORE_ROUNDS
     for seg in round_segs:
-        assert seg["counts"]["shuffles"] == 1, seg["counts"]
-        assert seg["counts"]["smj"] == 0, seg["counts"]
-        assert seg["counts"]["bhj"] == 1, seg["counts"]
+        assert seg.counts["shuffles"] == 1, seg.counts
+        assert seg.counts["smj"] == 0, seg.counts
+        assert seg.counts["bhj"] == 1, seg.counts
 
 
 def test_small_v_regime_plans_zero_round_exchanges(spark, sf_dir):
@@ -155,17 +151,15 @@ def test_small_v_regime_plans_zero_round_exchanges(spark, sf_dir):
     tree-walk counter PLANS.md uses."""
     from ushas_spark import durability
 
-    durability.begin_plan_audit()
-    df = graph.graph_hits_hub_authority(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    segments = durability.end_plan_audit()
+    with durability.segments() as segments:
+        df = graph.graph_hits_hub_authority(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
     release(spark)
-    # Round segments = the non-pin segments (pin segments have no
-    # executed post plan). The FIRST round segment carries the one-time
-    # initial-hubs distinct (one |V|-row exchange); every later round
-    # segment must plan zero.
-    round_segs = [s for s in segments if s["post"] is not None]
+    # Round segments = the checkpoint segments. The FIRST round segment
+    # carries the one-time initial-hubs distinct (one |V|-row exchange);
+    # every later round segment must plan zero.
+    round_segs = [s for s in segments if s.kind == "checkpoint"]
     assert len(round_segs) == 2 * graph.HITS_ITERS
-    assert round_segs[0]["counts"]["shuffles"] <= 1
+    assert round_segs[0].counts["shuffles"] <= 1
     for seg in round_segs[1:]:
-        assert seg["counts"]["shuffles"] == 0, seg["counts"]
+        assert seg.counts["shuffles"] == 0, seg.counts

@@ -871,10 +871,11 @@ def test_bot_gap_single_subsecond_gap_flags(spark, sf_dir, tmp_path):
 
 def test_full_query_reliable_checkpoint_end_to_end(spark, sf_dir):
     """Run a COMPLETE registered iterative query under reliable-checkpoint
-    mode (USHAS_RELIABLE_CHECKPOINT on a real fleet) and require the
-    bit-identical result of the default executor-local mode. The unit
-    toggles above exercise single operators; this keeps the reliable
-    path from rotting inside a full pinned-loop query (r08 verdict #6).
+    mode (``durability.set_reliable(True)``, as on a real fleet) and
+    require the bit-identical result of the default executor-local
+    mode. The unit toggles above exercise single operators; this keeps
+    the reliable path from rotting inside a full pinned-loop query (r08
+    verdict #6).
     """
     from ushas_spark import durability, registry
 

@@ -743,3 +743,53 @@ def test_post_aqe_plan_adds_no_exchanges(spark, sf_dir):
             re.findall(r"Exchange (?:hash|range)partitioning", final_section)
         )
         assert 0 < final_count <= pre, (name, pre, final_count, post)
+
+
+def test_segments_recorder_scope_and_totals(spark):
+    """durability.segments() records one Segment per materialize/pin
+    call inside its block, stops recording when the block exits -- also
+    by an exception -- and plan_totals equals the hand sum of the final
+    fragment and every segment."""
+    from ushas_spark import durability
+
+    df = spark.range(200).select((F.col("id") % 7).alias("k"), "id")
+    try:
+        with durability.segments() as segs:
+            cut = durability.materialize(df.groupBy("k").count())
+            pinned = durability.pin_partitioned(df, "k")
+        assert [s.kind for s in segs] == ["checkpoint", "pin"]
+        assert segs[0].post is not None and segs[1].post is None
+
+        final = pinned.join(cut, "k").groupBy("k").agg(F.sum("id"))
+        hand = durability.plan_counts(final._jdf.queryExecution().executedPlan())
+        for seg in segs:
+            for k, v in seg.counts.items():
+                hand[k] += v
+        assert durability.plan_totals(segs, final) == hand
+
+        with pytest.raises(ZeroDivisionError):
+            with durability.segments() as raised:
+                durability.materialize(df)
+                1 / 0
+        assert len(raised) == 1
+        durability.materialize(df)
+        assert len(raised) == 1 and len(segs) == 2
+    finally:
+        durability.release(spark)
+
+
+def test_streaming_components_records_same_segments_twice(spark, sf_dir):
+    """streaming_incremental_components replays its feed in a fixed
+    micro-batch order, so two builds cut the same segments with the
+    same plan counts. (Files written by concurrent tasks tie or race on
+    modification time, which orders the file stream source.)"""
+    from ushas_spark import durability
+
+    runs = []
+    for _ in range(2):
+        with durability.segments() as segs:
+            QUERIES["streaming_incremental_components"](spark, sf_dir)
+        durability.release(spark)
+        runs.append([s.counts for s in segs])
+    assert len(runs[0]) == len(runs[1]), (len(runs[0]), len(runs[1]))
+    assert runs[0] == runs[1]

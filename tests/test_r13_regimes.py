@@ -31,9 +31,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.regime_twin import release, twin
+from tests.regime_twin import twin
 from ushas_spark import durability
-from ushas_spark.durability import plan_counts
+from ushas_spark.durability import plan_counts, release
 from ushas_spark.operators import graph
 
 
@@ -118,15 +118,10 @@ def test_bloom_single_documents_scan_and_four_shuffles(spark, sf_dir):
     per-doc agg; orderBy), zero SMJ."""
     from ushas_spark.operators.pipeline import pipeline_bloom_prefilter
 
-    durability.begin_plan_audit()
-    df = pipeline_bloom_prefilter(spark, sf_dir)
-    segments = durability.end_plan_audit()
-    final_counts = _counts(df)
-    total = dict(final_counts)
-    for seg in segments:
-        for k, v in seg["counts"].items():
-            total[k] = total.get(k, 0) + v
-    plans = [seg["pre"] for seg in segments] + [
+    with durability.segments() as segments:
+        df = pipeline_bloom_prefilter(spark, sf_dir)
+    total = durability.plan_totals(segments, df)
+    plans = [seg.pre for seg in segments] + [
         df._jdf.queryExecution().executedPlan().toString()
     ]
     release(spark)

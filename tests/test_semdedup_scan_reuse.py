@@ -17,10 +17,9 @@ def test_semdedup_scans_embeddings_parquet_exactly_once(spark, sf_dir):
     every Lloyd round and the assignment must read the materialized
     projection (the pre-r12 shape paid ITERS + 1 = {n} corpus
     scans).""".format(n=ITERS + 1)
-    durability.begin_plan_audit()
-    df = dedup_semantic_clusters(spark, sf_dir)
-    segments = durability.end_plan_audit()
-    plans = [seg["pre"] for seg in segments] + [
+    with durability.segments() as segments:
+        df = dedup_semantic_clusters(spark, sf_dir)
+    plans = [seg.pre for seg in segments] + [
         df._jdf.queryExecution().executedPlan().toString()
     ]
     scans = sum("embeddings" in p for p in plans)

@@ -2,8 +2,8 @@
 
 Writes <out>/<query>_<suffix>.txt for each query: the FINAL fragment's
 formatted plan plus, for iterative/materialized operators, every
-truncated segment's pre-execution plan (captured via
-durability.begin/end_plan_audit -- the final fragment of a pinned loop
+truncated segment's pre-execution plan (recorded by
+durability.segments() -- the final fragment of a pinned loop
 shows only the top-k over caches, so the segments are where the
 restructures are visible: see PLANS.md header).
 
@@ -59,16 +59,12 @@ def main() -> None:
             continue
         print(f"== {name}", flush=True)
         spark.sparkContext.setJobDescription(f"dump_plans {name} ({args.suffix})")
-        durability.begin_plan_audit()
-        df = qs[name](spark, sf_dir)
-        segs = durability.end_plan_audit()
+        with durability.segments() as segs:
+            df = qs[name](spark, sf_dir)
         qe = df._jdf.queryExecution()
         formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
         final_counts = durability.plan_counts(qe.executedPlan())
-        total = dict(final_counts)
-        for seg in segs:
-            for k, v in seg["counts"].items():
-                total[k] = total.get(k, 0) + v
+        total = durability.plan_totals(segs, df)
         path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(
@@ -91,18 +87,17 @@ def main() -> None:
                 f"# final fragment: {final_counts}\n"
             )
             for i, seg in enumerate(segs):
-                f.write(f"# segment {i + 1}: {seg['counts']}\n")
+                f.write(f"# segment {i + 1}: {seg.counts}\n")
             f.write("\n")
             f.write(formatted)
             for i, seg in enumerate(segs):
                 f.write(
                     f"\n\n==== materialized segment {i + 1}/{len(segs)}"
                     f" (pre-execution physical plan;"
-                    f" tree counts {seg['counts']}) ====\n"
+                    f" tree counts {seg.counts}) ====\n"
                 )
-                f.write(seg["pre"])
-        # free the pinned caches between queries so segments don't pile up
-        spark.catalog.clearCache()
+                f.write(seg.pre)
+        durability.release(spark)
         print(f"   wrote {path} ({len(segs)} segments)", flush=True)
 
     spark.stop()

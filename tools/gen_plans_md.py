@@ -8,9 +8,9 @@ finalized plan (they only exist after execution).
 
 Materialized queries (iterative operators that truncate lineage via
 ushas_spark.durability.materialize) run SEVERAL jobs: the final
-DataFrame's plan is only the last fragment. The audit hooks
-begin/end_plan_audit capture every truncated segment's plan during
-query construction, and the table below sums metrics across ALL
+DataFrame's plan is only the last fragment. The durability.segments()
+recorder captures every truncated segment's plan during query
+construction, and the table below sums metrics across ALL
 segments plus the final fragment -- previously sim_mmr_rerank read
 "1 shuffle" when it really runs 5+ materialized jobs (r05 verdict).
 
@@ -94,21 +94,20 @@ def main() -> None:
     for name in bench.HEADLINE:
         if name not in registry.QUERIES:
             continue
-        durability.begin_plan_audit()
-        df = registry.QUERIES[name](spark, SF_DIR)
-        segments = durability.end_plan_audit()
+        with durability.segments() as segments:
+            df = registry.QUERIES[name](spark, SF_DIR)
         gwin = _global_windows(df._jdf.queryExecution().optimizedPlan().toJSON())
         pre = df._jdf.queryExecution().executedPlan().toString()
         df.collect()
         post = df._jdf.queryExecution().executedPlan().toString()
-        pres = [s["pre"] for s in segments] + [pre]
+        pres = [s.pre for s in segments] + [pre]
         # pin_partitioned segments have NO executed post plan (population
         # runs inside the cache build, unreachable from any qe) -- fall
         # back to pre for the text-derived columns (codegen markers are
         # planning-time artifacts, present in pre too; AQEShuffleRead can
         # only under-report for those segments, never invent).
-        posts = [s["post"] or s["pre"] for s in segments] + [post]
-        gwin += sum(_global_windows(s["opt"]) for s in segments)
+        posts = [s.post or s.pre for s in segments] + [post]
+        gwin += sum(_global_windows(s.opt) for s in segments)
         # Structure metrics come from REAL plan-tree traversal
         # (durability.plan_counts, recorded per segment at capture
         # time): cached relations print their stored plan inside the
@@ -117,11 +116,7 @@ def main() -> None:
         # and never again. Tree counts match the legacy text counts
         # node-for-node on non-cached plans (probe-verified r08), so
         # cross-round comparability holds for every pre-r08 row.
-        final_counts = durability.plan_counts(
-            df._jdf.queryExecution().executedPlan()
-        )
-        all_counts = [s["counts"] for s in segments] + [final_counts]
-        tot = {k: sum(c[k] for c in all_counts) for k in final_counts}
+        tot = durability.plan_totals(segments, df)
         codegen = sum(len(set(re.findall(_CODEGEN_RE, p))) for p in posts)
         pushdown = any(
             "PushedFilters" in p and "PushedFilters: []" not in p for p in pres
@@ -137,9 +132,7 @@ def main() -> None:
             f" {'yes' if any('AQEShuffleRead' in p for p in posts) else '—'} |"
             f" {gwin if gwin else '—'} |"
         )
-        spark.catalog.clearCache()
-        for r in spark.sparkContext._jsc.getPersistentRDDs().values():
-            r.unpersist(False)
+        durability.release(spark)
     out = HEADER % {"sf": SF_DIR.rsplit("sf", 1)[-1]} + "\n".join(lines) + "\n"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:

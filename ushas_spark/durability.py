@@ -17,50 +17,86 @@ doubles per iteration. Two ways to truncate:
   (reference: core/src/main/scala/org/apache/spark/rdd/RDD.scala
   ``checkpoint`` vs ``localCheckpoint`` docs).
 
-Toggle per-session with :func:`set_reliable` (or the
-``USHAS_RELIABLE_CHECKPOINT=1`` env var, read at import): the iterative
-operators all route through :func:`materialize`, so one switch moves
-every truncation point. Default stays local -- identical plans and
-timings to previous rounds on local[32].
+Toggle per-session with :func:`set_reliable`, the one reliability
+switch: the iterative operators all route through :func:`materialize`,
+so one switch moves every truncation point. Default stays local.
+
+Every ``materialize``/``pin_partitioned`` call cuts the query's plan
+into one more segment. ``with segments() as segs:`` records one
+:class:`Segment` per call made inside the block; :func:`plan_totals`
+sums their plan counts (plus the final fragment's), and
+:func:`release` frees the blocks they leave behind. A plan auditor that
+inspected only the final DataFrame would be blind to every upstream
+segment. Outside a ``with`` block nothing is recorded and a call pays
+one ``is None`` check.
 """
 
 from __future__ import annotations
 
-import os
 import tempfile
-from collections.abc import Callable
+from collections.abc import Iterator
+from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_RELIABLE = os.environ.get("USHAS_RELIABLE_CHECKPOINT", "") in ("1", "true")
-
-# Plan-audit hook: when active, every materialize() records the plan of
-# the segment it truncates. Without this, a plan auditor that inspects
-# only the query's FINAL DataFrame is blind to the upstream stages --
-# e.g. sim_mmr_rerank's audited fragment showed "1 shuffle" while the
-# query actually runs 5+ materialized jobs (r05 verdict, "what's wrong"
-# item 3). tools/gen_plans_md.py wraps query construction in
-# begin/end_plan_audit and sums metrics across all segments.
-_AUDIT: list[dict] | None = None
+_RELIABLE = False
 
 
-def begin_plan_audit() -> None:
-    global _AUDIT
-    _AUDIT = []
+class Segment(NamedTuple):
+    """One truncation segment, recorded by :func:`segments`."""
+
+    kind: str  # "checkpoint" (materialize) or "pin" (pin_partitioned)
+    pre: str  # pre-execution physical plan
+    post: str | None  # AQE-finalized plan; None for a pin (see pin_partitioned)
+    opt: str  # optimized logical plan nodes (toJSON)
+    counts: dict[str, int]  # plan_counts of the pre-execution plan
 
 
-def end_plan_audit() -> list[dict]:
-    """Return the segment plans recorded since begin_plan_audit().
+# The open recorder's list, or None. A module global, not a context
+# variable: streaming foreachBatch callbacks materialize on a py4j
+# callback thread and must record into the block that started the query.
+_SEGMENTS: list[Segment] | None = None
 
-    Each entry: {"pre": pre-execution physical plan string,
-    "post": post-execution (AQE-finalized) plan string,
-    "opt": optimized-logical-plan node list (toJSON),
-    "counts": plan_counts of the pre-execution plan}."""
-    global _AUDIT
-    out = _AUDIT if _AUDIT is not None else []
-    _AUDIT = None
-    return out
+
+@contextmanager
+def segments() -> Iterator[list[Segment]]:
+    """Record every segment cut inside the block into the yielded list.
+
+    On exit (also when the body raises) the previous recorder, usually
+    none, is restored, so later calls outside the block record nothing."""
+    global _SEGMENTS
+    prev, _SEGMENTS = _SEGMENTS, []
+    try:
+        yield _SEGMENTS
+    finally:
+        _SEGMENTS = prev
+
+
+def plan_totals(segs: list[Segment], df: DataFrame | None = None) -> dict[str, int]:
+    """Element-wise sum of ``segs``' plan counts, plus the
+    :func:`plan_counts` of ``df``'s executed plan when ``df`` is given."""
+    counts = [s.counts for s in segs]
+    if df is not None:
+        counts.append(plan_counts(df._jdf.queryExecution().executedPlan()))
+    return {k: sum(c[k] for c in counts) for k in _COUNT_KEYS}
+
+
+def release(spark) -> None:
+    """Drop every cached and checkpointed block of the session.
+
+    Checkpointed and pinned blocks stay referenced after their query
+    finishes, and in a back-to-back run the accumulated storage
+    memory-pressures later queries. ``clearCache`` runs first so the
+    CacheManager forgets the ``pin_partitioned`` caches registered
+    there; the loop then frees the checkpoint blocks it never knew.
+    The unpersist BLOCKS: a non-blocking drop lets one query's blocks
+    bleed into the next one's run, and callers release outside any
+    timed region."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
 
 
 # The one broadcast budget of every size-gated regime (HITS, PageRank,
@@ -93,6 +129,9 @@ def set_reliable(on: bool) -> None:
     _RELIABLE = on
 
 
+_COUNT_KEYS = ("shuffles", "broadcasts", "smj", "bhj", "bnlj", "reused")
+
+
 def plan_counts(jplan) -> dict[str, int]:
     """Structure metrics via REAL plan-tree traversal (not text parse).
 
@@ -119,10 +158,7 @@ def plan_counts(jplan) -> dict[str, int]:
     tests/test_plans.py::test_plan_counts_text_parity_with_reuse pins
     tree_shuffles + reused == legacy_text_count there.
     """
-    c = {
-        "shuffles": 0, "broadcasts": 0, "smj": 0, "bhj": 0, "bnlj": 0,
-        "reused": 0,
-    }
+    c = dict.fromkeys(_COUNT_KEYS, 0)
 
     def walk(node) -> None:
         name = node.nodeName()
@@ -162,31 +198,23 @@ def plan_counts(jplan) -> dict[str, int]:
     return c
 
 
-def _audit_segment(df: DataFrame) -> Callable[[bool], None]:
-    """Capture ``df``'s pre-execution plan for the active plan audit.
-
-    Returns ``record(post)``, to call once the segment has run: it appends
-    the audit entry, with the AQE-finalized plan of the same query
-    execution as ``"post"`` when ``post`` is true and None otherwise. A
-    no-op when no audit is active."""
-    if _AUDIT is None:
-        return lambda post: None
+def _begin(df: DataFrame) -> tuple | None:
+    """The pre-execution half of ``df``'s segment record, or None when
+    no recorder is open."""
+    if _SEGMENTS is None:
+        return None
     qe = df._jdf.queryExecution()
-    pre = qe.executedPlan().toString()
-    counts = plan_counts(qe.executedPlan())
-    opt = qe.optimizedPlan().toJSON()
+    plan = qe.executedPlan()
+    return _SEGMENTS, qe, plan.toString(), qe.optimizedPlan().toJSON(), plan_counts(plan)
 
-    def record(post: bool) -> None:
-        _AUDIT.append(
-            {
-                "pre": pre,
-                "post": qe.executedPlan().toString() if post else None,
-                "opt": opt,
-                "counts": counts,
-            }
-        )
 
-    return record
+def _end(begun: tuple | None, kind: str) -> None:
+    """Append the segment that :func:`_begin` started, once it has run."""
+    if begun is None:
+        return
+    log, qe, pre, opt, counts = begun
+    post = qe.executedPlan().toString() if kind == "checkpoint" else None
+    log.append(Segment(kind, pre, post, opt, counts))
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -197,7 +225,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     none -- on a real cluster, point it at DFS via
     ``spark.sparkContext.setCheckpointDir("hdfs://...")`` first).
     """
-    record = _audit_segment(df)
+    begun = _begin(df)
     if not _RELIABLE:
         out = df.localCheckpoint(eager=eager)
     else:
@@ -205,7 +233,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(tempfile.mkdtemp(prefix="ushas_ckpt_"))
         out = df.checkpoint(eager=eager)
-    record(post=True)
+    _end(begun, "checkpoint")
     return out
 
 
@@ -231,21 +259,21 @@ def pin_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     Storage: MEMORY_AND_DISK (Spark default) -- spills, never OOMs; on
     executor loss the cached partition recomputes from lineage (unlike
     localCheckpoint, which fails the job). The one-time repartition is
-    recorded as a plan-audit segment like materialize, so PLANS.md
-    still charges the pin's shuffle to the query.
+    recorded as a ``"pin"`` segment, so PLANS.md still charges the
+    pin's shuffle to the query.
     """
     pinned = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(
         *[F.col(k) for k in keys]
     )
-    record = _audit_segment(pinned)
+    begun = _begin(pinned)
     pinned = pinned.persist()
     pinned.count()  # eager: populate before the loop references it twice
     # Cache population executes INSIDE the count()'s InMemoryTableScan,
-    # not through the audited qe, so no AQE-finalized plan of the
+    # not through the recorded qe, so no AQE-finalized plan of the
     # population exists anywhere we can reach -- unlike materialize, whose
-    # eager checkpoint executes through the same qe. Record post=None so
+    # eager checkpoint executes through the same qe. A pin's post is None so
     # consumers (tools/gen_plans_md.py) fall back to the pre plan for
     # text-derived columns instead of silently reading an un-executed
     # "post" that is byte-identical to pre.
-    record(post=False)
+    _end(begun, "pin")
     return pinned

@@ -218,17 +218,11 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py::test_jdbc_partitioned_read_and_pushdown);
     an unpartitioned read is a single task.
     """
-    import hashlib
-    import os
-    import tempfile
-
-    # ONE stable Derby path per sf_dir (not mkdtemp per call): repeated
-    # bench/verify invocations reuse the same database -- overwrite mode
-    # resets the table -- instead of accumulating temp dirs and booted
-    # embedded-Derby instances in the driver JVM.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    db_dir = os.path.join(tempfile.gettempdir(), f"ushas_derby_{tag}")
-    url = f"jdbc:derby:{db_dir}/db;create=true"
+    # One in-memory Derby database per sf_dir and JVM: repeated builds
+    # reuse it (overwrite mode resets the table), and two processes
+    # never share a database on disk.
+    tag = "".join(c if c.isalnum() else "_" for c in sf_dir)
+    url = f"jdbc:derby:memory:ushas_{tag};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"

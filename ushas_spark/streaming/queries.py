@@ -8,7 +8,11 @@ StreamTest methodology, collapsed to one scripted action)."""
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
+import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -382,6 +386,37 @@ ORDER BY key
 """
 
 
+def _replay(spark: SparkSession, df: DataFrame, schema: str, merge) -> None:
+    """Stream ``df`` through ``merge`` as a finite replay: four parquet
+    files in a temp dir, read one per micro-batch (maxFilesPerTrigger=1),
+    so the merge genuinely runs incrementally.
+
+    The file stream source orders files by modification time, and files
+    written by four concurrent tasks tie or race on it, so the batch
+    order (and with it the number of rounds an incremental query runs)
+    changed from run to run. The row split is stable (a round-robin
+    repartition sorts each input partition first), so the files get
+    modification times one second apart in part-file order. ``merge``
+    materializes its state, so the feed is dead weight once the stream
+    stops; it is deleted even when ``stop()`` itself raises."""
+    feed = tempfile.mkdtemp(prefix="ushas_feed_")
+    df.repartition(4).write.mode("overwrite").parquet(feed)
+    now = time.time()
+    for i, path in enumerate(sorted(glob.glob(os.path.join(feed, "part-*")))):
+        os.utime(path, (now, now + i))
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed)
+    )
+    q = stream.writeStream.outputMode("update").foreachBatch(merge).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        try:
+            q.stop()
+        finally:
+            shutil.rmtree(feed, ignore_errors=True)
+
+
 @query("streaming_cdc_upsert", oracle=_STREAM_CDC_ORACLE)
 def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC upsert via foreachBatch merge -- the
@@ -400,33 +435,14 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A finite replay of this stream must equal the batch answer -- the
     oracle is the plain latest-wins SQL over the whole log."""
-    import tempfile
-
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from ushas_spark.durability import materialize
     from ushas_spark.io import load_table
 
-    feed = tempfile.mkdtemp(prefix="ushas_cdc_feed_")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
-    )
-    events.repartition(4).write.mode("overwrite").parquet(feed)
-
-    log_stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .select(
-            F.col("user_id").alias("key"),
-            F.col("event_id").alias("seq"),
-            F.when(F.col("event_id") % 10 == 0, "D")
-            .when(F.col("event_id") % 10 == 1, "I")
-            .otherwise("U")
-            .alias("op"),
-            F.round(F.col("value") * 10000).cast("long").alias("val_x10000"),
-        )
     )
 
     state = {
@@ -437,26 +453,25 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("key").orderBy(F.col("seq").desc())
 
     def merge(batch: DataFrame, batch_id: int) -> None:
+        log = batch.select(
+            F.col("user_id").alias("key"),
+            F.col("event_id").alias("seq"),
+            F.when(F.col("event_id") % 10 == 0, "D")
+            .when(F.col("event_id") % 10 == 1, "I")
+            .otherwise("U")
+            .alias("op"),
+            F.round(F.col("value") * 10000).cast("long").alias("val_x10000"),
+        )
         merged = (
             state["df"]
-            .unionByName(batch)
+            .unionByName(log)
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
         )
         state["df"] = materialize(merged)
 
-    q = log_stream.writeStream.outputMode("update").foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        # The merged state is localCheckpoint-ed (materialize), so it no
-        # longer references the feed files; reclaim the SF-sized feed dir
-        # even when q.stop() itself raises.
-        try:
-            q.stop()
-        finally:
-            shutil.rmtree(feed, ignore_errors=True)
+    _replay(spark, events, "event_id bigint, user_id bigint, value double", merge)
 
     return (
         state["df"]
@@ -533,15 +548,12 @@ def streaming_incremental_components(spark: SparkSession, sf_dir: str) -> DataFr
     from-scratch recursive-CTE closure over the full edge log, compared
     PER NODE -- the same incremental == batch gate as the batch
     operator, now across micro-batch boundaries."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ushas_spark.durability import materialize
     from ushas_spark.io import load_table
     from ushas_spark.operators.dedup import connected_components
 
-    feed = tempfile.mkdtemp(prefix="ushas_cc_feed_")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -552,13 +564,6 @@ def streaming_incremental_components(spark: SparkSession, sf_dir: str) -> DataFr
             (F.col("l_suppkey") + 1_000_000_000).alias("b"),
         )
         .distinct()
-    )
-    pairs.repartition(4).write.mode("overwrite").parquet(feed)
-
-    edge_stream = (
-        spark.readStream.schema("a bigint, b bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
     )
 
     state: dict = {
@@ -586,17 +591,7 @@ def streaming_incremental_components(spark: SparkSession, sf_dir: str) -> DataFr
         state["edges"] = edges_all
         state["labels"] = materialize(labels)
 
-    q = edge_stream.writeStream.outputMode("update").foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        # Labels/edges are localCheckpoint-ed; the parquet feed is dead
-        # weight after the stream stops -- reclaim it even when q.stop()
-        # itself raises.
-        try:
-            q.stop()
-        finally:
-            shutil.rmtree(feed, ignore_errors=True)
+    _replay(spark, pairs, "a bigint, b bigint", merge)
 
     return state["labels"].select(
         F.col("id").alias("node"), F.col("label").cast("long").alias("cluster_id")
