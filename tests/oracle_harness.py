@@ -97,9 +97,9 @@ def driver_canon_problems(schema) -> list[str]:
     expr_xpath_url_battery, raw ``xpath()`` array<string>). Every
     registered query must therefore return ATOMIC top-level columns:
     serialize containers first (``F.array_join`` / ``F.to_json``).
-    Enforced on every execution here and statically over every batch
-    query's analyzed schema in tests/test_plan_lint.py, so the crash
-    class cannot recur."""
+    ``tests/test_oracle.py`` checks it first, once per registered query
+    (streaming ones included), on the analyzed schema of the one build
+    that its other checks share, so the crash class cannot recur."""
     import pyspark.sql.types as T
 
     return [
@@ -153,26 +153,19 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[st
     return problems
 
 
-def run_pair(
-    spark, sf_dir: str, query_fn, oracle: str, allow_empty: bool = False
-) -> list[str]:
-    spark_df = query_fn(spark, sf_dir)
-    canon = driver_canon_problems(spark_df.schema)
-    if canon:
-        return canon
-    spark_pdf = spark_df.toPandas()
+def run_pair(spark, sf_dir: str, query_fn, oracle: str) -> list[str]:
+    """Compare the rows of ``query_fn(spark, sf_dir)`` with the ``oracle``
+    SQL's rows over the same ``sf_dir`` (empty == pass)."""
+    spark_pdf = query_fn(spark, sf_dir).toPandas()
     con = duckdb_connect(sf_dir)
     try:
         oracle_pdf = con.execute(oracle).fetchdf()
     finally:
         con.close()
     problems = compare_frames(spark_pdf, oracle_pdf)
-    if not problems and len(spark_pdf) == 0 and not allow_empty:
+    if not problems and len(spark_pdf) == 0:
         # Two empty results "match" vacuously -- that's how a filter
         # window that misses the data range hides a broken query (it
         # happened: TPC-H 1993/94 dates vs a 1995-2001 corpus).
-        problems.append(
-            "both sides returned 0 rows: vacuous match (add to EMPTY_OK "
-            "if genuinely expected)"
-        )
+        problems.append("both sides returned 0 rows: vacuous match")
     return problems

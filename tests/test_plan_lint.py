@@ -1,29 +1,34 @@
-"""Plan lint over EVERY registered query: no scale-killers may ship.
+"""Scale-killer plan lint for EVERY registered query, and its allowances.
 
 This makes the PLANS.md discipline self-enforcing as the registry grows:
-a new query that introduces (a) an unpartitioned WindowExec over
-unbounded input, (b) a CartesianProduct, or (c) a row-at-a-time Python
-eval outside the UDF-conformance module fails the build here, before it
-ever reaches a benchmark or the driver gate.
+a new query that introduces (a) an unpartitioned Window over unbounded
+input, (b) a CartesianProduct, or (c) a Python eval outside the
+UDF-conformance modules fails the build, before it ever reaches a
+benchmark or the driver gate. ``tests/test_oracle.py`` runs
+:func:`scale_killer_problems` on its one build of each registered query,
+streaming ones included, over the final plan AND every segment that
+``durability.segments()`` recorded: an iterative operator's
+``materialize``/``pin_partitioned`` calls cut its plan, and a lint of
+the final plan alone would be blind to every upstream segment.
 
 Global windows are only acceptable over PROVABLY BOUNDED inputs (a
 |buckets|-row offset table, a |months| calendar rollup, a LIMITed
-top-k); each allowance below is reviewed and justified by name. A new
-query that needs one must be added here with its justification -- that
-review step is the point.
+top-k); each allowance below is reviewed and justified by name, with its
+exact count. A new query that needs one must be added here with its
+justification -- that review step is the point.
 """
 
 from __future__ import annotations
 
-import json
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-import pytest
-
-from ushas_spark import registry
+from ushas_spark import durability, registry
 
 registry.load_all()
 
-# name -> (max unpartitioned logical Window nodes, reviewed justification)
+# name -> (exact unpartitioned logical Window nodes across the final plan
+# and every segment, reviewed justification)
 GLOBAL_WINDOW_OK: dict[str, tuple[int, str]] = {
     # events_rfm_segments / events_pareto_concentration need NO allowance:
     # their bucket prefix sums are broadcast theta self-joins, not windows.
@@ -123,82 +128,85 @@ PANDAS_EVAL_OK_NAMES = {
     "sim_pca_power_iteration",
 }
 
-_BATCH_QUERIES = [
-    name
-    for name, fn in registry.QUERIES.items()
-    # Streaming queries execute a real streaming job on invocation; their
-    # stateful plans are audited in tests/test_streaming.py instead.
-    if fn.__module__ != "ushas_spark.streaming.queries"
-]
 
-
-@pytest.mark.parametrize("name", sorted(_BATCH_QUERIES))
-def test_no_scale_killers_in_plan(spark, sf_dir, name):
-    fn = registry.QUERIES[name]
-    df = fn(spark, sf_dir)
-
-    # Driver-gate output-shape lint (VERDICT r09 "What's missing #3"):
-    # the driver's pandas canonicalizer crashes on top-level
-    # array/map/struct columns (the r09 expr_xpath_url_battery red row),
-    # so every registered query must return atomic columns only --
-    # serialize containers with array_join/to_json before returning.
-    # Checked here statically (analysis only, no execution) for every
-    # batch query; streaming queries get the same check at execution in
-    # tests/test_oracle.py.
-    from tests.oracle_harness import driver_canon_problems
-
-    canon = driver_canon_problems(df.schema)
-    assert not canon, f"{name}: " + "; ".join(canon)
-
+def scale_killer_problems(
+    name: str, module: str, df, segs: list[durability.Segment]
+) -> list[str]:
+    """Scale-killers in ``df``'s final plan and in ``segs``, the segments
+    recorded while it was built (empty == pass). ``module`` is the
+    registered function's module, which the Python-eval allowances name.
+    Global windows are read from the optimized logical plans, the other
+    markers from the physical ones."""
     qe = df._jdf.queryExecution()
-
-    nodes = json.loads(qe.optimizedPlan().toJSON())
-    global_windows = sum(
-        1
-        for n in nodes
-        if n["class"].endswith(".Window") and not n.get("partitionSpec")
+    problems = []
+    windows = durability.global_windows(qe.optimizedPlan().toJSON()) + sum(
+        durability.global_windows(s.opt) for s in segs
     )
     allowed, why = GLOBAL_WINDOW_OK.get(name, (0, ""))
-    assert global_windows <= allowed, (
-        f"{name}: {global_windows} unpartitioned Window node(s) in the "
-        f"optimized plan (allowed {allowed}{': ' + why if why else ''}). "
-        "A global window funnels every row through one task at scale -- "
-        "use the bucketed-rank + broadcast-offset pattern "
-        "(queries/analytics.py _bucketed_rank), or add a reviewed "
-        "GLOBAL_WINDOW_OK entry if the input is provably bounded."
-    )
+    if windows != allowed:
+        problems.append(
+            f"{name}: {windows} unpartitioned Window node(s) across the "
+            f"final plan and {len(segs)} segment(s), reviewed count {allowed}"
+            f"{': ' + why if why else ''}. A global window funnels every "
+            "row through one task at scale -- use the bucketed-rank + "
+            "broadcast-offset pattern (queries/analytics.py "
+            "_bucketed_rank), or review the GLOBAL_WINDOW_OK entry if the "
+            "input is provably bounded."
+        )
 
-    phys = qe.sparkPlan().toString()
-    assert "CartesianProduct" not in phys, (
-        f"{name}: CartesianProduct in the physical plan -- an O(N*M) "
-        "scale-killer; add an equi-condition or broadcast the small side."
-    )
-
-    if fn.__module__ not in PY_EVAL_OK_MODULES:
+    markers = {
+        "CartesianProduct": "an O(N*M) scale-killer; add an equi-condition "
+        "or broadcast the small side"
+    }
+    if module not in PY_EVAL_OK_MODULES:
         # A reviewed PANDAS_EVAL_OK_NAMES entry covers Arrow-VECTORIZED
         # eval only (ArrowEvalPython = scalar pandas_udf); row-at-a-time
         # BatchEvalPython is never excusable by a per-query allowance.
-        markers = ("BatchEvalPython",) if name in PANDAS_EVAL_OK_NAMES else (
-            "BatchEvalPython",
-            "ArrowEvalPython",
+        hot = (
+            "Python eval in a hot path outside the UDF conformance module; "
+            "express with built-in functions or mapInPandas"
         )
-        for marker in markers:
-            assert marker not in phys, (
-                f"{name}: {marker} in the physical plan outside the UDF "
-                "conformance module -- Python eval in a hot path; express "
-                "with built-in functions or mapInPandas."
-            )
-
-    if fn.__module__ not in PANDAS_EVAL_OK_MODULES and name not in PANDAS_EVAL_OK_NAMES:
+        markers["BatchEvalPython"] = hot
+        if name not in PANDAS_EVAL_OK_NAMES:
+            markers["ArrowEvalPython"] = hot
+    if module not in PANDAS_EVAL_OK_MODULES and name not in PANDAS_EVAL_OK_NAMES:
         for marker in (
             "MapInPandas",
             "FlatMapGroupsInPandas",
             "FlatMapCoGroupsInPandas",
             "MapInArrow",
         ):
-            assert marker not in phys, (
-                f"{name}: {marker} in the physical plan outside the "
-                "multimodal/UDF modules -- an Arrow-batched Python stage "
-                "smuggled into a relational query; express the logic with "
-                "built-in functions so it stays inside WholeStageCodegen."
+            markers[marker] = (
+                "an Arrow-batched Python stage outside the multimodal/UDF "
+                "modules; express the logic with built-in functions so it "
+                "stays inside WholeStageCodegen"
             )
+    plans = {"final plan": qe.sparkPlan().toString()}
+    plans.update((f"segment {i} ({s.kind})", s.pre) for i, s in enumerate(segs))
+    for marker, reason in markers.items():
+        problems += [
+            f"{name}: {marker} in the {where} -- {reason}"
+            for where, plan in plans.items()
+            if marker in plan
+        ]
+    return problems
+
+
+def test_allowances_name_registered_queries():
+    stale = (set(GLOBAL_WINDOW_OK) | PANDAS_EVAL_OK_NAMES) - set(registry.QUERIES)
+    assert not stale, f"allowances for unregistered queries: {sorted(stale)}"
+
+
+def test_lint_reads_segments_not_only_the_final_plan(spark):
+    """A global window cut off by ``materialize`` is invisible in the
+    final plan; the lint still finds it in the recorded segment."""
+    with durability.segments() as segs:
+        ranked = durability.materialize(
+            spark.range(20).withColumn("r", F.row_number().over(Window.orderBy("id")))
+        )
+        df = ranked.filter("r > 2")
+    final = df._jdf.queryExecution().optimizedPlan().toJSON()
+    assert durability.global_windows(final) == 0
+    assert [s.kind for s in segs] == ["checkpoint"]
+    problems = scale_killer_problems("lint_probe", __name__, df, segs)
+    assert len(problems) == 1 and "1 unpartitioned Window" in problems[0], problems

@@ -134,15 +134,6 @@ def test_exchange_reuse_in_selfjoin(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["q1_pricing_summary", "q5_local_supplier_volume", "window_topk_per_group"],
-)
-def test_no_cartesian_anywhere(spark, sf_dir, name):
-    plan = _plan(QUERIES[name](spark, sf_dir))
-    assert "CartesianProduct" not in plan
-
-
 def test_q19_residual_predicates_pushed(spark, sf_dir):
     """Q19's OR-of-ANDs: Catalyst must extract per-table residuals below
     the join -- the lineitem scan gets the l_quantity range hull, the part

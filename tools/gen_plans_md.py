@@ -19,7 +19,6 @@ Run: python tools/gen_plans_md.py   (writes PLANS.md at the repo root)
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import sys
@@ -69,15 +68,6 @@ no query plans a cartesian product or a row-at-a-time Python UDF.
 """
 
 
-def _global_windows(opt_json: str) -> int:
-    nodes = json.loads(opt_json)
-    return sum(
-        1
-        for n in nodes
-        if n["class"].endswith(".Window") and not n.get("partitionSpec")
-    )
-
-
 def main() -> None:
     from ushas_spark.session import get_spark
     from ushas_spark import registry
@@ -96,7 +86,7 @@ def main() -> None:
             continue
         with durability.segments() as segments:
             df = registry.QUERIES[name](spark, SF_DIR)
-        gwin = _global_windows(df._jdf.queryExecution().optimizedPlan().toJSON())
+        gwin = durability.global_windows(df._jdf.queryExecution().optimizedPlan().toJSON())
         pre = df._jdf.queryExecution().executedPlan().toString()
         df.collect()
         post = df._jdf.queryExecution().executedPlan().toString()
@@ -107,7 +97,7 @@ def main() -> None:
         # planning-time artifacts, present in pre too; AQEShuffleRead can
         # only under-report for those segments, never invent).
         posts = [s.post or s.pre for s in segments] + [post]
-        gwin += sum(_global_windows(s.opt) for s in segments)
+        gwin += sum(durability.global_windows(s.opt) for s in segments)
         # Structure metrics come from REAL plan-tree traversal
         # (durability.plan_counts, recorded per segment at capture
         # time): cached relations print their stored plan inside the

@@ -33,6 +33,7 @@ one ``is None`` check.
 
 from __future__ import annotations
 
+import json
 import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -198,6 +199,17 @@ def plan_counts(jplan) -> dict[str, int]:
     return c
 
 
+def global_windows(opt_json: str) -> int:
+    """Unpartitioned logical ``Window`` nodes in an optimized plan's
+    ``toJSON()``, such as a :class:`Segment`'s ``opt``. Each one funnels
+    every row of its input through a single task."""
+    return sum(
+        1
+        for n in json.loads(opt_json)
+        if n["class"].endswith(".Window") and not n.get("partitionSpec")
+    )
+
+
 def _begin(df: DataFrame) -> tuple | None:
     """The pre-execution half of ``df``'s segment record, or None when
     no recorder is open."""
@@ -217,7 +229,7 @@ def _end(begun: tuple | None, kind: str) -> None:
     log.append(Segment(kind, pre, post, opt, counts))
 
 
-def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and TRUNCATE its logical plan.
 
     Local mode: ``localCheckpoint``. Reliable mode: ``checkpoint`` to the
@@ -227,12 +239,12 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """
     begun = _begin(df)
     if not _RELIABLE:
-        out = df.localCheckpoint(eager=eager)
+        out = df.localCheckpoint(eager=True)
     else:
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             sc.setCheckpointDir(tempfile.mkdtemp(prefix="ushas_ckpt_"))
-        out = df.checkpoint(eager=eager)
+        out = df.checkpoint(eager=True)
     _end(begun, "checkpoint")
     return out
 

@@ -64,8 +64,9 @@ def _assign(emb: DataFrame, cents: DataFrame, rank_limit: int, id_col: str) -> D
 
 _SQL_CENT_IDS = ", ".join(str(c * CENTROID_STRIDE) for c in range(N_CENTROIDS))
 
-_IVF_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+# Oracle CTEs: the corpus vectors ``v``, the ``cents`` centroids and each
+# vector's nearest centroid (``assign``); ends with a comma.
+_ASSIGN_SQL = f"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 cents AS (
   SELECT CAST(vec_id / {CENTROID_STRIDE} AS INT) AS cid, e AS ce
   FROM v WHERE vec_id IN ({_SQL_CENT_IDS})
@@ -79,8 +80,13 @@ assign AS (
                       c.cid) AS crnk
     FROM v, cents c
   ) WHERE crnk <= 1
-),
-qprobe AS (
+),"""
+
+
+def _probe_sql(probe: str, scored: str, nprobe: int) -> str:
+    """Oracle CTEs ``probe``, each query vector's ``nprobe`` nearest
+    centroids, and ``scored``, its candidates from those centroids' lists."""
+    return f"""{probe} AS (
   SELECT vec_id AS qid, e AS qe, cid FROM (
     SELECT v.vec_id, v.e, c.cid,
            ROW_NUMBER() OVER (
@@ -89,13 +95,18 @@ qprobe AS (
                       c.cid) AS crnk
     FROM v, cents c
     WHERE v.vec_id < {N_QUERIES}
-  ) WHERE crnk <= {NPROBE}
+  ) WHERE crnk <= {nprobe}
 ),
-scored AS (
+{scored} AS (
   SELECT DISTINCT q.qid, a.vec_id AS cand_id,
          CAST(ROUND({sql_cosine("q.qe", "a.e")} * 1000000) AS BIGINT) AS sim_x1m
-  FROM qprobe q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.qid
-),
+  FROM {probe} q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.qid
+)"""
+
+
+_IVF_ORACLE = f"""
+WITH {_ASSIGN_SQL}
+{_probe_sql("qprobe", "scored", NPROBE)},
 {_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
@@ -247,22 +258,7 @@ SWEEP_NPROBES = (1, 2, 4)
 
 def _nprobe_chain(p: int) -> str:
     return f"""
-qp{p} AS (
-  SELECT vec_id AS qid, e AS qe, cid FROM (
-    SELECT v.vec_id, v.e, c.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY CAST(ROUND({sql_cosine("v.e", "c.ce")} * 1000000) AS BIGINT) DESC,
-                      c.cid) AS crnk
-    FROM v, cents c
-    WHERE v.vec_id < {N_QUERIES}
-  ) WHERE crnk <= {p}
-),
-sc{p} AS (
-  SELECT DISTINCT q.qid, a.vec_id AS cand_id,
-         CAST(ROUND({sql_cosine("q.qe", "a.e")} * 1000000) AS BIGINT) AS sim_x1m
-  FROM qp{p} q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.qid
-),
+{_probe_sql(f"qp{p}", f"sc{p}", p)},
 rk{p} AS (
   SELECT qid, cand_id FROM (
     SELECT qid, cand_id,
@@ -274,21 +270,7 @@ rk{p} AS (
 
 def _nprobe_sweep_oracle() -> str:
     head = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-cents AS (
-  SELECT CAST(vec_id / {CENTROID_STRIDE} AS INT) AS cid, e AS ce
-  FROM v WHERE vec_id IN ({_SQL_CENT_IDS})
-),
-assign AS (
-  SELECT vec_id, e, cid FROM (
-    SELECT v.vec_id, v.e, c.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY CAST(ROUND({sql_cosine("v.e", "c.ce")} * 1000000) AS BIGINT) DESC,
-                      c.cid) AS crnk
-    FROM v, cents c
-  ) WHERE crnk <= 1
-),
+WITH {_ASSIGN_SQL}
 truth AS (
   SELECT qid, cand_id FROM (
     SELECT q.vec_id AS qid, v.vec_id AS cand_id,

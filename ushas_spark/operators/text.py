@@ -194,6 +194,17 @@ def _stopword_vote(toks: Column) -> tuple[dict[str, Column], Column]:
     return scores, guess
 
 
+def _lang_vote_sql(pad: str) -> str:
+    """The SQL mirror of :func:`_stopword_vote`'s guess over the ``s_*``
+    score columns; every line after the first starts with ``pad``."""
+    return f"""CASE
+{pad}  WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+{pad}  WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+{pad}  WHEN s_de >= s_fr THEN 'de'
+{pad}  ELSE 'fr'
+{pad}END"""
+
+
 _LANG_ORACLE = f"""
 WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
            FROM documents),
@@ -206,12 +217,7 @@ s AS (
   FROM t
 )
 SELECT doc_id,
-       CASE
-         WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-         WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-         WHEN s_de >= s_fr THEN 'de'
-         ELSE 'fr'
-       END AS lang_guess,
+       {_lang_vote_sql("       ")} AS lang_guess,
        CAST(s_en AS BIGINT) AS s_en
 FROM s
 ORDER BY doc_id
@@ -611,6 +617,14 @@ idf AS (
   GROUP BY word, n
 )"""
 
+# Oracle tail: the TFIDF_TOPK best-scored ``did`` per ``qid`` of ``scored``.
+_TOPK_SQL = f"""SELECT qid, did, score, rnk FROM (
+  SELECT qid, did, score,
+         ROW_NUMBER() OVER (PARTITION BY qid
+                            ORDER BY score DESC, did) AS rnk
+  FROM scored)
+WHERE rnk <= {TFIDF_TOPK} ORDER BY qid, rnk
+"""
 
 _TFIDF_ORACLE = f"""
 WITH {_TF_SQL}, {_IDF_SQL}, q AS (
@@ -623,13 +637,20 @@ WITH {_TF_SQL}, {_IDF_SQL}, q AS (
          JOIN tf ON tf.word = q.word AND tf.doc_id <> q.qid
   GROUP BY q.qid, tf.doc_id
 )
-SELECT qid, did, score, rnk FROM (
-  SELECT qid, did, score,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY score DESC, did) AS rnk
-  FROM scored)
-WHERE rnk <= {TFIDF_TOPK} ORDER BY qid, rnk
-"""
+{_TOPK_SQL}"""
+
+
+def _top_per_query(scored: DataFrame) -> DataFrame:
+    """The TFIDF_TOPK best-scored ``did`` per ``qid``, ranked ``rnk``
+    (ties to the lower ``did``)."""
+    from pyspark.sql import Window as W
+
+    wnd = W.partitionBy("qid").orderBy(F.col("score").desc(), "did")
+    return (
+        scored.withColumn("rnk", F.row_number().over(wnd))
+        .where(F.col("rnk") <= TFIDF_TOPK)
+        .orderBy("qid", "rnk")
+    )
 
 
 @query("text_tfidf_topk", oracle=_TFIDF_ORACLE)
@@ -677,14 +698,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    from pyspark.sql import Window as W
-
-    wnd = W.partitionBy("qid").orderBy(F.col("score").desc(), "did")
-    return (
-        scored.withColumn("rnk", F.row_number().over(wnd))
-        .where(F.col("rnk") <= TFIDF_TOPK)
-        .orderBy("qid", "rnk")
-    )
+    return _top_per_query(scored)
 
 
 # --- BM25 retrieval (exact rational arithmetic) ----------------------------
@@ -722,13 +736,7 @@ WITH {_TF_SQL}, dl AS (
          CROSS JOIN corpus c
   GROUP BY q.qid, t.doc_id
 )
-SELECT qid, did, score, rnk FROM (
-  SELECT qid, did, score,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY score DESC, did) AS rnk
-  FROM scored)
-WHERE rnk <= {TFIDF_TOPK} ORDER BY qid, rnk
-"""
+{_TOPK_SQL}"""
 
 
 @query("text_bm25_topk", oracle=_BM25_ORACLE)
@@ -768,14 +776,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    from pyspark.sql import Window as W
-
-    wnd = W.partitionBy("qid").orderBy(F.col("score").desc(), "did")
-    return (
-        scored.withColumn("rnk", F.row_number().over(wnd))
-        .where(F.col("rnk") <= TFIDF_TOPK)
-        .orderBy("qid", "rnk")
-    )
+    return _top_per_query(scored)
 
 
 # --- keyword extraction (top TF-IDF terms per document) --------------------
@@ -832,12 +833,7 @@ s AS (
   FROM t
 ), pred AS (
   SELECT lang AS actual,
-         CASE
-           WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-           WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-           WHEN s_de >= s_fr THEN 'de'
-           ELSE 'fr'
-         END AS predicted
+         {_lang_vote_sql("         ")} AS predicted
   FROM s
 )
 SELECT actual, predicted,
@@ -1094,8 +1090,9 @@ _FLUENCY_BIGRAMS_SQL = (
     " ELSE [] END"
 ).replace("s[i", "regexp_split_to_array(text, '\\s+')[i")
 
-_FLUENCY_ORACLE = f"""
-WITH bg AS MATERIALIZED (
+# Oracle CTEs: each document's bigram counts (``docbg``) and every
+# bigram's add-one smoothed probability given its first word (``scored``).
+_FLUENCY_SCORED_SQL = f"""bg AS MATERIALIZED (
   SELECT doc_id, unnest({_FLUENCY_BIGRAMS_SQL}) AS bigram FROM documents
 ), docbg AS (
   SELECT doc_id, bigram, CAST(COUNT(*) AS BIGINT) AS n_in_doc
@@ -1111,7 +1108,10 @@ scored AS (
   SELECT cbg.bigram,
          ((c12 + 1) * {FLUENCY_SCALE}) // (c1 + v) AS p_x1m
   FROM cbg JOIN cpre ON cbg.prefix = cpre.prefix CROSS JOIN vocab
-), perdoc AS (
+)"""
+
+_FLUENCY_ORACLE = f"""
+WITH {_FLUENCY_SCORED_SQL}, perdoc AS (
   SELECT d.doc_id,
          SUM(d.n_in_doc * s.p_x1m) // SUM(d.n_in_doc) AS fluency_x1m
   FROM docbg d JOIN scored s ON d.bigram = s.bigram
@@ -1659,23 +1659,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- CCNet head/middle/tail
 
 _CCNET_ORACLE = f"""
-WITH bg AS MATERIALIZED (
-  SELECT doc_id, unnest({_FLUENCY_BIGRAMS_SQL}) AS bigram FROM documents
-), docbg AS (
-  SELECT doc_id, bigram, CAST(COUNT(*) AS BIGINT) AS n_in_doc
-  FROM bg GROUP BY doc_id, bigram
-), cbg AS (
-  SELECT bigram, CAST(SUM(n_in_doc) AS BIGINT) AS c12,
-         split_part(bigram, ' ', 1) AS prefix
-  FROM docbg GROUP BY bigram
-), cpre AS (
-  SELECT prefix, CAST(SUM(c12) AS BIGINT) AS c1 FROM cbg GROUP BY prefix
-), vocab AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM cpre),
-scored AS (
-  SELECT cbg.bigram,
-         ((c12 + 1) * {FLUENCY_SCALE}) // (c1 + v) AS p_x1m
-  FROM cbg JOIN cpre ON cbg.prefix = cpre.prefix CROSS JOIN vocab
-), perdoc AS MATERIALIZED (
+WITH {_FLUENCY_SCORED_SQL}, perdoc AS MATERIALIZED (
   SELECT d.doc_id,
          SUM(d.n_in_doc * s.p_x1m) // SUM(d.n_in_doc) AS fluency_x1m
   FROM docbg d JOIN scored s ON d.bigram = s.bigram

@@ -49,6 +49,29 @@ FROM p
 """
 
 
+def _funnel_stages(e: DataFrame, w) -> DataFrame:
+    """Add each user's first view (``t_view``), first click after it
+    (``t_click``) and first purchase after that (``t_purchase``): three
+    window-mins over the one user partition ``w``."""
+
+    def first_after(event_type: str, prev: str):
+        return F.min(
+            F.when(
+                (F.col("event_type") == event_type) & (F.col("ts") > F.col(prev)),
+                F.col("ts"),
+            )
+        ).over(w)
+
+    return (
+        e.withColumn(
+            "t_view",
+            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
+        )
+        .withColumn("t_click", first_after("click", "t_view"))
+        .withColumn("t_purchase", first_after("purchase", "t_click"))
+    )
+
+
 @query("events_funnel_conversion", oracle=_FUNNEL_ORACLE)
 def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDERED funnel view -> click -> purchase: a user converts a stage
@@ -62,33 +85,7 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the events table; the final count is a scalar aggregate.
     """
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    w = W.partitionBy("user_id")
-    staged = (
-        e.withColumn(
-            "t_view",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("t_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("t_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
+    staged = _funnel_stages(e, W.partitionBy("user_id"))
     per_user = staged.groupBy("user_id").agg(
         F.first("t_view").alias("t_view"),
         F.first("t_click").alias("t_click"),
@@ -714,6 +711,20 @@ ORDER BY user_id
 """
 
 
+def _user_gaps(e: DataFrame) -> DataFrame:
+    """``(user_id, gap_us)``: the exact microseconds between each event
+    and the user's previous one, ordered by ``(ts, event_id)``."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        e.withColumn("prev_ts", F.lag("ts").over(w))
+        .filter(F.col("prev_ts").isNotNull())
+        .select(
+            "user_id",
+            (F.unix_micros("ts") - F.unix_micros("prev_ts")).alias("gap_us"),
+        )
+    )
+
+
 @query("events_inactive_gap", oracle=_GAP_ORACLE)
 def events_inactive_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user longest inactivity gap + churn-risk flag (gap > 7 days)
@@ -723,15 +734,7 @@ def events_inactive_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id"
     )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = (
-        e.withColumn("prev_ts", F.lag("ts").over(w))
-        .filter(F.col("prev_ts").isNotNull())
-        .select(
-            "user_id",
-            (F.unix_micros("ts") - F.unix_micros("prev_ts")).alias("gap_us"),
-        )
-    )
+    gaps = _user_gaps(e)
     return (
         gaps.groupBy("user_id")
         .agg(
@@ -944,16 +947,9 @@ ORDER BY m.ym
 """
 
 
-@query("window_yoy_revenue", oracle=_YOY_ORACLE)
-def window_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly revenue with year-over-year comparison: month rollup,
-    then a calendar self-join on the month-minus-12 key (add_months),
-    NOT a positional lag(12) -- a positional lag silently compares the
-    wrong months whenever the series has a gap. Revenue is exact x100
-    integer sums, so deltas gate bit-for-bit; the self-join runs over
-    |months| rows (tiny, broadcast)."""
-    o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
+def _monthly_revenue(o: DataFrame) -> DataFrame:
+    """``(ym, rev_x100)``: exact x100 order revenue per ``yyyy-MM`` month."""
+    return o.groupBy(
         F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
             "ym"
         )
@@ -962,6 +958,17 @@ def window_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev_x100"
         )
     )
+
+
+@query("window_yoy_revenue", oracle=_YOY_ORACLE)
+def window_yoy_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Monthly revenue with year-over-year comparison: month rollup,
+    then a calendar self-join on the month-minus-12 key (add_months),
+    NOT a positional lag(12) -- a positional lag silently compares the
+    wrong months whenever the series has a gap. Revenue is exact x100
+    integer sums, so deltas gate bit-for-bit; the self-join runs over
+    |months| rows (tiny, broadcast)."""
+    monthly = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     prev = monthly.select(
         F.col("ym").alias("p_ym"), F.col("rev_x100").alias("p_rev_x100")
     )
@@ -1667,32 +1674,8 @@ def events_funnel_by_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup."""
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = W.partitionBy("user_id")
-    staged = (
-        e.withColumn("cohort_week", F.date_trunc("week", F.min("ts").over(w)))
-        .withColumn(
-            "t_view",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("t_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("t_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
+    staged = _funnel_stages(
+        e.withColumn("cohort_week", F.date_trunc("week", F.min("ts").over(w))), w
     )
     per_user = staged.groupBy("user_id").agg(
         F.first("cohort_week").alias("cohort_week"),
@@ -1766,16 +1749,7 @@ def events_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over the tiny sorted array inside a single-row aggregate --
     no global window, no collect; the fact table is touched once.
     """
-    o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-            "ym"
-        )
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "rev_x100"
-        )
-    )
+    monthly = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     arr = monthly.agg(
         F.max("ym").alias("last_ym"),
         F.transform(
@@ -1887,16 +1861,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate folding the tiny sorted array -- no global window, no
     collect, fact touched once (same scale story as
     events_forecast_holt)."""
-    o = load_table(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
-            "ym"
-        )
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-            "rev_x100"
-        )
-    )
+    monthly = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     arr = monthly.agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("ym"), F.col("rev_x100")))
@@ -3097,14 +3062,8 @@ def events_bot_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning -- no global window), then a map-side-combinable
     per-user aggregate. Nothing downstream exceeds |users| rows."""
     e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
-        e.withColumn("prev_ts", F.lag("ts").over(w))
-        .filter(F.col("prev_ts").isNotNull())
-        .select(
-            "user_id",
-            (F.unix_micros("ts") - F.unix_micros("prev_ts")).alias("gap_us"),
-        )
+        _user_gaps(e)
         # Moments accumulate at SECOND resolution: a month-long gap is
         # ~2.6e12 us, whose square overflows BIGINT; in seconds the
         # square is ~6.7e12, leaving six orders of headroom for the
