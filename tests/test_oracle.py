@@ -7,7 +7,7 @@ import pytest
 import __spark_entry__ as entrymod
 from tests import lineage_digest
 from tests.oracle_harness import driver_canon_problems, run_pair
-from tests.test_plan_lint import scale_killer_problems
+from tests.test_plan_lint import LINTED, scale_killer_problems
 from ushas_spark import durability
 from ushas_spark.lineage import lineage
 
@@ -27,7 +27,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
         df = fn(spark, sf_dir)
     canon = driver_canon_problems(df.schema)
     assert not canon, f"{name}: " + "; ".join(canon)
-    killers = scale_killer_problems(name, fn.__module__, df, segs)
+    killers = LINTED[name] = scale_killer_problems(name, fn.__module__, df, segs)
     assert not killers, "; ".join(killers)
     graph = lineage(df)
     assert lineage_digest.digest(graph) == DIGESTS[name], (

@@ -9,7 +9,10 @@ benchmark or the driver gate. ``tests/test_oracle.py`` runs
 streaming ones included, over the final plan AND every segment that
 ``durability.segments()`` recorded: an iterative operator's
 ``materialize``/``pin_partitioned`` calls cut its plan, and a lint of
-the final plan alone would be blind to every upstream segment.
+the final plan alone would be blind to every upstream segment. It keeps
+each result in :data:`LINTED`, and ``test_no_scale_killers_in_plan``
+reports that result under the query's own name, building the query
+itself only when ``test_oracle`` did not run in the session.
 
 Global windows are only acceptable over PROVABLY BOUNDED inputs (a
 |buckets|-row offset table, a |months| calendar rollup, a LIMITed
@@ -20,6 +23,7 @@ justification -- that review step is the point.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -129,6 +133,10 @@ PANDAS_EVAL_OK_NAMES = {
 }
 
 
+# name -> scale_killer_problems of this session's one build of the query
+LINTED: dict[str, list[str]] = {}
+
+
 def scale_killer_problems(
     name: str, module: str, df, segs: list[durability.Segment]
 ) -> list[str]:
@@ -190,6 +198,16 @@ def scale_killer_problems(
             if marker in plan
         ]
     return problems
+
+
+@pytest.mark.parametrize("name", sorted(registry.QUERIES))
+def test_no_scale_killers_in_plan(spark, sf_dir, name):
+    if name not in LINTED:
+        fn = registry.QUERIES[name]
+        with durability.segments() as segs:
+            df = fn(spark, sf_dir)
+        LINTED[name] = scale_killer_problems(name, fn.__module__, df, segs)
+    assert not LINTED[name], "; ".join(LINTED[name])
 
 
 def test_allowances_name_registered_queries():
