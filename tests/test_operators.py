@@ -206,11 +206,38 @@ def test_connected_components_chain_triangle_singleton(spark):
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0), (4, 4), (5, 4), (6, 4), (7, 7)}
 
 
+def test_connected_components_edgeless_graph_terminates(spark):
+    """No edges: every node labels itself and the loop ends. The size
+    and change flags are read with ``Observation.get``, which blocks
+    with no timeout if its metric never arrives, so the run is bounded
+    by a thread join here instead of hanging the suite."""
+    import threading
+
+    from ushas_spark.operators.dedup import connected_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(4)], ["id"])
+    edges = spark.createDataFrame([], "src long, dst long")
+    got = []
+    run = threading.Thread(
+        target=lambda: got.extend(
+            connected_components(nodes, edges, id_col="id").collect()
+        ),
+        daemon=True,
+    )
+    run.start()
+    run.join(timeout=120)
+    assert not run.is_alive(), "connected_components did not terminate"
+    assert {(r.id, r.label) for r in got} == {(i, i) for i in range(4)}
+
+
 def test_connected_components_reliable_checkpoint_mode(spark):
     """durability.set_reliable(True) routes every iterative truncation
     point through a RELIABLE checkpoint (executor-loss tolerant, the
     100 TB / preemptible-fleet setting) -- results must be identical and
-    checkpoint files must actually land in the checkpoint dir."""
+    checkpoint files must actually land in the checkpoint dir. The
+    convergence flag is observed on the checkpointed frame, so the same
+    number of rounds (checkpoint segments) as in local mode shows the
+    observation fires under ``checkpoint(eager=True)`` too."""
     import os
 
     from ushas_spark import durability
@@ -220,12 +247,17 @@ def test_connected_components_reliable_checkpoint_mode(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (4, 5), (5, 6), (4, 6)], ["src", "dst"]
     )
+
+    def run() -> tuple[set, int]:
+        with durability.segments() as segs:
+            df = connected_components(nodes, edges, id_col="id")
+        rows = {(r.id, r.label) for r in df.collect()}
+        return rows, sum(s.kind == "checkpoint" for s in segs)
+
+    local, local_ckpts = run()
     durability.set_reliable(True)
     try:
-        got = {
-            (r.id, r.label)
-            for r in connected_components(nodes, edges, id_col="id").collect()
-        }
+        got, ckpts = run()
         ckpt_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
         assert not ckpt_dir.isEmpty()
         path = ckpt_dir.get()
@@ -233,6 +265,30 @@ def test_connected_components_reliable_checkpoint_mode(spark):
     finally:
         durability.set_reliable(False)
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0), (4, 4), (5, 4), (6, 4), (7, 7)}
+    assert got == local
+    assert ckpts == local_ckpts
+
+
+def test_image_dedup_clusters_job_count(spark, sf_dir):
+    """Building multimodal_image_dedup_clusters launches at most 19
+    Spark jobs (the count at sf0.001 and sf0.01): connected components
+    reads its regime gate and convergence flag from observations on its
+    materialize jobs, and the aHash table is materialized unsorted. A
+    per-round count job or a sort-sampling job brought back fails this
+    pin."""
+    from ushas_spark import durability
+
+    load_table(spark, sf_dir, "documents")  # schema inference is not the build
+    sc = spark.sparkContext
+    group = "test_image_dedup_clusters_job_count"
+    sc.setJobGroup(group, group, False)
+    try:
+        multimodal.multimodal_image_dedup_clusters(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+        durability.release(spark)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 19, f"{jobs} jobs"
 
 
 def test_banded_join_matches_naive_theta(spark, sf_dir):
@@ -400,6 +456,21 @@ def test_kmeans_objective_nonincreasing(spark, sf_dir):
         totals.append(a.agg(F.sum("dist_x1m").alias("s")).collect()[0].s)
     assert totals[1] <= totals[0], totals
     assert totals[2] <= totals[1], totals
+
+
+def test_spread_never_narrows(spark):
+    """The k-means corpus spread round-robins a scan narrower than
+    defaultParallelism to exactly that width, and leaves a frame that
+    already has defaultParallelism partitions or more untouched."""
+    from ushas_spark.operators.clustering import spread
+
+    n = spark.sparkContext.defaultParallelism
+    for width in (n, n + 3):
+        wide = spark.range(0, 100, 1, numPartitions=width)
+        assert spread(wide) is wide
+    narrow = spread(spark.range(0, 100, 1, numPartitions=1))
+    assert narrow.rdd.getNumPartitions() == n
+    assert sorted(r.id for r in narrow.collect()) == list(range(100))
 
 
 def test_kmeans_all_clusters_populated(spark, sf_dir):

@@ -112,14 +112,18 @@ def release(spark) -> None:
 BROADCAST_MAX_ROWS = 10_000_000
 
 
-def broadcast_fits(df: DataFrame) -> bool:
-    """True when ``df``'s row count is within :data:`BROADCAST_MAX_ROWS`.
+def broadcast_fits(rows: DataFrame | int) -> bool:
+    """True when ``rows`` is within :data:`BROADCAST_MAX_ROWS`.
 
-    Runs one count job; callers pass either a parquet table (a metadata
-    count) or a just-materialized frame (a scan of cached blocks). The
-    budget is read at call time, so patching the module global moves
-    every gate."""
-    return df.count() <= BROADCAST_MAX_ROWS
+    ``rows`` is a row count the caller already knows -- an iterative
+    operator observes it (``pyspark.sql.Observation``) on the frame it
+    hands to :func:`materialize`, so the gate costs no job -- or a
+    DataFrame, counted here in one job (callers pass a parquet table,
+    whose count is a metadata read). The budget is read at call time,
+    so patching the module global moves every gate."""
+    if isinstance(rows, DataFrame):
+        rows = rows.count()
+    return rows <= BROADCAST_MAX_ROWS
 
 
 def set_reliable(on: bool) -> None:

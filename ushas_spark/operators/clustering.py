@@ -5,13 +5,15 @@ a production vector pipeline is the iterative *training* of the
 quantiser itself. This module runs k-means as a pure DataFrame loop:
 
 - **assign**: corpus crossJoin broadcast(centroids) -> squared-L2 fold
-  (``zip_with`` + ``aggregate``, whole-stage codegen'd) -> per-vector
-  argmin via one window. The centroid table is K rows, so the "cross
-  join" is a broadcast nested loop over a K-row build side -- at 100 TB
-  this is exactly one corpus scan per iteration, no shuffle on the big
-  side (the only exchange is the per-vector window, partitioned by
-  vec_id, and even that collapses into the argmin via min_by in the
-  stats variant).
+  (``zip_with`` + ``aggregate``; both are ``CodegenFallback``
+  expressions on Spark 4.1, so the projection holding the fold runs
+  interpreted, outside whole-stage codegen) -> per-vector argmin via
+  one window. The centroid table is K rows, so the "cross join" is a
+  broadcast nested loop over a K-row build side -- at 100 TB this is
+  exactly one corpus scan per iteration, no shuffle on the big side
+  (the only exchange is the per-vector window, partitioned by vec_id,
+  and even that collapses into the argmin via min_by in the stats
+  variant).
 - **update**: posexplode assigned vectors -> (cluster, dim) partial sums
   -- a map-side-combinable shuffle whose key space is K x DIM rows, so
   no reducer ever holds a whole cluster -- then rebuild the centroid
@@ -35,7 +37,7 @@ reproducible reformulation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ushas_spark.durability import materialize
@@ -49,12 +51,13 @@ INIT_STRIDE = 61  # centroid c initialised from the vector with vec_id == c*61
 DIST_SCALE = 1_000_000
 
 
-def sqdist(a: Column, b: Column) -> Column:
-    """Sequential left-fold squared L2 distance (JVM lambda, codegen'd)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def spark_sqdist(a: str, b: str) -> str:
+    """Sequential left-fold squared L2 distance as Spark SQL (JVM
+    lambdas, interpreted: ``ZipWith``/``ArrayAggregate`` are
+    ``CodegenFallback``)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " 0D, (acc, v) -> acc + v)"
     )
 
 
@@ -87,16 +90,10 @@ def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     entirely.)
     """
     carr = cents.agg(F.collect_list(F.struct("cid", "ce")).alias("cs"))
-    m = F.array_min(
-        F.transform(
-            "cs",
-            lambda c: F.struct(
-                F.round(sqdist(F.col("e"), c["ce"]) * DIST_SCALE)
-                .cast("long")
-                .alias("ds"),
-                c["cid"].alias("cid"),
-            ),
-        )
+    m = F.expr(
+        "array_min(transform(cs, c -> struct("
+        f"CAST(round({spark_sqdist('e', 'c.ce')} * {DIST_SCALE}) AS BIGINT) AS ds,"
+        " c.cid AS cid)))"
     )
     return (
         emb.crossJoin(F.broadcast(carr))
@@ -133,31 +130,53 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_assign(
-    spark: SparkSession, sf_dir: str, k: int = K, iters: int = ITERS
-) -> DataFrame:
-    """Final (vector -> cluster, scaled distance) after ``iters`` Lloyd
-    rounds from the stride init.
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` round-robined over ``defaultParallelism`` partitions when
+    its scan is narrower than that, else ``df`` itself -- so a wide input
+    is never narrowed. A small file is one row group, so without this
+    every Lloyd round's interpreted distance fold runs in one task."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
-    The projected corpus (vec_id + double array) is materialized ONCE
-    (OPTIMIZATION_r12.md item 5): every _assign round is
-    exchange-free (1-row centroid broadcast), so re-deriving `emb` per
-    round paid ``iters + 1`` parquet scans + string->double-array
-    conversions for nothing. Won both interleaved isolated sf0.1
-    pairings (2.38/2.25 s vs 2.94/2.38 best-of-3), hash-identical; the
-    win is the conversion work, so it grows with corpus size. This is
-    the canonical Lloyd shape (Spark MLlib warns when its k-means input
-    is not cached); on a 100 TB fleet the materialize target moves to
-    reliable storage via durability.set_reliable(True) like every other
-    iterative operator here."""
+
+def kmeans_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (vec_id, e double array) corpus every Lloyd loop reads,
+    spread over the cores and materialized ONCE (OPTIMIZATION_r12.md
+    item 5): every _assign round is exchange-free (1-row centroid
+    broadcast), so re-deriving it per round paid ``iters + 1`` parquet
+    scans + array conversions for nothing. This is the canonical Lloyd
+    shape (Spark MLlib warns when its k-means input is not cached); on
+    a 100 TB fleet the materialize target moves to reliable storage via
+    durability.set_reliable(True) like every other iterative operator
+    here."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    emb = materialize(emb)
+    return materialize(spread(emb))
+
+
+def _lloyd(emb: DataFrame, k: int = K, iters: int = ITERS) -> DataFrame:
+    """The centroid table after ``iters`` Lloyd rounds over ``emb``
+    from the stride init, each round materialized (K rows)."""
     cents = _init_centroids(emb, k)
     for _ in range(iters):
         cents = materialize(_update(_assign(emb, cents)))
-    return _assign(emb, cents).select(
+    return cents
+
+
+def kmeans_assign(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = K,
+    iters: int = ITERS,
+    emb: DataFrame | None = None,
+) -> DataFrame:
+    """Final (vector -> cluster, scaled distance) after ``iters`` Lloyd
+    rounds from the stride init, over ``emb`` (a :func:`kmeans_corpus`
+    to share between runs) or a fresh corpus."""
+    if emb is None:
+        emb = kmeans_corpus(spark, sf_dir)
+    return _assign(emb, _lloyd(emb, k, iters)).select(
         "vec_id", F.col("cid").alias("cluster"), F.col("ds").alias("dist_x1m")
     )
 
@@ -304,12 +323,14 @@ def cluster_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo, and the reason the arithmetic had to be engine-exact.
 
     Scale shape: k sweeps are independent (a real run launches them
-    concurrently); per sweep the corpus is scanned once per round with
-    broadcast centroids. Inertia sums are exact scaled integers, so
-    the elbow curve is bit-stable across engines and retries."""
+    concurrently) and share one materialized corpus; per sweep the
+    corpus is scanned once per round with broadcast centroids. Inertia
+    sums are exact scaled integers, so the elbow curve is bit-stable
+    across engines and retries."""
+    emb = kmeans_corpus(spark, sf_dir)
     rows = []
     for k in ELBOW_KS:
-        a = kmeans_assign(spark, sf_dir, k=k)
+        a = kmeans_assign(spark, sf_dir, k=k, emb=emb)
         rows.append(
             a.agg(
                 F.count(F.lit(1)).alias("n_vectors"),
@@ -388,20 +409,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ushas_spark.operators.similarity import dot
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec(F.col("embedding")).alias("e")
-    )
-    # Same one-line transfer as kmeans_assign (OPTIMIZATION_r12.md
-    # item 10): the inline Lloyd loop otherwise
-    # re-scans parquet and re-runs the string->double-array conversion
-    # in every _assign round (ITERS + 1 corpus passes). Won both
-    # interleaved isolated sf0.1 pairings (6.99/5.23 s vs 9.10/8.03
-    # best-of-3), hash-identical; the per-row float-op sequence is
-    # untouched so outputs are bit-identical by construction.
-    emb = materialize(emb)
-    cents = _init_centroids(emb)
-    for _ in range(ITERS):
-        cents = materialize(_update(_assign(emb, cents)))
+    emb = kmeans_corpus(spark, sf_dir)
+    cents = _lloyd(emb)
     # Norms are computed ONCE per vector here, not once per pair: the
     # pair stage then does a single dot fold instead of three.
     # sqrt(dot(a,a)) * sqrt(dot(b,b)) is the exact float-op sequence of

@@ -21,7 +21,7 @@ also means re-runs and incremental runs agree.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -639,8 +639,9 @@ def connected_components(
       logical plan -- without it the plan doubles per iteration and the
       driver dies re-optimizing before the data is ever the bottleneck
       (the classic iterative-Spark failure mode);
-    - the convergence probe aggregates a single change count per round
-      (a scalar to the driver, not data).
+    - convergence is a ``max(_chg)`` observed (``pyspark.sql.Observation``)
+      on the round's frame while its own materialize job runs: a scalar
+      to the driver and no extra job per round.
 
     ``init_labels`` ((id, label) rows) seeds the propagation instead of
     the identity labelling -- the INCREMENTAL-maintenance entry point:
@@ -651,8 +652,8 @@ def connected_components(
 
     r12 regime gate (OPTIMIZATION_r12.md item 3; same pattern as
     graph_hits_hub_authority): when the edge-node universe fits
-    durability.BROADCAST_MAX_ROWS (decided by a near-free count over the
-    just-materialized labels table), the loop switches to a folded
+    durability.BROADCAST_MAX_ROWS (a row count observed while the labels
+    table materializes), the loop switches to a folded
     broadcast shape -- SELF-LOOP rows (own=true) are baked into the
     edge list once, the edges are pinned on D (the groupBy key), and
     the labels side joins as an explicit broadcast -- so one BHJ per
@@ -688,20 +689,20 @@ def connected_components(
     # shuffle; whole query 5.2s -> 4.8s isolated, best-of-3).
     edge_nodes = sym_raw.select(F.col("s").alias("id")).distinct()
     if init_labels is None:
-        labels = materialize(edge_nodes.withColumn("label", F.col("id")))
+        labels = edge_nodes.withColumn("label", F.col("id"))
     else:
         seeds = init_labels.select(
             F.col(init_labels.columns[0]).alias("sid"),
             F.col(init_labels.columns[1]).alias("slabel"),
         )
-        labels = materialize(
-            edge_nodes.join(seeds, edge_nodes.id == seeds.sid, "left").select(
-                "id", F.coalesce("slabel", F.col("id")).alias("label")
-            )
+        labels = edge_nodes.join(seeds, edge_nodes.id == seeds.sid, "left").select(
+            "id", F.coalesce("slabel", F.col("id")).alias("label")
         )
-    # Regime gate (see docstring): count over the just-materialized
-    # labels table -- a localCheckpointed |V'|-row scan, near-free.
-    small_v = broadcast_fits(labels)
+    # Regime gate (see docstring): the |V'| row count is observed while
+    # the labels table materializes, so the gate launches no job.
+    size = Observation()
+    labels = materialize(labels.observe(size, F.count(F.lit(1)).alias("n")))
+    small_v = broadcast_fits(size.get["n"])
     if small_v:
         # Folded broadcast loop: self-loops (own=true) baked into the
         # d-pinned edge list once; one BHJ per round emits neighbor AND
@@ -767,10 +768,14 @@ def connected_components(
                     "id", "label", (F.col("label") < F.col("_old")).alias("_chg")
                 )
             )
-        new_labels = materialize(new_labels)
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
+        # The change flag is observed by the materialize job itself; an
+        # empty round (no edges) reports null, which is "no change".
+        chg = Observation()
+        new_labels = materialize(
+            new_labels.observe(chg, F.max("_chg").alias("any"))
+        )
         labels = new_labels.drop("_chg")
-        if changed == 0:
+        if not chg.get["any"]:
             break
     # Re-attach singletons: every node not in any edge labels itself.
     all_nodes = nodes.select(F.col(id_col).alias("id"))

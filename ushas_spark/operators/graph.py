@@ -32,7 +32,7 @@ GraphX is RDD-based and out of its SQL surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ushas_spark.durability import broadcast_fits, materialize, pin_partitioned
@@ -461,9 +461,9 @@ def triangle_summary(edges: DataFrame) -> DataFrame:
     Regime gate (OPTIMIZATION_r12.md item 7; same rationale as the
     HITS/CC/PAGERANK/KCORE gates): the degree tables are |V|-row
     two-column frames and the oriented adjacency holds E total array
-    entries, so below durability.BROADCAST_MAX_ROWS (over the
-    just-materialized edge count) both degree joins and the closing
-    intersection join take explicit broadcasts -- the E-row
+    entries, so below durability.BROADCAST_MAX_ROWS (the edge count,
+    observed while the edges materialize) both degree joins and the
+    closing intersection join take explicit broadcasts -- the E-row
     array-carrying exchange on t (by bytes the heaviest shuffle here)
     disappears and the SMJ degree joins become map-side BHJs. Audited
     8 -> 6 summed shuffles, SMJ 2 -> 0; won three interleaved isolated
@@ -472,8 +472,9 @@ def triangle_summary(edges: DataFrame) -> DataFrame:
     adjacency no longer fits a broadcast) the shuffle shape below runs
     byte-unchanged.
     """
-    edges = materialize(edges)
-    small_e = broadcast_fits(edges)
+    size = Observation()
+    edges = materialize(edges.observe(size, F.count(F.lit(1)).alias("n")))
+    small_e = broadcast_fits(size.get["n"])
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -642,7 +643,12 @@ def kcore_summary(
     both = edges.select(F.col("u").alias("w"), F.col("v").alias("n")).unionAll(
         edges.select(F.col("v").alias("w"), F.col("u").alias("n"))
     )
-    adj = materialize(both.groupBy("w").agg(F.collect_list("n").alias("ns")))
+    size = Observation()
+    adj = materialize(
+        both.groupBy("w")
+        .agg(F.collect_list("n").alias("ns"))
+        .observe(size, F.count(F.lit(1)).alias("n"))
+    )
     n_nodes_initial = adj.agg(F.count(F.lit(1)).alias("n_nodes_initial"))
 
     # keep_i = nodes with induced degree >= k in round i-1's graph;
@@ -660,8 +666,8 @@ def kcore_summary(
     # every neighbor holds an edge back to its source, so every
     # neighbor id is in exactly one of keep/dropped). Below
     # durability.BROADCAST_MAX_ROWS the loop therefore anti-joins an explicit
-    # BROADCAST of dropped (|V'|-row, decided by a near-free count over
-    # the just-materialized adj): the round keeps ONE E'-row groupBy
+    # BROADCAST of dropped (|V'|-row, decided by the row count observed
+    # while adj materializes): the round keeps ONE E'-row groupBy
     # exchange and plans 1 BHJ / 0 SMJ / 0 sorts, vs the merge shape's
     # two exchanges + two sorts (E'-row semi stream + V'-row build).
     # WON both interleaved isolated sf0.1 pairings (4.96/4.69 s vs
@@ -673,7 +679,7 @@ def kcore_summary(
     # exponentially (the r09 MMR lesson) -- planning swamps the
     # exchange saved. Past the gate (|V| linear in corpus, a broadcast
     # would OOM the driver) the semi-join shape runs byte-unchanged.
-    small_v = broadcast_fits(adj)
+    small_v = broadcast_fits(size.get["n"])
     surv = None
     for _ in range(rounds):
         surv = adj.filter(F.size("ns") >= k)

@@ -984,6 +984,11 @@ ORDER BY asset_id
 
 @query("multimodal_image_ahash", oracle=_AHASH_ORACLE)
 def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-asset aHash table (:func:`_image_ahash`), sorted."""
+    return _image_ahash(spark, sf_dir).orderBy("asset_id")
+
+
+def _image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL perceptual image hashing (average hash): decode the PNG,
     nearest-sample to an 8x8 luminance grid, threshold each cell
     against the grid mean (as the exact integer compare
@@ -1039,7 +1044,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["asset_id", "ahash_lo", "ahash_hi", "n_above_mean"],
             )
 
-    return assets.mapInPandas(op, schema=out_schema).orderBy("asset_id")
+    return assets.mapInPandas(op, schema=out_schema)
 
 
 _AHASH_MAX_D = 3  # 4 x 16-bit bands pigeonhole-guarantee radius <= 3
@@ -1081,10 +1086,10 @@ def multimodal_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ushas_spark.durability import materialize
 
+    # Unsorted: a sort here would add a range-sampling job that runs
+    # the single-task PNG synth + decode a second time.
     ah = materialize(
-        multimodal_image_ahash(spark, sf_dir).select(
-            "asset_id", "ahash_lo", "ahash_hi"
-        )
+        _image_ahash(spark, sf_dir).select("asset_id", "ahash_lo", "ahash_hi")
     )
     band_key = [
         F.col("ahash_lo").bitwiseAND(65535),

@@ -5,7 +5,8 @@ Two tiers:
 - ``cosine_topk``: exact brute-force cosine top-k -- the correctness
   baseline. Query set broadcast against the candidate corpus; the
   per-pair dot product is a JVM higher-order fold (zip_with + aggregate),
-  so the inner loop stays in whole-stage codegen, no Python.
+  so the inner loop stays in the JVM, no Python (interpreted: both are
+  ``CodegenFallback`` expressions on Spark 4.1).
   ``cosine_topk_numpy`` is the Arrow/BLAS alternative (matmul per batch,
   partition-local top-k): measured 1.7x faster at sf0.1 (1.06s vs
   1.82s best-of-3) and the gap grows with corpus size -- prefer it when
@@ -46,11 +47,12 @@ PLANES_PER_TABLE = 4
 
 def _dvec(col: Column) -> Column:
     """array<float> -> array<double> so both engines fold in double."""
-    return F.transform(col, lambda x: x.cast("double"))
+    return col.cast("array<double>")
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product (JVM lambda, codegen'd)."""
+    """Sequential left-fold dot product (JVM lambda, interpreted:
+    ``ZipWith``/``ArrayAggregate`` are ``CodegenFallback``)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -606,7 +608,8 @@ def sim_brute_force_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The memory-bound regime at 100 TB: quantize each dimension to int8 once
 # (4x smaller than float32, 8x smaller than the double arrays above), then
 # score candidates with an INTEGER dot product -- exact, overflow-free
-# (64 dims x 127^2 < 2^21), and entirely inside whole-stage codegen. Unlike
+# (64 dims x 127^2 < 2^21), and entirely in the JVM (the fold itself is
+# interpreted: zip_with/aggregate are CodegenFallback). Unlike
 # every float variant, the quantized score has no summation-order concerns
 # at all, so the oracle is a bit-trivial mirror. Recall vs the float
 # brute force is pinned in tests/test_operators.py.

@@ -124,8 +124,11 @@ ORDER BY doc_id
 def hof_lambda_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order lambda functions (reference: higherOrderFunctions.scala
     ArrayTransform:217 ArrayFilter:274 ArrayExists:319 ArrayAggregate:371,
-    ZipWith). These run inside codegen'd JVM expressions -- the fast path
-    for per-row array work at scale (NOT a Python UDF)."""
+    ZipWith). These run as JVM expressions -- the fast path for per-row
+    array work at scale (NOT a Python UDF) -- though not compiled: on
+    Spark 4.1 ZipWith, ArrayAggregate and ArrayTransform are
+    CodegenFallback, so a projection holding them runs interpreted,
+    outside whole-stage codegen."""
     d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), r" +")
     return (

@@ -8,8 +8,8 @@ for both the local test harness (local[N], single JVM) and a real cluster:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) --
   supersedes the reference's primitive ``ExchangeCoordinator``
   (reference: execution/exchange/ExchangeCoordinator.scala:85).
-- ``spark.sql.shuffle.partitions`` sized to cores locally; on a 1000-executor
-  cluster this should be ~2-3x total cores and AQE coalesces down.
+- ``spark.sql.shuffle.partitions`` fixed at 32 (not sized to cores), so
+  plans are the same on every host; AQE coalesces small outputs. On a 1000-executor cluster pass ~2-3x total cores.
 - Session timezone pinned to UTC so timestamp semantics are stable and match
   the DuckDB oracle (naive/UTC timestamps).
 - Arrow enabled for every Python<->JVM data path (pandas UDFs, toPandas).
@@ -45,7 +45,8 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # Shuffle sizing: ~cores in local mode. AQE coalesces small outputs.
+        # Shuffle sizing: a fixed 32 unless the caller passes a count; AQE
+        # coalesces small outputs.
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
