@@ -1,6 +1,7 @@
 """``io.load_table``'s parquet schema memo: a repeated read of unchanged
 files reuses the inferred schema and launches no Spark job; a rewrite or
-an inference conf change infers again."""
+an inference conf change infers again. ``io.row_count`` memoizes a
+table's row count the same way."""
 
 from __future__ import annotations
 
@@ -124,3 +125,19 @@ def test_two_loads_self_join(spark, sf_dir):
     fresh = pairs(spark.read.parquet(path), spark.read.parquet(path))
     assert fresh
     assert sorted(pairs(a, b)) == sorted(fresh)
+
+
+def test_row_count_repeat_launches_no_job(spark, sf_dir):
+    first = io.row_count(spark, sf_dir, "customer")
+    again, jobs = _jobs(spark, lambda: io.row_count(spark, sf_dir, "customer"))
+    assert (again, jobs) == (first, 0)
+    assert first == spark.read.parquet(f"{sf_dir}/customer.parquet").count()
+
+
+def test_row_count_rewrite_counts_again(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert io.row_count(spark, str(tmp_path), "t") == 3
+    pq.write_table(pa.table({"a": [1, 2, 3, 4, 5]}), path)
+    n, jobs = _jobs(spark, lambda: io.row_count(spark, str(tmp_path), "t"))
+    assert n == 5 and jobs > 0

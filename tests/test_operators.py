@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ushas_spark.io import load_table
 from ushas_spark.operators import dedup, multimodal, similarity
-from ushas_spark.operators.asof import asof_join_backward
+from ushas_spark.operators.asof import asof_join
 
 
 def test_ann_recall_vs_brute_force(spark, sf_dir):
@@ -157,8 +157,9 @@ def test_asof_no_preceding_row_is_null(spark, sf_dir):
     orders = spark.createDataFrame(
         [(7, "1995-01-01 00:00:00", 100)], "k long, ots string, okey long"
     ).withColumn("ots", F.col("ots").cast("timestamp"))
-    out = asof_join_backward(
-        events, orders, by="k", left_ts="ts", right_ts="ots", right_values=["okey"]
+    out = asof_join(
+        events, orders, by="k", left_ts="ts", right_ts="ots", right_values=["okey"],
+        direction="backward",
     ).collect()
     assert len(out) == 1 and out[0].asof_okey is None
 
@@ -171,8 +172,9 @@ def test_asof_equal_timestamp_matches(spark):
         [(7, "1995-01-01 00:00:00", 100), (7, "1994-01-01 00:00:00", 50)],
         "k long, ots string, okey long",
     ).withColumn("ots", F.col("ots").cast("timestamp"))
-    out = asof_join_backward(
-        events, orders, by="k", left_ts="ts", right_ts="ots", right_values=["okey"]
+    out = asof_join(
+        events, orders, by="k", left_ts="ts", right_ts="ots", right_values=["okey"],
+        direction="backward",
     ).collect()
     assert out[0].asof_okey == 100  # <= semantics: row AT the ts wins
 
@@ -228,6 +230,17 @@ def test_connected_components_edgeless_graph_terminates(spark):
     run.join(timeout=120)
     assert not run.is_alive(), "connected_components did not terminate"
     assert {(r.id, r.label) for r in got} == {(i, i) for i in range(4)}
+
+
+def test_connected_components_runs_to_convergence(spark):
+    """A path 0-1-...-59 needs 59 propagation rounds for node 59 to see
+    label 0: the loop has no round cap, so every node ends in component 0."""
+    from ushas_spark.operators.dedup import connected_components
+
+    nodes = spark.range(60)
+    edges = spark.range(59).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    got = {r.id: r.label for r in connected_components(nodes, edges).collect()}
+    assert got == dict.fromkeys(range(60), 0)
 
 
 def test_connected_components_reliable_checkpoint_mode(spark):
@@ -427,8 +440,6 @@ def test_asof_forward_equal_timestamp_and_none(spark):
     (>= semantics); a left row after every right row gets NULL."""
     from pyspark.sql import functions as SF
 
-    from ushas_spark.operators.asof import asof_join_forward
-
     left = spark.createDataFrame(
         [(1, 10, 100), (1, 25, 101), (1, 99, 102)], "k long, t long, lid long"
     ).select("k", SF.timestamp_micros(SF.col("t") * 1_000_000).alias("t"), "lid")
@@ -437,8 +448,9 @@ def test_asof_forward_equal_timestamp_and_none(spark):
     ).select("k", SF.timestamp_micros(SF.col("t") * 1_000_000).alias("rt"), "rv")
     out = {
         r.lid: r.asof_rv
-        for r in asof_join_forward(
-            left, right, by="k", left_ts="t", right_ts="rt", right_values=["rv"]
+        for r in asof_join(
+            left, right, by="k", left_ts="t", right_ts="rt", right_values=["rv"],
+            direction="forward",
         ).collect()
     }
     assert out == {100: 7, 101: 8, 102: None}

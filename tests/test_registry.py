@@ -79,6 +79,28 @@ def test_tools_hold_no_round_stamped_scripts():
     assert not stamped, f"round-stamped scripts in tools/: {sorted(stamped)}"
 
 
+def test_no_repeated_code_windows():
+    """No 8-line window of stripped, non-blank lines appears twice under
+    ``ushas_spark/``: a repeated block becomes one shared function or SQL
+    fragment."""
+    window = 8
+    seen: dict[tuple[str, ...], str] = {}
+    repeats = []
+    for root, _, files in os.walk(os.path.join(REPO, "ushas_spark")):
+        for fname in sorted(fnmatch.filter(files, "*.py")):
+            path = os.path.join(root, fname)
+            with open(path) as f:
+                lines = [(i, s) for i, line in enumerate(f, 1) if (s := line.strip())]
+            for j in range(len(lines) - window + 1):
+                key = tuple(s for _, s in lines[j : j + window])
+                here = f"{os.path.relpath(path, REPO)}:{lines[j][0]}"
+                if key in seen:
+                    repeats.append(f"{here} repeats {seen[key]}")
+                else:
+                    seen[key] = here
+    assert not repeats, repeats
+
+
 def test_one_broadcast_budget():
     """Every size-gated regime reads durability.BROADCAST_MAX_ROWS through
     durability.broadcast_fits; no module keeps its own *_BROADCAST_MAX_*."""

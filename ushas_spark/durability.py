@@ -112,17 +112,14 @@ def release(spark) -> None:
 BROADCAST_MAX_ROWS = 10_000_000
 
 
-def broadcast_fits(rows: DataFrame | int) -> bool:
+def broadcast_fits(rows: int) -> bool:
     """True when ``rows`` is within :data:`BROADCAST_MAX_ROWS`.
 
-    ``rows`` is a row count the caller already knows -- an iterative
+    ``rows`` is a row count the caller already knows: an iterative
     operator observes it (``pyspark.sql.Observation``) on the frame it
-    hands to :func:`materialize`, so the gate costs no job -- or a
-    DataFrame, counted here in one job (callers pass a parquet table,
-    whose count is a metadata read). The budget is read at call time,
-    so patching the module global moves every gate."""
-    if isinstance(rows, DataFrame):
-        rows = rows.count()
+    hands to :func:`materialize`, a table gate reads the memoized
+    ``io.row_count``. The budget is read at call time, so patching the
+    module global moves every gate."""
     return rows <= BROADCAST_MAX_ROWS
 
 

@@ -9,7 +9,7 @@ execution/datasources/parquet/ParquetFileFormat.scala:56).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -75,11 +75,26 @@ INFERENCE_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# (applicationId, path) -> ((inference conf values, leaf files), schema).
-# One entry per path: a rewrite, a conf change or a new SparkContext misses
-# it, and the next inference replaces it. No lock: an entry is written
-# whole, so a racing writer can only cost a later call one inference.
+# (applicationId, path) -> ((inference conf values, leaf files), value):
+# the inferred schema in _SCHEMAS, the row count in _ROWS. One entry per
+# path: a rewrite, a conf change or a new SparkContext misses it, and the
+# next computation replaces it. No lock: an entry is written whole, so a
+# racing writer can only cost a later call one recomputation.
 _SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_ROWS: dict[tuple[str, str], tuple[tuple, int]] = {}
+
+
+def _memoized(memo: dict, spark: SparkSession, path: str, compute: Callable):
+    """``compute()``, or the value it returned earlier for the same files
+    of ``path`` under the same inference confs."""
+    slot = (spark.sparkContext.applicationId, path)
+    state = _inference_inputs(spark, path)
+    hit = memo.get(slot)
+    if hit is not None and hit[0] == state:
+        return hit[1]
+    value = compute()
+    memo[slot] = (state, value)
+    return value
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -90,14 +105,16 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     one file; a read with the schema given launches none. Only the schema
     is memoized, never the DataFrame.
     """
-    slot = (spark.sparkContext.applicationId, path)
-    state = _inference_inputs(spark, path)
-    hit = _SCHEMAS.get(slot)
-    if hit is not None and hit[0] == state:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[slot] = (state, df.schema)
-    return df
+    schema = _memoized(_SCHEMAS, spark, path, lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """``load_table(spark, sf_dir, name).count()``, memoized like the
+    schema: a repeat count of unchanged files launches no Spark job, a
+    rewrite counts again."""
+    path = f"{sf_dir}/{name}.parquet"
+    return _memoized(_ROWS, spark, path, lambda: load_table(spark, sf_dir, name).count())
 
 
 def _inference_inputs(spark: SparkSession, path: str) -> tuple:

@@ -23,52 +23,59 @@ from ushas_spark.io import load_table
 from ushas_spark.registry import query
 
 
-def asof_join_backward(
+def asof_join(
     left: DataFrame,
     right: DataFrame,
     by: str,
     left_ts: str,
     right_ts: str,
     right_values: list[str],
+    direction: str,
 ) -> DataFrame:
-    """For each left row: the right row with the greatest ``right_ts`` <=
-    ``left_ts`` within the same ``by`` key (backward as-of, ties -> the
-    right row sorts first so it is visible to the left row).
+    """For each left row: within the same ``by`` key, the right row with
+    the greatest ``right_ts`` <= ``left_ts`` (``direction="backward"``)
+    or the smallest ``right_ts`` >= ``left_ts`` (``"forward"`` -- the
+    "next action after event" shape: conversion tracking, next-order
+    latency).
 
-    Returns the left columns + the matched ``right_values`` (NULL when no
-    preceding right row exists).
+    Both sides are tagged and unioned; an ignore-nulls ``last`` over the
+    preceding frame (backward) or ``first`` over the following frame
+    (forward) carries the matched right values to every left row. At
+    equal timestamps the right rows sort on the side facing the frame,
+    so an equal-time right row matches either way. ONE shuffle on the
+    key, no quadratic blowup.
+
+    Returns the left columns + the matched ``right_values`` as
+    ``asof_<name>`` (NULL when no right row qualifies).
     """
+    backward = {"backward": True, "forward": False}[direction]
+    left_side, right_side = (1, 0) if backward else (0, 1)
     lcols = left.columns
     l_tagged = left.select(
         F.col(by).alias("_k"),
         F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
+        F.lit(left_side).alias("_side"),
         *[F.col(c) for c in lcols],
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}") for c in right_values],
     )
     r_tagged = right.select(
         F.col(by).alias("_k"),
         F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
+        F.lit(right_side).alias("_side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
         *[F.col(c).alias(f"_r_{c}") for c in right_values],
     )
     unioned = l_tagged.unionByName(r_tagged)
-    # Right rows (_side=0) sort before left rows at equal timestamps, so a
-    # right row AT the left timestamp matches (<= semantics).
-    w = (
-        W.partitionBy("_k")
-        .orderBy("_ts", "_side")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    w = W.partitionBy("_k").orderBy("_ts", "_side")
+    if backward:
+        w, fill = w.rowsBetween(W.unboundedPreceding, W.currentRow), F.last
+    else:
+        w, fill = w.rowsBetween(W.currentRow, W.unboundedFollowing), F.first
     filled = unioned.select(
         "*",
-        *[
-            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"_m_{c}")
-            for c in right_values
-        ],
+        *[fill(f"_r_{c}", ignorenulls=True).over(w).alias(f"_m_{c}") for c in right_values],
     )
-    return filled.filter(F.col("_side") == 1).select(
+    return filled.filter(F.col("_side") == left_side).select(
         *lcols, *[F.col(f"_m_{c}").alias(f"asof_{c}") for c in right_values]
     )
 
@@ -87,13 +94,14 @@ def _latest_order_asof(
         .groupBy(F.col("o_custkey").alias("k"), "o_orderdate")
         .agg(F.max("o_orderkey").alias("o_orderkey"))
     )
-    return asof_join_backward(
+    return asof_join(
         events,
         orders,
         by="k",
         left_ts="ts",
         right_ts="o_orderdate",
         right_values=right_values,
+        direction="backward",
     )
 
 
@@ -134,56 +142,6 @@ def asof_latest_order_before_event(spark: SparkSession, sf_dir: str) -> DataFram
     ).orderBy("event_id")
 
 
-def asof_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    by: str,
-    left_ts: str,
-    right_ts: str,
-    right_values: list[str],
-) -> DataFrame:
-    """Forward as-of: for each left row, the right row with the SMALLEST
-    ``right_ts`` >= ``left_ts`` within the key -- the "next action after
-    event" attribution shape (conversion tracking, next-order latency).
-    Same union+window formulation as backward, mirrored: first_value
-    ignore-nulls over the FOLLOWING frame, right rows sorting after left
-    rows at equal timestamps so an equal-time right row still matches.
-    ONE shuffle on the key, no quadratic blowup."""
-    lcols = left.columns
-    l_tagged = left.select(
-        F.col(by).alias("_k"),
-        F.col(left_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_r_{c}") for c in right_values],
-    )
-    r_tagged = right.select(
-        F.col(by).alias("_k"),
-        F.col(right_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-        *[F.col(c).alias(f"_r_{c}") for c in right_values],
-    )
-    unioned = l_tagged.unionByName(r_tagged)
-    # Left rows (_side=0) sort before right rows at equal timestamps, so a
-    # right row AT the left timestamp is in the following frame (>=).
-    w = (
-        W.partitionBy("_k")
-        .orderBy("_ts", "_side")
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    filled = unioned.select(
-        "*",
-        *[
-            F.first(f"_r_{c}", ignorenulls=True).over(w).alias(f"_m_{c}")
-            for c in right_values
-        ],
-    )
-    return filled.filter(F.col("_side") == 0).select(
-        *lcols, *[F.col(f"_m_{c}").alias(f"asof_{c}") for c in right_values]
-    )
-
-
 _ASOF_FWD_ORACLE = """
 WITH o AS (
   SELECT o_custkey AS k, o_orderdate, MIN(o_orderkey) AS o_orderkey
@@ -218,13 +176,14 @@ def asof_next_order_after_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("k"), "o_orderdate")
         .agg(F.min("o_orderkey").alias("o_orderkey"))
     )
-    out = asof_join_forward(
+    out = asof_join(
         events,
         orders,
         by="k",
         left_ts="ts",
         right_ts="o_orderdate",
         right_values=["o_orderkey"],
+        direction="forward",
     )
     return out.select(
         "event_id",

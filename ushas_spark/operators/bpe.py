@@ -100,13 +100,11 @@ def _apply_merge(syms: DataFrame, best: DataFrame) -> DataFrame:
     return syms.crossJoin(F.broadcast(best)).select("word", "n", new_s.alias("s"))
 
 
-def bpe_train(
-    spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
-) -> DataFrame:
+def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned merge table: (step, left_sym, right_sym, pair_cnt)."""
     syms = _char_symbols(materialize(_word_histogram(spark, sf_dir)))
     merges = []
-    for step in range(n_merges):
+    for step in range(N_MERGES):
         best = _best_pair(_pair_counts(syms))
         merges.append(
             best.select(
@@ -138,8 +136,8 @@ def _sql_fold(s: str, ba: str, bb: str) -> str:
     )
 
 
-def _oracle_parts(n_merges: int = N_MERGES) -> list[str]:
-    """The shared CTE chain: word histogram -> char symbols -> n_merges
+def _oracle_parts() -> list[str]:
+    """The shared CTE chain: word histogram -> char symbols -> N_MERGES
     rounds of (pair counts, argmax, corpus-wide merge)."""
     parts = [
         "w AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS n FROM ("
@@ -149,7 +147,7 @@ def _oracle_parts(n_merges: int = N_MERGES) -> list[str]:
         "  generate_series(1, length(word)), i -> substr(word, i, 1)) AS s"
         "  FROM w)",
     ]
-    for t in range(n_merges):
+    for t in range(N_MERGES):
         parts.append(
             f"p{t} AS (SELECT a, b, CAST(SUM(n) AS BIGINT) AS cnt FROM ("
             f"  SELECT s[u.i] AS a, s[u.i + 1] AS b, n"
@@ -168,12 +166,12 @@ def _oracle_parts(n_merges: int = N_MERGES) -> list[str]:
     return parts
 
 
-def _bpe_oracle(n_merges: int = N_MERGES) -> str:
-    parts = _oracle_parts(n_merges)
+def _bpe_oracle() -> str:
+    parts = _oracle_parts()
     sel = "\nUNION ALL\n".join(
         f"SELECT {t} AS step, ba AS left_sym, bb AS right_sym,"
         f" bcnt AS pair_cnt FROM b{t}"
-        for t in range(n_merges)
+        for t in range(N_MERGES)
     )
     return "WITH " + ",\n".join(parts) + "\nSELECT * FROM (" + sel + ") ORDER BY step"
 
@@ -185,8 +183,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------- BPE APPLY stage
-def _bpe_encode_oracle(n_merges: int = N_MERGES) -> str:
-    parts = _oracle_parts(n_merges)
+def _bpe_encode_oracle() -> str:
+    parts = _oracle_parts()
     parts.append(
         "dw AS (SELECT source, w2.w AS word"
         "  FROM documents, LATERAL (SELECT unnest(string_split(text, ' ')) AS w) w2"
@@ -201,22 +199,20 @@ SELECT dw.source,
        CAST(SUM(len(v.s)) AS BIGINT) AS n_tokens,
        CAST(100 * SUM(len(v.s)) // COUNT(*) AS BIGINT)
          AS avg_tokens_per_word_x100
-FROM dw JOIN s{n_merges} v ON dw.word = v.word
+FROM dw JOIN s{N_MERGES} v ON dw.word = v.word
 GROUP BY dw.source
 ORDER BY dw.source
 """
     )
 
 
-def bpe_vocab_segmentation(
-    spark: SparkSession, sf_dir: str, n_merges: int = N_MERGES
-) -> DataFrame:
-    """Final per-word symbol segmentation after ``n_merges`` learned
+def bpe_vocab_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Final per-word symbol segmentation after ``N_MERGES`` learned
     merges: (word, n, s) -- the tokenizer's vocabulary table. Identical
     loop to :func:`bpe_train`, keeping the evolving symbol table rather
     than the merge log."""
     syms = _char_symbols(materialize(_word_histogram(spark, sf_dir)))
-    for _ in range(n_merges):
+    for _ in range(N_MERGES):
         best = _best_pair(_pair_counts(syms))
         syms = _apply_merge(syms, best)
     return syms

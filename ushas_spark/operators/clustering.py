@@ -207,17 +207,17 @@ def _sql_update(assigned: str) -> str:
     )
 
 
-def _kmeans_oracle_ctes(k: int = K, iters: int = ITERS) -> str:
-    ids = ", ".join(str(c * INIT_STRIDE) for c in range(k))
+def _kmeans_oracle_ctes() -> str:
+    ids = ", ".join(str(c * INIT_STRIDE) for c in range(K))
     parts = [
         "emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)",
         f"c0 AS (SELECT CAST(vec_id / {INIT_STRIDE} AS INT) AS cid, e AS ce"
         f"       FROM emb WHERE vec_id IN ({ids}))",
     ]
-    for i in range(iters):
+    for i in range(ITERS):
         parts.append(f"a{i} AS ({_sql_assign('emb', f'c{i}')})")
         parts.append(f"c{i + 1} AS ({_sql_update(f'a{i}')})")
-    parts.append(f"afinal AS ({_sql_assign('emb', f'c{iters}')})")
+    parts.append(f"afinal AS ({_sql_assign('emb', f'c{ITERS}')})")
     return "WITH " + ",\n".join(parts)
 
 
@@ -268,7 +268,7 @@ def cluster_kmeans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ELBOW_KS = (2, 4, 8)
 
 
-def _kmeans_oracle_ctes_ns(prefix: str, k: int, iters: int = ITERS) -> str:
+def _kmeans_oracle_ctes_ns(prefix: str, k: int) -> str:
     """The per-k CTE chain with namespaced CTE names, so several k
     sweeps coexist in one WITH clause."""
     ids = ", ".join(str(c * INIT_STRIDE) for c in range(k))
@@ -276,7 +276,7 @@ def _kmeans_oracle_ctes_ns(prefix: str, k: int, iters: int = ITERS) -> str:
         f"{prefix}c0 AS (SELECT CAST(vec_id / {INIT_STRIDE} AS INT) AS cid,"
         f" e AS ce FROM emb WHERE vec_id IN ({ids}))",
     ]
-    for i in range(iters):
+    for i in range(ITERS):
         parts.append(
             f"{prefix}a{i} AS ({_sql_assign('emb', f'{prefix}c{i}')})"
         )
@@ -284,7 +284,7 @@ def _kmeans_oracle_ctes_ns(prefix: str, k: int, iters: int = ITERS) -> str:
             f"{prefix}c{i + 1} AS ({_sql_update(f'{prefix}a{i}')})"
         )
     parts.append(
-        f"{prefix}af AS ({_sql_assign('emb', f'{prefix}c{iters}')})"
+        f"{prefix}af AS ({_sql_assign('emb', f'{prefix}c{ITERS}')})"
     )
     return ",\n".join(parts)
 
@@ -597,7 +597,7 @@ def _pca_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(xs.alias("xs"))
 
 
-def _pca_moment_batches(batches, D: int = PCA_DIM):
+def _pca_moment_batches(batches):
     """Per-task exact-integer moment partials (the mapInPandas body).
 
     Module-level (not a closure) so the overflow guard is unit-testable
@@ -608,9 +608,9 @@ def _pca_moment_batches(batches, D: int = PCA_DIM):
     import numpy as np
     import pandas as pd
 
-    iu, ju = np.triu_indices(D)
-    G = np.zeros((D, D), dtype=np.int64)
-    m = np.zeros(D, dtype=np.int64)
+    iu, ju = np.triu_indices(PCA_DIM)
+    G = np.zeros((PCA_DIM, PCA_DIM), dtype=np.int64)
+    m = np.zeros(PCA_DIM, dtype=np.int64)
     n = 0
     max_abs = 0
     for pdf in batches:
@@ -639,8 +639,8 @@ def _pca_moment_batches(batches, D: int = PCA_DIM):
         m += X.sum(axis=0)
     yield pd.DataFrame(
         {
-            "i": np.concatenate([iu, np.arange(D), [-1]]),
-            "j": np.concatenate([ju, np.full(D, -1), [-1]]),
+            "i": np.concatenate([iu, np.arange(PCA_DIM), [-1]]),
+            "j": np.concatenate([ju, np.full(PCA_DIM, -1), [-1]]),
             "p": np.concatenate([G[iu, ju], m, [n]]),
         }
     )

@@ -46,7 +46,7 @@ def sql_hash60(expr: str) -> str:
     return f"('0x' || substring(md5({expr}), 1, 15))::BIGINT"
 
 
-def shingles(text_col: str = "text", width: int = SHINGLE_WIDTH) -> Column:
+def shingles() -> Column:
     """Distinct word n-gram shingles (JVM lambda pipeline, no UDF).
 
     The outer single-element transform binds the split-words array to a
@@ -57,22 +57,22 @@ def shingles(text_col: str = "text", width: int = SHINGLE_WIDTH) -> Column:
     return F.expr(
         f"""
         array_distinct(flatten(transform(
-          array(split({text_col}, '\\\\s+')),
-          w -> CASE WHEN size(w) >= {width}
-                    THEN transform(sequence(1, size(w) - {width - 1}),
-                                   i -> concat_ws(' ', slice(w, i, {width})))
+          array(split(text, '\\\\s+')),
+          w -> CASE WHEN size(w) >= {SHINGLE_WIDTH}
+                    THEN transform(sequence(1, size(w) - {SHINGLE_WIDTH - 1}),
+                                   i -> concat_ws(' ', slice(w, i, {SHINGLE_WIDTH})))
                     ELSE array()
                END)))
         """
     )
 
 
-def sql_shingles(text_expr: str = "text", width: int = SHINGLE_WIDTH) -> str:
-    parts = " || ' ' || ".join(f"s[i+{j}]" for j in range(width))
+def sql_shingles(text_expr: str = "text") -> str:
+    parts = " || ' ' || ".join(f"s[i+{j}]" for j in range(SHINGLE_WIDTH))
     return (
-        f"list_distinct(CASE WHEN len(regexp_split_to_array({text_expr}, '\\s+')) >= {width}"
+        f"list_distinct(CASE WHEN len(regexp_split_to_array({text_expr}, '\\s+')) >= {SHINGLE_WIDTH}"
         f" THEN [{parts} FOR i IN generate_series(1,"
-        f" len(regexp_split_to_array({text_expr}, '\\s+')) - {width - 1})]"
+        f" len(regexp_split_to_array({text_expr}, '\\s+')) - {SHINGLE_WIDTH - 1})]"
         f" ELSE [] END)"
     ).replace("s[i", "regexp_split_to_array(" + text_expr + ", '\\s+')[i")
 
@@ -257,7 +257,7 @@ def _minhash_coeffs(n_hashes: int = N_HASHES) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id -> [minhash_0 .. minhash_{n-1}]. One explode + one
     map-side-combinable groupBy.
 
@@ -276,19 +276,20 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     hashed = sh.select("doc_id", h31)
     aggs = [
         F.min((F.lit(a) * F.col("h31") + F.lit(b)) % MINHASH_PRIME).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_minhash_coeffs(n_hashes))
+        for i, (a, b) in enumerate(_minhash_coeffs(N_HASHES))
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def band_keys(
-    sigs: DataFrame, bands: int = BANDS, rows: int = ROWS_PER_BAND
-) -> DataFrame:
+def band_keys(sigs: DataFrame) -> DataFrame:
     """Signature rows -> (doc_id, band, key) bucket membership."""
     band_cols = []
-    for b in range(bands):
+    for b in range(BANDS):
         key = F.md5(
-            F.concat_ws(",", *[F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)])
+            F.concat_ws(
+                ",",
+                *[F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string") for r in range(ROWS_PER_BAND)],
+            )
         )
         band_cols.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
     return sigs.select(
@@ -296,7 +297,7 @@ def band_keys(
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
-def lsh_candidates(sigs: DataFrame, bands: int = BANDS, rows: int = ROWS_PER_BAND) -> DataFrame:
+def lsh_candidates(sigs: DataFrame) -> DataFrame:
     """Banded LSH: docs agreeing on ALL rows of any band become candidate
     pairs. Implemented as explode-to-(band, key) + self-join per bucket --
     the shape that scales (each bucket is small; no all-pairs)."""
@@ -309,7 +310,7 @@ def lsh_candidates(sigs: DataFrame, bands: int = BANDS, rows: int = ROWS_PER_BAN
     # cluster persist(DISK_ONLY) or a signatures table serves the same
     # role.
     sigs = materialize(sigs)
-    exploded = band_keys(sigs, bands, rows)
+    exploded = band_keys(sigs)
     a = exploded.alias("a")
     b = exploded.alias("b")
     return (
@@ -512,8 +513,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_BITS = 32
 
 
-def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Per-document {bits}-bit SimHash from token hash votes (explode +
+def simhash(docs: DataFrame) -> DataFrame:
+    """Per-document {SIMHASH_BITS}-bit SimHash from token hash votes (explode +
     one groupBy with per-bit sum aggregates -- map-side combinable)."""
     n = docs.sparkSession.sparkContext.defaultParallelism
     tok = docs.repartition(n).select(
@@ -523,11 +524,11 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
         F.sum(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = tok.groupBy("doc_id").agg(*votes)
     sim = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         bit = F.when(F.col(f"v{b}") > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
         sim = bit if sim is None else sim + bit
     return agg.select("doc_id", sim.alias("simhash"))
@@ -616,15 +617,15 @@ def connected_components(
     id_col: str = "id",
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Connected components via hash-min label propagation.
 
     The standard large-graph formulation (no GraphFrames dependency):
     every node starts labelled with its own id; each round every node
-    takes the min of its own label and its neighbours' labels; converged
-    when nothing changes. Rounds needed = component diameter, which for
+    takes the min of its own label and its neighbours' labels; the loop
+    runs until a round changes nothing. Labels only decrease, so it
+    always ends, and rounds needed = component diameter, which for
     near-dup clusters is tiny (dup clusters are dense).
 
     Scale design (100 TB):
@@ -723,7 +724,7 @@ def connected_components(
         # with no exchange and no sort; only the |V|-row labels side
         # moves per round.
         sym = pin_partitioned(sym_raw, "s")
-    for _ in range(max_iter):
+    while True:
         # One round = ONE edge join + ONE fused min-aggregate: the
         # node's own label rides into the aggregate (as a self-loop row
         # in the broadcast regime, as a tagged union branch in the
@@ -1303,18 +1304,18 @@ def _positional_shingles(width: int = SPAN_WIDTH) -> Column:
 
 # The oracle is assembled programmatically: the shingle concat expression
 # depends on SPAN_WIDTH and hand-writing five list indexes invites drift.
-def _span_oracle(width: int = SPAN_WIDTH, min_count: int = SPAN_MIN_COUNT) -> str:
-    concat = " || ' ' || ".join(f"ws[i+{j}]" for j in range(width))
+def _span_oracle() -> str:
+    concat = " || ' ' || ".join(f"ws[i+{j}]" for j in range(SPAN_WIDTH))
     return f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(text, '\\s+') AS ws FROM documents
 ),
 sh AS (
   SELECT doc_id, i AS pos, {concat} AS shingle
-  FROM w CROSS JOIN UNNEST(generate_series(1, len(ws) - {width - 1})) AS t(i)
+  FROM w CROSS JOIN UNNEST(generate_series(1, len(ws) - {SPAN_WIDTH - 1})) AS t(i)
 ),
 dup AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING count(*) >= {min_count}
+  SELECT shingle FROM sh GROUP BY shingle HAVING count(*) >= {SPAN_MIN_COUNT}
 ),
 hits AS (
   SELECT doc_id, pos FROM sh WHERE shingle IN (SELECT shingle FROM dup)
@@ -1327,8 +1328,8 @@ sweep AS (
 cov AS (
   SELECT doc_id,
          count(*) AS dup_positions,
-         CAST(SUM(CASE WHEN prev IS NULL THEN {width}
-                       ELSE LEAST({width}, pos - prev) END) AS BIGINT)
+         CAST(SUM(CASE WHEN prev IS NULL THEN {SPAN_WIDTH}
+                       ELSE LEAST({SPAN_WIDTH}, pos - prev) END) AS BIGINT)
            AS covered_words
   FROM sweep GROUP BY doc_id
 )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ushas_spark.durability import broadcast_fits, materialize, pin_partitioned
-from ushas_spark.io import load_table
+from ushas_spark.io import load_table, row_count
 from ushas_spark.registry import query
 
 DAMPING = 0.85
@@ -70,11 +70,9 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank(
     spark: SparkSession,
     sf_dir: str,
-    iters: int = ITERS,
-    damping: float = DAMPING,
     seed_cap: int | None = None,
 ) -> DataFrame:
-    """Ranks after ``iters`` synchronous rounds from the teleport start.
+    """Ranks after ``ITERS`` synchronous rounds from the teleport start.
 
     ``seed_cap=None`` is global PageRank: every node is a teleport
     target with mass 1/|V|. An int makes it PERSONALIZED: the teleport
@@ -109,7 +107,7 @@ def pagerank(
       4.87 s), so no wall change is claimed past the gate."""
     edges = _edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    small_v = broadcast_fits(load_table(spark, sf_dir, "customer"))
+    small_v = broadcast_fits(row_count(spark, sf_dir, "customer"))
     ewd = pin_partitioned(edges.join(deg, "src"), "dst" if small_v else "src")
     # Everything downstream derives from the materialized edge table so
     # the orders ⋈ lineitem subtree is scanned exactly once, not once
@@ -135,7 +133,7 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_tele)).select(
         "node", teleport(1.0).alias("rank"), size
     )
-    for _ in range(iters):
+    for _ in range(ITERS):
         r = ranks.hint("broadcast") if small_v else ranks
         contrib = r.join(ewd, r.node == ewd.src).select(
             F.col("dst").alias("node"),
@@ -147,8 +145,8 @@ def pagerank(
         ranks = summed.crossJoin(F.broadcast(n_tele)).select(
             "node",
             (
-                teleport(1.0 - damping)
-                + F.lit(damping)
+                teleport(1.0 - DAMPING)
+                + F.lit(DAMPING)
                 * (F.col("sc").cast("double") / F.lit(float(RANK_SCALE)))
             ).alias("rank"),
             size,
@@ -184,22 +182,22 @@ def _rank_sum_sql(i: int) -> str:
     )
 
 
-def _pagerank_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
+def _pagerank_oracle() -> str:
     parts = [
         *_TRADE_EDGES_SQL,
         _TRADE_DEG_SQL,
         "nv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg)",
         "r0 AS (SELECT src AS node, 1.0 / n AS rank FROM deg, nv)",
     ]
-    for i in range(iters):
+    for i in range(ITERS):
         parts.append(_rank_sum_sql(i))
         parts.append(
             f"r{i + 1} AS (SELECT node,"
-            f"  {1.0 - damping} / n + {damping} *"
+            f"  {1.0 - DAMPING} / n + {DAMPING} *"
             f"  (CAST(sc AS DOUBLE) / {float(RANK_SCALE)}) AS rank"
             f"  FROM s{i}, nv)"
         )
-    return "WITH " + ",\n".join(parts) + f"\nSELECT node, CAST(ROUND(rank * {RANK_SCALE}) AS BIGINT) AS rank_x1e9 FROM r{iters}"
+    return "WITH " + ",\n".join(parts) + f"\nSELECT node, CAST(ROUND(rank * {RANK_SCALE}) AS BIGINT) AS rank_x1e9 FROM r{ITERS}"
 
 
 _TOP_ORACLE = f"""
@@ -231,7 +229,7 @@ WALK_LEN = 3
 START_MOD = 10  # walkers start from customers with custkey % 10 == 0
 
 
-def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> DataFrame:
+def random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-seeded uniform random walks over the trade graph.
 
     The sampling pass that turns a graph into sequence training data
@@ -269,14 +267,12 @@ def random_walks(spark: SparkSession, sf_dir: str, length: int = WALK_LEN) -> Da
       pairings (4.98/2.99 vs 4.88/2.72), so the driver-green
       formulation stays byte-identical.
     """
-    if broadcast_fits(load_table(spark, sf_dir, "customer")):
-        return _random_walks_adjacency(spark, sf_dir, length)
-    return _random_walks_merge(spark, sf_dir, length)
+    if broadcast_fits(row_count(spark, sf_dir, "customer")):
+        return _random_walks_adjacency(spark, sf_dir)
+    return _random_walks_merge(spark, sf_dir)
 
 
-def _random_walks_adjacency(
-    spark: SparkSession, sf_dir: str, length: int = WALK_LEN
-) -> DataFrame:
+def _random_walks_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-V regime: array-packed adjacency + broadcast walk table +
     in-row argmin. No pin: edges feed exactly one consumer (the
     adjacency fold), so the groupBy's own exchange does the
@@ -290,7 +286,7 @@ def _random_walks_adjacency(
         (F.col("n0") < 1_000_000_000) & (F.col("n0") % START_MOD == 0)
     )
     cur = "n0"
-    for t in range(1, length + 1):
+    for t in range(1, WALK_LEN + 1):
         w = walks.hint("broadcast")
         argmin = F.array_min(
             F.transform(
@@ -310,9 +306,7 @@ def _random_walks_adjacency(
     return walks.orderBy("n0")
 
 
-def _random_walks_merge(
-    spark: SparkSession, sf_dir: str, length: int = WALK_LEN
-) -> DataFrame:
+def _random_walks_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big-V regime: the r10 driver-green formulation, byte-unchanged.
     Each hop is one join on the current node against the pinned edge
     table plus one per-walker argmin (min over (hash, dst) structs,
@@ -326,7 +320,7 @@ def _random_walks_merge(
     )
     walks = starts.withColumn("walker", F.col("n0"))
     cur = "n0"
-    for t in range(1, length + 1):
+    for t in range(1, WALK_LEN + 1):
         hop = walks.join(edges, walks[cur] == edges.src).withColumn(
             "h",
             F.md5(
@@ -345,14 +339,14 @@ def _random_walks_merge(
     return walks.drop("walker").orderBy("n0")
 
 
-def _walk_oracle(length: int = WALK_LEN) -> str:
+def _walk_oracle() -> str:
     parts = [
         *_TRADE_EDGES_SQL,
         f"w0 AS (SELECT DISTINCT src AS n0 FROM edges"
         f"       WHERE src < 1000000000 AND src % {START_MOD} = 0)",
     ]
     cols = ["n0"]
-    for t in range(1, length + 1):
+    for t in range(1, WALK_LEN + 1):
         prev = f"w{t - 1}"
         cur = cols[-1]
         col_list = ", ".join(cols)
@@ -367,7 +361,7 @@ def _walk_oracle(length: int = WALK_LEN) -> str:
         cols.append(f"n{t}")
     return (
         "WITH " + ",\n".join(parts)
-        + f"\nSELECT {', '.join(cols)} FROM w{length} ORDER BY n0"
+        + f"\nSELECT {', '.join(cols)} FROM w{WALK_LEN} ORDER BY n0"
     )
 
 
@@ -916,7 +910,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPR_SEED_CAP = 10  # seed set: customers with key < 10
 
 
-def _ppr_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
+def _ppr_oracle() -> str:
     parts = [
         *_TRADE_EDGES_SQL,
         _TRADE_DEG_SQL,
@@ -927,13 +921,13 @@ def _ppr_oracle(iters: int = ITERS, damping: float = DAMPING) -> str:
         "  CASE WHEN s.node IS NOT NULL THEN 1.0 / ns.n ELSE 0.0 END AS rank"
         "  FROM deg d LEFT JOIN seeds s ON d.src = s.node CROSS JOIN ns)",
     ]
-    for i in range(iters):
+    for i in range(ITERS):
         parts.append(_rank_sum_sql(i))
         parts.append(
             f"r{i + 1} AS (SELECT t.node,"
-            f"  CASE WHEN sd.node IS NOT NULL THEN {1.0 - damping} / ns.n"
+            f"  CASE WHEN sd.node IS NOT NULL THEN {1.0 - DAMPING} / ns.n"
             f"       ELSE 0.0 END"
-            f"  + {damping} * (CAST(t.sc AS DOUBLE) / {float(RANK_SCALE)})"
+            f"  + {DAMPING} * (CAST(t.sc AS DOUBLE) / {float(RANK_SCALE)})"
             f"    AS rank"
             f"  FROM s{i} t LEFT JOIN seeds sd ON t.node = sd.node"
             f"  CROSS JOIN ns)"
@@ -946,7 +940,7 @@ SELECT node,
        CAST(ROUND(rank * {RANK_SCALE}) AS BIGINT) AS rank_x1e9,
        CASE WHEN node >= 1000000000 THEN 'supplier' ELSE 'customer' END
          AS node_type
-FROM r{iters}
+FROM r{ITERS}
 WHERE ROUND(rank * {RANK_SCALE}) > 0
 ORDER BY rank_x1e9 DESC, node
 LIMIT {TOP_N}
@@ -989,7 +983,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_MAX_HOPS = 4
 
 
-def _bfs_oracle(max_hops: int = BFS_MAX_HOPS) -> str:
+def _bfs_oracle() -> str:
     return f"""
 WITH RECURSIVE pairs AS (
   SELECT DISTINCT o_custkey AS cust, l_suppkey + 1000000000 AS supp
@@ -1002,7 +996,7 @@ WITH RECURSIVE pairs AS (
   UNION
   SELECT e.dst, w.dist + 1
   FROM walk w JOIN edges e ON e.src = w.node
-  WHERE w.dist < {max_hops}
+  WHERE w.dist < {BFS_MAX_HOPS}
 ), dists AS (
   SELECT node, CAST(MIN(dist) AS BIGINT) AS hops FROM walk GROUP BY node
 )
@@ -1069,7 +1063,7 @@ HITS_ITERS = 3
 HITS_SCALE = 1_000_000_000
 
 
-def _hits_oracle(iters: int = HITS_ITERS) -> str:
+def _hits_oracle() -> str:
     parts = [
         "pairs AS (SELECT DISTINCT o_custkey AS cust,"
         " l_suppkey AS supp"
@@ -1077,7 +1071,7 @@ def _hits_oracle(iters: int = HITS_ITERS) -> str:
         "h0 AS (SELECT cust, CAST(1000000000 AS BIGINT) AS h FROM"
         " (SELECT DISTINCT cust FROM pairs))",
     ]
-    for i in range(iters):
+    for i in range(HITS_ITERS):
         parts.append(
             f"ar{i} AS (SELECT p.supp, CAST(SUM(h.h) AS BIGINT) AS raw"
             f" FROM pairs p JOIN h{i} h ON p.cust = h.cust GROUP BY p.supp)"
@@ -1101,11 +1095,11 @@ def _hits_oracle(iters: int = HITS_ITERS) -> str:
 SELECT * FROM (
   SELECT 'authority' AS role, supp AS node, a AS score_x1e9,
          ROW_NUMBER() OVER (ORDER BY a DESC, supp) AS rnk
-  FROM a{iters - 1}
+  FROM a{HITS_ITERS - 1}
   UNION ALL
   SELECT 'hub' AS role, cust AS node, h AS score_x1e9,
          ROW_NUMBER() OVER (ORDER BY h DESC, cust) AS rnk
-  FROM h{iters}
+  FROM h{HITS_ITERS}
 )
 WHERE rnk <= 10
 ORDER BY role, rnk
@@ -1169,9 +1163,9 @@ def graph_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # Upper bound on the hub-score universe: every cust key comes from
-    # o_custkey, so |customer| bounds it. Parquet count is a
-    # metadata/row-group-stat scan, not a data read.
-    small_v = broadcast_fits(load_table(spark, sf_dir, "customer"))
+    # o_custkey, so |customer| bounds it; the count is memoized per
+    # file (io.row_count).
+    small_v = broadcast_fits(row_count(spark, sf_dir, "customer"))
     # Two pinned layouts of the bipartite edge list. Regime picks the
     # keys: broadcast regime pins on the GROUPBY keys (supp for the
     # authority half, cust for the hub half) because the score join is

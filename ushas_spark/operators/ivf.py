@@ -25,7 +25,11 @@ from ushas_spark.operators.similarity import (
     TOP_K,
     _dvec,
     _ranked_topk_sql,
+    _topk_ids_sql,
     cosine,
+    exact_truth,
+    ranked_topk,
+    recall_counts,
     sql_cosine,
 )
 from ushas_spark.registry import query
@@ -43,22 +47,22 @@ def _centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-def _assign(emb: DataFrame, cents: DataFrame, rank_limit: int, id_col: str) -> DataFrame:
+def _assign(emb: DataFrame, cents: DataFrame, rank_limit: int) -> DataFrame:
     """Rank centroids per vector by cosine; keep the top ``rank_limit``
     (1 for corpus assignment, NPROBE for query probing)."""
     from pyspark.sql import Window as W
 
     scored = emb.crossJoin(F.broadcast(cents)).select(
-        id_col,
+        "vec_id",
         "e",
         "cid",
         F.round(cosine(F.col("e"), F.col("ce")) * 1_000_000).cast("long").alias("cs"),
     )
-    w = W.partitionBy(id_col).orderBy(F.col("cs").desc(), "cid")
+    w = W.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cid")
     return (
         scored.withColumn("crnk", F.row_number().over(w))
         .filter(F.col("crnk") <= rank_limit)
-        .select(id_col, "e", "cid")
+        .select("vec_id", "e", "cid")
     )
 
 
@@ -110,18 +114,14 @@ WITH {_ASSIGN_SQL}
 {_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
-def ivf_topk(
-    emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES, nprobe: int = NPROBE
-) -> DataFrame:
+def ivf_topk(emb: DataFrame, k: int = TOP_K, nprobe: int = NPROBE) -> DataFrame:
     """IVF search: corpus assigned to nearest centroid; queries probe
     their ``nprobe`` nearest centroid lists only."""
-    from pyspark.sql import Window as W
-
     cents = _centroids(emb)
-    assigned = _assign(emb, cents, 1, "vec_id")
-    queries = _assign(
-        emb.filter(F.col("vec_id") < n_queries), cents, nprobe, "vec_id"
-    ).select(F.col("vec_id").alias("qid"), F.col("e").alias("qe"), "cid")
+    assigned = _assign(emb, cents, 1)
+    queries = _assign(emb.filter(F.col("vec_id") < N_QUERIES), cents, nprobe).select(
+        F.col("vec_id").alias("qid"), F.col("e").alias("qe"), "cid"
+    )
     scored = (
         assigned.join(F.broadcast(queries), ["cid"])
         .filter(F.col("vec_id") != F.col("qid"))
@@ -134,8 +134,7 @@ def ivf_topk(
         )
         .distinct()
     )
-    w = W.partitionBy("qid").orderBy(F.col("sim_x1m").desc(), "cand_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return ranked_topk(scored, F.col("sim_x1m").desc(), k)
 
 
 @query("sim_ivf_topk", oracle=_IVF_ORACLE)
@@ -212,8 +211,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by cid to turn probes into partition pruning); a query touches
     nprobe/K of the data and never reads a float vector.
     """
-    from pyspark.sql import Window as W
-
     from ushas_spark.operators.similarity import (
         _pq_sqdist_int,
         pq_reconstruct,
@@ -226,12 +223,10 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_sq8(F.col("embedding")).alias("qe"),
     )
     cents = _centroids(emb)
-    assigned = _assign(emb, cents, 1, "vec_id").select("vec_id", "cid")
+    assigned = _assign(emb, cents, 1).select("vec_id", "cid")
     # PQ reconstruction of every corpus vector (broadcast codebook).
     recon = pq_reconstruct(emb)
-    queries = _assign(
-        emb.filter(F.col("vec_id") < N_QUERIES), cents, NPROBE, "vec_id"
-    ).join(
+    queries = _assign(emb.filter(F.col("vec_id") < N_QUERIES), cents, NPROBE).join(
         emb.select("vec_id", "qe"), "vec_id"
     ).select(F.col("vec_id").alias("qid"), F.col("qe").alias("qq"), "cid")
     cand = (
@@ -244,12 +239,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS cand_id",
         f"CAST({_pq_sqdist_int('qq', 're', 'spark')} AS BIGINT) AS adc_dist",
     ).distinct()
-    w = W.partitionBy("qid").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
-    )
+    return ranked_topk(scored, "adc_dist", TOP_K).orderBy("qid", "rnk")
 
 
 # ------------------------------------------------- nprobe recall sweep
@@ -259,13 +249,7 @@ SWEEP_NPROBES = (1, 2, 4)
 def _nprobe_chain(p: int) -> str:
     return f"""
 {_probe_sql(f"qp{p}", f"sc{p}", p)},
-rk{p} AS (
-  SELECT qid, cand_id FROM (
-    SELECT qid, cand_id,
-           ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY sim_x1m DESC, cand_id) AS rnk
-    FROM sc{p}) WHERE rnk <= {TOP_K}
-)"""
+{_topk_ids_sql(f"rk{p}", f"sc{p}")}"""
 
 
 def _nprobe_sweep_oracle() -> str:
@@ -310,41 +294,21 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute ONCE (materialized); each nprobe point reuses them with
     one probe join + per-query rank. At production scale the truth arm
     runs on a sampled query slice; shape unchanged."""
-    from pyspark.sql import Window as W
-
     from ushas_spark.durability import materialize
-    from ushas_spark.operators.similarity import cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
     emb = materialize(emb)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    truth = materialize(cosine_topk(q, emb).select("qid", "cand_id"))
+    truth = materialize(exact_truth(emb))
     rows = []
     for p in SWEEP_NPROBES:
-        got = ivf_topk(emb, nprobe=p).select(
-            F.col("qid").alias("g_qid"), F.col("cand_id").alias("g_cand")
-        )
-        joined = truth.join(
-            got,
-            (F.col("qid") == F.col("g_qid"))
-            & (F.col("cand_id") == F.col("g_cand")),
-            "left",
-        )
         rows.append(
-            joined.agg(
-                F.count(F.lit(1)).alias("n_truth"),
-                F.sum(F.col("g_cand").isNotNull().cast("long")).alias(
-                    "n_hit"
-                ),
-            ).select(
+            recall_counts(truth, ivf_topk(emb, nprobe=p), broadcast=False).select(
                 F.lit(p).cast("long").alias("nprobe"),
-                "n_truth",
+                F.col("k").alias("n_truth"),
                 "n_hit",
-                F.expr("1000 * n_hit div n_truth").alias("recall_x1000"),
+                F.expr("1000 * n_hit div k").alias("recall_x1000"),
             )
         )
     out = rows[0]

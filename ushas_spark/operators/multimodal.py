@@ -27,7 +27,7 @@ Design (BASELINE.json north star; no image/audio libs in this container):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +35,26 @@ from pyspark.sql import functions as F
 
 from ushas_spark.io import load_table
 from ushas_spark.registry import query
+
+
+def per_asset(
+    assets: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """``assets.mapInPandas`` with the Arrow batch loop written once.
+
+    ``fn`` receives each input row's values in ``assets``' column order
+    and returns the output rows that row makes -- none, one or many
+    tuples in ``schema``'s column order -- so a filter, a 1->1 decode and
+    a 1->N frame split share one operator. Each batch becomes one pandas
+    frame."""
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def op(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c] for c in pdf.columns)) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return assets.mapInPandas(op, schema=schema)
 
 
 def documents_as_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,24 +86,11 @@ def decode_assets(assets: DataFrame, feature_dim: int = 8) -> DataFrame:
         "asset_id bigint, mime string, n_bytes bigint, features array<double>"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload, meta in zip(
-                pdf["asset_id"], pdf["payload"], pdf["meta"]
-            ):
-                mime = meta["mime"]
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "mime": mime,
-                        "n_bytes": len(payload),
-                        "features": _decode_stub(bytes(payload), mime, feature_dim),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "mime", "n_bytes", "features"])
+    def decode(aid, payload, meta):
+        mime = meta["mime"]
+        yield aid, mime, len(payload), _decode_stub(bytes(payload), mime, feature_dim)
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, decode, out_schema)
 
 
 def _decode_stub(payload: bytes, mime: str, feature_dim: int) -> list[float]:
@@ -119,31 +126,17 @@ def resize_images(assets: DataFrame, width: int, height: int) -> DataFrame:
         "asset_id bigint, payload binary, mime string, width int, height int"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload, meta in zip(pdf["asset_id"], pdf["payload"], pdf["meta"]):
-                if meta["mime"] != "image/png":
-                    continue
-                raw = bytes(payload)
-                # STUB: proportional byte truncation stands in for decode->
-                # resize->encode; swap for the real codec call.
-                scale = max(1, (meta["width"] or 1) * (meta["height"] or 1))
-                keep = max(1, min(len(raw), (width * height * len(raw)) // scale))
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "payload": raw[:keep],
-                        "mime": meta["mime"],
-                        "width": width,
-                        "height": height,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "payload", "mime", "width", "height"]
-            )
+    def resize(aid, payload, meta):
+        if meta["mime"] != "image/png":
+            return
+        raw = bytes(payload)
+        # STUB: proportional byte truncation stands in for decode->
+        # resize->encode; swap for the real codec call.
+        scale = max(1, (meta["width"] or 1) * (meta["height"] or 1))
+        keep = max(1, min(len(raw), (width * height * len(raw)) // scale))
+        yield aid, raw[:keep], meta["mime"], width, height
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, resize, out_schema)
 
 
 def sample_frames(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -153,25 +146,14 @@ def sample_frames(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     expansion shape (explode-like) through mapInPandas."""
     out_schema = "asset_id bigint, frame_idx int, frame_sig bigint"
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload, meta in zip(pdf["asset_id"], pdf["payload"], pdf["meta"]):
-                if meta["mime"] != "audio/wav":
-                    continue
-                raw = bytes(payload)
-                for idx, off in enumerate(range(0, len(raw), every_n_bytes)):
-                    window = raw[off : off + every_n_bytes]
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "frame_idx": idx,
-                            "frame_sig": sum(window) % 100000,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "frame_idx", "frame_sig"])
+    def frames(aid, payload, meta):
+        if meta["mime"] != "audio/wav":
+            return
+        raw = bytes(payload)
+        for idx, off in enumerate(range(0, len(raw), every_n_bytes)):
+            yield aid, idx, sum(raw[off : off + every_n_bytes]) % 100000
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, frames, out_schema)
 
 
 # ------------------------------------------------------ real WAV codec
@@ -232,20 +214,11 @@ def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < _WAV_N_ASSETS
     ).select(F.col("doc_id").alias("asset_id"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for aid in pdf["asset_id"]:
-                aid = int(aid)
-                rate, n = _wav_params(aid)
-                payloads.append(
-                    _write_wav(rate, [_wav_sample(aid, i) for i in range(n)])
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "payload": payloads}
-            )
+    def gen(aid):
+        rate, n = _wav_params(int(aid))
+        yield aid, _write_wav(rate, [_wav_sample(int(aid), i) for i in range(n)])
 
-    return d.mapInPandas(gen, schema="asset_id bigint, payload binary")
+    return per_asset(d, gen, "asset_id bigint, payload binary")
 
 
 def decode_wav_stats(assets: DataFrame) -> DataFrame:
@@ -258,36 +231,12 @@ def decode_wav_stats(assets: DataFrame) -> DataFrame:
         "n_frames bigint, duration_us bigint, peak bigint, sample_sum bigint"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rate, nch, n, samples = _read_wav(payload)
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "sample_rate": rate,
-                        "n_channels": nch,
-                        "n_frames": n,
-                        "duration_us": n * 1_000_000 // rate,
-                        "peak": max(abs(s) for s in samples),
-                        "sample_sum": sum(samples),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_frames",
-                    "duration_us",
-                    "peak",
-                    "sample_sum",
-                ],
-            )
+    def decode(aid, payload):
+        rate, nch, n, samples = _read_wav(payload)
+        peak = max(abs(s) for s in samples)
+        yield aid, rate, nch, n, n * 1_000_000 // rate, peak, sum(samples)
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, decode, out_schema)
 
 
 _WAV_DECODE_ORACLE = f"""
@@ -444,16 +393,10 @@ def synthesize_png_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < _PNG_N_ASSETS
     ).select(F.col("doc_id").alias("asset_id"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": [_encode_png(int(a)) for a in pdf["asset_id"]],
-                }
-            )
+    def gen(aid):
+        yield aid, _encode_png(int(aid))
 
-    return d.mapInPandas(gen, schema="asset_id bigint, payload binary")
+    return per_asset(d, gen, "asset_id bigint, payload binary")
 
 
 def decode_png_stats(assets: DataFrame) -> DataFrame:
@@ -463,18 +406,10 @@ def decode_png_stats(assets: DataFrame) -> DataFrame:
         "sum_r bigint, sum_g bigint, sum_b bigint"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                stats = _decode_png(bytes(payload))
-                rows.append({"asset_id": aid, **stats})
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "width", "height", "sum_r", "sum_g", "sum_b"],
-            )
+    def decode(aid, payload):
+        yield aid, *_decode_png(bytes(payload)).values()
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, decode, out_schema)
 
 
 _PNG_DECODE_ORACLE = f"""
@@ -531,52 +466,32 @@ def resize_png_nearest(assets: DataFrame, tw: int, th: int) -> DataFrame:
         "sum_r bigint, sum_g bigint, sum_b bigint, payload binary"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                src = _decode_png_pixels(bytes(payload))
-                sw, sh = src["width"], src["height"]
-                px = src["pixels"]  # list of rows of (r,g,b)
-                out = bytearray()
-                sums = [0, 0, 0]
-                for y in range(th):
-                    out.append(0)
-                    sy = y * sh // th
-                    for x in range(tw):
-                        sx = x * sw // tw
-                        r, g, b = px[sy][sx]
-                        out.extend((r, g, b))
-                        sums[0] += r
-                        sums[1] += g
-                        sums[2] += b
-                ihdr = struct.pack(">IIBBBBB", tw, th, 8, 2, 0, 0, 0)
-                resized = (
-                    b"\x89PNG\r\n\x1a\n"
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-                    + _png_chunk(b"IEND", b"")
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "width": tw,
-                        "height": th,
-                        "sum_r": sums[0],
-                        "sum_g": sums[1],
-                        "sum_b": sums[2],
-                        "payload": resized,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height",
-                    "sum_r", "sum_g", "sum_b", "payload",
-                ],
-            )
+    def resize(aid, payload):
+        src = _decode_png_pixels(bytes(payload))
+        sw, sh = src["width"], src["height"]
+        px = src["pixels"]  # list of rows of (r,g,b)
+        out = bytearray()
+        sums = [0, 0, 0]
+        for y in range(th):
+            out.append(0)
+            sy = y * sh // th
+            for x in range(tw):
+                sx = x * sw // tw
+                r, g, b = px[sy][sx]
+                out.extend((r, g, b))
+                sums[0] += r
+                sums[1] += g
+                sums[2] += b
+        ihdr = struct.pack(">IIBBBBB", tw, th, 8, 2, 0, 0, 0)
+        resized = (
+            b"\x89PNG\r\n\x1a\n"
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
+            + _png_chunk(b"IEND", b"")
+        )
+        yield aid, tw, th, *sums, resized
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, resize, out_schema)
 
 
 def _decode_png_pixels(payload: bytes) -> dict:
@@ -698,25 +613,13 @@ def multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = synthesize_wav_assets(spark, sf_dir)
     out_schema = "asset_id bigint, frame_idx bigint, abs_sum bigint"
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _, _, n, samples = _read_wav(payload)
-                for fi in range(0, (n + _FRAME_N - 1) // _FRAME_N):
-                    frame = samples[fi * _FRAME_N : (fi + 1) * _FRAME_N]
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "frame_idx": fi,
-                            "abs_sum": sum(abs(s) for s in frame),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "frame_idx", "abs_sum"])
+    def frames(aid, payload):
+        _, _, n, samples = _read_wav(payload)
+        for fi in range(0, (n + _FRAME_N - 1) // _FRAME_N):
+            frame = samples[fi * _FRAME_N : (fi + 1) * _FRAME_N]
+            yield aid, fi, sum(abs(s) for s in frame)
 
-    return assets.mapInPandas(op, schema=out_schema).orderBy(
-        "asset_id", "frame_idx"
-    )
+    return per_asset(assets, frames, out_schema).orderBy("asset_id", "frame_idx")
 
 
 _ZCR_ORACLE = f"""
@@ -754,30 +657,12 @@ def multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = synthesize_wav_assets(spark, sf_dir)
     out_schema = "asset_id bigint, n_samples bigint, zero_crossings bigint, energy bigint"
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _, _, n, samples = _read_wav(payload)
-                zcr = sum(
-                    1
-                    for i in range(1, n)
-                    if samples[i - 1] * samples[i] < 0
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "n_samples": n,
-                        "zero_crossings": zcr,
-                        "energy": sum(s * s for s in samples),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "n_samples", "zero_crossings", "energy"],
-            )
+    def features(aid, payload):
+        _, _, n, samples = _read_wav(payload)
+        zcr = sum(1 for i in range(1, n) if samples[i - 1] * samples[i] < 0)
+        yield aid, n, zcr, sum(s * s for s in samples)
 
-    return assets.mapInPandas(op, schema=out_schema).orderBy("asset_id")
+    return per_asset(assets, features, out_schema).orderBy("asset_id")
 
 
 _PNG_HIST_ORACLE = f"""
@@ -818,24 +703,16 @@ def multimodal_png_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is per-asset map-side work with zero shuffle (the output
     sort is gate-only)."""
     assets = synthesize_png_assets(spark, sf_dir)
-    cols = ["asset_id"] + [f"h{b}" for b in range(8)]
-    out_schema = ", ".join(f"{c} bigint" for c in cols)
+    out_schema = "asset_id bigint, " + ", ".join(f"h{b} bigint" for b in range(8))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                src = _decode_png_pixels(bytes(payload))
-                counts = [0] * 8
-                for row in src["pixels"]:
-                    for r, g, b in row:
-                        counts[(r + g + b) // 96] += 1
-                rows.append(
-                    {"asset_id": aid, **{f"h{i}": counts[i] for i in range(8)}}
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def histogram(aid, payload):
+        counts = [0] * 8
+        for row in _decode_png_pixels(bytes(payload))["pixels"]:
+            for r, g, b in row:
+                counts[(r + g + b) // 96] += 1
+        yield aid, *counts
 
-    return assets.mapInPandas(op, schema=out_schema).orderBy("asset_id")
+    return per_asset(assets, histogram, out_schema).orderBy("asset_id")
 
 
 _DOWNSAMPLE_ORACLE = f"""
@@ -872,29 +749,12 @@ def multimodal_wav_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "abs_sum_out bigint"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rate, _, _, samples = _read_wav(payload)
-                out_wav = _write_wav(rate // 2, samples[::2])
-                rate2, _, n2, out = _read_wav(out_wav)
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "rate_out": rate2,
-                        "n_frames_out": n2,
-                        "abs_sum_out": sum(abs(s) for s in out),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "rate_out", "n_frames_out", "abs_sum_out"
-                ],
-            )
+    def downsample(aid, payload):
+        rate, _, _, samples = _read_wav(payload)
+        rate2, _, n2, out = _read_wav(_write_wav(rate // 2, samples[::2]))
+        yield aid, rate2, n2, sum(abs(s) for s in out)
 
-    return assets.mapInPandas(op, schema=out_schema).orderBy("asset_id")
+    return per_asset(assets, downsample, out_schema).orderBy("asset_id")
 
 
 # The aHash replay as oracle CTEs: ``p`` .. ``bits`` decode and threshold
@@ -1008,43 +868,23 @@ def _image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_above_mean bigint"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                src = _decode_png_pixels(bytes(payload))
-                w, h, px = src["width"], src["height"], src["pixels"]
-                lum = [
-                    [
-                        sum(px[(gy * h) // 8][(gx * w) // 8])
-                        for gx in range(8)
-                    ]
-                    for gy in range(8)
-                ]
-                total = sum(sum(r) for r in lum)
-                lo = hi = above = 0
-                for gy in range(8):
-                    for gx in range(8):
-                        if 64 * lum[gy][gx] > total:
-                            above += 1
-                            if gy < 4:
-                                lo |= 1 << (gy * 8 + gx)
-                            else:
-                                hi |= 1 << ((gy - 4) * 8 + gx)
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "ahash_lo": lo,
-                        "ahash_hi": hi,
-                        "n_above_mean": above,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "ahash_lo", "ahash_hi", "n_above_mean"],
-            )
+    def ahash(aid, payload):
+        src = _decode_png_pixels(bytes(payload))
+        w, h, px = src["width"], src["height"], src["pixels"]
+        lum = [[sum(px[(gy * h) // 8][(gx * w) // 8]) for gx in range(8)] for gy in range(8)]
+        total = sum(sum(r) for r in lum)
+        lo = hi = above = 0
+        for gy in range(8):
+            for gx in range(8):
+                if 64 * lum[gy][gx] > total:
+                    above += 1
+                    if gy < 4:
+                        lo |= 1 << (gy * 8 + gx)
+                    else:
+                        hi |= 1 << ((gy - 4) * 8 + gx)
+        yield aid, lo, hi, above
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, ahash, out_schema)
 
 
 _AHASH_MAX_D = 3  # 4 x 16-bit bands pigeonhole-guarantee radius <= 3
@@ -1216,25 +1056,19 @@ def _audio_fingerprint_pairs(
 
     assets = synthesize_wav_assets(spark, sf_dir)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _, _, n, samples = _read_wav(payload)
-                e = [abs(s) for s in samples]
-                total = sum(e)
-                fp = 0
-                for w_i in range(_AFP_WINDOWS):
-                    lo = w_i * n // _AFP_WINDOWS
-                    hi = (w_i + 1) * n // _AFP_WINDOWS
-                    if _AFP_WINDOWS * sum(e[lo:hi]) > total:
-                        fp |= 1 << w_i
-                rows.append({"asset_id": aid, "fp": fp})
-            yield pd.DataFrame(rows, columns=["asset_id", "fp"])
+    def fingerprint(aid, payload):
+        _, _, n, samples = _read_wav(payload)
+        e = [abs(s) for s in samples]
+        total = sum(e)
+        fp = 0
+        for w_i in range(_AFP_WINDOWS):
+            lo = w_i * n // _AFP_WINDOWS
+            hi = (w_i + 1) * n // _AFP_WINDOWS
+            if _AFP_WINDOWS * sum(e[lo:hi]) > total:
+                fp |= 1 << w_i
+        yield aid, fp
 
-    sig = materialize(
-        assets.mapInPandas(op, schema="asset_id bigint, fp bigint")
-    )
+    sig = materialize(per_asset(assets, fingerprint, "asset_id bigint, fp bigint"))
     bands = sig.select(
         "asset_id",
         "fp",
@@ -1446,33 +1280,23 @@ def synthesize_video_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") < _VIDEO_N_ASSETS
     ).select(F.col("doc_id").alias("asset_id"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for aid in pdf["asset_id"]:
-                aid = int(aid)
-                w, h, fps, n = _video_dims(aid)
-                parts = [b"USVF", struct.pack("<HHHI", w, h, fps, n)]
-                for f in range(n):
-                    plane = bytes(
-                        _video_pixel(aid, f, x, y)
-                        for y in range(h)
-                        for x in range(w)
-                    )
-                    comp = zlib.compress(plane, 6)
-                    pts_ms = f * 1000 // fps
-                    parts.append(struct.pack("<II", pts_ms, len(comp)))
-                    parts.append(comp)
-                payloads.append(b"".join(parts))
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "payload": payloads}
+    def gen(aid):
+        w, h, fps, n = _video_dims(int(aid))
+        parts = [b"USVF", struct.pack("<HHHI", w, h, fps, n)]
+        for f in range(n):
+            plane = bytes(
+                _video_pixel(int(aid), f, x, y) for y in range(h) for x in range(w)
             )
+            comp = zlib.compress(plane, 6)
+            parts.append(struct.pack("<II", f * 1000 // fps, len(comp)))
+            parts.append(comp)
+        yield aid, b"".join(parts)
 
-    return d.mapInPandas(gen, schema="asset_id bigint, payload binary")
+    return per_asset(d, gen, "asset_id bigint, payload binary")
 
 
-def sample_video_frames(assets: DataFrame, every: int = _VIDEO_SAMPLE_EVERY) -> DataFrame:
-    """Parse the container, keep every ``every``-th frame, decompress it
+def sample_video_frames(assets: DataFrame) -> DataFrame:
+    """Parse the container, keep _VIDEO_SAMPLE_EVERY ``_VIDEO_SAMPLE_EVERY``-th frame, decompress it
     (REAL zlib decode), and emit per-frame luma statistics.
 
     This is the training-data shape for video: one binary column in,
@@ -1490,46 +1314,20 @@ def sample_video_frames(assets: DataFrame, every: int = _VIDEO_SAMPLE_EVERY) -> 
         "height bigint, luma_sum bigint, luma_mean_x100 bigint"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                buf = bytes(payload)
-                assert buf[:4] == b"USVF", "bad magic"
-                w, h, fps, n = struct.unpack_from("<HHHI", buf, 4)
-                off = 4 + 10
-                for f in range(n):
-                    pts_ms, clen = struct.unpack_from("<II", buf, off)
-                    off += 8
-                    if f % every == 0:
-                        plane = zlib.decompress(buf[off : off + clen])
-                        s = sum(plane)
-                        rows.append(
-                            {
-                                "asset_id": int(aid),
-                                "frame_no": f,
-                                "pts_ms": pts_ms,
-                                "width": w,
-                                "height": h,
-                                "luma_sum": s,
-                                "luma_mean_x100": 100 * s // (w * h),
-                            }
-                        )
-                    off += clen
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "frame_no",
-                    "pts_ms",
-                    "width",
-                    "height",
-                    "luma_sum",
-                    "luma_mean_x100",
-                ],
-            )
+    def frames(aid, payload):
+        buf = bytes(payload)
+        assert buf[:4] == b"USVF", "bad magic"
+        w, h, fps, n = struct.unpack_from("<HHHI", buf, 4)
+        off = 4 + 10
+        for f in range(n):
+            pts_ms, clen = struct.unpack_from("<II", buf, off)
+            off += 8
+            if f % _VIDEO_SAMPLE_EVERY == 0:
+                s = sum(zlib.decompress(buf[off : off + clen]))
+                yield int(aid), f, pts_ms, w, h, s, 100 * s // (w * h)
+            off += clen
 
-    return assets.mapInPandas(op, schema=out_schema)
+    return per_asset(assets, frames, out_schema)
 
 
 _VIDEO_ORACLE = f"""

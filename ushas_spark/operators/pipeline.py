@@ -44,8 +44,8 @@ _SPLIT_CASE_SQL = """CASE WHEN {h} % 100 < 90 THEN 'train'
      WHEN {h} % 100 < 95 THEN 'val' ELSE 'test' END"""
 
 
-def split_column(doc_id: F.Column | str = "doc_id") -> F.Column:
-    h = hash60(F.col(doc_id).cast("string"))
+def split_column() -> F.Column:
+    h = hash60(F.col("doc_id").cast("string"))
     return (
         F.when(h % 100 < 90, "train").when(h % 100 < 95, "val").otherwise("test")
     )
@@ -80,7 +80,10 @@ def pipeline_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PACK_ORACLE = f"""
+# Oracle CTEs shared by both packers: ``packed`` gives every document
+# its token count ``tok`` and the running token sum ``cum`` of its hash
+# bucket in (h, doc_id) order.
+_PACKED_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
          {sql_hash60("CAST(doc_id AS VARCHAR)")} AS h,
@@ -91,7 +94,9 @@ packed AS (
          SUM(tok) OVER (PARTITION BY h % {N_PACK_BUCKETS} ORDER BY h, doc_id
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
   FROM toks)
-SELECT bucket,
+"""
+
+_PACK_ORACLE = _PACKED_SQL + f"""SELECT bucket,
        CAST((cum - tok) // {SHARD_TOKEN_BUDGET} AS BIGINT) AS shard,
        COUNT(*) AS n_docs,
        CAST(SUM(tok) AS BIGINT) AS shard_tokens
@@ -270,8 +275,8 @@ _QUOTA_OVERSAMPLE_X1000 = 1500
 _QUOTA_MOD = 1_000_000_000
 
 
-def _quota_hash(doc_id: F.Column | str = "doc_id") -> F.Column:
-    return hash60(F.concat(F.lit("quota:"), F.col(doc_id).cast("string")))
+def _quota_hash() -> F.Column:
+    return hash60(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")))
 
 
 _QUOTA_ORACLE = f"""
@@ -677,18 +682,7 @@ def pipeline_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- token-level sequence packing
 SEQ_LEN = 128  # training sequence length (tokens)
 
-_PACK_SEQ_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id,
-         {sql_hash60("CAST(doc_id AS VARCHAR)")} AS h,
-         CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS tok
-  FROM documents),
-packed AS (
-  SELECT h % {N_PACK_BUCKETS} AS bucket, doc_id, tok,
-         SUM(tok) OVER (PARTITION BY h % {N_PACK_BUCKETS} ORDER BY h, doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM toks)
-SELECT CAST(bucket AS BIGINT) AS bucket,
+_PACK_SEQ_ORACLE = _PACKED_SQL + f"""SELECT CAST(bucket AS BIGINT) AS bucket,
        CAST((cum - tok) // {SEQ_LEN} AS BIGINT) AS seq_id,
        CAST((cum - tok) % {SEQ_LEN} AS BIGINT) AS tok_offset,
        doc_id, tok AS n_tok,

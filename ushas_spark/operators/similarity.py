@@ -29,6 +29,7 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ushas_spark.io import load_table
@@ -91,53 +92,73 @@ ORDER BY qid, rnk
 """
 
 
-_BRUTE_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+def ranked_topk(scored: DataFrame, order: Column | str, k: int) -> DataFrame:
+    """Spark mirror of :func:`_ranked_topk_sql`: the ``k`` rows of
+    ``scored`` per ``qid`` by ``order`` (ties to the smaller cand_id),
+    numbered 1.. in ``rnk``. One shuffle on qid."""
+    w = W.partitionBy("qid").orderBy(order, "cand_id")
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _query_vectors(emb: DataFrame) -> DataFrame:
+    """The demo query set ``(qid, e)``: the first N_QUERIES vectors."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("e")
+    )
+
+
+def _topk_ids_sql(name: str, src: str) -> str:
+    """Oracle CTE ``name``: the ``(qid, cand_id)`` of the ``TOP_K`` rows
+    of ``src`` per qid by sim_x1m (ties to the smaller cand_id)."""
+    return f"""{name} AS (
+  SELECT qid, cand_id FROM (
+    SELECT qid, cand_id,
+           ROW_NUMBER() OVER (PARTITION BY qid
+                              ORDER BY sim_x1m DESC, cand_id) AS rnk
+    FROM {src}) WHERE rnk <= {TOP_K}
+)"""
+
+
+# Oracle CTEs: the corpus ``v``, the query set ``q`` and every
+# (query, candidate) exact cosine in ``scored``; ends with a comma.
+_EXACT_SCORED_SQL = f"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT qid, v.vec_id AS cand_id,
          CAST(ROUND({sql_cosine("qe", "e")} * 1000000) AS BIGINT) AS sim_x1m
   FROM q JOIN v ON v.vec_id <> qid
-),
+),"""
+
+_BRUTE_ORACLE = f"""
+WITH {_EXACT_SCORED_SQL}
 {_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
-def cosine_topk(
-    queries_df: DataFrame,
-    corpus_df: DataFrame,
-    k: int = TOP_K,
-    qid_col: str = "qid",
-    vec_col: str = "e",
-) -> DataFrame:
-    """Exact top-k cosine neighbours of each query vector.
+def cosine_topk(queries_df: DataFrame, corpus_df: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Exact top-k cosine neighbours of each query vector ``(qid, e)``
+    in the corpus ``(vec_id, e)``.
 
     Scale shape: broadcast the (small) query set, stream the corpus once,
     rank per query with one shuffle on qid. Never collect the corpus."""
-    from pyspark.sql import Window as W
-
-    q = queries_df.select(F.col(qid_col), F.col(vec_col).alias("qe"))
+    q = queries_df.select(F.col("qid"), F.col("e").alias("qe"))
     # Fan out the corpus: a single small parquet file is one partition,
     # and the per-pair fold below runs per-core only if the scan does.
     n = corpus_df.sparkSession.sparkContext.defaultParallelism
     c = corpus_df.repartition(n).select(
-        F.col("vec_id").alias("cand_id"), F.col(vec_col).alias("ce")
+        F.col("vec_id").alias("cand_id"), F.col("e").alias("ce")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
-        .filter(F.col("cand_id") != F.col(qid_col))
+        .filter(F.col("cand_id") != F.col("qid"))
         .select(
-            qid_col,
+            "qid",
             "cand_id",
             F.round(cosine(F.col("qe"), F.col("ce")) * 1_000_000)
             .cast("long")
             .alias("sim_x1m"),
         )
     )
-    w = W.partitionBy(qid_col).orderBy(F.col("sim_x1m").desc(), "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    return ranked_topk(scored, F.col("sim_x1m").desc(), k)
 
 
 @query("sim_brute_force_topk", oracle=_BRUTE_ORACLE)
@@ -145,23 +166,20 @@ def sim_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    return cosine_topk(q, emb).orderBy("qid", "rnk")
+    return cosine_topk(_query_vectors(emb), emb).orderBy("qid", "rnk")
 
 
 # ------------------------------------------------------------- LSH ANN
 
 
-def _plane_weights(n_planes: int = N_TABLES * PLANES_PER_TABLE, dim: int = DIM) -> list[list[float]]:
+def _plane_weights() -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes from md5 -- identical when
     recomputed anywhere (the reproducibility property LSH needs so that
     yesterday's buckets match today's incremental run)."""
     planes = []
-    for p in range(n_planes):
+    for p in range(N_TABLES * PLANES_PER_TABLE):
         w = []
-        for i in range(dim):
+        for i in range(DIM):
             h = int(hashlib.md5(f"plane{p}:{i}".encode()).hexdigest()[:15], 16)
             w.append(((h % 2001) - 1000) / 1000.0)
         planes.append(w)
@@ -200,6 +218,23 @@ def _tables(planes: list[list[float]]) -> list[list[list[float]]]:
     ]
 
 
+def _lsh_buckets(emb: DataFrame) -> DataFrame:
+    """``(vec_id, e, tbl, bucket)``: every vector exploded into its
+    sign-pattern bucket in each of the N_TABLES LSH tables."""
+    tbl_structs = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("tbl"),
+                _bucket_expr(F.col("e"), tp).alias("bucket"),
+            )
+            for t, tp in enumerate(_tables(_PLANES))
+        ]
+    )
+    return emb.select("vec_id", "e", F.explode(tbl_structs).alias("tb")).select(
+        "vec_id", "e", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
+    )
+
+
 _ANN_ORACLE = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 b AS (
@@ -221,31 +256,16 @@ scored AS (
 {_ranked_topk_sql("sim_x1m", "sim_x1m DESC")}"""
 
 
-def ann_lsh_topk(
-    emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES
-) -> DataFrame:
+def ann_lsh_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     """Multi-table LSH approximate top-k: score only candidates sharing a
     bucket with the query in ANY table. One narrow map to (table, bucket)
     ids (explode), one equi-join on them -- the join IS the partition
     pruning (an IVF coarse quantiser would swap sign-patterns for k-means
     centroids; same plan shape). Recall tunes with N_TABLES."""
-    from pyspark.sql import Window as W
-
-    tbl_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _bucket_expr(F.col("e"), tp).alias("bucket"),
-            )
-            for t, tp in enumerate(_tables(_PLANES))
-        ]
-    )
-    b = emb.select("vec_id", "e", F.explode(tbl_structs).alias("tb")).select(
-        "vec_id", "e", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    )
+    b = _lsh_buckets(emb)
     # Rename every query-side column: q derives from b, so un-aliased
     # join conditions would resolve to trivially-true self-compares.
-    q = b.filter(F.col("vec_id") < n_queries).select(
+    q = b.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("e").alias("qe"),
         F.col("tbl").alias("qtbl"),
@@ -268,8 +288,7 @@ def ann_lsh_topk(
         .cast("long")
         .alias("sim_x1m"),
     )
-    w = W.partitionBy("qid").orderBy(F.col("sim_x1m").desc(), "cand_id")
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return ranked_topk(scored, F.col("sim_x1m").desc(), k)
 
 
 @query("sim_ann_lsh_topk", oracle=_ANN_ORACLE)
@@ -311,18 +330,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    tbl_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                _bucket_expr(F.col("e"), tp).alias("bucket"),
-            )
-            for t, tp in enumerate(_tables(_PLANES))
-        ]
-    )
-    b = emb.select("vec_id", "e", F.explode(tbl_structs).alias("tb")).select(
-        "vec_id", "e", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    )
+    b = _lsh_buckets(emb)
     other = b.select(
         F.col("vec_id").alias("id_b"),
         F.col("e").alias("e_b"),
@@ -434,8 +442,6 @@ def sim_hamming_packed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen, no float math, no Python). Quantized recall vs
     exact cosine is measured in tests/test_operators.py.
     """
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
@@ -459,12 +465,7 @@ def sim_hamming_packed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("cand_id"), ham.alias("hamming"))
     )
-    w = W.partitionBy("qid").orderBy("hamming", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
-    )
+    return ranked_topk(scored, "hamming", TOP_K).orderBy("qid", "rnk")
 
 
 # --------------------------------------------- per-label centroid stats
@@ -528,9 +529,7 @@ def sim_label_centroid_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- vectorized (Arrow/numpy) variant
 
 
-def cosine_topk_numpy(
-    queries: DataFrame, corpus: DataFrame, k: int = TOP_K
-) -> DataFrame:
+def cosine_topk_numpy(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """Brute-force cosine top-k via mapInPandas + numpy matmul -- the
     Arrow-vectorized alternative to the JVM fold (``cosine_topk``).
 
@@ -548,7 +547,6 @@ def cosine_topk_numpy(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window as W
 
     q_rows = queries.select("qid", "e").collect()  # N_QUERIES rows, tiny
     qids = [r.qid for r in q_rows]
@@ -569,18 +567,16 @@ def cosine_topk_numpy(
                 col = sims[:, j]
                 mask = ids != qid
                 cand, vals = ids[mask], col[mask]
-                if len(cand) > k:
-                    part = np.argpartition(-vals, k)[:k]
+                if len(cand) > TOP_K:
+                    part = np.argpartition(-vals, TOP_K)[:TOP_K]
                     cand, vals = cand[part], vals[part]
                 yield pd.DataFrame(
                     {"qid": qid, "cand_id": cand, "sim": vals}
                 )
 
     partials = corpus.select("vec_id", "e").mapInPandas(op, schema=out_schema)
-    w = W.partitionBy("qid").orderBy(F.col("sim").desc(), "cand_id")
     return (
-        partials.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        ranked_topk(partials, F.col("sim").desc(), TOP_K)
         .select(
             "qid",
             "cand_id",
@@ -598,10 +594,7 @@ def sim_brute_force_topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    return cosine_topk_numpy(q, emb).orderBy("qid", "rnk")
+    return cosine_topk_numpy(_query_vectors(emb), emb).orderBy("qid", "rnk")
 
 
 # --- int8 scalar quantization (SQ8) ---------------------------------------
@@ -664,8 +657,6 @@ scored AS (
 @query("sim_sq8_topk", oracle=_SQ8_ORACLE)
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k by int8-quantized dot product (exact integer scoring)."""
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize_sq8(F.col("embedding")).alias("qe")
     )
@@ -677,12 +668,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"),
         int_dot(F.col("qq"), F.col("qe")).alias("dot_q"),
     )
-    w = W.partitionBy("qid").orderBy(F.col("dot_q").desc(), "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
-    )
+    return ranked_topk(scored, F.col("dot_q").desc(), TOP_K).orderBy("qid", "rnk")
 
 
 # --- product quantization (PQ) with ADC scoring ----------------------------
@@ -801,8 +787,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape); production puts the IVF coarse quantiser from ivf.py in
     front, which is exactly FAISS IVF-PQ.
     """
-    from pyspark.sql import Window as W
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize_sq8(F.col("embedding")).alias("qe")
     )
@@ -815,12 +799,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id AS cand_id",
         f"CAST({_pq_sqdist_int('qq', 're', 'spark')} AS BIGINT) AS adc_dist",
     )
-    w = W.partitionBy("qid").orderBy("adc_dist", "cand_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("qid", "rnk")
-    )
+    return ranked_topk(scored, "adc_dist", TOP_K).orderBy("qid", "rnk")
 
 
 # --------------------------------------- Rademacher random projection (JL)
@@ -940,10 +919,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    top = cosine_topk(q, emb, k=TOP_K)
+    top = cosine_topk(_query_vectors(emb), emb)
     labels = emb.select(F.col("vec_id").alias("cand_id"), "label")
     votes = (
         top.join(F.broadcast(labels), "cand_id")
@@ -1149,9 +1125,9 @@ sel{r} AS (
 )"""
 
 
-def _mmr_oracle(k: int = MMR_K) -> str:
-    rounds = "".join("," + _mmr_round_sql(r) for r in range(1, k))
-    union = " UNION ALL ".join(f"SELECT * FROM sel{r}" for r in range(k))
+def _mmr_oracle() -> str:
+    rounds = "".join("," + _mmr_round_sql(r) for r in range(1, MMR_K))
+    union = " UNION ALL ".join(f"SELECT * FROM sel{r}" for r in range(MMR_K))
     return (
         "WITH "
         + _MMR_CAND
@@ -1308,12 +1284,11 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
     # Attach candidate vectors by broadcasting the tiny top-k table at
     # the big corpus scan -- the corpus side never shuffles.
-    cand = F.broadcast(cosine_topk(q, emb).select("qid", "cand_id", "sim_x1m"))
+    cand = F.broadcast(
+        cosine_topk(_query_vectors(emb), emb).select("qid", "cand_id", "sim_x1m")
+    )
     cand_ce = emb.select(
         F.col("vec_id").alias("cand_id"), F.col("e").alias("ce")
     ).join(cand, "cand_id")
@@ -1335,21 +1310,49 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------- ANN recall@k evaluation
+
+
+def exact_truth(emb: DataFrame) -> DataFrame:
+    """The exact top-k ids ``(qid, cand_id)`` of the demo queries: the
+    truth arm every recall@k evaluation scores against."""
+    return cosine_topk(_query_vectors(emb), emb).select("qid", "cand_id")
+
+
+def recall_counts(
+    truth: DataFrame, got: DataFrame, *keys: str, broadcast: bool
+) -> DataFrame:
+    """Per ``keys`` group of ``truth`` ``(qid, cand_id)``: its rows ``k``
+    and ``n_hit``, how many of them an approximate arm's top-k ``got``
+    ``(qid, cand_id)`` also returned (one left join; ``broadcast`` hints
+    the ``got`` side)."""
+    g = got.select(F.col("qid").alias("g_qid"), F.col("cand_id").alias("g_cand"))
+    joined = truth.join(
+        F.broadcast(g) if broadcast else g,
+        (F.col("qid") == F.col("g_qid")) & (F.col("cand_id") == F.col("g_cand")),
+        "left",
+    )
+    return joined.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("k"),
+        F.sum(F.col("g_cand").isNotNull().cast("long")).alias("n_hit"),
+    )
+
+
+def _recall_per_query(emb: DataFrame, got: DataFrame, broadcast: bool) -> DataFrame:
+    """Recall@k of ``got`` against :func:`exact_truth`, one row per query
+    ``(qid, k, n_hit, recall_at_k_x1000)``."""
+    return (
+        recall_counts(exact_truth(emb), got, "qid", broadcast=broadcast)
+        .select(
+            "qid",
+            "k",
+            "n_hit",
+            F.expr("1000 * n_hit div k").alias("recall_at_k_x1000"),
+        )
+        .orderBy("qid")
+    )
 _ANN_RECALL_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_QUERIES}),
-scored AS (
-  SELECT qid, v.vec_id AS cand_id,
-         CAST(ROUND({sql_cosine("qe", "e")} * 1000000) AS BIGINT) AS sim_x1m
-  FROM q JOIN v ON v.vec_id <> qid
-),
-truth AS (
-  SELECT qid, cand_id FROM (
-    SELECT qid, cand_id,
-           ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY sim_x1m DESC, cand_id) AS rnk
-    FROM scored) WHERE rnk <= {TOP_K}
-),
+WITH {_EXACT_SCORED_SQL}
+{_topk_ids_sql("truth", "scored")},
 b AS (
   {" UNION ALL ".join(
       f"SELECT vec_id, e, {t} AS tbl, {_sql_bucket('e', tp)} AS bucket FROM v"
@@ -1402,32 +1405,7 @@ def sim_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    truth = cosine_topk(q, emb).select("qid", "cand_id")
-    ann = ann_lsh_topk(emb).select(
-        F.col("qid").alias("a_qid"), F.col("cand_id").alias("a_cand")
-    )
-    joined = truth.join(
-        ann,
-        (F.col("qid") == F.col("a_qid")) & (F.col("cand_id") == F.col("a_cand")),
-        "left",
-    )
-    return (
-        joined.groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("a_cand").isNotNull().cast("long")).alias("n_hit"),
-        )
-        .select(
-            "qid",
-            "k",
-            "n_hit",
-            F.expr("1000 * n_hit div k").alias("recall_at_k_x1000"),
-        )
-        .orderBy("qid")
-    )
+    return _recall_per_query(emb, ann_lsh_topk(emb), broadcast=False)
 
 
 # -------------------------------------------- Matryoshka prefix-dim recall
@@ -1493,33 +1471,8 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("e")
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("e")
-    )
-    truth = cosine_topk(q, emb).select("qid", "cand_id")
-    q_pre = q.select("qid", F.slice("e", 1, PREFIX_DIMS).alias("e"))
+    q_pre = _query_vectors(emb).select("qid", F.slice("e", 1, PREFIX_DIMS).alias("e"))
     emb_pre = emb.select("vec_id", F.slice("e", 1, PREFIX_DIMS).alias("e"))
-    pre = cosine_topk(q_pre, emb_pre).select(
-        F.col("qid").alias("p_qid"), F.col("cand_id").alias("p_cand")
-    )
     # Both arms are |queries| x k rows; without the hint the planner
     # saw unsized shuffles on each side and picked a sort-merge join.
-    joined = truth.join(
-        F.broadcast(pre),
-        (F.col("qid") == F.col("p_qid")) & (F.col("cand_id") == F.col("p_cand")),
-        "left",
-    )
-    return (
-        joined.groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("p_cand").isNotNull().cast("long")).alias("n_hit"),
-        )
-        .select(
-            "qid",
-            "k",
-            "n_hit",
-            F.expr("1000 * n_hit div k").alias("recall_at_k_x1000"),
-        )
-        .orderBy("qid")
-    )
+    return _recall_per_query(emb, cosine_topk(q_pre, emb_pre), broadcast=True)

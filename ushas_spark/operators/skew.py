@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from ushas_spark.io import load_table
 from ushas_spark.registry import query
 
+N_SALTS = 8  # salts per hot key: the first shuffle fans each key over 8 reducers
+
 
 def _row_salt(df: DataFrame, n_salts: int, id_col: str | None) -> F.Column:
     """Retry-deterministic salt in [0, n_salts).
@@ -53,19 +55,17 @@ def salted_join(
     small: DataFrame,
     big_key: str,
     small_key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-    id_col: str | None = None,
+    n_salts: int = N_SALTS,
 ) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
+    """Inner equi-join with the big side salted and the small side
+    replicated.
 
-    The big side's salt comes from :func:`_row_salt` (stable-id hash when
-    ``id_col`` is given, else content+partition hash -- see its docstring
-    for the duplicate-row rationale). The small side explodes to all
-    salts, so every big row finds its partner in exactly one (key, salt)
-    bucket.
+    The big side's salt comes from :func:`_row_salt` (content+partition
+    hash -- see its docstring for the duplicate-row rationale). The small
+    side explodes to all salts, so every big row finds its partner in
+    exactly one (key, salt) bucket.
     """
-    salted_big = big.withColumn("_salt", _row_salt(big, n_salts, id_col))
+    salted_big = big.withColumn("_salt", _row_salt(big, n_salts, None))
     salted_small = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(s) for s in range(n_salts)]))
     )
@@ -73,23 +73,23 @@ def salted_join(
         salted_small,
         (salted_big[big_key] == salted_small[small_key])
         & (salted_big["_salt"] == salted_small["_salt"]),
-        how,
+        "inner",
     )
     return joined.drop("_salt")
 
 
 def salted_aggregate_counts(
-    df: DataFrame, key: str, n_salts: int = 8, id_col: str | None = None
+    df: DataFrame, key: str
 ) -> DataFrame:
     """Two-phase aggregation through a salted key: partial counts per
     (key, salt), then final per key. For COUNT/SUM-class aggregates this
-    is exact; the first shuffle spreads a hot key over n_salts reducers.
+    is exact; the first shuffle spreads a hot key over N_SALTS reducers.
     Salt is retry-deterministic (see :func:`_row_salt`); note the hash
     aggregate's map-side combine already collapses identical rows before
     the shuffle, so duplicates are far less dangerous here than in the
     join case."""
     partial = (
-        df.withColumn("_salt", _row_salt(df, n_salts, id_col))
+        df.withColumn("_salt", _row_salt(df, N_SALTS, None))
         .groupBy(key, "_salt")
         .agg(F.count("*").alias("_partial_n"))
     )

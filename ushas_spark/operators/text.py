@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ushas_spark.io import load_table
+from ushas_spark.queries.analytics import pair_lift, pair_lift_sql
 from ushas_spark.registry import query
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
@@ -55,10 +56,11 @@ def sql_token_count_bpe(expr: str) -> str:
     return f"len(regexp_extract_all({expr}, '{BPE_TOKEN_PATTERN}'))"
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Append deterministic quality-signal columns (length, token stats,
-    stopword ratio) -- the usual pre-filter features for corpus curation."""
-    t = F.col(text_col)
+    stopword ratio) of the ``text`` column -- the usual pre-filter
+    features for corpus curation."""
+    t = F.col("text")
     toks = tokens(t)
     en_stop = F.array([F.lit(w) for w in STOPWORDS["en"]])
     n_tok = F.size(toks)
@@ -940,12 +942,7 @@ WITH dt AS (
   FROM documents
 ), n_docs AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS nd FROM dt),
 tf AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM dt GROUP BY tok),
-pair AS (
-  SELECT a.tok AS tok_a, b.tok AS tok_b, CAST(COUNT(*) AS BIGINT) AS n_pair
-  FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {COLLOC_MIN_SUPPORT}
-), scored AS (
+{pair_lift_sql("dt", "doc_id", "tok", COLLOC_MIN_SUPPORT)}, scored AS (
   SELECT pair.tok_a, pair.tok_b, pair.n_pair, fa.df AS df_a, fb.df AS df_b,
          CAST(ROUND(1000000.0 * pair.n_pair * nd.nd /
                     (CAST(fa.df AS DOUBLE) * fb.df)) AS BIGINT) AS lift_x1m
@@ -966,46 +963,14 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than their document frequencies predict (lift = the
     exponentiated PMI, which needs no logarithm and so gates exactly)
     -- the phrase-discovery pass before fixing a tokenizer vocabulary.
-    Identical architecture to basket_pair_lift with documents as
-    baskets: per-doc DISTINCT tokens bound the pair fan-out, counts
-    aggregate map-side, frequencies broadcast onto the
-    support-filtered pair table, TakeOrderedAndProject top-N."""
+    :func:`pair_lift` with documents as baskets: per-doc DISTINCT tokens
+    bound the pair fan-out."""
     d = load_table(spark, sf_dir, "documents")
     dt = d.select(
         "doc_id",
         F.explode(F.array_distinct(F.split("text", r"\s+"))).alias("tok"),
     )
-    nd = dt.agg(F.count_distinct("doc_id").alias("nd"))
-    tf = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    a, b = dt.alias("a"), dt.alias("b")
-    pair = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.tok") < F.col("b.tok")),
-        )
-        .groupBy(F.col("a.tok").alias("tok_a"), F.col("b.tok").alias("tok_b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= COLLOC_MIN_SUPPORT)
-    )
-    fa = tf.select(F.col("tok").alias("tok_a"), F.col("df").alias("df_a"))
-    fb = tf.select(F.col("tok").alias("tok_b"), F.col("df").alias("df_b"))
-    scored = (
-        pair.join(F.broadcast(fa), "tok_a")
-        .join(F.broadcast(fb), "tok_b")
-        .crossJoin(F.broadcast(nd))
-        .select(
-            "tok_a", "tok_b", "n_pair", "df_a", "df_b",
-            F.round(
-                F.lit(1_000_000.0) * F.col("n_pair") * F.col("nd")
-                / (F.col("df_a").cast("double") * F.col("df_b"))
-            ).cast("long").alias("lift_x1m"),
-        )
-    )
-    return scored.orderBy(
-        F.col("lift_x1m").desc(), "tok_a", "tok_b"
-    ).limit(COLLOC_TOP)
-
+    return pair_lift(dt, "doc_id", "tok", "df", "nd", COLLOC_MIN_SUPPORT, COLLOC_TOP)
 
 
 # --------------------------------------------------------- readability

@@ -49,9 +49,9 @@ def dec_sum(col: Column, alias: str, scale: int = SCALE) -> Column:
     return (scaled.cast("double") / float(f)).alias(alias)
 
 
-def dec_avg(col: Column, alias: str, scale: int = SCALE) -> Column:
+def dec_avg(col: Column, alias: str) -> Column:
     """Order-independent, engine-portable AVG of a double expression."""
-    f = _factor(scale)
+    f = _factor(SCALE)
     scaled = F.sum(F.round(col * f).cast("long")).cast("double") / float(f)
     return (scaled / F.count(col).cast("double")).alias(alias)
 
@@ -65,9 +65,9 @@ def sql_dec_sum(expr: str, alias: str, scale: int = SCALE) -> str:
     )
 
 
-def sql_dec_avg(expr: str, alias: str, scale: int = SCALE) -> str:
+def sql_dec_avg(expr: str, alias: str) -> str:
     """DuckDB-side mirror of :func:`dec_avg`."""
-    f = _factor(scale)
+    f = _factor(SCALE)
     return (
         f"CAST(SUM(CAST(ROUND(({expr}) * {f}) AS BIGINT)) AS DOUBLE)"
         f" / {float(f)} / CAST(COUNT({expr}) AS DOUBLE) AS {alias}"

@@ -610,6 +610,19 @@ def events_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LIFT_MIN_SUPPORT = 3
 _LIFT_TOP = 50
 
+
+def pair_lift_sql(src: str, basket: str, item: str, min_support: int) -> str:
+    """Oracle CTE ``pair``: the co-occurrence count ``n_pair`` of every
+    ``item`` pair (``<item>_a`` < ``<item>_b``) sharing a ``basket`` in
+    the distinct ``src`` rows, kept at ``min_support`` and above."""
+    return f"""pair AS (
+  SELECT a.{item} AS {item}_a, b.{item} AS {item}_b, CAST(COUNT(*) AS BIGINT) AS n_pair
+  FROM {src} a JOIN {src} b ON a.{basket} = b.{basket} AND a.{item} < b.{item}
+  GROUP BY 1, 2
+  HAVING COUNT(*) >= {min_support}
+)"""
+
+
 _LIFT_ORACLE = f"""
 WITH pl AS (
   SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
@@ -617,12 +630,7 @@ WITH pl AS (
   SELECT CAST(COUNT(DISTINCT ok) AS BIGINT) AS n_orders FROM pl
 ), item AS (
   SELECT pk, CAST(COUNT(*) AS BIGINT) AS n FROM pl GROUP BY pk
-), pair AS (
-  SELECT a.pk AS pk_a, b.pk AS pk_b, CAST(COUNT(*) AS BIGINT) AS n_pair
-  FROM pl a JOIN pl b ON a.ok = b.ok AND a.pk < b.pk
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {_LIFT_MIN_SUPPORT}
-), scored AS (
+), {pair_lift_sql("pl", "ok", "pk", _LIFT_MIN_SUPPORT)}, scored AS (
   SELECT pk_a, pk_b, n_pair, ia.n AS n_a, ib.n AS n_b,
          CAST(ROUND(1000000.0 * n_pair * tot.n_orders /
                     (CAST(ia.n AS DOUBLE) * ib.n)) AS BIGINT) AS lift_x1m
@@ -637,56 +645,75 @@ LIMIT {_LIFT_TOP}
 """
 
 
+def pair_lift(
+    baskets: DataFrame,
+    basket: str,
+    item: str,
+    freq: str,
+    total: str,
+    min_support: int,
+    top: int,
+) -> DataFrame:
+    """The ``top`` item pairs by lift (P(a,b) / P(a)P(b)) over the
+    distinct ``(basket, item)`` rows of ``baskets``, keeping pairs that
+    share at least ``min_support`` baskets.
+
+    Output ``(<item>_a, <item>_b, n_pair, <freq>_a, <freq>_b, lift_x1m)``
+    with ``<item>_a`` < ``<item>_b``; ``freq`` names the per-item basket
+    count and ``total`` the basket count.
+
+    Scale shape: the pair explosion self-joins on the basket key, so
+    fan-out per basket is basket_size^2 -- never |items|^2; pair counts
+    aggregate with map-side combine; item frequencies broadcast back
+    onto the support-filtered pair table (pair-scale, tiny); the final
+    top-N is TakeOrderedAndProject (per-partition heaps, no global
+    sort). Lift is exact-integer inputs with one double division+round,
+    identical on both engines."""
+    item_a, item_b = f"{item}_a", f"{item}_b"
+    freq_a, freq_b = f"{freq}_a", f"{freq}_b"
+    tot = baskets.agg(F.count_distinct(basket).alias(total))
+    freqs = baskets.groupBy(item).agg(F.count(F.lit(1)).alias(freq))
+    a, b = baskets.alias("a"), baskets.alias("b")
+    pair = (
+        a.join(
+            b,
+            (F.col(f"a.{basket}") == F.col(f"b.{basket}"))
+            & (F.col(f"a.{item}") < F.col(f"b.{item}")),
+        )
+        .groupBy(F.col(f"a.{item}").alias(item_a), F.col(f"b.{item}").alias(item_b))
+        .agg(F.count(F.lit(1)).alias("n_pair"))
+        .filter(F.col("n_pair") >= min_support)
+    )
+    fa = freqs.select(F.col(item).alias(item_a), F.col(freq).alias(freq_a))
+    fb = freqs.select(F.col(item).alias(item_b), F.col(freq).alias(freq_b))
+    scored = (
+        pair.join(F.broadcast(fa), item_a)
+        .join(F.broadcast(fb), item_b)
+        .crossJoin(F.broadcast(tot))
+        .select(
+            item_a, item_b, "n_pair", freq_a, freq_b,
+            F.round(
+                F.lit(1_000_000.0) * F.col("n_pair") * F.col(total)
+                / (F.col(freq_a).cast("double") * F.col(freq_b))
+            ).cast("long").alias("lift_x1m"),
+        )
+    )
+    return scored.orderBy(F.col("lift_x1m").desc(), item_a, item_b).limit(top)
+
+
 @query("basket_pair_lift", oracle=_LIFT_ORACLE)
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association mining: top part pairs by lift
-    (P(a,b) / P(a)P(b)) over order baskets, with a minimum pair support
-    of {_LIFT_MIN_SUPPORT} -- the pairwise core of FP-growth-style
-    analysis, expressed relationally.
-
-    Scale shape: the pair explosion self-joins on the ORDER key, so
-    fan-out per order is basket_size^2 (baskets are small and bounded
-    by schema, ~7 lines) -- never |items|^2; pair counts aggregate with
-    map-side combine; item frequencies broadcast back onto the
-    support-filtered pair table (pair-scale, tiny); the final top-N is
-    TakeOrderedAndProject (per-partition heaps, no global sort). Lift
-    is exact-integer inputs with one double division+round, identical
-    on both engines.
-    """
+    """Market-basket association mining: top part pairs by lift over
+    order baskets, with a minimum pair support of {_LIFT_MIN_SUPPORT} --
+    the pairwise core of FP-growth-style analysis, expressed
+    relationally (:func:`pair_lift`; baskets are small and bounded by
+    schema, ~7 lines)."""
     pl = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
-    tot = pl.agg(F.count_distinct("ok").alias("n_orders"))
-    item = pl.groupBy("pk").agg(F.count(F.lit(1)).alias("n"))
-    a, b = pl.alias("a"), pl.alias("b")
-    pair = (
-        a.join(
-            b,
-            (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")),
-        )
-        .groupBy(F.col("a.pk").alias("pk_a"), F.col("b.pk").alias("pk_b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= _LIFT_MIN_SUPPORT)
-    )
-    ia = item.select(F.col("pk").alias("pk_a"), F.col("n").alias("n_a"))
-    ib = item.select(F.col("pk").alias("pk_b"), F.col("n").alias("n_b"))
-    scored = (
-        pair.join(F.broadcast(ia), "pk_a")
-        .join(F.broadcast(ib), "pk_b")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "pk_a", "pk_b", "n_pair", "n_a", "n_b",
-            F.round(
-                F.lit(1_000_000.0) * F.col("n_pair") * F.col("n_orders")
-                / (F.col("n_a").cast("double") * F.col("n_b"))
-            ).cast("long").alias("lift_x1m"),
-        )
-    )
-    return scored.orderBy(
-        F.col("lift_x1m").desc(), "pk_a", "pk_b"
-    ).limit(_LIFT_TOP)
+    return pair_lift(pl, "ok", "pk", "n", "n_orders", _LIFT_MIN_SUPPORT, _LIFT_TOP)
 
 
 _GAP_ORACLE = """

@@ -32,6 +32,9 @@ EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
     "value double, props string"
 )
+WINDOW = "1 hour"  # tumbling and sliding window width
+SLIDE = "30 minutes"  # sliding window step
+SESSION_GAP_MINUTES = 30  # inactivity that closes a session
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,12 +72,12 @@ def run_to_memory(
     return spark.table(name)
 
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window aggregation (EventTimeWatermark +
     TimeWindow -> StateStoreSave plan)."""
     return (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", width), "event_type")
+        .groupBy(F.window("ts", WINDOW), "event_type")
         .agg(
             F.count("*").alias("n"),
             (F.sum(F.round(F.col("value") * 10000).cast("long")).cast("double") / 10000.0).alias("sum_value"),
@@ -88,14 +91,12 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(
-    events: DataFrame, width: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Sliding windows: each event lands in width/slide overlapping
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding windows: each event lands in WINDOW/SLIDE overlapping
     buckets (TimeWindowing expands to Expand + filter)."""
     return (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", width, slide))
+        .groupBy(F.window("ts", WINDOW, SLIDE))
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("w_start"),
@@ -104,12 +105,12 @@ def sliding_counts(
     )
 
 
-def session_window_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_counts(events: DataFrame) -> DataFrame:
     """Native session windows (Spark 3.2+; the reference could only do
     this via flatMapGroupsWithState)."""
     return (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap), "user_id")
+        .groupBy(F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -181,9 +182,7 @@ SESSION_OUT_SCHEMA = (
 SESSION_STATE_SCHEMA = "last_ts double, start_ts double, n bigint"
 
 
-def sessionize_with_state(
-    events: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
+def sessionize_with_state(events: DataFrame) -> DataFrame:
     """Custom stateful sessionization via applyInPandasWithState (the
     PySpark successor of the reference's FlatMapGroupsWithState,
     plans/logical/object.scala:365-409).
@@ -195,7 +194,7 @@ def sessionize_with_state(
     the output deterministic without wall-clock coupling."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_s = gap_minutes * 60
+    gap_s = SESSION_GAP_MINUTES * 60
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

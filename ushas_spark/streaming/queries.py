@@ -68,7 +68,9 @@ def streaming_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
     return out.orderBy("w_start")
 
 
-_SESSION_ORACLE = """
+# Oracle CTEs shared by both sessionizers: ``s`` numbers each user's
+# sessions (``sid``) by the 30-minute gap rule with lag + running sum.
+_SESSION_IDS_SQL = """
 WITH t AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
          CASE WHEN epoch(CAST(ts AS TIMESTAMP))
@@ -84,7 +86,9 @@ s AS (
                                 ROWS UNBOUNDED PRECEDING) AS sid
   FROM t
 )
-SELECT user_id,
+"""
+
+_SESSION_ORACLE = _SESSION_IDS_SQL + """SELECT user_id,
        strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS s_start,
        strftime(MAX(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS s_end,
        COUNT(*) AS n_events
@@ -169,23 +173,7 @@ def streaming_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.agg(F.count("*").alias("n_rows"))
 
 
-_SESSIONIZE_STATE_ORACLE = """
-WITH t AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-         CASE WHEN epoch(CAST(ts AS TIMESTAMP))
-                   - epoch(lag(CAST(ts AS TIMESTAMP))
-                           OVER (PARTITION BY user_id ORDER BY ts)) > 1800
-                   OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-s AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-  FROM t
-)
-SELECT user_id,
+_SESSIONIZE_STATE_ORACLE = _SESSION_IDS_SQL + """SELECT user_id,
        strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
        strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
        COUNT(*) AS n_events
@@ -481,13 +469,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_WM_ORACLE = """
-SELECT DISTINCT user_id, event_type FROM events
-ORDER BY user_id, event_type
-"""
-
-
-@query("streaming_dedup_within_watermark", oracle=_DEDUP_WM_ORACLE)
+@query("streaming_dedup_within_watermark", oracle=_DEDUP_ORACLE)
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark conformance (Spark 3.5+ surface the
     reference predates): duplicates arriving within the watermark delay
