@@ -4,6 +4,8 @@ pruning, broadcast, codegen, top-k fusion, partial aggregation)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -614,35 +616,114 @@ def test_plans_md_covers_full_headline():
     )
 
 
+@contextmanager
+def _session_confs(spark, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore them."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# Sort-merge joins at the plain-session shuffle width: no auto-broadcast,
+# and 200 shuffle partitions, more than any test host's cores, so a pin
+# (one partition per core) is always narrower than a planned shuffle.
+_MERGE_AT_200 = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.shuffle.partitions": "200",
+}
+
+
 def test_pin_partitioned_join_streams_cached_side(spark):
     """pin_partitioned's contract: a join on the pinned key must shuffle
     ONLY the other side (InMemoryRelation preserves partitioning and
     ordering -- this is what makes every iterative loop's per-round
-    network O(|V|), not O(|E|)). If a Spark upgrade stops preserving
-    cached partitioning, this fails before the design silently degrades
-    back to per-round edge re-shuffles."""
-    from pyspark.sql import functions as F
-
+    network O(|V|), not O(|E|)). The pin has one partition per core,
+    fewer than the 200 shuffle partitions of a plain session, and the
+    join must still keep it and shuffle the other side to its width. If
+    a Spark upgrade stops preserving cached partitioning, or re-shuffles
+    a side narrower than spark.sql.shuffle.partitions, this fails before
+    the design silently degrades back to per-round edge re-shuffles."""
     from ushas_spark.durability import pin_partitioned, plan_counts
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    # The autouse fixture clears the pin's cache after the test.
+    with _session_confs(spark, _MERGE_AT_200):
         big = spark.range(20000).select(
             (F.col("id") % 500).alias("k"), F.col("id").alias("payload")
         )
         pinned = pin_partitioned(big, "k")
+        assert pinned.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
         small = spark.range(500).select(F.col("id").alias("k"))
         joined = pinned.join(small, "k")
-        counts = plan_counts(joined._jdf.queryExecution().executedPlan())
-        assert counts["shuffles"] == 1, (
-            counts,
-            joined._jdf.queryExecution().executedPlan().toString(),
-        )
+        plan = joined._jdf.queryExecution().executedPlan()
+        assert plan_counts(plan)["shuffles"] == 1, plan.toString()
+        assert _exchanges_above_cache(plan) == [0], plan.toString()
         assert joined.count() == 20000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.catalog.clearCache()
+
+
+def _exchanges_above_cache(node, above: int = 0) -> list[int]:
+    """For each InMemoryTableScan in a physical plan tree, the number of
+    exchanges (shuffle or broadcast) between it and the join (or root)
+    that reads it."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _exchanges_above_cache(node.initialPlan(), above)
+    if name == "InMemoryTableScan":
+        return [above]
+    if name.endswith("Join"):
+        above = 0
+    above += name.startswith("Exchange") or name == "BroadcastExchange"
+    out = []
+    for i in range(node.children().size()):
+        out += _exchanges_above_cache(node.children().apply(i), above)
+    return out
+
+
+def test_connected_components_merge_rounds_stream_pinned_edges(
+    spark, sf_dir, monkeypatch
+):
+    """Merge-regime connected components at the 100 TB shape (forced gate,
+    no auto-broadcast, 200 shuffle partitions): every label-propagation
+    round joins the pinned edge list as it lies, so each round segment
+    plans the 2 shuffles it planned when pins took the shuffle width
+    (labels to the join, the min-aggregate) and no exchange above the
+    pinned InMemoryTableScan. Spark must honour a pin narrower than
+    spark.sql.shuffle.partitions."""
+    from ushas_spark import durability
+    from ushas_spark.operators import dedup
+
+    rounds_plans = []
+    real = dedup.materialize
+
+    def spy(df):
+        rounds_plans.append(df._jdf.queryExecution().executedPlan())
+        return real(df)
+
+    monkeypatch.setattr(durability, "BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(dedup, "materialize", spy)
+    with _session_confs(spark, _MERGE_AT_200):
+        try:
+            with durability.segments() as segs:
+                dedup.dedup_cluster_components(spark, sf_dir)
+        finally:
+            durability.release(spark)
+    kinds = [s.kind for s in segs]
+    assert kinds.count("pin") == 1, kinds
+    rounds = segs[kinds.index("pin") + 1 :]
+    assert rounds, kinds
+    assert [s.counts["shuffles"] for s in rounds] == [2] * len(rounds), [
+        s.counts for s in rounds
+    ]
+    # Rounds are the last materialize calls; the spy saw each round's plan.
+    for plan in rounds_plans[-len(rounds) :]:
+        assert _exchanges_above_cache(plan) == [0], plan.toString()
 
 
 def test_plan_counts_matches_text_on_uncached(spark, sf_dir):

@@ -269,13 +269,30 @@ def pin_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     per-round join reads it co-located (rounds x |E| network becomes
     |E| + rounds x |V|).
 
+    Width: one partition per core (``defaultParallelism``), not
+    ``spark.sql.shuffle.partitions``. AQE coalesces shuffle outputs but
+    never a cached relation, so a pin at the shuffle width (32 under
+    ``get_spark``, 200 in a plain session) ran every round that scans
+    it as 32 or 200 mostly empty tasks. The narrower pin plans no extra
+    exchange: when only one side of a join needs a shuffle,
+    EnsureRequirements keeps the other side's hash partitioning and
+    shuffles the needy side to its width (pinned by
+    tests/test_plans.py). Pinned plans therefore print the host's core
+    count in ``hashpartitioning(k, N)``. Dead end, measured:
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``
+    let AQE coalesce a key-only ``repartition(keys)`` pin to one
+    partition, after which the sort-merge join re-shuffled the pinned
+    side (1 -> 2 shuffles). A fixed count (``REPARTITION_BY_NUM``) is
+    never coalesced, so that setting no longer moves the pin.
+
     Storage: MEMORY_AND_DISK (Spark default) -- spills, never OOMs; on
     executor loss the cached partition recomputes from lineage (unlike
     localCheckpoint, which fails the job). The one-time repartition is
     recorded as a ``"pin"`` segment, so PLANS.md still charges the
     pin's shuffle to the query.
     """
-    pinned = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(
+    n = df.sparkSession.sparkContext.defaultParallelism
+    pinned = df.repartition(n, *[F.col(k) for k in keys]).sortWithinPartitions(
         *[F.col(k) for k in keys]
     )
     begun = _begin(pinned)

@@ -632,7 +632,9 @@ def connected_components(
     - each round is one join (edges x labels) + one fused groupBy min on
       the node id; the |E|-row edge side is PINNED partitioned+sorted on
       the join key (pin_partitioned) so it never re-shuffles or re-sorts
-      -- per-round network is O(|V| labels), not O(|E|);
+      -- per-round network is O(|V| labels), not O(|E|). The pin holds
+      one partition per core, not the shuffle width, so a round's join
+      runs one task per core and the labels shuffle to that width;
     - :func:`ushas_spark.durability.materialize` after every round
       (localCheckpoint by default; reliable checkpoint via
       ``durability.set_reliable(True)`` for executor-loss tolerance on

@@ -9,7 +9,12 @@ for both the local test harness (local[N], single JVM) and a real cluster:
   supersedes the reference's primitive ``ExchangeCoordinator``
   (reference: execution/exchange/ExchangeCoordinator.scala:85).
 - ``spark.sql.shuffle.partitions`` fixed at 32 (not sized to cores), so
-  plans are the same on every host; AQE coalesces small outputs. On a 1000-executor cluster pass ~2-3x total cores.
+  plans are the same on every host; AQE coalesces small outputs. On a
+  1000-executor cluster pass ~2-3x total cores. The one exception is a
+  ``durability.pin_partitioned`` relation: AQE cannot coalesce a cached
+  relation, so a pin is hash-partitioned at one partition per core
+  (``defaultParallelism``) instead, and pinned plans print the host's
+  core count.
 - Session timezone pinned to UTC so timestamp semantics are stable and match
   the DuckDB oracle (naive/UTC timestamps).
 - Arrow enabled for every Python<->JVM data path (pandas UDFs, toPandas).
